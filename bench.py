@@ -23,38 +23,22 @@ def run_query(df) -> None:
 
 
 def _collect_records(repo_dir: str, sf: float) -> list[tuple[int, dict]]:
-    """All committed same-sf bench records, newest round first, one
-    per round (a round can appear in both history and legacy BENCH_r
-    sources). Each entry is (round_number, {qN: sec}).
+    """All committed same-sf bench records, newest round first. Each
+    entry is (round_number, {qN: sec}).
 
-    Sources: the committed ``plans/bench_history/rNN.json`` full
-    records (round-7 VERDICT #2 — the driver's BENCH_r*.json tail
-    capture truncates at 2,000 chars, which silently dropped r06/r07's
-    per-query maps and made r07 compare against r05), plus legacy
-    driver ``BENCH_r*.json`` records that still carry a parsed
-    queries map.
+    Source: the committed ``plans/bench_history/rNN.json`` full records
+    (round-7 VERDICT #2 — the driver's BENCH_r*.json tail capture
+    truncates at 2,000 chars, which silently dropped r06/r07's
+    per-query maps and made r07 compare against r05).
     """
     import glob
     import re
 
-    candidates: list[tuple[int, dict]] = []
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.match(r"BENCH_r(\d+)\.json$", os.path.basename(path))
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-            parsed = rec.get("parsed") or {}
-            queries = parsed.get("queries") or {}
-            if queries and parsed.get("sf") == sf:
-                candidates.append((int(m.group(1)), queries))
-        except (OSError, ValueError):
-            continue
     hist_dir = os.path.join(
         repo_dir, "data_integration_openfoodfacts_spark", "plans",
         "bench_history",
     )
+    records: list[tuple[int, dict]] = []
     for path in glob.glob(os.path.join(hist_dir, "r*.json")):
         m = re.match(r"r(\d+)\.json$", os.path.basename(path))
         if not m:
@@ -64,16 +48,11 @@ def _collect_records(repo_dir: str, sf: float) -> list[tuple[int, dict]]:
                 rec = json.load(f)
             queries = rec.get("queries") or {}
             if queries and rec.get("sf") == sf:
-                candidates.append((int(m.group(1)), queries))
+                records.append((int(m.group(1)), queries))
         except (OSError, ValueError):
             continue
-    candidates.sort(key=lambda c: -c[0])
-    deduped: list[tuple[int, dict]] = []
-    for rnd, queries in candidates:
-        if any(rnd == r for r, _ in deduped):
-            continue
-        deduped.append((rnd, queries))
-    return deduped
+    records.sort(key=lambda c: -c[0])
+    return records
 
 
 def load_prev_timings(repo_dir: str, sf: float):
@@ -367,10 +346,11 @@ def main() -> None:
     # Self-reconciling gate (round-11 VERDICT #1: the flag->manual
     # quiet-host-probe->commit loop was task #1 three rounds running —
     # automate it). An in-suite flag is often a virtualized-host stall
-    # or contended-window artifact (drift_probe_r10*.json: every probed
-    # flag reconciled to baseline), so before flagging, re-run the
-    # flagged query STANDALONE — post-suite, cache-cleared, freshly
-    # GC'd — with the same min-of-2 / median-of-3-if-heavy methodology.
+    # or contended-window artifact (the round-10/11 manual drift
+    # probes: every probed flag reconciled to baseline), so before
+    # flagging, re-run the flagged query STANDALONE — post-suite,
+    # cache-cleared, freshly GC'd — with the same min-of-2 /
+    # median-of-3-if-heavy methodology.
     # Only a flag the standalone re-run REPRODUCES survives; both
     # numbers land in the record either way ([prev, suite, standalone])
     # so a dismissed flag is auditable, not discarded. The committed

@@ -286,10 +286,11 @@ def binary_simhash(
     from functools import reduce
     from operator import add
 
-    assert bits <= 63, (
-        "simhash projects vote signs onto BIGINT bit positions; "
-        f"bits={bits} would overflow the 1 << b literal"
-    )
+    if bits > 63:
+        raise ValueError(
+            "simhash projects vote signs onto BIGINT bit positions; "
+            f"bits={bits} would overflow the 1 << b literal"
+        )
     n = int(ngram_bytes)
     nbits = int(bits)
     out_schema = StructType(

@@ -174,8 +174,8 @@ def q178_counting_store_takedown(
     semantics. Results are checkpointed before the temp store dies."""
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
+    from ..concurrency import overlap
     from ..operators.bloom import bloom_probe_keys, counting_to_words
     from ..operators.similarity_dedup import word_shingles
     from ..streaming.counting_store import (
@@ -196,8 +196,8 @@ def q178_counting_store_takedown(
     def _store_lifecycle() -> None:
         # the three ingest deltas are independent jobs over the
         # checkpointed occurrence frame targeting disjoint delta_id=
-        # directories — the batched append overlaps their builds in a
-        # driver pool and appends the log ONCE in batch order
+        # directories — the batched append overlaps their builds on
+        # driver threads and appends the log ONCE in batch order
         # (round 14, guide §2.6; replay/compaction contracts exercised
         # below are unchanged and this query still gates them).
         append_counting_deltas(
@@ -248,11 +248,7 @@ def q178_counting_store_takedown(
         ).localCheckpoint(eager=True)
 
     try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_store = pool.submit(_store_lifecycle)
-            f_truth = pool.submit(_truth)
-            f_store.result()
-            truth = f_truth.result()
+        _, truth = overlap(spark, _store_lifecycle, _truth)
         words = counting_to_words(read_counts(spark, path))
         flags = bloom_probe_keys(
             occ.select("shingle"), "shingle", words, _NW, _K

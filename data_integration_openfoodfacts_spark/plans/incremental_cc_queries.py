@@ -143,7 +143,9 @@ def q201_component_ledger_lifecycle(
     third in-query merge cycle busted the 15s oracle budget.)"""
     import shutil
     import tempfile
+    from functools import partial
 
+    from ..concurrency import overlap
     from ..operators.component_ledger import (
         compact_component_ledger,
         init_component_ledger,
@@ -159,8 +161,6 @@ def q201_component_ledger_lifecycle(
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     tr = lambda c: F.col(c) % 3  # noqa: E731
     arrival = F.greatest(tr("id_a"), tr("id_b"))
     t0_pairs = pairs.filter(arrival == 0)
@@ -176,27 +176,18 @@ def q201_component_ledger_lifecycle(
     try:
         # the tranche-1/2 delta checkpoints and the tranche-0 seed
         # (batch CC + store init) all derive from the ONE checkpointed
-        # pair frame and are mutually independent — overlap them in a
-        # driver pool (round 14, guide §2.6) instead of running three
-        # chains back to back
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_t1 = pool.submit(
-                lambda: pairs.filter(arrival == 1).localCheckpoint(
-                    eager=True
-                )
-            )
-            f_t2 = pool.submit(
-                lambda: pairs.filter(arrival == 2).localCheckpoint(
-                    eager=True
-                )
-            )
-            f_init = pool.submit(
+        # pair frame and are mutually independent — overlap them on
+        # driver threads (round 14, guide §2.6) instead of running
+        # three chains back to back
+        t1_pairs, t2_pairs, _ = overlap(
+            spark,
+            lambda: pairs.filter(arrival == 1).localCheckpoint(eager=True),
+            lambda: pairs.filter(arrival == 2).localCheckpoint(eager=True),
+            partial(
                 init_component_ledger, labels0, tmp,
                 n_buckets=8, node_col="doc_id",
-            )
-            t1_pairs = f_t1.result()
-            t2_pairs = f_t2.result()
-            f_init.result()
+            ),
+        )
         merge_ledger_components(
             spark, tmp, t1_pairs, src="id_a", dst="id_b"
         )

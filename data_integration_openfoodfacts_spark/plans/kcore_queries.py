@@ -40,7 +40,7 @@ def q185_kcore_template_rings(
     triangle counts score the same phenomenon locally; the core is the
     global fixpoint). Distributed peel: two semi-joins + one degree
     count per round, lineage truncated per round, one driver long per
-    round for convergence; the in-query assert pins convergence
+    round for convergence; the in-query check pins convergence
     strictly inside the oracle's unroll depth so the fixed-depth SQL
     replay is exact."""
     from ..operators.kcore import k_core
@@ -51,9 +51,10 @@ def q185_kcore_template_rings(
         docs, "doc_id", "text", n=3, threshold=_T
     ).select("id_a", "id_b")
     core, rounds = k_core(edges, "id_a", "id_b", k=_K)
-    assert rounds < _R, (
-        f"peel took {rounds} rounds; raise the oracle unroll depth {_R}"
-    )
+    if rounds >= _R:
+        raise AssertionError(
+            f"peel took {rounds} rounds; raise the oracle unroll depth {_R}"
+        )
     return core.withColumnRenamed("node", "doc_id")
 
 

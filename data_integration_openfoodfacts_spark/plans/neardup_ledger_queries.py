@@ -48,8 +48,9 @@ def q202_neardup_ingest_component_lifecycle(
     marks the min-id survivor each cluster keeps."""
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
+    from ..concurrency import overlap
     from ..operators.bucketed_ledger import (
         prune_to_buckets,
         store_n_buckets,
@@ -141,28 +142,22 @@ def q202_neardup_ingest_component_lifecycle(
         # guide §2.6: the tranche-1 band append and the component-store
         # seed touch DIFFERENT stores (each with its one writer) — two
         # independent action chains, overlapped on the driver
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_bands = pool.submit(
-                append_bands, bands1, bands_path, n_buckets=8
-            )
-            f_seed = pool.submit(_seed_components)
-            f_bands.result()
-            f_seed.result()
+        overlap(
+            spark,
+            partial(append_bands, bands1, bands_path, n_buckets=8),
+            _seed_components,
+        )
         # tranche 2 exercises the PERSISTED loop end to end: pruned
         # band probe, star edges, delta-cost component merge
         # (retirements -> the canonical alias table), band append —
         # the merge and the band append are again independent stores,
         # overlapped (VERDICT r13 #1 named exactly this pair)
         bands2, edges2 = _tranche(2)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_merge = pool.submit(
-                merge_ledger_components, spark, comp_path, edges2
-            )
-            f_bands2 = pool.submit(
-                append_bands, bands2, bands_path, n_buckets=8
-            )
-            f_merge.result()
-            f_bands2.result()
+        overlap(
+            spark,
+            partial(merge_ledger_components, spark, comp_path, edges2),
+            partial(append_bands, bands2, bands_path, n_buckets=8),
+        )
         merged = read_component_labels(spark, comp_path).select(
             F.col("node").alias("doc_id"), "component"
         )
@@ -194,7 +189,8 @@ def _q202_oracle() -> str:
     # and tranche ordering must be value-invisible. Spliced into the
     # walk's final SELECT (not nested as a CTE: the walk is WITH
     # RECURSIVE and splicing keeps it top-level).
-    assert _Q200_TAIL in Q200_ORACLE, "q200 oracle tail drifted"
+    if _Q200_TAIL not in Q200_ORACLE:
+        raise AssertionError("q200 oracle tail drifted")
     return Q200_ORACLE.replace(
         _Q200_TAIL,
         "SELECT d.doc_id,"

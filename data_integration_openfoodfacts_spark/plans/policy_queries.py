@@ -51,7 +51,8 @@ def q198_semdedup_fixed_cluster(
     with k as a scalar subquery over the same embeddings table — the
     gate therefore pins the POLICY (both engines derive k from the
     data), not a frozen constant. Scaling evidence:
-    SCALING_LLM.json round12 (tools/bench_scaling_r12.py)."""
+    SCALING_LLM.json round12 (tools/bench_scaling_r12.py, removed after
+    commit 70d8186; check out that commit to re-run it)."""
     from ..operators.clustering import fit_centroids_lloyd
     from ..operators.similarity import semantic_dedup, semdedup_k
 
@@ -116,7 +117,9 @@ def q199_takedown_request_idempotence(
     import os
     import shutil
     import tempfile
+    from functools import partial
 
+    from ..concurrency import overlap
     from ..operators.bloom import bloom_probe_keys, counting_to_words
     from ..streaming.counting_store import (
         read_counts,
@@ -142,8 +145,6 @@ def q199_takedown_request_idempotence(
         # delivery order (file 0 = %7 docs, file 1 = the re-delivery
         # mix, file 2 = the third copy) is part of the query's
         # semantics and must never ride on write-completion order.
-        from concurrent.futures import ThreadPoolExecutor
-
         os.makedirs(reqs)
         batches = [
             docs.filter(is_a),
@@ -165,15 +166,15 @@ def q199_takedown_request_idempotence(
                 os.link(os.path.join(part, src), dst)
                 os.utime(dst, (base + 10 * i, base + 10 * i))
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_seed = pool.submit(
+        overlap(
+            spark,
+            partial(
                 write_counting_delta,
                 docs.select(F.md5("text").alias("text_md5")),
                 "text_md5", store, "seed", _NW, _K,
-            )
-            f_reqs = pool.submit(_write_reqs)
-            f_seed.result()
-            f_reqs.result()
+            ),
+            _write_reqs,
+        )
 
         def _drain() -> None:
             run_takedown_stream(

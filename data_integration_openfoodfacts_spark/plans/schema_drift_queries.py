@@ -61,8 +61,11 @@ def q182_schema_drift_read(
             T.StructField("n_chars", T.LongType()),
         ])
         drift = schema_drift(merged, target)
-        assert drift["widened"] == [("n_chars", "int", "bigint")], drift
-        assert drift["dropped"] == ["gen", "quality"], drift
+        if (
+            drift["widened"] != [("n_chars", "int", "bigint")]
+            or drift["dropped"] != ["gen", "quality"]
+        ):
+            raise AssertionError(f"unexpected schema drift: {drift}")
         # a narrowing contract (bigint doc_id -> int) must refuse loudly
         narrow = T.StructType([
             T.StructField("doc_id", T.IntegerType()),

@@ -89,7 +89,8 @@ def _q203_oracle() -> str:
     # the q200 full-corpus walk, survivors only, relabelled to the
     # min surviving member per ORIGINAL component — spliced into the
     # walk's final SELECT (WITH RECURSIVE must stay top-level)
-    assert _Q200_TAIL in Q200_ORACLE, "q200 oracle tail drifted"
+    if _Q200_TAIL not in Q200_ORACLE:
+        raise AssertionError("q200 oracle tail drifted")
     return Q200_ORACLE.replace(
         _Q200_TAIL,
         "SELECT doc_id,\n"

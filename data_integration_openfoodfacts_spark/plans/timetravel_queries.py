@@ -84,8 +84,8 @@ def q179_counting_store_time_travel(
     ingest re-admits."""
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
+    from ..concurrency import overlap
     from ..operators.bloom import bloom_probe_keys, counting_to_words
     from ..streaming.counting_store import (
         CountingLayoutError,
@@ -156,32 +156,26 @@ def q179_counting_store_time_travel(
     # re-aggregated truth once PER version (21.2s -> well under the
     # sf0.1 budget with the shared frames checkpointed). Both frames
     # are store-INDEPENDENT (they only read the checkpointed occ), so
-    # they overlap the store lifecycle in a driver pool (guide §2.6).
+    # they overlap the store lifecycle on driver threads (guide §2.6).
     try:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_store = pool.submit(_store_lifecycle)
-            f_keys = pool.submit(
-                lambda: occ.select("shingle")
-                .distinct()
-                .localCheckpoint(eager=True)
+        _, keys, truth = overlap(
+            spark,
+            _store_lifecycle,
+            lambda: occ.select("shingle")
+            .distinct()
+            .localCheckpoint(eager=True),
+            lambda: occ.groupBy("shingle")
+            .agg(
+                *[
+                    F.max(_truth_cond(v).cast("long")).alias(f"__t{v}")
+                    for v, _w in _VERSIONS
+                ]
             )
-            f_truth = pool.submit(
-                lambda: occ.groupBy("shingle")
-                .agg(
-                    *[
-                        F.max(_truth_cond(v).cast("long")).alias(
-                            f"__t{v}"
-                        )
-                        for v, _w in _VERSIONS
-                    ]
-                )
-                .localCheckpoint(eager=True)
-            )
-            f_store.result()
-            keys = f_keys.result()
-            truth = f_truth.result()
+            .localCheckpoint(eager=True),
+        )
         vs = store_versions(spark, path)
-        assert vs["latest"] == 4 and vs["min_readable"] == 2, vs
+        if not (vs["latest"] == 4 and vs["min_readable"] == 2):
+            raise AssertionError(f"unexpected store versions: {vs}")
         try:
             read_counts_as_of(spark, path, 1)
             raise AssertionError("vacuumed version 1 must be unreadable")

@@ -56,9 +56,12 @@ which is why time travel lives here.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..concurrency import overlap
 from ..functions.localframe import local_rows_df
 
 from ..operators.bloom import (
@@ -211,12 +214,11 @@ def append_counting_deltas(
     path: str,
     n_words: int = DEFAULT_WORDS,
     k: int = DEFAULT_K,
-    max_workers: int = 3,
 ) -> dict[str, bool]:
     """Append SEVERAL delta partitions in one store transaction:
     ``items`` is an ORDERED list of ``(delta_id, keys_df, sign)``. The
     per-delta parquet writes target independent ``delta_id=``
-    directories, so they overlap in a small driver thread pool (the
+    directories, so they overlap on driver threads (`overlap`, the
     guide's overlap-independent-jobs recipe — each delta-build job's
     straggler tail back-fills with the next delta's tasks instead of
     idling the local cluster); the sidecar is then written ONCE,
@@ -229,9 +231,9 @@ def append_counting_deltas(
 
     Contracts preserved, not weakened:
 
-    - single WRITER per store: the one caller coordinates; the pool is
-      its internal fan-out, and the sidecar read-modify-write happens
-      exactly once, outside the pool;
+    - single WRITER per store: the one caller coordinates; the
+      threads are its internal fan-out, and the sidecar
+      read-modify-write happens exactly once, after they all finish;
     - per-delta idempotence: absorbed ids (compaction tombstone) and
       completed directories (_SUCCESS) are refused exactly as in
       `write_counting_delta`, torn directories are deleted and
@@ -239,14 +241,12 @@ def append_counting_deltas(
       (the same crash window: this function widens it to several
       deltas, and the SAME replay heal covers all of them);
     - all-or-nothing is NOT promised (it never was across separate
-      calls either): a crash mid-pool leaves some directories complete
+      calls either): a crash mid-batch leaves some directories complete
       and unlogged — a replay of the same ordered batch heals them in
       list order and writes the rest.
 
     Returns ``{delta_id: wrote_anything}`` (False = refused replay).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     ids = [d for d, _df, _s in items]
     if len(set(ids)) != len(ids):
         raise CountingLayoutError(
@@ -286,15 +286,9 @@ def append_counting_deltas(
         ddir = f"{path.rstrip('/')}/delta_id={delta_id}"
         delta.coalesce(1).write.mode("errorifexists").parquet(ddir)
 
-    if pending:
-        with ThreadPoolExecutor(
-            max_workers=min(max_workers, len(pending))
-        ) as pool:
-            futures = [pool.submit(_write_one, it) for it in pending]
-        for f in futures:
-            f.result()  # re-raise the first failure
-        for delta_id, _keys, _sign in pending:
-            applied[delta_id] = True
+    overlap(spark, *[partial(_write_one, it) for it in pending])
+    for delta_id, _keys, _sign in pending:
+        applied[delta_id] = True
     new_log = log + [d for d in loggable if d not in log]
     if new_log != log:
         _write_meta(spark, path, n_words, k, absorbed, new_log)
