@@ -41,13 +41,17 @@ per application per store.
 
 from __future__ import annotations
 
-import json
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.events_stream import read_parquet_if_exists
+from ..storage import (
+    overwrite_parquet_atomically,
+    read_json_sidecar,
+    read_parquet_if_exists,
+    write_json_sidecar,
+)
 
 META_FILE = "_bucket_meta.json"
 
@@ -59,70 +63,6 @@ class BucketLayoutError(ValueError):
     """A reader/writer's bucket count disagrees with the store's
     layout — proceeding would silently mis-prune probes (keys scored
     as novel that aren't) and corrupt the store with duplicates."""
-
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(jsc.hadoopConfiguration()), hpath, jvm
-
-
-def read_json_sidecar(
-    spark: SparkSession, path: str, filename: str
-) -> dict | None:
-    """A store's JSON sidecar, or None when absent OR corrupt. Hadoop
-    FS so the same code runs on local disk and object stores. Shared
-    by every sidecar-stamped store (bucket layouts here, the Bloom
-    word table's filter geometry in streaming/bloom_ingest.py)."""
-    fs, hpath, jvm = _fs_and_path(spark, path)
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{filename}")
-    if not fs.exists(mpath):
-        return None
-    stream = fs.open(mpath)
-    try:
-        # JVM-side full read: py4j passes Python bytearrays to
-        # InputStream.read(byte[]) BY VALUE, so the classic read-loop
-        # never fills the Python buffer. commons-io ships with Spark.
-        text = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    try:
-        return json.loads(text)
-    except json.JSONDecodeError:
-        # A truncated/corrupt sidecar (crash mid-write on a filesystem
-        # without atomic rename) must not brick the store: treat it as
-        # absent — each store's validation then falls back to its
-        # data-derived check (bucket layouts sample-recompute the
-        # modulus), and the next stamp rewrites a good sidecar.
-        return None
-
-
-def write_json_sidecar(
-    spark: SparkSession, path: str, filename: str, payload: dict
-) -> None:
-    """Stage-then-rename a JSON sidecar: a crash mid-write must never
-    leave TRUNCATED JSON at the canonical name (a half-written sidecar
-    bricked every subsequent read before round 10). The temp name
-    keeps the underscore prefix so Spark's file index ignores it too.
-    The worst crash window (between delete and rename, on filesystems
-    without overwriting rename) leaves NO sidecar — the absent-sidecar
-    fallback path, which is safe."""
-    fs, _, jvm = _fs_and_path(spark, path)
-    base = path.rstrip("/")
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{base}/{filename}")
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{base}/_{filename}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
-    if fs.exists(mpath):
-        fs.delete(mpath, False)
-    if not fs.rename(tmp, mpath):
-        raise IOError(f"{path}: failed to publish {filename} sidecar")
 
 
 def read_meta(spark: SparkSession, path: str) -> dict | None:
@@ -304,8 +244,6 @@ def compact_bucketed(
     trash with the old directory). ``transform`` (e.g. a band-ledger
     re-band) runs on the de-bucketed rows before re-bucketing —
     callers must checkpoint inside it if it is expensive."""
-    from ..streaming.events_stream import overwrite_parquet_atomically
-
     df = read_parquet_if_exists(spark, path)
     if df is None:
         return

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from .bucketed_ledger import _fs_and_path
+from ..storage import hadoop_fs
 
 __all__ = [
     "counting_delta_count",
@@ -50,7 +50,7 @@ def counting_delta_count(spark: SparkSession, path: str) -> int:
     """Live delta partitions of a counting store (``delta_id=*``
     directories, the compacted base included — it is one of the
     partitions every read sums). 0 for a store that doesn't exist."""
-    fs, root, _jvm = _fs_and_path(spark, path)
+    fs, root, _jvm = hadoop_fs(spark, path)
     if not fs.exists(root):
         return 0
     return sum(
@@ -90,7 +90,7 @@ def bucket_file_stats(
     read. (0, 0, 0) when the store doesn't exist or has no bucket
     directories (legacy flat stores report 0 buckets; compaction is
     also their migration)."""
-    fs, root, _jvm = _fs_and_path(spark, path)
+    fs, root, _jvm = hadoop_fs(spark, path)
     if not fs.exists(root):
         return (0, 0, 0)
     n_files = 0
@@ -134,7 +134,7 @@ def maybe_compact_bucketed(
     )
     if n_dirs == 0:
         # flat legacy store: any parquet file means it should migrate
-        fs, root, _jvm = _fs_and_path(spark, path)
+        fs, root, _jvm = hadoop_fs(spark, path)
         if not fs.exists(root):
             return False
         flat_files = sum(

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..storage import overwrite_parquet_atomically, read_parquet_if_exists
 from .graph_incremental import delta_component_mapping
 
 __all__ = [
@@ -73,7 +74,6 @@ def _alias(path: str) -> str:
 
 def _read_alias(spark: SparkSession, path: str) -> DataFrame:
     from ..functions.localframe import local_rows_df
-    from ..streaming.events_stream import read_parquet_if_exists
 
     df = read_parquet_if_exists(spark, _alias(path))
     if df is None:
@@ -215,7 +215,6 @@ def merge_ledger_components(
     )
     from .graph_incremental import DRIVER_CC_MAX_EDGES, driver_union_find
     from ..functions.localframe import local_rows_df
-    from ..streaming.events_stream import overwrite_parquet_atomically
 
     edges_pdf = (
         new_edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -336,7 +335,6 @@ def _merge_ledger_distributed(
     distributed star contraction anyway and the driver envelope above
     would not fit)."""
     from .bucketed_ledger import append_bucketed, store_n_buckets
-    from ..streaming.events_stream import overwrite_parquet_atomically
 
     edges = (
         new_edges.select(
@@ -458,7 +456,6 @@ def compact_component_ledger(
     aggregate over the rows the compaction is rewriting anyway."""
     from .bucketed_ledger import compact_bucketed, store_n_buckets
     from ..functions.localframe import local_rows_df
-    from ..streaming.events_stream import overwrite_parquet_atomically
 
     # ONE bounded collect decides the no-op case AND becomes the
     # broadcastable alias frame (round 14 — the round-13 shape spent

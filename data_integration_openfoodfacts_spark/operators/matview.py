@@ -138,10 +138,7 @@ def refresh_materialized_summary(
     """Maintain a parquet-backed summary at ``path``: aggregate the
     new batch, merge with the stored state (if any), atomically
     replace the store, and return the merged state."""
-    from ..streaming.events_stream import (
-        overwrite_parquet_atomically,
-        read_parquet_if_exists,
-    )
+    from ..storage import overwrite_parquet_atomically, read_parquet_if_exists
 
     delta = build_summary(new_batch, keys, measures)
     existing = read_parquet_if_exists(spark, path)

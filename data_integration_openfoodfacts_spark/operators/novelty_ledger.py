@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localframe import local_rows_df
 
-from ..streaming.events_stream import read_parquet_if_exists
+from ..storage import read_parquet_if_exists
 from .bucketed_ledger import (
     append_bucketed,
     compact_bucketed,

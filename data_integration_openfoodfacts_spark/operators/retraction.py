@@ -15,11 +15,13 @@ downstream cache validity.
 Mechanics per touched bucket: stage the bucket's surviving rows
 (store scan PRUNED to touched buckets, broadcast-anti-joined against
 the key set) into a temp directory, then swap each bucket directory
-via the trash-park-rename used by `overwrite_parquet_atomically` — a
-crash mid-swap loses no data (old bucket restored from trash) and a
-replayed retraction is idempotent (anti-join of already-deleted keys
-is a no-op rewrite). The sidecar is untouched: retraction never
-changes the layout.
+with `storage.swap_dir`, parking the old bucket in a trash directory
+NEXT TO the store (inside it, the parked ``kb=N`` directory would
+break every read of the store with a conflicting partition column) —
+a failed swap loses no data (old bucket restored from trash, or left
+there and named in the error) and a replayed retraction is idempotent
+(anti-join of already-deleted keys is a no-op rewrite). The sidecar is
+untouched: retraction never changes the layout.
 
 Retraction vs the Bloom screen: the bit_or word table is monotone and
 CANNOT retract (SURVEY round-11 candidate #6); after retracting from
@@ -29,13 +31,14 @@ callers own that ordering.
 
 from __future__ import annotations
 
+import uuid
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..storage import hadoop_fs, swap_dir
 from .bucketed_ledger import (
-    _fs_and_path,
     prune_to_buckets,
     store_n_buckets,
     touched_buckets,
@@ -93,7 +96,8 @@ def retract_keys_bucketed(
         F.broadcast(key_rows), key_col, "left_anti"
     )
     cols = [c for c in existing.columns if c != bucket_col]
-    staged = f"{path.rstrip('/')}__retract_stage"
+    base = path.rstrip("/")
+    staged = f"{base}__retract_stage"
     (
         survivors.select(*cols, F.col(bucket_col))
         .repartition(bucket_col)
@@ -101,31 +105,24 @@ def retract_keys_bucketed(
         .partitionBy(bucket_col)
         .parquet(staged)
     )
-    fs, _, jvm = _fs_and_path(spark, path)
+    fs, _, jvm = hadoop_fs(spark, path)
     HPath = jvm.org.apache.hadoop.fs.Path
-    base = path.rstrip("/")
+    trash = HPath(f"{base}__trash_{uuid.uuid4().hex[:8]}")
+    fs.mkdirs(trash)
     try:
         for b in buckets:
-            old = HPath(f"{base}/{bucket_col}={b}")
-            new = HPath(f"{staged}/{bucket_col}={b}")
-            trash = HPath(f"{base}/__trash_{bucket_col}={b}")
-            if fs.exists(old):
-                if not fs.rename(old, trash):
-                    raise IOError(f"{path}: failed to park bucket {b}")
-            try:
-                # a bucket whose every row was deleted has no staged
-                # dir — the delete IS the rewrite
-                if fs.exists(new) and not fs.rename(new, old):
-                    raise IOError(f"{path}: failed to publish bucket {b}")
-            except BaseException:
-                # restore the parked bucket before propagating
-                if fs.exists(trash) and not fs.exists(old):
-                    fs.rename(trash, old)
-                raise
-            if fs.exists(trash):
-                fs.delete(trash, True)
+            # a bucket whose every row was deleted has no staged dir —
+            # swap_dir's delete IS the rewrite
+            part = f"{bucket_col}={b}"
+            swap_dir(
+                fs, HPath(f"{base}/{part}"), HPath(f"{staged}/{part}"),
+                HPath(trash, part),
+            )
     finally:
         fs.delete(HPath(staged), True)
+        # kept only while it holds a bucket a failed restore left there
+        if len(fs.listStatus(trash)) == 0:
+            fs.delete(trash, True)
     return removed
 
 

@@ -91,10 +91,7 @@ def scd2_merge_batch(
     the open version and inserts new ones; the callback signature stays.
     """
     from ..operators.dedup import dedup_keep_latest
-    from ..streaming.events_stream import (
-        overwrite_parquet_atomically,
-        read_parquet_if_exists,
-    )
+    from ..storage import overwrite_parquet_atomically, read_parquet_if_exists
 
     spark = batch.sparkSession
     log_path = f"{target_path.rstrip('/')}__changelog"

@@ -45,14 +45,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..storage import (
+    claim_partition,
+    hadoop_fs,
+    read_json_sidecar,
+    read_parquet_if_exists,
+    write_json_sidecar,
+)
 from .bucketed_ledger import (
     BucketLayoutError,
-    _fs_and_path,
     prune_to_buckets,
-    read_json_sidecar,
     touched_buckets,
     validate_layout,
-    write_json_sidecar,
 )
 from .novelty_ledger import kb_of
 
@@ -101,7 +105,7 @@ def _write_window_meta(
 def _min_epoch_present(spark: SparkSession, path: str) -> int:
     """Smallest ``epoch=`` directory id under ``path`` — pure
     filesystem metadata (the heal's conservative-watermark input)."""
-    fs, root, _jvm = _fs_and_path(spark, path)
+    fs, root, _jvm = hadoop_fs(spark, path)
     ids = [
         int(s.getPath().getName().split("=", 1)[1])
         for s in fs.listStatus(root)
@@ -167,11 +171,8 @@ def append_window_epoch(
     if epoch <= meta["expired_through"]:
         return False
     edir = f"{path.rstrip('/')}/epoch={epoch}"
-    fs, hdir, _jvm = _fs_and_path(spark, edir)
-    if fs.exists(hdir):
-        if fs.exists(_fs_and_path(spark, f"{edir}/_SUCCESS")[1]):
-            return False
-        fs.delete(hdir, True)
+    if not claim_partition(spark, edir):
+        return False
     rows = keys.withColumn(KB_COL, kb_of(F.col(key_col), n_buckets))
     (
         rows.repartition(F.col(KB_COL))
@@ -194,7 +195,7 @@ def expire_through(
         if read_window(spark, path) is not None:
             raise BucketLayoutError(_ORPHAN_MSG.format(path=path))
         raise BucketLayoutError(f"{path}: not a windowed ledger")
-    fs, root, jvm = _fs_and_path(spark, path)
+    fs, root, jvm = hadoop_fs(spark, path)
     dropped = []
     for status in fs.listStatus(root):
         name = status.getPath().getName()
@@ -212,8 +213,6 @@ def expire_through(
 def read_window(spark: SparkSession, path: str) -> DataFrame | None:
     """The live store with its ``epoch`` and ``kb`` partition columns,
     or None before the first append survives."""
-    from ..streaming.events_stream import read_parquet_if_exists
-
     return read_parquet_if_exists(spark, path)
 
 

@@ -66,7 +66,7 @@ def q202_neardup_ingest_component_lifecycle(
         _sb_of_buckets,
         append_bands,
     )
-    from ..streaming.events_stream import read_parquet_if_exists
+    from ..storage import read_parquet_if_exists
     from ..functions.localframe import local_rows_df
 
     from ..operators.graph import connected_components

@@ -13,6 +13,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..storage import hadoop_fs, overwrite_parquet_atomically
+
 
 def write_table(
     df: DataFrame,
@@ -54,20 +56,16 @@ def compact_parquet(
     roughly ``target_file_mb``. Streaming sinks and per-batch upserts
     accumulate small files; at 100 TB, scan throughput dies on file-open
     overhead and the NameNode/listing cost long before CPU matters.
-    Returns the new file count. (On Delta/Iceberg this is OPTIMIZE /
-    rewrite_data_files; this is the plain-parquet equivalent.)"""
-    df = spark.read.parquet(path)
-    total_bytes = sum(
-        f.stat().st_size
-        for f in __import__("pathlib").Path(path).rglob("*.parquet")
-    )
+    Returns the new file count. The old files stay live until the
+    rewrite is fully written (`storage.overwrite_parquet_atomically`).
+    (On Delta/Iceberg this is OPTIMIZE / rewrite_data_files; this is
+    the plain-parquet equivalent.)"""
+    fs, hpath, _ = hadoop_fs(spark, path)
+    total_bytes = fs.getContentSummary(hpath).getLength()
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    tmp = path.rstrip("/") + "__compacting"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    overwrite_parquet_atomically(
+        spark.read.parquet(path).repartition(n_files), path
+    )
     return n_files
 
 

@@ -18,137 +18,118 @@ uses, minus multi-writer conflict detection (which needs a CAS
 primitive plain directories don't have).
 
 Scale: snapshots are plain parquet dirs — partitioning/bucketing
-options pass through; manifests are O(1) metadata.
-
-LIMITATION (enforced): manifest bookkeeping uses the LOCAL
-filesystem; a remote ``hdfs://``/``s3a://`` root would split-brain
-(data remote, manifests local), so URI-scheme roots are rejected.
-Porting to a remote store means swapping the os.* manifest calls for
-the Hadoop FileSystem API (what ``overwrite_parquet_atomically``
-does).
+options pass through; manifests are O(1) metadata. Manifests are
+JSON sidecars (`storage.write_json_sidecar`, stage-then-rename) and
+version listings go through the Hadoop FileSystem API, so a root on
+any Hadoop filesystem works.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _check_local(root: str) -> None:
-    if "://" in root:
-        raise ValueError(
-            "versioned store supports local filesystem roots only "
-            f"(got {root!r}); manifest commits use os.* — see module "
-            "docstring for the Hadoop-FS porting note"
-        )
+from ..storage import hadoop_fs, read_json_sidecar, write_json_sidecar
 
 
-def is_versioned_root(root: str) -> bool:
+def is_versioned_root(spark: SparkSession, root: str) -> bool:
     """True if ``root`` carries (or is ready to carry) snapshot
     manifests — used by writers to refuse mixing plain-overwrite and
     versioned layouts on one path."""
-    return os.path.isdir(_manifest_dir(root))
+    fs, hpath, _ = hadoop_fs(spark, _manifest_dir(root))
+    return fs.exists(hpath)
 
 
 def _manifest_dir(root: str) -> str:
-    return os.path.join(root, "_manifests")
+    return f"{root.rstrip('/')}/_manifests"
 
 
-def _versions(root: str) -> list[int]:
-    d = _manifest_dir(root)
-    if not os.path.isdir(d):
+def _numbered(
+    spark: SparkSession, d: str, prefix: str = "", suffix: str = ""
+) -> list[int]:
+    """Sorted integer ids N of the entries ``{prefix}N{suffix}`` listed
+    directly under ``d`` ([] when ``d`` does not exist)."""
+    fs, hpath, _ = hadoop_fs(spark, d)
+    if not fs.exists(hpath):
         return []
     out = []
-    for f in os.listdir(d):
-        if f.endswith(".json"):
+    for st in fs.listStatus(hpath):
+        name = st.getPath().getName()
+        if name.startswith(prefix) and name.endswith(suffix):
             try:
-                out.append(int(f[:-5]))
+                out.append(int(name[len(prefix):len(name) - len(suffix)]))
             except ValueError:
                 continue
     return sorted(out)
 
 
-def _load_manifest(root: str, version: int) -> dict:
-    with open(os.path.join(_manifest_dir(root), f"{version}.json")) as fh:
-        return json.load(fh)
+def _versions(spark: SparkSession, root: str) -> list[int]:
+    return _numbered(spark, _manifest_dir(root), suffix=".json")
 
 
-def latest_note(root: str) -> str | None:
+def _load_manifest(spark: SparkSession, root: str, version: int) -> dict:
+    manifest = read_json_sidecar(
+        spark, _manifest_dir(root), f"{version}.json"
+    )
+    if manifest is None:
+        raise FileNotFoundError(
+            f"{root}: no readable manifest for version {version}"
+        )
+    return manifest
+
+
+def _commit(spark: SparkSession, root: str, manifest: dict) -> int:
+    n = manifest["version"]
+    write_json_sidecar(spark, _manifest_dir(root), f"{n}.json", manifest)
+    return n
+
+
+def latest_note(spark: SparkSession, root: str) -> str | None:
     """Note string of the newest committed version (None if empty) —
     lets retrying writers detect an already-committed unit of work and
     skip it (see the CDC pipeline's per-batch idempotency)."""
-    v = latest_version(root)
-    return None if v is None else _load_manifest(root, v).get("note")
+    v = latest_version(spark, root)
+    return None if v is None else _load_manifest(spark, root, v).get("note")
 
 
-def latest_version(root: str) -> int | None:
+def latest_version(spark: SparkSession, root: str) -> int | None:
     """Newest committed version, honoring rollbacks (a rollback commit
     is a newer manifest whose ``data_version`` points backwards)."""
-    vs = _versions(root)
+    vs = _versions(spark, root)
     return vs[-1] if vs else None
-
-
-def _data_versions(root: str) -> list[int]:
-    """Version numbers of existing DATA dirs, committed or not — an
-    uncommitted orphan (crashed writer) must never block or be reused
-    by the next commit."""
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for f in os.listdir(root):
-        if f.startswith("v="):
-            try:
-                out.append(int(f[2:]))
-            except ValueError:
-                continue
-    return sorted(out)
 
 
 def write_snapshot(df: DataFrame, root: str, note: str = "") -> int:
     """Write ``df`` as the next immutable snapshot version and commit
     it. Returns the new version number. Orphaned data dirs from
-    crashed writers are skipped over, never reused."""
-    _check_local(root)
-    taken = set(_versions(root)) | set(_data_versions(root))
+    crashed writers (``v=N/`` without a manifest) are skipped over,
+    never reused."""
+    spark = df.sparkSession
+    taken = set(_versions(spark, root)) | set(
+        _numbered(spark, root, prefix="v=")
+    )
     n = (max(taken) + 1) if taken else 0
-    data_path = os.path.join(root, f"v={n}")
-    df.write.mode("errorifexists").parquet(data_path)
-    os.makedirs(_manifest_dir(root), exist_ok=True)
-    manifest = {
+    df.write.mode("errorifexists").parquet(f"{root.rstrip('/')}/v={n}")
+    return _commit(spark, root, {
         "version": n,
         "data_version": n,
         "note": note,
         "committed_at": time.time(),
-    }
-    tmp = os.path.join(_manifest_dir(root), f".{n}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.rename(tmp, os.path.join(_manifest_dir(root), f"{n}.json"))
-    return n
+    })
 
 
-def rollback(root: str, to_version: int) -> int:
+def rollback(spark: SparkSession, root: str, to_version: int) -> int:
     """Metadata-only rollback: commit a new version whose data is the
     ``to_version`` snapshot. History is preserved (roll forward by
     rolling back again)."""
-    _check_local(root)
-    target = _load_manifest(root, to_version)  # must exist
-    vs = _versions(root)
-    n = vs[-1] + 1
-    manifest = {
-        "version": n,
+    target = _load_manifest(spark, root, to_version)  # must exist
+    return _commit(spark, root, {
+        "version": _versions(spark, root)[-1] + 1,
         "data_version": target["data_version"],
         "note": f"rollback to v{to_version}",
         "committed_at": time.time(),
-    }
-    tmp = os.path.join(_manifest_dir(root), f".{n}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.rename(tmp, os.path.join(_manifest_dir(root), f"{n}.json"))
-    return n
+    })
 
 
 def read_snapshot(
@@ -156,11 +137,11 @@ def read_snapshot(
 ) -> DataFrame:
     """Read the latest committed snapshot, or time-travel to
     ``version``."""
-    v = latest_version(root) if version is None else version
+    v = latest_version(spark, root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed snapshots under {root}")
-    data_v = _load_manifest(root, v)["data_version"]
-    return spark.read.parquet(os.path.join(root, f"v={data_v}"))
+    data_v = _load_manifest(spark, root, v)["data_version"]
+    return spark.read.parquet(f"{root.rstrip('/')}/v={data_v}")
 
 
 def snapshot_diff(

@@ -27,10 +27,10 @@ novelty_ingest:
 - The merge is idempotent: a replayed batch's keys are already set, so
   its definitely-new set is empty and the union is an identity
   rewrite.
-- The word-table swap is `overwrite_parquet_atomically` (temp write
-  materializes fully before the target moves), and the filter geometry
-  ``{n_words, k}`` rides a `_bloom_meta.json` sidecar (the
-  bucketed-ledger convention: self-describing store, loud refusal on
+- The word-table swap is `storage.overwrite_parquet_atomically` (temp
+  write materializes fully before the target moves), and the filter
+  geometry ``{n_words, k}`` rides a `_bloom_meta.json` sidecar
+  (`storage.write_json_sidecar`; self-describing store, loud refusal on
   mismatch — a probe under the wrong geometry reads garbage bits and
   silently mis-routes every key).
 """
@@ -43,15 +43,13 @@ from pyspark.sql import functions as F
 from ..functions.localframe import local_rows_df
 
 from ..operators.bloom import bloom_build, bloom_probe_keys, bloom_union
-from ..operators.bucketed_ledger import (
+from ..storage import (
+    overwrite_parquet_atomically,
     read_json_sidecar,
+    read_parquet_if_exists,
     write_json_sidecar,
 )
 from .corpus_ingest import read_docs_stream
-from .events_stream import (
-    overwrite_parquet_atomically,
-    read_parquet_if_exists,
-)
 
 __all__ = [
     "BloomLayoutError",

@@ -39,7 +39,7 @@ from ..operators.quality_classifier import (
     hashed_linear_score,
     synthetic_weights,
 )
-from .events_stream import read_parquet_if_exists
+from ..storage import read_parquet_if_exists
 
 DOCS_STREAM_SCHEMA = StructType(
     [
@@ -592,7 +592,7 @@ def compact_bands_path(
     The rewrite localCheckpoints the compacted rows before the
     overwrite so the read and the write never race on the same files,
     and the overwrite itself is the staged write-then-swap
-    (``overwrite_parquet_atomically`` — round-8 upgrade: the old
+    (`storage.overwrite_parquet_atomically` — round-8 upgrade: the old
     direct overwrite was delete-then-write, and a crash in the gap
     LOST the ledger; at real scale the swap is the table-pointer flip
     of whatever ACID format hosts it).

@@ -30,7 +30,7 @@ instead of the algebra:
   gets this from transaction ids instead);
 - single WRITER per store (the one stream / the one takedown job) —
   the same contract every ledger in this engine ships; concurrent
-  writers need the ACID-format swap-in documented in events_stream.
+  writers need the ACID-format swap-in documented in storage.
 
 Probes derive the ``(w, bits)`` word table from the summed counts and
 run the standard broadcast probe — O(sum of delta sizes) read +
@@ -69,14 +69,12 @@ from ..operators.bloom import (
     counting_build,
     counting_to_words,
 )
-from ..operators.bucketed_ledger import (
-    _fs_and_path,
-    read_json_sidecar,
-    write_json_sidecar,
-)
-from .events_stream import (
+from ..storage import (
+    claim_partition,
     overwrite_parquet_atomically,
+    read_json_sidecar,
     read_parquet_if_exists,
+    write_json_sidecar,
 )
 
 __all__ = [
@@ -123,6 +121,10 @@ def _write_meta(
     )
 
 
+def _delta_dir(path: str, delta_id: str) -> str:
+    return f"{path.rstrip('/')}/delta_id={delta_id}"
+
+
 def store_geometry(
     spark: SparkSession, path: str, n_words: int, k: int
 ) -> tuple[int, int, list[str], list[str]]:
@@ -163,48 +165,14 @@ def write_counting_delta(
     k: int = DEFAULT_K,
     sign: int = 1,
 ) -> bool:
-    """Append one delta partition; returns False (and writes nothing)
-    when the delta was already applied — its ``delta_id=`` directory
-    exists (``mode("ignore")``) or compaction absorbed it (sidecar
-    tombstone). ``sign=-1`` is the takedown path. Single-writer
-    contract (module docstring)."""
-    spark = keys.sparkSession
-    if delta_id == BASE_DELTA:
-        raise CountingLayoutError(
-            f"delta_id '{BASE_DELTA}' is reserved for compaction output"
-        )
-    n_words, k, absorbed, log = store_geometry(spark, path, n_words, k)
-    if delta_id in absorbed:
-        return False
-    # Existence is checked explicitly (not via mode("ignore"), which
-    # cannot report whether it skipped): a COMPLETED delta directory
-    # (_SUCCESS present) means this delta already landed — replay
-    # writes nothing. A directory WITHOUT _SUCCESS is a crashed
-    # partial write: mode("ignore") would silently keep the torn
-    # partition; here it is deleted and rewritten.
-    ddir = f"{path.rstrip('/')}/delta_id={delta_id}"
-    fs, hdir, _jvm = _fs_and_path(spark, ddir)
-    if fs.exists(hdir):
-        if fs.exists(_fs_and_path(spark, f"{ddir}/_SUCCESS")[1]):
-            # Crash window repair: parquet landed but the sidecar write
-            # below didn't — heal the version log on replay so as-of
-            # reads see every applied delta exactly once.
-            if delta_id not in log:
-                _write_meta(
-                    spark, path, n_words, k, absorbed, log + [delta_id]
-                )
-            return False
-        fs.delete(hdir, True)
-    delta = counting_build(keys, key, n_words, k)
-    if sign < 0:
-        delta = delta.select("p", (-F.col("cnt")).alias("cnt"))
-    # coalesce(1): one file per delta — the table is bounded by m
-    # rows, never worth parallel output.
-    delta.coalesce(1).write.mode("errorifexists").parquet(ddir)
-    if delta_id not in log:
-        log = log + [delta_id]
-    _write_meta(spark, path, n_words, k, absorbed, log)
-    return True
+    """Append one delta partition (`append_counting_deltas` with one
+    item); returns False (and writes nothing) when the delta was
+    already applied — its ``delta_id=`` directory is committed or
+    compaction absorbed it (sidecar tombstone). ``sign=-1`` is the
+    takedown path. Single-writer contract (module docstring)."""
+    return append_counting_deltas(
+        keys.sparkSession, [(delta_id, keys, sign)], key, path, n_words, k
+    )[delta_id]
 
 
 def append_counting_deltas(
@@ -235,11 +203,10 @@ def append_counting_deltas(
       threads are its internal fan-out, and the sidecar
       read-modify-write happens exactly once, after they all finish;
     - per-delta idempotence: absorbed ids (compaction tombstone) and
-      completed directories (_SUCCESS) are refused exactly as in
-      `write_counting_delta`, torn directories are deleted and
-      rewritten, and a completed-but-unlogged directory heals the log
-      (the same crash window: this function widens it to several
-      deltas, and the SAME replay heal covers all of them);
+      committed directories (`storage.claim_partition`) are refused,
+      torn directories are deleted and rewritten, and a
+      committed-but-unlogged directory (crash between the parquet
+      writes and the sidecar write) heals the log on replay;
     - all-or-nothing is NOT promised (it never was across separate
       calls either): a crash mid-batch leaves some directories complete
       and unlogged — a replay of the same ordered batch heals them in
@@ -264,27 +231,25 @@ def append_counting_deltas(
         if delta_id in absorbed:
             applied[delta_id] = False
             continue
-        ddir = f"{path.rstrip('/')}/delta_id={delta_id}"
-        fs, hdir, _jvm = _fs_and_path(spark, ddir)
-        if fs.exists(hdir):
-            if fs.exists(_fs_and_path(spark, f"{ddir}/_SUCCESS")[1]):
-                # completed directory: refuse the rewrite, heal the
-                # log below at this id's LIST position — exactly where
-                # a sequential replay would have healed it
-                loggable.append(delta_id)
-                applied[delta_id] = False
-                continue
-            fs.delete(hdir, True)
         loggable.append(delta_id)
-        pending.append((delta_id, keys, sign))
+        if claim_partition(spark, _delta_dir(path, delta_id)):
+            pending.append((delta_id, keys, sign))
+        else:
+            # completed directory: refuse the rewrite, heal the log
+            # below at this id's LIST position — exactly where a
+            # sequential replay would have healed it
+            applied[delta_id] = False
 
     def _write_one(item: tuple[str, DataFrame, int]) -> None:
         delta_id, keys, sign = item
         delta = counting_build(keys, key, n_words, k)
         if sign < 0:
             delta = delta.select("p", (-F.col("cnt")).alias("cnt"))
-        ddir = f"{path.rstrip('/')}/delta_id={delta_id}"
-        delta.coalesce(1).write.mode("errorifexists").parquet(ddir)
+        # coalesce(1): one file per delta — the table is bounded by m
+        # rows, never worth parallel output.
+        delta.coalesce(1).write.mode("errorifexists").parquet(
+            _delta_dir(path, delta_id)
+        )
 
     overlap(spark, *[partial(_write_one, it) for it in pending])
     for delta_id, _keys, _sign in pending:

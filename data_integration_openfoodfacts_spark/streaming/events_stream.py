@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..storage import overwrite_parquet_atomically, read_parquet_if_exists
+
 EVENTS_STREAM_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -145,94 +147,6 @@ def dedup_events_stream(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys
     )
-
-
-def read_parquet_if_exists(spark, path: str):
-    """Read a parquet target, returning None when the path does not
-    exist OR holds no data files yet (an all-empty PARTITIONED append
-    writes only a _SUCCESS marker, no footers, so the very first real
-    batch of a bucketed ledger can find the directory present but
-    schemaless). Any other failure (corrupt file, permission, FS
-    timeout) propagates from ``spark.read`` — treating it as "first
-    batch" would silently overwrite and destroy the accumulated target.
-
-    Both "missing" states are probed via the Hadoop FS API BEFORE
-    calling ``spark.read`` (round-10 VERDICT #2): the previous
-    catch-AnalysisException shape still let Spark log the full
-    PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA stack trace to stderr on
-    every expected first-batch ledger probe, polluting any driver tail
-    capture. A missing ledger is an ordinary state here, not an error
-    — no exception may be raised OR logged for it. The recursive
-    listing stops at the first data file, and is work ``spark.read``'s
-    own file index would repeat anyway."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
-    if fs.getFileStatus(hpath).isDirectory():
-        it = fs.listFiles(hpath, True)
-        while True:
-            if not it.hasNext():
-                return None  # markers/sidecars only — no footers yet
-            name = it.next().getPath().getName()
-            if not name.startswith(("_", ".")):
-                break
-    return spark.read.parquet(path)
-
-
-def overwrite_parquet_atomically(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """Write-to-temp-then-swap: a plain overwrite of a path the plan is
-    lazily reading from deletes the source mid-computation if any cached
-    partition is evicted and recomputed. The temp write fully
-    materializes first; the swap parks the old target in a trash dir,
-    renames the temp in, then drops the trash — so the accumulated data
-    survives both a failed swap (restored from trash) and a crash in
-    the window between renames (trash still on disk for manual
-    recovery; the window itself is inherent to rename-based swaps on
-    non-transactional stores — Delta/Iceberg remove it entirely).
-
-    Hadoop ``FileSystem.rename`` reports failure via its boolean return
-    (no exception); every rename here is checked — a silently-failed
-    rename after the target was removed would otherwise destroy it.
-    """
-    import uuid
-
-    spark = df.sparkSession
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{path.rstrip('/')}__tmp_{token}"
-    trash = f"{path.rstrip('/')}__trash_{token}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    htmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    htrash = jvm.org.apache.hadoop.fs.Path(trash)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    had_target = fs.exists(hpath)
-    if had_target and not fs.rename(hpath, htrash):
-        fs.delete(htmp, True)  # don't strand the freshly-written copy
-        raise IOError(
-            f"overwrite_parquet_atomically: could not park {path} -> "
-            f"{trash}; target left untouched"
-        )
-    if not fs.rename(htmp, hpath):
-        if had_target and not fs.rename(htrash, hpath):
-            raise IOError(
-                f"overwrite_parquet_atomically: swap failed AND restore "
-                f"failed — data preserved at {trash}"
-            )
-        raise IOError(
-            f"overwrite_parquet_atomically: could not rename {tmp} -> "
-            f"{path}" + ("; previous target restored" if had_target else "")
-        )
-    if had_target:
-        fs.delete(htrash, True)
 
 
 def upsert_keep_latest_batch(

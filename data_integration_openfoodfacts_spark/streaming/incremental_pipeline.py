@@ -162,7 +162,7 @@ def run_incremental_pipeline(
         from ..sources.versioned import latest_note, write_snapshot
 
         note = f"batch {batch_id}"
-        if latest_note(root) != note:
+        if latest_note(df.sparkSession, root) != note:
             write_snapshot(df, root, note=note)
 
     def _guard_layout(root: str) -> None:
@@ -171,7 +171,9 @@ def run_incremental_pipeline(
         import os
 
         if versioned_gold:
-            plain = os.path.isdir(root) and not is_versioned_root(root)
+            plain = os.path.isdir(root) and not is_versioned_root(
+                spark, root
+            )
             if plain and any(
                 not f.startswith(("v=", "_", "."))
                 for f in os.listdir(root)
@@ -180,7 +182,7 @@ def run_incremental_pipeline(
                     f"{root} holds a plain-overwrite gold table; refusing "
                     "versioned_gold=True on top of it (move it aside first)"
                 )
-        elif is_versioned_root(root):
+        elif is_versioned_root(spark, root):
             raise ValueError(
                 f"{root} is a versioned snapshot store; running with "
                 "versioned_gold=False would destroy its history — pass "
@@ -189,7 +191,7 @@ def run_incremental_pipeline(
 
     def process(batch: DataFrame, _batch_id: int) -> None:
         from ..operators.scd import scd2_merge_batch
-        from .events_stream import overwrite_parquet_atomically
+        from ..storage import overwrite_parquet_atomically
 
         if not batch.head(1):
             return

@@ -101,7 +101,7 @@ def fresh_requests(
         store_n_buckets,
         touched_buckets,
     )
-    from ..streaming.events_stream import read_parquet_if_exists
+    from ..storage import read_parquet_if_exists
 
     spark = requests.sparkSession
     ids = requests.dropDuplicates([request_id_col]).withColumn(

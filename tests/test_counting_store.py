@@ -266,7 +266,7 @@ def test_batched_append_heals_unlogged_directory(spark, tmp_path):
     `write_counting_delta` performs for one delta."""
     import json
 
-    from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (  # noqa: E501
+    from data_integration_openfoodfacts_spark.storage import (
         read_json_sidecar,
         write_json_sidecar,
     )

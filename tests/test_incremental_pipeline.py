@@ -133,7 +133,7 @@ def test_versioned_gold_gives_per_drop_history(spark, tmp_path):
     run_incremental_pipeline(spark, src, work, versioned_gold=True)
 
     root = f"{work}/gold/dim_product"
-    assert latest_version(root) == 1
+    assert latest_version(spark, root) == 1
     v0 = read_snapshot(spark, root, 0).count()
     v1 = read_snapshot(spark, root).count()
     assert v1 > v0, "second drop adds products to the latest snapshot"
@@ -164,4 +164,4 @@ def test_mode_flip_on_versioned_store_refuses(spark, tmp_path):
         latest_version,
     )
 
-    assert latest_version(f"{work}/gold/dim_product") == 0
+    assert latest_version(spark, f"{work}/gold/dim_product") == 0

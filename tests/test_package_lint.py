@@ -6,7 +6,12 @@
 - driver threads start in ONE place: only ``concurrency.py`` may
   import ``concurrent.futures`` or ``threading``. Everything else fans
   out through ``concurrency.overlap``, whose threads keep the caller's
-  job group and description."""
+  job group and description;
+- stores commit in ONE place: only ``storage.py`` may call
+  ``.rename(``, ``os.replace`` or ``shutil.move``. Every other module
+  publishes sidecars, swaps directories and claims partitions through
+  ``storage``, whose renames are checked and whose swaps restore on
+  failure."""
 
 from __future__ import annotations
 
@@ -18,6 +23,7 @@ import data_integration_openfoodfacts_spark as pkg
 PKG_DIR = pathlib.Path(pkg.__file__).parent
 THREAD_MODULES = {"concurrent", "concurrent.futures", "threading"}
 THREADS_ALLOWED = {"concurrency.py"}
+COMMITS_ALLOWED = {"storage.py"}
 
 
 def _modules():
@@ -65,3 +71,38 @@ def test_thread_imports_only_in_concurrency_module():
     assert found == [], (
         f"driver threads outside concurrency.overlap: {found}"
     )
+
+
+def _is_commit_call(node) -> bool:
+    if not (isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)):
+        return False
+    attr, owner = node.func.attr, node.func.value
+    if attr == "rename":
+        return True
+    return isinstance(owner, ast.Name) and (owner.id, attr) in {
+        ("os", "replace"), ("shutil", "move"),
+    }
+
+
+def test_renames_only_in_storage_module():
+    found = [
+        _where(path, node)
+        for path, tree in _modules()
+        if str(path.relative_to(PKG_DIR)) not in COMMITS_ALLOWED
+        for node in ast.walk(tree)
+        if _is_commit_call(node)
+    ]
+    assert found == [], f"store commits outside storage.py: {found}"
+
+
+def test_commit_call_detector():
+    def flagged(src):
+        return _is_commit_call(ast.parse(src).body[0].value)
+
+    for src in ("fs.rename(a, b)", "os.rename(a, b)", "os.replace(a, b)",
+                "shutil.move(a, b)"):
+        assert flagged(src), src
+    for src in ("df.withColumnRenamed(a, b)", "s.replace(a, b)",
+                "shutil.rmtree(a)"):
+        assert not flagged(src), src

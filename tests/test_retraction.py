@@ -113,7 +113,7 @@ def test_whole_bucket_deletion_leaves_readable_store(spark, tmp_path):
     # an all-bucket deletion can leave a marker-only directory that a
     # bare spark.read cannot infer a schema from; the engine's own
     # reader is the canonical probe for that state:
-    from data_integration_openfoodfacts_spark.streaming.events_stream import (
+    from data_integration_openfoodfacts_spark.storage import (
         read_parquet_if_exists,
     )
 
@@ -147,3 +147,51 @@ def test_retracted_shingles_score_novel_again(spark, tmp_path):
     got = {r["doc_id"]: r["n_novel"] for r in per_doc2.collect()}
     assert got[1] == n1  # forgotten -> novel again
     assert got[2] == 0   # unrelated doc untouched
+
+
+def test_failed_bucket_swap_parks_outside_the_store(
+    spark, tmp_path, monkeypatch
+):
+    """A bucket swap whose publish AND restore both fail leaves the old
+    bucket parked in trash NEXT TO the store: the error names the trash
+    path, the store still reads (a parked ``kb=N`` dir inside it would
+    fail every read with a conflicting partition column), and no row is
+    lost between the two."""
+    import re
+
+    import pytest
+
+    from data_integration_openfoodfacts_spark.operators import retraction
+
+    class ParkOnlyFS:
+        """Delegates to the real FileSystem; every rename except the
+        park into trash fails."""
+
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            return "__trash_" in str(dst) and self._fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real = retraction.hadoop_fs
+
+    def fake_hadoop_fs(spark_, path_):
+        fs, hpath, jvm = real(spark_, path_)
+        return ParkOnlyFS(fs), hpath, jvm
+
+    path = str(tmp_path / "ledger")
+    # two buckets: the retracted key's bucket keeps survivors, so the
+    # swap has a staged dir to publish
+    append_ledger_delta(_firsts(spark, FIRSTS), path, n_buckets=2)
+    monkeypatch.setattr(retraction, "hadoop_fs", fake_hadoop_fs)
+    with pytest.raises(IOError, match="__trash_") as err:
+        retract_from_novelty_ledger(spark, path, _keys(spark, ["a" * 32]), 2)
+    trash = re.search(r"preserved at (\S+)", str(err.value)).group(1)
+    live = {r["shingle_md5"] for r in spark.read.parquet(path).collect()}
+    parked = {r["shingle_md5"] for r in spark.read.parquet(trash).collect()}
+    assert "a" * 32 in parked
+    assert live | parked == {c * 32 for c in "abcdef"}
+    assert not live & parked

@@ -312,7 +312,7 @@ def test_read_parquet_if_exists_is_silent_on_missing(spark, tmp_path, capfd):
     FS API, so stderr stays clean; real data still reads back."""
     import os
 
-    from data_integration_openfoodfacts_spark.streaming.events_stream import (
+    from data_integration_openfoodfacts_spark.storage import (
         read_parquet_if_exists,
     )
 
