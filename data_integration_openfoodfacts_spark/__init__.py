@@ -6,15 +6,21 @@ the OpenFoodFacts product dump plus six OLAP queries that run in MySQL.
 This package re-expresses every operator Spark-first:
 
 - ``session``    : tuned SparkSession factory (UTC, AQE, Arrow).
+- ``storage``    : how persisted stores commit (sidecars, directory
+                   swaps, partition claims).
 - ``sources``    : CSV / Parquet readers and table sinks (replaces JDBC).
 - ``functions``  : text normalization (the reference's only UDF), text
                    analysis, and vector math helpers.
 - ``operators``  : cleaning, validation, dedup, surrogate keys, DQ checks,
-                   similarity search.
-- ``plans``      : the analytics queries + the medallion pipeline runner.
-- ``streaming``  : Structured Streaming ingestion (reference's documented
+                   similarity search, and the persisted ledgers.
+- ``plans``      : the query registry + the medallion pipeline runner.
+- ``streaming``  : Structured Streaming windows, sessions and the stream
+                   screens over persisted stores (reference's documented
                    future CDC mode, architecture_notes.md:263-331).
-- ``multimodal`` : opaque-binary column plumbing for image/audio payloads.
+- ``multimodal`` : codec-free operators over opaque binary payloads.
+
+Every module is reached by a registry query, the pipeline, the CLI or
+the bench entry points (``tests/test_package_lint.py``).
 
 Everything is public PySpark DataFrame/SQL API; no custom Catalyst rules
 are needed (SURVEY.md §4).

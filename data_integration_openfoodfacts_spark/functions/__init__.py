@@ -1,9 +1,8 @@
-from .text_normalize import ascii_fold, normalized_text_chain
+from .text_normalize import ascii_fold
 from .vectors import cosine_similarity_expr, dot_product_expr, l2_norm_expr
 
 __all__ = [
     "ascii_fold",
-    "normalized_text_chain",
     "cosine_similarity_expr",
     "dot_product_expr",
     "l2_norm_expr",

@@ -14,8 +14,6 @@ out of hot paths that don't need accent folding.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
@@ -92,14 +90,3 @@ def _make_ascii_fold_mapped():
 
 
 ascii_fold_mapped = _make_ascii_fold_mapped()
-
-
-def normalized_text_chain(col: Column | str, max_len: int | None = None) -> Column:
-    """Full reference cleaning chain F1+F2: accent-fold then strip
-    non-alphanumerics, lowercase, trim, collapse spaces, truncate.
-    Golden vectors in quality_report.md:73-79.
-    """
-    from ..operators.cleaning import clean_text_chain
-
-    c = F.col(col) if isinstance(col, str) else col
-    return clean_text_chain(ascii_fold(c), max_len=max_len)

@@ -1,15 +1,7 @@
-from .binary_ops import (
-    MEDIA_SCHEMA,
-    attach_fake_media,
-    decode_media,
-    extract_byte_features,
-    sample_frames,
-)
+from .binary_ops import MEDIA_SCHEMA, attach_fake_media, extract_byte_features
 
 __all__ = [
     "MEDIA_SCHEMA",
     "attach_fake_media",
-    "decode_media",
     "extract_byte_features",
-    "sample_frames",
 ]

@@ -1,12 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata, processed by Arrow-batched ``mapInPandas``.
 
-The container has no image/audio codecs, so the decode step is STUBBED:
-``decode_media(..., fake=False)`` raises NotImplementedError where a
-real deployment would call PIL/ffmpeg; ``fake=True`` substitutes a
-deterministic byte-statistics decode. Everything Spark-side — schema,
-binary payload handling, Arrow batch shapes, partition behavior — is
-real and tested.
+The container has no image/audio codecs, so every operator here is
+codec-free: byte histograms and byte n-gram SimHash work on the raw
+payload. Everything Spark-side — schema, binary payload handling,
+Arrow batch shapes, partition behavior — is real and tested.
 
 Scale posture: media bytes never leave the executor JVM except as Arrow
 batches into the Python worker; no driver collects; per-batch vectorized
@@ -72,64 +70,6 @@ def attach_fake_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-#: stub decode contract shared by decode_media and resize_media — ONE
-#: definition so the two can't silently desynchronize
-_STUB_CODEC_MSG = (
-    "media codecs unavailable in this container; "
-    "pass fake=True for the deterministic stub decode"
-)
-
-
-def _stub_dims(n_bytes: int) -> tuple[int, int, int]:
-    """Deterministic (width, height, channels) implied by the payload
-    byte length."""
-    return (n_bytes % 640 + 1, n_bytes % 480 + 1, 3)
-
-
-DECODED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_channels", LongType()),
-    ]
-)
-
-
-def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode payloads to (width, height, channels) via mapInPandas.
-
-    With ``fake=False`` this raises NotImplementedError inside the UDF —
-    a real deployment plugs PIL/libav into ``_decode_one``. The fake
-    decode derives dimensions deterministically from the byte length.
-    """
-
-    def decode_batches(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        def _decode_one(payload, fake_flag: bool):
-            if payload is None:
-                return (None, None, None)  # undecodable row, not a crash
-            if not fake_flag:
-                raise NotImplementedError(_STUB_CODEC_MSG)
-            return _stub_dims(len(payload))
-
-        for pdf in batches:
-            dims = [_decode_one(p, fake) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                    "n_channels": [d[2] for d in dims],
-                }
-            )
-
-    return df.mapInPandas(decode_batches, DECODED_SCHEMA)
-
-
 def extract_byte_features(df: DataFrame, n_buckets: int = 8) -> DataFrame:
     """Byte-histogram feature vector per payload (real computation, no
     codec needed): fraction of bytes landing in each of ``n_buckets``
@@ -165,89 +105,6 @@ def extract_byte_features(df: DataFrame, n_buckets: int = 8) -> DataFrame:
     )
 
 
-def sample_frames(
-    df: DataFrame, frame_bytes: int = 64, stride: int = 2
-) -> DataFrame:
-    """'Video' frame sampling over a binary payload: split into
-    fixed-size frames, keep every ``stride``-th. Pure Spark (no UDF):
-    byte slicing via substring on binary — one row per sampled frame."""
-    n_frames = F.floor(F.col("meta.n_bytes") / frame_bytes).cast("int")
-    idx = F.explode(
-        F.when(n_frames > 0, F.sequence(F.lit(0), n_frames - 1, F.lit(stride)))
-        .otherwise(F.array().cast("array<int>"))
-    ).alias("frame_idx")
-    return df.filter(F.col("media_type") == "video").select(
-        "media_id", idx, "payload"
-    ).select(
-        "media_id",
-        "frame_idx",
-        F.substring(
-            F.col("payload"), F.col("frame_idx") * frame_bytes + 1, frame_bytes
-        ).alias("frame_bytes"),
-    )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("out_width", LongType()),
-        StructField("out_height", LongType()),
-        StructField("n_channels", LongType()),
-        StructField("pixels", BinaryType()),
-    ]
-)
-
-
-def resize_media(
-    df: DataFrame, out_w: int = 8, out_h: int = 8, fake: bool = False
-) -> DataFrame:
-    """Nearest-neighbor image resize via mapInPandas — the Spark-side
-    plumbing (schema, batching, per-row numpy) is real; only the codec
-    is stubbed. ``fake=False`` raises NotImplementedError inside the
-    UDF (a real deployment decodes with PIL there); the fake path
-    materializes the SAME (h, w, c) pixel buffer the stub decode
-    implies (payload bytes tiled to w*h*c) and runs the real
-    nearest-neighbor index-gather over it, so the resampling math is
-    fully exercised and deterministic without any codec.
-
-    Scale: narrow Arrow-batched transform, no shuffle; output rows
-    carry out_w*out_h*c bytes regardless of input size (the decode
-    buffer never leaves the task)."""
-
-    def resize_batches(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        def _one(payload):
-            if payload is None:
-                return (None, None, None, None)
-            if not fake:
-                raise NotImplementedError(_STUB_CODEC_MSG)
-            w, h, c = _stub_dims(len(payload))
-            raw = np.frombuffer(bytes(payload), dtype=np.uint8)
-            buf = np.resize(raw, w * h * c).reshape(h, w, c)
-            yi = (np.arange(out_h) * h) // out_h
-            xi = (np.arange(out_w) * w) // out_w
-            out = buf[yi][:, xi]
-            return (out_w, out_h, c, out.tobytes())
-
-        for pdf in batches:
-            res = [_one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "out_width": [r[0] for r in res],
-                    "out_height": [r[1] for r in res],
-                    "n_channels": [r[2] for r in res],
-                    "pixels": [r[3] for r in res],
-                }
-            )
-
-    return df.mapInPandas(resize_batches, RESIZED_SCHEMA)
-
-
 def binary_simhash(
     df: DataFrame,
     id_col: str = "media_id",
@@ -261,9 +118,9 @@ def binary_simhash(
     of EXIF churn" that needs no decoder at all (exact dedup has
     `meta.content_md5`; this catches the almost-equal payloads).
 
-    Arrow pass (round 14; the ``decode_media`` shape): ONE
-    `mapInPandas` over exactly (id, payload) computes each payload's
-    distinct-gram ±1 bit votes in place — numpy windows the bytes,
+    Arrow pass (round 14): ONE `mapInPandas` over exactly
+    (id, payload) computes each payload's distinct-gram ±1 bit votes
+    in place — numpy windows the bytes,
     dedups grams per row, and md5 (hashlib over the SAME uppercase-hex
     gram string `F.hex` produced, so hashes are bit-identical to the
     old JVM plan and to DuckDB's `hex()`) runs once per TASK-unique
@@ -279,9 +136,13 @@ def binary_simhash(
 
     Precondition (shared with `similarity_dedup.word_shingles`, and
     true of every media frame here — ``id_col`` is the media PK): one
-    payload row per id. The partial-vote sum then equals the old
-    global (id, gram)-distinct vote exactly; ids repeated across rows
-    would instead vote grams shared BETWEEN their rows once per row.
+    payload row per non-null id. The partial-vote sum then equals the
+    old global (id, gram)-distinct vote exactly; ids repeated across
+    rows would instead vote grams shared BETWEEN their rows once per
+    row, and null ids would all fold into one group. Both RAISE: the
+    final aggregate also counts the partial rows per id, and the
+    fingerprint of a null id or of an id with more than one voting row
+    is a ``raise_error`` (same job, same single exchange).
     """
     from functools import reduce
     from operator import add
@@ -341,7 +202,9 @@ def binary_simhash(
                     continue
                 ids.append(mid)
                 cols.append(s)
-            out = {"__id": pd.Series(ids, dtype="int64")}
+            # nullable: a null id must reach the final check, not
+            # fail an int cast inside the worker
+            out = {"__id": pd.Series(ids, dtype="Int64")}
             arr = (
                 np.vstack(cols)
                 if cols
@@ -356,7 +219,8 @@ def binary_simhash(
         F.col(payload_col).alias("__payload"),
     ).mapInPandas(vote_batches, out_schema)
     bitsums = partials.groupBy("__id").agg(
-        *[F.sum(f"s{b}").alias(f"s{b}") for b in range(nbits)]
+        *[F.sum(f"s{b}").alias(f"s{b}") for b in range(nbits)],
+        F.count(F.lit(1)).alias("__rows"),
     )
     simhash = reduce(
         add,
@@ -365,6 +229,19 @@ def binary_simhash(
             for b in range(nbits)
         ],
     )
+    bad_id = F.col("__id").isNull() | (F.col("__rows") > 1)
+    checked = F.when(
+        bad_id,
+        F.raise_error(
+            F.concat(
+                F.lit(f"binary_simhash needs one payload row per non-null "
+                      f"{id_col}; got "),
+                F.col("__rows").cast("string"),
+                F.lit(" rows for id "),
+                F.coalesce(F.col("__id").cast("string"), F.lit("NULL")),
+            )
+        ),
+    ).otherwise(simhash.cast("long"))
     return bitsums.select(
-        F.col("__id").alias(id_col), simhash.cast("long").alias("simhash")
+        F.col("__id").alias(id_col), checked.alias("simhash")
     )

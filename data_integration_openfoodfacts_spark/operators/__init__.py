@@ -5,15 +5,9 @@ from .cleaning import (
     impute_with_default,
     valid_expr,
 )
-from .dedup import dedup_exact, dedup_keep_latest
-from .dq import (
-    assert_count_parity,
-    assert_no_orphans,
-    assert_unique,
-    assert_within_bounds,
-)
+from .dedup import dedup_keep_latest
+from .dq import assert_unique
 from .keys import add_surrogate_key
-from .validation import apply_bounds
 
 __all__ = [
     "INVALID_TOKENS",
@@ -22,11 +16,6 @@ __all__ = [
     "clean_text_chain",
     "extract_category_head",
     "dedup_keep_latest",
-    "dedup_exact",
     "add_surrogate_key",
-    "apply_bounds",
     "assert_unique",
-    "assert_no_orphans",
-    "assert_count_parity",
-    "assert_within_bounds",
 ]

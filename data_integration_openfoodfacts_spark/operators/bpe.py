@@ -25,7 +25,7 @@ non-overlapping replace merges them all (``abab -> [ab][ab]``, while
 Scale posture: the corpus is touched exactly once (step 1); every
 round after that costs O(|vocab|), and |vocab| is millions of rows at
 100 TB, not billions. The driver receives one (pair, count) row per
-round — the same bounded-collect contract as clustering/pca.
+round — the same bounded-collect contract as clustering.
 Production vocabularies (30k+ merges) batch the application step
 (apply the top-B non-conflicting merges per round) — the round
 structure here is the unbatched reference semantics the q137 oracle

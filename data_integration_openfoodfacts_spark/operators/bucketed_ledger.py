@@ -1,8 +1,8 @@
 """The ONE bucketed-ledger layout (round-9 VERDICT #4): every
 append-only store in this engine that persists hive-partitioned by an
 md5-derived bucket column — the novelty ledger (``kb``), the MinHash
-band ledger (``sb``), the corpus store (``mb``) — shares the same
-load-bearing recipe, previously hand-rolled three times:
+band ledger (``sb``), the embedding band ledger (``eb``), the
+component ledger — shares the same load-bearing recipe:
 
 - rows land under ``bucket_col = hash(key) % n_buckets`` so a
   tranche/batch membership probe PRUNES the store read to the buckets

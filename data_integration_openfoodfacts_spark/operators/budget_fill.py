@@ -16,11 +16,11 @@ by source (budgets are a broadcast source-sized table; the token
 count is a narrow expression riding the scan). Skew posture: a
 monster source is one hot window partition, and a running sum has no
 partial operator (SKEW.md case 2's aggregate-over-window rule) — for
-the 100 TB survivors-only path, pre-filter with
-``mixture.domain_cap_survivors``-style bucketed capping to bound any
-source's row count before the exact cumsum, or shard the source by an
-md5 bucket and give each bucket budget/B tokens (the overshoot bound
-becomes B documents).
+the 100 TB survivors-only path, pre-filter with a two-phase
+bucketed cap (the skew note in ``operators/mixture.py``) to bound
+any source's row count before the exact cumsum, or shard the source
+by an md5 bucket and give each bucket budget/B tokens (the overshoot
+bound becomes B documents).
 
 Determinism contract: token counts and budgets are BIGINT; the
 running sum is an integer sum over a total order (draw, id) both

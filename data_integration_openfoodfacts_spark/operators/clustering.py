@@ -87,9 +87,9 @@ def fit_centroids_lloyd(
     (k*dim ints), ``array_min`` picks the (d2, cid) argmin per row with
     zero shuffle. The update is one (centroid_id, pos) groupBy with
     map-side combine (k*dim output groups) per iteration; the driver
-    collects only those k*dim aggregate rows per round (the same
-    bounded-collect contract as ``pca.py``). The quantized corpus is
-    localCheckpointed once and re-read by all iterations.
+    collects only those k*dim aggregate rows per round (a bounded
+    collect). The quantized corpus is localCheckpointed once and
+    re-read by all iterations.
 
     Exactness bounds: |micros| <= ~1e6 for unit-scale embeddings, so
     d2 <= dim * 4e12 and per-cluster sums stay far inside int64; the

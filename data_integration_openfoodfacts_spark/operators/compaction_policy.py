@@ -121,8 +121,8 @@ def maybe_compact_bucketed(
     max_files_per_bucket: int,
 ) -> bool:
     """Run ``compact()`` (the store's own compaction pass, e.g. a
-    ``lambda: compact_ledger_path(spark, path, nb)``) iff any single
-    bucket holds more than ``max_files_per_bucket`` parquet files —
+    ``bucketed_ledger.compact_bucketed`` call) iff any single bucket
+    holds more than ``max_files_per_bucket`` parquet files —
     the per-bucket worst case is what a pruned probe actually pays.
     Returns whether a compaction ran; a legacy FLAT store (no bucket
     dirs) with any files always triggers, since compaction is also its

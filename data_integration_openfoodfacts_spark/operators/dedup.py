@@ -42,44 +42,6 @@ def dedup_keep_latest(
     return df.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def dedup_keep_latest_salted(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[Column],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Keep-latest for hot keys WITHOUT relying on the optimizer.
-
-    On Spark >= 3.5 ``dedup_keep_latest`` is already skew-proof — the
-    ``rn==1`` filter gets a map-side ``WindowGroupLimit(Partial)``, and
-    SKEW.md's measurements show the salted form strictly loses there.
-    This variant is the explicit fallback for configurations where that
-    protection is absent: ``spark.sql.window.group.limit.threshold=-1``,
-    a rank filter above the threshold (default 1000), or engines
-    without the rule. Two phases restore parallelism: keep-latest
-    within (key, random salt), then keep-latest across the <= n_salts
-    survivors per key. Identical semantics because "first under a total
-    order" is associative across any partition of the rows."""
-    salted = df.withColumn("__salt", (F.rand(seed=0) * n_salts).cast("int"))
-    w1 = Window.partitionBy(
-        *[F.col(k) for k in keys], F.col("__salt")
-    ).orderBy(*order_by)
-    phase1 = (
-        salted.withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__salt")
-    )
-    return dedup_keep_latest(phase1, keys, order_by)
-
-
-def dedup_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Exact dedup on a key subset (reference O2,
-    pipeline_etl.ipynb:520) — hash aggregate, arbitrary survivor.
-    Use ``dedup_keep_latest`` when the survivor must be deterministic.
-    """
-    return df.dropDuplicates(list(keys))
-
-
 def dedup_exact_segments(
     df: DataFrame,
     id_col: str,

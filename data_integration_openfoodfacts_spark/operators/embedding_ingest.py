@@ -30,9 +30,8 @@ Layout and join direction follow the round-9 unified rules:
 
 Tuning: collision probability per band is P[all rows_per_band sign
 bits agree] = (1 - theta/pi)^rows_per_band. The default 8x16 (8 bands
-of 16 bits) matches the streaming wrapper (embedding_stream.py) and
-q167: at 16 bits the per-band CHANCE-collision floor is 0.5^16 ~ 1.5e-5,
-so collisions mean genuinely similar vectors. The earlier 8x8 default
+of 16 bits) matches q167: at 16 bits the per-band CHANCE-collision
+floor is 0.5^16 ~ 1.5e-5, so collisions mean genuinely similar vectors. The earlier 8x8 default
 had a 0.5^8 = 1/256 per-band floor and collided essentially everything
 by chance at corpus sizes in the hundreds (measured in
 plans/embedding_ingest_queries.py) — pass rows_per_band=8 explicitly
@@ -42,7 +41,7 @@ the measured fixed-vs-logscaled tuning study in SCALING_LLM.json.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.localframe import local_rows_df
@@ -50,7 +49,6 @@ from ..functions.localframe import local_rows_df
 from ..storage import read_parquet_if_exists
 from .bucketed_ledger import (
     append_bucketed,
-    compact_bucketed,
     prune_to_buckets,
     store_n_buckets,
     touched_buckets,
@@ -178,18 +176,3 @@ def incremental_embedding_dedup(
             store_n_buckets(spark, ledger_path, EB_COL, n_buckets),
         )
     return survivors, delta
-
-
-def compact_embedding_bands(
-    spark: SparkSession, path: str, n_buckets: int = EMB_LEDGER_BUCKETS
-) -> None:
-    """One file per bucket / legacy migration — the shared staged-swap
-    compaction."""
-    compact_bucketed(
-        spark,
-        path,
-        EB_COL,
-        _eb_of_buckets,
-        n_buckets,
-        columns=["vec_id", "band", "sig"],
-    )

@@ -1,79 +1,24 @@
 """Incrementally-maintainable summary tables (continuous aggregates).
 
 The TimescaleDB/materialized-view pattern in batch Spark: a summary
-table stores only ALGEBRAIC aggregate state (count, decimal-exact sum,
-min, max) per group, so a new fact batch refreshes it by aggregating
-JUST the batch and merging — never re-scanning history. Derived
-metrics that are NOT mergeable (avg) are finalized at read time from
-the stored state.
+table stores only MERGEABLE aggregate state per group (an HLL sketch
+per distinct-count column, or exact per-bin histogram counts), so a
+new fact batch refreshes it by aggregating JUST the batch and merging
+— never re-scanning history. Derived metrics (distinct-count
+estimates, quantile bounds) are finalized at read time from the
+stored state.
 
 Scale: refresh cost is O(|batch|) + O(|summary|) regardless of how
 much history the summary represents; the merge is one hash agg over
-summary-sized input. This is the batch twin of
-`streaming/incremental_pipeline.py`'s foreachBatch maintenance — same
-append-only contract (re-delivering a batch double-counts; dedup
-upstream with `dedup_keep_latest` / `incremental_minhash_dedup`).
+summary-sized input. The contract is append-only (re-delivering a
+batch double-counts a histogram; dedup upstream with
+`dedup_keep_latest` / `incremental_minhash_dedup`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.numeric import dec18 as _dec
-
-
-def _state_aggs(measures: list[str]) -> list[F.Column]:
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for m in measures:
-        aggs.append(F.sum(_dec(m)).alias(f"__sum_{m}"))
-        aggs.append(F.min(m).alias(f"__min_{m}"))
-        aggs.append(F.max(m).alias(f"__max_{m}"))
-    return aggs
-
-
-def build_summary(
-    df: DataFrame, keys: list[str], measures: list[str]
-) -> DataFrame:
-    """Aggregate ``df`` into mergeable summary state per ``keys``."""
-    return df.groupBy(*keys).agg(*_state_aggs(measures))
-
-
-def merge_summaries(
-    existing: DataFrame,
-    delta: DataFrame,
-    keys: list[str],
-    measures: list[str],
-) -> DataFrame:
-    """Merge two summary-state tables (associative + commutative, so
-    any refresh order yields identical state — decimal sums make that
-    exact, not approximately true)."""
-    aggs = [F.sum("__n").cast("long").alias("__n")]
-    for m in measures:
-        aggs.append(F.sum(f"__sum_{m}").alias(f"__sum_{m}"))
-        aggs.append(F.min(f"__min_{m}").alias(f"__min_{m}"))
-        aggs.append(F.max(f"__max_{m}").alias(f"__max_{m}"))
-    return (
-        existing.unionByName(delta).groupBy(*keys).agg(*aggs)
-    )
-
-
-def finalize_summary(summary: DataFrame, measures: list[str]) -> DataFrame:
-    """Reader-facing view of the state: counts, sums, extrema, and the
-    non-mergeable derived avg = sum/n (computed at read time, the same
-    one-expression shape both engines evaluate identically)."""
-    cols = [F.col(c) for c in summary.columns if not c.startswith("__")]
-    cols.append(F.col("__n").alias("n_rows"))
-    for m in measures:
-        cols.append(F.col(f"__sum_{m}").cast("double").alias(f"sum_{m}"))
-        cols.append(F.col(f"__min_{m}").alias(f"min_{m}"))
-        cols.append(F.col(f"__max_{m}").alias(f"max_{m}"))
-        cols.append(
-            (F.col(f"__sum_{m}").cast("double") / F.col("__n")).alias(
-                f"avg_{m}"
-            )
-        )
-    return summary.select(*cols)
 
 
 def build_distinct_summary(
@@ -82,8 +27,8 @@ def build_distinct_summary(
     """Mergeable DISTINCT-COUNT state: an HLL sketch per group per
     column (Spark 3.5+ ``hll_sketch_agg``, Apache DataSketches).
 
-    ``build_summary`` can't maintain COUNT(DISTINCT) because it is not
-    algebraic — merging per-batch exact distincts overcounts overlap.
+    COUNT(DISTINCT) is not algebraic — merging per-batch exact
+    distincts overcounts overlap.
     Sketches make it mergeable: REGISTER state unions by per-item
     maxima, losslessly and idempotently (overlapping batches never
     double-count). One honesty note: DataSketches estimates a
@@ -126,29 +71,6 @@ def finalize_distinct_summary(
             F.hll_sketch_estimate(f"__hll_{c}").alias(f"approx_distinct_{c}")
         )
     return summary.select(*cols)
-
-
-def refresh_materialized_summary(
-    spark: SparkSession,
-    path: str,
-    new_batch: DataFrame,
-    keys: list[str],
-    measures: list[str],
-) -> DataFrame:
-    """Maintain a parquet-backed summary at ``path``: aggregate the
-    new batch, merge with the stored state (if any), atomically
-    replace the store, and return the merged state."""
-    from ..storage import overwrite_parquet_atomically, read_parquet_if_exists
-
-    delta = build_summary(new_batch, keys, measures)
-    existing = read_parquet_if_exists(spark, path)
-    merged = (
-        merge_summaries(existing, delta, keys, measures)
-        if existing is not None
-        else delta
-    )
-    overwrite_parquet_atomically(merged, path)
-    return spark.read.parquet(path)
 
 
 def build_histogram_summary(

@@ -87,9 +87,22 @@ def tranche_novelty_update(
     sh = doc_shingle_keys(tranche, id_col, text_col, n=n)
     if checkpoint_shingles:
         sh = sh.localCheckpoint(eager=True)
-    return tranche_novelty_update_shingled(
-        sh, ledger, id_col, checkpoint_intermediates=checkpoint_shingles
+    firsts_t = sh.groupBy("shingle_md5").agg(
+        F.min(id_col).alias("first_doc")
     )
+    if checkpoint_shingles:
+        firsts_t = firsts_t.localCheckpoint(eager=True)
+    # membership via broadcast-tranche semi scan (see module
+    # docstring), then an anti-join of two TRANCHE-bounded frames —
+    # `seen` is a subset of the tranche's keys, so BuildRight here
+    # broadcasts a bounded frame, never the ledger
+    seen = seen_keys(firsts_t, ledger)
+    new_firsts = firsts_t.join(
+        F.broadcast(seen), "shingle_md5", "left_anti"
+    )
+    if checkpoint_shingles:
+        new_firsts = new_firsts.localCheckpoint(eager=True)
+    return per_doc_novelty(sh, new_firsts, id_col), new_firsts
 
 
 def doc_shingle_keys(
@@ -119,37 +132,6 @@ def seen_keys(tranche_keys: DataFrame, ledger: DataFrame) -> DataFrame:
         "shingle_md5",
         "left_semi",
     )
-
-
-def tranche_novelty_update_shingled(
-    sh: DataFrame,
-    ledger: DataFrame,
-    id_col: str = "doc_id",
-    checkpoint_intermediates: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Core of :func:`tranche_novelty_update` over an already-shingled
-    tranche (``(id_col, shingle_md5)`` rows) — for callers that
-    materialize shingles once for several consumers (the streaming
-    twin shingles per micro-batch via the wrapper; the persisted form
-    is :func:`operators.novelty_ledger.score_tranche_against_ledger`).
-    """
-    firsts_t = sh.groupBy("shingle_md5").agg(
-        F.min(id_col).alias("first_doc")
-    )
-    if checkpoint_intermediates:
-        firsts_t = firsts_t.localCheckpoint(eager=True)
-    # membership via broadcast-tranche semi scan (see module
-    # docstring), then an anti-join of two TRANCHE-bounded frames —
-    # `seen` is a subset of the tranche's keys, so BuildRight here
-    # broadcasts a bounded frame, never the ledger
-    seen = seen_keys(firsts_t, ledger)
-    new_firsts = firsts_t.join(
-        F.broadcast(seen), "shingle_md5", "left_anti"
-    )
-    if checkpoint_intermediates:
-        new_firsts = new_firsts.localCheckpoint(eager=True)
-    per_doc = per_doc_novelty(sh, new_firsts, id_col)
-    return per_doc, new_firsts
 
 
 def per_doc_novelty(

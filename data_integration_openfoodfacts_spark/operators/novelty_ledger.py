@@ -26,7 +26,7 @@ function of shingle_md5).
 Appends create one file per touched bucket per batch; like every
 append-ledger in this engine (see similarity_dedup's band ledger) the
 small-file count is bounded by batches x buckets and compacted by
-rewriting the partition — ``compact_ledger_path`` here.
+rewriting the partition (``bucketed_ledger.compact_bucketed``).
 
 Round 9: the layout mechanics (append/prune/compact, the
 ``_bucket_meta.json`` sidecar, mismatched-bucket-count detection) live
@@ -46,17 +46,12 @@ from ..functions.localframe import local_rows_df
 from ..storage import read_parquet_if_exists
 from .bucketed_ledger import (
     append_bucketed,
-    compact_bucketed,
     prune_to_buckets,
     store_n_buckets,
     touched_buckets,
     validate_layout,
 )
-from .novelty import (
-    doc_shingle_keys,
-    per_doc_novelty,
-    seen_keys,
-)
+from .novelty import per_doc_novelty, seen_keys
 
 KB_COL = "kb"
 DEFAULT_BUCKETS = 256
@@ -105,39 +100,6 @@ def read_ledger(spark: SparkSession, path: str) -> DataFrame | None:
     return read_parquet_if_exists(spark, path)
 
 
-def score_tranche_against_ledger(
-    tranche: DataFrame,
-    ledger_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    n_buckets: int = DEFAULT_BUCKETS,
-    checkpoint: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Score a tranche against the PERSISTED ledger with bucket-pruned
-    reads. Same contract as ``novelty.tranche_novelty_update`` —
-    returns ``(per_doc, new_firsts)``; the caller appends
-    ``new_firsts`` via :func:`append_ledger_delta`.
-
-    Cost class per tranche: O(tranche) shingle work, one bounded
-    driver collect of the tranche's distinct BUCKET ids (<= n_buckets
-    ints — the k x d envelope convention), and a ledger scan PRUNED to
-    those buckets with the tranche keys broadcast (left-semi; the
-    ledger side is never shuffled, sorted, or broadcast).
-
-    A ledger written WITHOUT the kb layout (legacy/unpartitioned) is
-    detected by schema and scanned unpruned — correct, just not
-    pruned. ``checkpoint=False`` keeps plans lazy for inspection.
-    """
-    sh = doc_shingle_keys(tranche, id_col, text_col, n=n)
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=True)
-    return score_shingled_tranche_against_ledger(
-        sh, ledger_path, id_col=id_col, n_buckets=n_buckets,
-        checkpoint=checkpoint,
-    )
-
-
 def score_shingled_tranche_against_ledger(
     sh: DataFrame,
     ledger_path: str,
@@ -145,12 +107,22 @@ def score_shingled_tranche_against_ledger(
     n_buckets: int = DEFAULT_BUCKETS,
     checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """:func:`score_tranche_against_ledger` over an ALREADY-SHINGLED
-    tranche (``(id_col, shingle_md5)`` rows, checkpointed by the
-    caller if expensive) — for callers that shingle several tranches
-    in one pass (q163 shingles both halves in a single job and feeds
-    the splits here; the in-memory analogue is
-    ``novelty.tranche_novelty_update_shingled``).
+    """Score a tranche against the PERSISTED ledger with bucket-pruned
+    reads. ``sh`` is the tranche ALREADY SHINGLED
+    (``novelty.doc_shingle_keys`` rows, checkpointed by the caller if
+    expensive; q163 shingles both halves in one job and feeds the
+    splits here). Same contract as the in-memory
+    ``novelty.tranche_novelty_update``: returns ``(per_doc,
+    new_firsts)``; the caller appends ``new_firsts`` via
+    :func:`append_ledger_delta`.
+
+    Cost class per tranche: one bounded driver collect of the
+    tranche's distinct BUCKET ids (<= n_buckets ints), and a ledger
+    scan PRUNED to those buckets with the tranche keys broadcast
+    (left-semi; the ledger side is never shuffled, sorted, or
+    broadcast). A ledger written WITHOUT the kb layout
+    (legacy/unpartitioned) is detected by schema and scanned
+    unpruned. ``checkpoint=False`` keeps plans lazy for inspection.
 
     The probe's bucket count is DERIVED from the ledger's own sidecar
     (``bucketed_ledger.store_n_buckets``) — the caller's ``n_buckets``
@@ -183,22 +155,3 @@ def score_shingled_tranche_against_ledger(
     if checkpoint:
         new_firsts = new_firsts.localCheckpoint(eager=True)
     return per_doc_novelty(sh, new_firsts, id_col), new_firsts
-
-
-def compact_ledger_path(
-    spark: SparkSession, path: str, n_buckets: int = DEFAULT_BUCKETS
-) -> None:
-    """Rewrite the ledger with one file per bucket (append-ledger
-    small-file hygiene). Atomic via the engine's staged-overwrite
-    helper so a crash mid-compaction never loses the ledger; also the
-    MIGRATION point for a legacy flat ledger and the ONE operation
-    allowed to change the bucket count (it re-stamps the sidecar)."""
-    compact_bucketed(
-        spark,
-        path,
-        KB_COL,
-        _kb_of_buckets,
-        n_buckets,
-        columns=["shingle_md5", "first_doc"],
-        sort_within="shingle_md5",
-    )

@@ -18,8 +18,6 @@ Scale design:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -289,217 +287,6 @@ def minhash_lsh_pairs(
     )
 
 
-#: design point for the log-scaled layout: the corpus size the gate
-#: layout (8 hashes x band_size 2) was tuned at, the near-dup Jaccard
-#: the bands must keep catching, and the analytic recall floor at that
-#: threshold. Chosen so `logscaled_minhash_layout(base) == (8, 2)` —
-#: at or below the design corpus the autoscaled path IS the q19 path.
-LOGSCALE_BASE_DOCS = 5_000
-LOGSCALE_THRESHOLD = 0.8
-LOGSCALE_RECALL = 0.95
-_LOGSCALE_BASE_BANDS = 4
-_LOGSCALE_BASE_BAND_SIZE = 2
-
-
-def logscaled_minhash_layout(
-    n_docs: int,
-    base_docs: int = LOGSCALE_BASE_DOCS,
-    threshold: float = LOGSCALE_THRESHOLD,
-    recall_target: float = LOGSCALE_RECALL,
-) -> tuple[int, int]:
-    """Corpus-size-aware (num_hashes, band_size) — round 12, VERDICT
-    r11 #3 (the fix SCALING_LLM.json demanded: fixed banding's
-    candidates grew 12x at 10x docs; the hyperplane path's log-scaled
-    bits-per-band held 0.81x wall).
-
-    Why rows-per-band must grow with log(n): a RANDOM pair collides on
-    one band with probability ~s0^r (s0 = its low expected shingle
-    overlap), so expected random candidates are ~b * n^2/2 * s0^r.
-    Keeping that ~linear in n needs s0^r ~ 1/n, i.e. r growing by one
-    row per 1/s0-factor of corpus growth — one per DECADE here
-    (s0 <= 0.1 for real near-dup corpora; a conservative rate: faster
-    growth would shrink candidates further but spend more hashes).
-    Bands then re-size to hold the ANALYTIC recall at the design
-    threshold: smallest b with 1 - (1 - t^r)^b >= the target, never
-    below the base layout's band count. The hash budget therefore
-    grows O(log n) while random candidates stay ~O(n) — the MinHash
-    twin of `similarity.py`'s log-scaled hyperplane banding, and
-    `compact_band_ledger` is the (already-proven, 40x-cheaper-than-
-    rebuild) migration for PERSISTED band indexes when a growing
-    corpus crosses a decade boundary.
-    """
-    if n_docs < 1:
-        raise ValueError(f"n_docs must be >= 1, got {n_docs}")
-    growth = max(1.0, n_docs / base_docs)
-    r = _LOGSCALE_BASE_BAND_SIZE + max(0, math.ceil(math.log10(growth)))
-    base_recall = (
-        1.0
-        - (1.0 - threshold**_LOGSCALE_BASE_BAND_SIZE)
-        ** _LOGSCALE_BASE_BANDS
-    )
-    target = min(recall_target, base_recall)
-    p_band = threshold**r
-    b = max(
-        _LOGSCALE_BASE_BANDS,
-        math.ceil(math.log(1.0 - target) / math.log(1.0 - p_band)),
-    )
-    return b * r, r
-
-
-def minhash_lsh_pairs_autoscaled(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    max_bucket_size: int | None = None,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """`minhash_lsh_pairs` at the corpus-size-derived log-scaled
-    layout. ``n_docs`` skips the sizing count when the caller already
-    knows it (ingest runners track corpus size in their ledgers; at
-    100 TB the count should come from metadata, not a scan)."""
-    if n_docs is None:
-        n_docs = df.count()
-    num_hashes, band_size = logscaled_minhash_layout(n_docs)
-    return minhash_lsh_pairs(
-        df, id_col, text_col, n=n,
-        num_hashes=num_hashes, band_size=band_size,
-        max_bucket_size=max_bucket_size,
-    )
-
-
-def candidate_shingles(
-    sh: DataFrame, candidates: DataFrame, id_col: str
-) -> DataFrame:
-    """Restrict a (id, shingle) table to documents appearing in a
-    candidate-pair table (id_a, id_b) via a semi-join.
-
-    This is what keeps LSH verification candidate-bounded: the exact
-    Jaccard recheck then runs over candidate documents' shingles only —
-    proportional to |candidates|, not to every co-shingled pair in the
-    corpus.
-    """
-    cand_ids = (
-        candidates.select(F.col("id_a").alias(id_col))
-        .union(candidates.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    return sh.join(cand_ids, id_col, "left_semi")
-
-
-def verify_candidate_pairs(
-    sh: DataFrame,
-    candidates: DataFrame,
-    id_col: str,
-    threshold: float,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs, candidate-bounded.
-
-    Intersections are computed by joining the pair table to each side's
-    shingles (never an open shingle self-join), so the work is
-    sum over candidate pairs of shingles-per-doc. Sizes come from the
-    candidate documents' full shingle sets, so jaccard is exact.
-    Columns: id_a, id_b, jaccard (only pairs >= threshold).
-    """
-    sh_c = candidate_shingles(sh, candidates, id_col)
-    sizes = sh_c.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh_c.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh_c.select(F.col(id_col).alias("id_b"), "shingle")
-    common = (
-        candidates.select("id_a", "id_b")
-        .join(a, "id_a")
-        .join(b, ["shingle", "id_b"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return (
-        common.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sa")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sb")),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("sa") + F.col("sb") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def compact_band_ledger(
-    bands: DataFrame,
-    id_col: str = "doc_id",
-    band_size_from: int = 2,
-    band_size_to: int = 4,
-) -> DataFrame:
-    """Re-band a (id, band, sig) MinHash ledger to WIDER bands —
-    ledger compaction for an ever-growing streaming index (round-6
-    VERDICT #6).
-
-    Why: banded-LSH collision volume floors at ~n²·p^band_size, so a
-    band width chosen for a small corpus over-collides as the corpus
-    grows (the SCALING_LLM.json fixed-vs-log-scaled-bits measurement,
-    applied to the MinHash path — widening bands is the MinHash
-    analogue of adding hyperplane bits). A band's sig is the
-    ','-concatenation of its minima, so the original per-document
-    minima are RECOVERABLE from the ledger itself: re-banding is a
-    pure ledger-local groupBy (one shuffle over ledger rows, bounded
-    collect per (doc, new-band) group of band_size_to/band_size_from
-    sigs) — the corpus text is NEVER re-shingled. The result is
-    bitwise identical to ``minhash_band_signatures(corpus, ...,
-    band_size=band_size_to)`` run from scratch (pinned by test), and
-    the ledger shrinks by the same ratio.
-
-    Sentinel rows (band = -1, the shingle-less-doc markers from
-    streaming/corpus_ingest.py) pass through untouched — they must
-    keep suppressing the heal scan after compaction.
-
-    Collision semantics after compaction: a width-``to`` collision
-    requires all constituent width-``from`` bands to collide, so the
-    compacted ledger's decisions are exactly those of a from-scratch
-    index at the new width — a strict subset of the old width's
-    collisions (higher precision, lower recall; choose the width for
-    the corpus size). Run on a CONSISTENT ledger (after the ingest's
-    heal pass), and ingest subsequent batches with
-    ``band_size=band_size_to`` so batch signatures match the ledger.
-    """
-    if band_size_to % band_size_from != 0:
-        raise ValueError("band_size_to must be a multiple of band_size_from")
-    ratio = band_size_to // band_size_from
-    if ratio == 1:
-        return bands.select(id_col, "band", "sig")
-    sentinels = bands.filter(F.col("band") < 0).select(
-        id_col, "band", "sig"
-    )
-    merged = (
-        bands.filter(F.col("band") >= 0)
-        .withColumn("__nb", F.floor(F.col("band") / ratio).cast("long"))
-        .groupBy(id_col, "__nb")
-        .agg(
-            F.array_join(
-                F.transform(
-                    # array_sort on structs orders by the leading
-                    # field: constituent bands in ascending order.
-                    # collect_SET: a crash-replayed append can leave
-                    # byte-identical duplicate (band, sig) rows, which
-                    # a list would merge into a corrupted double-width
-                    # sig — the set dedupes them for free
-                    F.array_sort(F.collect_set(F.struct("band", "sig"))),
-                    lambda s: s["sig"],
-                ),
-                ",",
-            ).alias("sig")
-        )
-        .select(id_col, F.col("__nb").alias("band"), "sig")
-    )
-    return merged.unionByName(sentinels)
-
-
 def incremental_minhash_dedup(
     new_df: DataFrame,
     corpus_bands: DataFrame,
@@ -622,50 +409,6 @@ def collision_ids(
     return vs_corpus.unionByName(vs_batch).distinct()
 
 
-def dedup_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    use_lsh: bool = True,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """End-to-end corpus dedup: near-duplicate pairs -> connected
-    components -> keep ONE canonical document (min id) per cluster.
-
-    ``use_lsh=True`` generates candidates via MinHash banding and
-    verifies them with exact Jaccard computed ONLY over candidate
-    documents (semi-joined shingles + pair-anchored intersection join —
-    see :func:`verify_candidate_pairs`), so neither generation nor
-    verification ever goes quadratic in the corpus: the 100 TB path.
-    ``False`` uses the exact shingle-join baseline. ``max_bucket_size``
-    caps degenerate LSH buckets (see :func:`minhash_lsh_pairs`).
-    Returns the deduplicated DataFrame.
-    """
-    from .graph import connected_components
-
-    if use_lsh:
-        candidates = minhash_lsh_pairs(
-            df, id_col, text_col, n, max_bucket_size=max_bucket_size
-        )
-        sh = word_shingles(df, id_col, text_col, n)
-        verified = verify_candidate_pairs(
-            sh, candidates, id_col, threshold
-        ).select("id_a", "id_b")
-    else:
-        verified = ngram_jaccard_pairs(
-            df, id_col, text_col, n, threshold
-        ).select("id_a", "id_b")
-
-    clusters = connected_components(verified, "id_a", "id_b")
-    # survivors: the min-id doc of each cluster + every unclustered doc
-    losers = clusters.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
 def simhash(
     df: DataFrame, id_col: str, text_col: str, bits: int = 16
 ) -> DataFrame:
@@ -736,88 +479,6 @@ def benchmark_contamination(
         )
         .filter(F.col("shared_shingles") >= min_shared)
     )
-
-
-def dedup_incremental(
-    corpus: DataFrame,
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Incremental corpus dedup: the continuous-pipeline shape — dedup a
-    NEW batch of documents against an already-deduplicated ``corpus``
-    without ever rescanning corpus x corpus.
-
-    Two stages, both candidate-bounded:
-
-    1. within-batch: :func:`dedup_near_duplicates` on the batch alone;
-    2. batch-vs-corpus: MinHash band signatures for both sides, one
-       (band, sig) equi-join for candidates, exact-Jaccard verify
-       anchored to the candidate pairs. Work is proportional to the
-       batch plus its candidates; the corpus contributes only its band
-       signatures — which a production deployment PRECOMPUTES once and
-       stores as the dedup index (this function recomputes them so the
-       API stays stateless; swap in a signature table to go fully
-       incremental).
-
-    Semantics (documented, deliberate): the corpus is immutable.
-    A batch doc near-dup of any corpus doc is dropped; a batch "bridge"
-    doc similar to two corpus docs that are NOT similar to each other
-    is dropped without retroactively merging those corpus docs —
-    unlike a full re-dedup of the union, which would re-cluster
-    through the bridge. Requires globally unique ids across both
-    inputs.
-
-    Returns the batch documents to KEEP (batch schema unchanged).
-    """
-    kept = dedup_near_duplicates(
-        batch, id_col, text_col, n, threshold,
-        use_lsh=True, max_bucket_size=max_bucket_size,
-    )
-    kept_bands = minhash_band_signatures(
-        kept, id_col, text_col, n, num_hashes, band_size
-    )
-    corpus_bands = minhash_band_signatures(
-        corpus, id_col, text_col, n, num_hashes, band_size
-    )
-    if max_bucket_size is not None:
-        both = kept_bands.union(corpus_bands)
-        small = (
-            both.groupBy("band", "sig")
-            .agg(F.count(F.lit(1)).alias("m"))
-            .filter(F.col("m") <= max_bucket_size)
-            .select("band", "sig")
-        )
-        kept_bands = kept_bands.join(small, ["band", "sig"], "left_semi")
-        corpus_bands = corpus_bands.join(small, ["band", "sig"], "left_semi")
-    cand = (
-        kept_bands.select(F.col(id_col).alias("id_a"), "band", "sig")
-        .join(
-            corpus_bands.select(F.col(id_col).alias("id_b"), "band", "sig"),
-            ["band", "sig"],
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sh = word_shingles(
-        kept.select(id_col, text_col).unionByName(
-            corpus.select(id_col, text_col)
-        ),
-        id_col,
-        text_col,
-        n,
-    )
-    dropped = (
-        verify_candidate_pairs(sh, cand, id_col, threshold)
-        .select(F.col("id_a").alias(id_col))
-        .distinct()
-    )
-    return kept.join(dropped, id_col, "left_anti")
 
 
 def _ceil_mul(t: float, col):

@@ -1,103 +1,14 @@
-"""Skew-mitigation operators for hot keys at 100 TB.
+"""Partition-balance operators.
 
 AQE's skew-join splitting (on by default in ``session.get_spark``)
-handles most cases at runtime; these are the explicit tools for the
-cases AQE can't fix:
-
-- ``salted_group_count``: two-phase aggregation for counting-style aggs
-  on a key where one value dominates (e.g. the reference's
-  ``"marque inconnue"`` default brand swallowing every unbranded
-  product). Phase 1 aggregates on (key, salt) — the hot key's rows
-  spread over N reducers; phase 2 re-aggregates the N partials. Works
-  for any algebraic aggregate (sum/count/min/max); shown for counts.
-- ``salted_broadcast_left``: replicate a SMALL right side N times so a
-  salted big side still joins correctly — only needed when the right
-  side is too big to broadcast whole but the hot-key subset isn't;
-  with a broadcastable right side, plain ``broadcast()`` already
-  avoids the skew entirely (no shuffle of the big side at all).
+handles hot keys at runtime. What AQE can't fix is the inverse
+problem, too FEW partitions, which ``spread_partitions`` addresses.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_group_count(
-    df: DataFrame, keys: Sequence[str], n_salts: int = 16
-) -> DataFrame:
-    """COUNT(*) per key via two-phase salted aggregation. Result is
-    identical to ``df.groupBy(keys).count()``; the difference is the
-    shuffle: no single reducer receives all rows of a hot key."""
-    salted = df.withColumn(
-        "__salt", (F.rand(seed=0) * n_salts).cast("int")
-    )
-    partial = salted.groupBy(*keys, "__salt").agg(
-        F.count(F.lit(1)).alias("__partial")
-    )
-    return (
-        partial.groupBy(*keys)
-        .agg(F.sum("__partial").alias("count"))
-    )
-
-
-def salted_broadcast_left(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Inner-join a skewed big side with a small side by salting the big
-    side and replicating the small side across all salt values."""
-    big_s = big.withColumn("__salt", (F.rand(seed=0) * n_salts).cast("int"))
-    salts = F.explode(
-        F.array(*[F.lit(i) for i in range(n_salts)])
-    ).alias("__salt")
-    small_r = small.select("*", salts)
-    return big_s.join(small_r, [on, "__salt"]).drop("__salt")
-
-
-def attach_grouped_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-    broadcast_aggregate: bool = True,
-) -> DataFrame:
-    """Attach per-key aggregates to every row WITHOUT a window.
-
-    ``F.max(x).over(Window.partitionBy(key))`` materializes each key's
-    full partition in one task — and unlike ``row_number()==1`` filters
-    (which Spark >= 3.5 rewrites with a map-side
-    ``WindowGroupLimit(Partial)``), an aggregate-over-window has no
-    partial pruning: a key holding 10% of 100 TB serializes into a
-    single sorter. The scalable rewrite is the same result computed as
-    ``groupBy(keys).agg(...)`` (partial aggregation tames the hot key
-    map-side) joined back; with few distinct keys the aggregate side is
-    tiny, so the join is a broadcast and the big side never shuffles at
-    all.
-
-    ``aggs`` must be aliased aggregate columns (e.g.
-    ``F.max("v").alias("max_v")``). Rows with NULL keys get their
-    aggregates from the NULL-key group (window semantics: NULL keys
-    form one partition), so the join is null-safe via coalesced
-    sentinel-free eqNullSafe conditions.
-    """
-    # Renamed join keys sidestep self-join attribute ambiguity (agg_df
-    # derives from df, so both sides carry the same attribute ids).
-    renamed = [f"__agg_key_{i}" for i in range(len(keys))]
-    agg_df = (
-        df.groupBy(*[F.col(k).alias(r) for k, r in zip(keys, renamed)])
-        .agg(*aggs)
-    )
-    if broadcast_aggregate:
-        agg_df = F.broadcast(agg_df)
-    cond = None
-    for k, r in zip(keys, renamed):
-        c = F.col(k).eqNullSafe(F.col(r))
-        cond = c if cond is None else cond & c
-    return df.join(agg_df, cond, "left").drop(*renamed)
 
 
 def spread_partitions(df: DataFrame, key_col: str) -> DataFrame:

@@ -1,7 +1,7 @@
 """Time-windowed key ledger — sliding-window dedup with O(1) expiry.
 
-The append-forever ledgers (`novelty_ledger`, the band ledger, the
-corpus store) answer "seen EVER"; production crawl dedup usually wants
+The append-forever ledgers (`novelty_ledger`, the band ledger)
+answer "seen EVER"; production crawl dedup usually wants
 "seen within the retention window" (last N days / last N snapshots),
 and an append-forever store can only get there by rewriting itself.
 This layout makes age a PARTITION DIMENSION instead:

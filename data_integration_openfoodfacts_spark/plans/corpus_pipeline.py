@@ -20,12 +20,10 @@ selection's OWN execution via ``observe`` + ``Observation`` — ONE
 action total (a noop-format write that materializes the chain), zero
 per-stage re-executions. The previous design unioned six count
 aggregates, each re-running its chain prefix (~6 corpus scans per
-dataset card at 100 TB); the streaming twin
-(streaming/corpus_ingest.py) already counted this way, and the batch
-path now matches it. Side inputs derived FROM a stage (the classifier
-keep-set, the dedup keep-set, the contamination set, the rate table)
-are built from un-observed twins of the stage frames so each
-CollectMetrics node appears exactly once in the executed plan.
+dataset card at 100 TB). Side inputs derived FROM a stage (the
+classifier keep-set, the dedup keep-set, the contamination set, the
+rate table) are built from un-observed twins of the stage frames so
+each CollectMetrics node appears exactly once in the executed plan.
 """
 
 from __future__ import annotations

@@ -79,8 +79,8 @@ def q176_counting_bloom_takedown(
     # guide §2.4): insertions vote +1, the takedown pairs vote -1, and
     # ONE groupBy(p) SUM is integer-identical to build -> negative
     # build -> merge (sums are associative; zero rows dropped and
-    # negatives kept exactly as `counting_merge` leaves them) — the
-    # old shape paid two groupBy(p) aggregation stages plus the merge
+    # negatives kept exactly as `counting_store.read_counts` leaves
+    # them) — the old shape paid two groupBy(p) aggregation stages plus the merge
     # re-aggregation on the same checkpointed occurrences
     signed = occ.select("shingle", F.lit(1).alias("w")).unionByName(
         occ.filter(F.col("doc_id") % _TAKEDOWN_MOD == 0).select(

@@ -152,21 +152,6 @@ def weekly_completeness_trend(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def approx_distinct_metrics(
-    t: dict[str, DataFrame], rsd: float = 0.01
-) -> DataFrame:
-    """100 TB metrics path: HyperLogLog++ approximate distinct counts in
-    one pass (the reference's exact COUNT(DISTINCT) forces a full
-    shuffle of every key; the sketch is a map-side-combinable fixed-size
-    state). rsd = relative standard deviation."""
-    fact = t["fact_nutrition_snapshot"]
-    return fact.agg(
-        F.count(F.lit(1)).alias("nb_rows"),
-        F.approx_count_distinct("product_sk", rsd).alias("approx_products"),
-        F.approx_count_distinct("time_sk", rsd).alias("approx_snapshots"),
-    )
-
-
 GOLD_ANALYTICS = {
     "top_brands_by_ab_proportion": top_brands_by_ab_proportion,
     "grade_distribution_by_category": grade_distribution_by_category,

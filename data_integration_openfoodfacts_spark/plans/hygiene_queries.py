@@ -79,8 +79,8 @@ def q159_incremental_novelty_ledger(
     doc_id-decile tranches pays O(tranche) shingle work + one
     anti-join against the accumulated ledger; first-occurrences append
     to the ledger (here an in-session localCheckpoint chain; the
-    parquet-persisted streaming twin is
-    `streaming/novelty_ingest.py`, equivalence pinned by test).
+    parquet-persisted form is `operators/novelty_ledger.py`,
+    equivalence pinned by test).
 
     The oracle is the SAME batch SQL as q157 — passing the gate IS the
     incremental-equals-batch reconciliation: tranches ascend by

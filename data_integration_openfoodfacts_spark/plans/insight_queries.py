@@ -614,10 +614,10 @@ HAVING COUNT(*) < 5
 def q127_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gram matrix (sum of outer products) of the embedding corpus —
     THE single-pass sufficient statistic behind distributed
-    PCA/covariance (`operators/pca.py` consumes it with a numpy eigh
-    on the d x d result). The matrix is symmetric, so only the upper
-    triangle (i <= j, d(d+1)/2 cells) is computed — half the expansion
-    and half the aggregation of the naive d^2.
+    PCA/covariance (a numpy eigh on the d x d result finishes a PCA).
+    The matrix is symmetric, so only the upper triangle (i <= j,
+    d(d+1)/2 cells) is computed — half the expansion and half the
+    aggregation of the naive d^2.
 
     Spark plan: rows cross-join a broadcast CONSTANT (i, j) triangle
     index (2080 rows for d=64 — never a data self-join) and the

@@ -1,17 +1,9 @@
 from .csv_source import read_openfoodfacts_csv
-from .json_source import read_jsonl, write_jsonl
-from .orc_source import read_orc, write_orc
-from .parquet_source import TABLES, load_events, load_table, load_tables, register_views
+from .parquet_source import TABLES, load_events, load_table
 
 __all__ = [
     "read_openfoodfacts_csv",
-    "read_jsonl",
-    "write_jsonl",
-    "read_orc",
-    "write_orc",
     "TABLES",
     "load_table",
     "load_events",
-    "load_tables",
-    "register_views",
 ]

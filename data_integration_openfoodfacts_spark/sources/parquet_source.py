@@ -72,14 +72,3 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` plans work."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-

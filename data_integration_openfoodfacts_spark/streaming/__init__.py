@@ -1,15 +1,6 @@
-from .events_stream import (
-    dedup_events_stream,
-    read_events_stream,
-    sessionized_events,
-    upsert_keep_latest_batch,
-    windowed_event_stats,
-)
+from .events_stream import sessionized_events, windowed_event_stats
 
 __all__ = [
-    "dedup_events_stream",
-    "read_events_stream",
     "windowed_event_stats",
     "sessionized_events",
-    "upsert_keep_latest_batch",
 ]

@@ -5,8 +5,8 @@ distinct exact-text keys, definitely-new keys set their bits, and a
 (batch_id, n_keys, n_definitely_new, n_maybe) totals row lands in a
 results store.
 
-Where this sits next to the exact ledgers (novelty_ingest /
-corpus_ingest): those stores grow O(corpus keys) and answer EXACTLY;
+Where this sits next to the exact ledgers (the novelty and band
+ledgers): those stores grow O(corpus keys) and answer EXACTLY;
 the Bloom table answers "definitely new" with ZERO false negatives
 from O(m) bits REGARDLESS of corpus size — at 100 TB the word table is
 the thing that still broadcasts when the key set itself long since
@@ -16,8 +16,7 @@ true duplicates plus an FPR-bounded sliver of false positives. A
 pipeline that DROPS maybes without verifying loses ~FPR of novel data
 — this module never drops rows, it routes and counts them.
 
-Crash-replay semantics (foreachBatch is at-least-once), mirroring
-novelty_ingest:
+Crash-replay semantics (foreachBatch is at-least-once):
 
 - Totals are computed BEFORE the merge, always against the pre-batch
   word table, and written per-batch with ``mode("ignore")``

@@ -278,8 +278,8 @@ def retract_counting(
 
 def read_counts(spark: SparkSession, path: str) -> DataFrame:
     """Live position-count table: per-position sum across all deltas,
-    zero rows dropped (negative rows kept — the over-retraction
-    evidence contract of `operators/bloom.py::counting_merge`)."""
+    zero rows dropped (negative rows kept as over-retraction
+    evidence)."""
     deltas = read_parquet_if_exists(spark, path)
     if deltas is None:
         return local_rows_df(spark, [], "p long, cnt long")

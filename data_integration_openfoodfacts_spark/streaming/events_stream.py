@@ -11,11 +11,7 @@ Design notes (scale-first):
   window state is evicted — without this, 100 TB of stream state OOMs;
 - ``session_window`` is the built-in sessionization operator (no custom
   state needed); ``transformWithStateInPandas``/``applyInPandasWithState``
-  remain the escape hatch for truly custom state machines;
-- the upsert sink is ``foreachBatch`` + keep-latest merge. Parquet has
-  no MERGE, so the merge is read-union-dedup-overwrite; on Delta/Iceberg
-  the same callback becomes a real ``MERGE INTO`` and the rest of the
-  code does not change.
+  remain the escape hatch for truly custom state machines.
 
 The aggregations are batch/stream agnostic: the same function works on a
 batch DataFrame (used by the q27 oracle check) and a streaming one.
@@ -23,39 +19,8 @@ batch DataFrame (used by the q27 oracle check) and a streaming one.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-from ..storage import overwrite_parquet_atomically, read_parquet_if_exists
-
-EVENTS_STREAM_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-
-def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream over a directory of event parquet files."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
 
 
 def windowed_event_stats(
@@ -126,95 +91,6 @@ def sessionized_events(
             "first_event_id",
             "last_event_id",
         )
-    )
-
-
-def dedup_events_stream(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exactly-once dedup: drop re-delivered events by key.
-
-    Uses ``dropDuplicatesWithinWatermark``: plain ``dropDuplicates`` on
-    keys that exclude the event-time column never evicts its state (it
-    would grow one entry per id forever); the within-watermark variant
-    expires each key once the watermark passes it, bounding state to the
-    re-delivery horizon. Training-data ingest uses exactly this for
-    at-least-once upstream feeds.
-    """
-    keys = keys or ["event_id"]
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
-def upsert_keep_latest_batch(
-    batch: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_col: str | None = None,
-    tiebreak_cols: list[str] | None = None,
-    order_by: list | None = None,
-    allow_missing_columns: bool = False,
-) -> None:
-    """foreachBatch MERGE-equivalent on plain Parquet: union the target
-    with the micro-batch and keep the latest row per key. On Delta this
-    whole function is one ``MERGE INTO``; the callback signature stays.
-    (Also the engine's single parquet-merge implementation — the
-    incremental Silver pipeline delegates here.)
-
-    Order is ``order_by`` verbatim if given, else (order_col desc,
-    tiebreak_cols desc). It must be a total order within a key, or ties
-    pick a nondeterministic survivor; when no natural tiebreaker exists,
-    append ``F.xxhash64(*all_cols)`` as the last resort.
-
-    Scale note: rewrite-on-merge is O(target) per batch — acceptable for
-    dimension-sized targets (the reference's SCD use case), wrong for
-    fact tables, which should append + compact instead.
-    """
-    from ..operators.dedup import dedup_keep_latest
-
-    spark = batch.sparkSession
-    existing = read_parquet_if_exists(spark, target_path)
-    merged = (
-        existing.unionByName(batch, allowMissingColumns=allow_missing_columns)
-        if existing is not None
-        else batch
-    )
-    if order_by is None:
-        order_by = [
-            F.col(order_col).desc(),
-            *[F.col(c).desc() for c in (tiebreak_cols or [])],
-        ]
-    out = dedup_keep_latest(merged, keys=keys, order_by=order_by)
-    overwrite_parquet_atomically(out, target_path)
-
-
-def run_events_upsert_stream(
-    spark: SparkSession,
-    source_dir: str,
-    target_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """End-to-end incremental upsert: stream new event files, keep the
-    latest event per user in the target table. availableNow processes
-    the backlog then stops (incremental-batch CDC)."""
-    stream = read_events_stream(spark, source_dir)
-    (
-        stream.writeStream.foreachBatch(
-            lambda b, _id: upsert_keep_latest_batch(
-                b,
-                target_path,
-                keys=["user_id"],
-                order_col="ts",
-                tiebreak_cols=["event_id"],
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
 
 

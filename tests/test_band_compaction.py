@@ -1,17 +1,11 @@
-"""MinHash band-ledger compaction (round-6 VERDICT #6):
-similarity_dedup.compact_band_ledger re-bands a grown ledger to wider
-bands WITHOUT re-shingling the corpus; the result must be bitwise
-identical to a from-scratch index at the new width, and a replay of
-the ingest against the compacted ledger must reproduce the decisions
-a from-scratch width-``to`` index would make."""
+"""MinHash band width: a wider band is the AND of its narrower
+constituents, so widening bands can only raise precision."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from data_integration_openfoodfacts_spark.operators.similarity_dedup import (
-    compact_band_ledger,
-    incremental_minhash_dedup_delta,
     minhash_band_signatures,
 )
 
@@ -28,73 +22,9 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_compacted_ledger_equals_fresh_wide_index(spark):
-    docs = _docs(spark, DOCS)
-    narrow = minhash_band_signatures(
-        docs, "doc_id", "text", num_hashes=8, band_size=2
-    )
-    wide_fresh = {
-        tuple(r)
-        for r in minhash_band_signatures(
-            docs, "doc_id", "text", num_hashes=8, band_size=4
-        ).collect()
-    }
-    compacted = {
-        tuple(r)
-        for r in compact_band_ledger(
-            narrow, "doc_id", band_size_from=2, band_size_to=4
-        ).collect()
-    }
-    assert compacted == wide_fresh
-    # ledger shrank by the band ratio
-    assert len(compacted) * 2 == narrow.count()
-
-
-def test_sentinels_survive_compaction(spark):
-    docs = _docs(spark, DOCS[:2])
-    narrow = minhash_band_signatures(
-        docs, "doc_id", "text", num_hashes=8, band_size=2
-    ).unionByName(
-        spark.createDataFrame(
-            [(99, -1, "")], "doc_id long, band long, sig string"
-        )
-    )
-    out = compact_band_ledger(narrow, "doc_id", 2, 4)
-    sent = [tuple(r) for r in out.filter(F.col("band") < 0).collect()]
-    assert sent == [(99, -1, "")]
-
-
-def test_replay_against_compacted_ledger_matches_fresh_wide_decisions(spark):
-    """The ingest decision for a NEW batch against the compacted
-    ledger == the decision against a from-scratch wide index of the
-    same corpus (the collision-decision reproduction the compaction
-    contract promises)."""
-    corpus = _docs(spark, DOCS[:3])
-    batch = _docs(spark, DOCS[3:])
-    narrow = minhash_band_signatures(
-        corpus, "doc_id", "text", num_hashes=8, band_size=2
-    )
-    compacted = compact_band_ledger(narrow, "doc_id", 2, 4)
-    fresh_wide = minhash_band_signatures(
-        corpus, "doc_id", "text", num_hashes=8, band_size=4
-    )
-    got_s, got_d = incremental_minhash_dedup_delta(
-        batch, compacted, "doc_id", "text", num_hashes=8, band_size=4
-    )
-    want_s, want_d = incremental_minhash_dedup_delta(
-        batch, fresh_wide, "doc_id", "text", num_hashes=8, band_size=4
-    )
-    assert {r["doc_id"] for r in got_s.collect()} == {
-        r["doc_id"] for r in want_s.collect()
-    }
-    assert {tuple(r) for r in got_d.collect()} == {
-        tuple(r) for r in want_d.collect()
-    }
-
-
 def test_wide_collisions_subset_of_narrow(spark):
     """Width-4 collisions require both constituent width-2 bands to
-    collide: compaction can only RAISE precision, never admit a pair
+    collide: widening can only RAISE precision, never admit a pair
     the narrow index rejected."""
     docs = _docs(spark, DOCS)
     def pairs(band_size):
@@ -109,54 +39,3 @@ def test_wide_collisions_subset_of_narrow(spark):
             .collect()
         }
     assert pairs(4) <= pairs(2)
-
-
-def test_compact_bands_path_roundtrip(spark, tmp_path):
-    from data_integration_openfoodfacts_spark.streaming.corpus_ingest import (
-        compact_bands_path,
-    )
-
-    docs = _docs(spark, DOCS)
-    path = str(tmp_path / "bands")
-    minhash_band_signatures(
-        docs, "doc_id", "text", num_hashes=8, band_size=2
-    ).write.parquet(path)
-    compact_bands_path(spark, path, 2, 4)
-    got = {
-        tuple(r)
-        for r in spark.read.parquet(path)
-        .select("doc_id", "band", "sig")
-        .collect()
-    }
-    want = {
-        tuple(r)
-        for r in minhash_band_signatures(
-            docs, "doc_id", "text", num_hashes=8, band_size=4
-        ).collect()
-    }
-    assert got == want
-    # the rewrite migrates a legacy flat ledger to the sb-bucketed
-    # layout (round-8: partition-pruned collision probes)
-    assert "sb" in spark.read.parquet(path).columns
-
-
-def test_compaction_tolerates_duplicated_ledger_rows(spark):
-    """A crash-replayed append can leave byte-identical duplicate
-    (doc, band, sig) rows; compaction must dedupe them instead of
-    merging a doubled-width sig."""
-    docs = _docs(spark, DOCS[:3])
-    narrow = minhash_band_signatures(
-        docs, "doc_id", "text", num_hashes=8, band_size=2
-    )
-    duplicated = narrow.unionByName(narrow)  # every row twice
-    got = {
-        tuple(r)
-        for r in compact_band_ledger(duplicated, "doc_id", 2, 4).collect()
-    }
-    want = {
-        tuple(r)
-        for r in minhash_band_signatures(
-            docs, "doc_id", "text", num_hashes=8, band_size=4
-        ).collect()
-    }
-    assert got == want

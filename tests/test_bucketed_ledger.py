@@ -1,7 +1,7 @@
 """The shared bucketed-ledger layout helper (round-9 VERDICT #4 +
 round-8 ADVICE): sidecar-recorded bucket counts, loud refusal of
-mismatched appends, probe-side self-derivation, and the novelty
-stream's in-stream compaction cadence (round-9 VERDICT #1)."""
+mismatched appends, probe-side self-derivation, and re-bucketing
+compaction."""
 
 from __future__ import annotations
 
@@ -13,14 +13,18 @@ from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
     BucketLayoutError,
+    compact_bucketed,
     read_meta,
     store_n_buckets,
+)
+from data_integration_openfoodfacts_spark.operators.novelty import (
+    doc_shingle_keys,
 )
 from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
     KB_COL,
     append_ledger_delta,
-    compact_ledger_path,
-    score_tranche_against_ledger,
+    kb_of,
+    score_shingled_tranche_against_ledger,
 )
 
 
@@ -32,6 +36,12 @@ def _firsts(spark, rows):
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _score(docs, path, n_buckets):
+    return score_shingled_tranche_against_ledger(
+        doc_shingle_keys(docs), path, n_buckets=n_buckets
+    )
 
 
 FIRSTS = [("a" * 32, 1), ("b" * 32, 2), ("c" * 32, 3), ("d" * 32, 4)]
@@ -62,11 +72,11 @@ def test_probe_derives_bucket_count_from_store(spark, tmp_path):
     and re-reported seen shingles as novel."""
     path = str(tmp_path / "ledger")
     docs = _docs(spark, [(1, "a b c d e f g h"), (2, "p q r s t u v w")])
-    _, nf = score_tranche_against_ledger(docs, path, n_buckets=16)
+    _, nf = _score(docs, path, 16)
     append_ledger_delta(nf, path, n_buckets=16)
     # replay the same docs with the WRONG caller constant: everything
     # is already in the ledger, so nothing may score novel
-    per_doc, nf2 = score_tranche_against_ledger(docs, path, n_buckets=256)
+    per_doc, nf2 = _score(docs, path, 256)
     assert nf2.count() == 0
     assert per_doc.agg(F.sum("n_novel")).first()[0] == 0
 
@@ -141,7 +151,9 @@ def test_compact_rewrites_sidecar_and_can_rebucket(spark, tmp_path):
         .select("shingle_md5", "first_doc")
         .collect()
     }
-    compact_ledger_path(spark, path, n_buckets=4)
+    compact_bucketed(
+        spark, path, KB_COL, lambda nb: kb_of("shingle_md5", nb), 4
+    )
     assert read_meta(spark, path)["n_buckets"] == 4
     after = {
         tuple(r)
@@ -156,108 +168,3 @@ def test_compact_rewrites_sidecar_and_can_rebucket(spark, tmp_path):
         append_ledger_delta(
             _firsts(spark, [("e" * 32, 5)]), path, n_buckets=16
         )
-
-
-def test_corpus_probe_uses_store_layout(spark, tmp_path):
-    """Round-8 ADVICE #3: a corpus written with a NON-default bucket
-    count must be probed with its own modulus — re-ingesting the same
-    batch admits zero duplicates."""
-    from data_integration_openfoodfacts_spark.streaming.corpus_ingest import (
-        MB_COL,
-        append_corpus,
-        ingest_corpus_batch,
-    )
-
-    target = str(tmp_path / "corpus")
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog today"),
-        (2, "an entirely different document about ships and harbors"),
-    ]
-    docs = _docs(spark, rows).select(
-        "doc_id", "text", F.lit("en").alias("lang"),
-        F.lit("s").alias("source"),
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    seeded = docs.withColumn("text_md5", F.md5("text"))
-    append_corpus(seeded, target, n_buckets=8)
-    assert read_meta(spark, target) == {
-        "bucket_col": MB_COL, "n_buckets": 8,
-    }
-    # module default is 64 — the ingest must still probe (and append)
-    # under the store's 8
-    ingest_corpus_batch(docs, target)
-    got = spark.read.parquet(target)
-    assert got.count() == 2  # no re-admitted duplicates
-    assert read_meta(spark, target)["n_buckets"] == 8
-
-
-def test_novelty_stream_compaction_cadence(spark, tmp_path):
-    """Round-9 VERDICT #1 (mirrors the near-dup stream's test):
-    run_novelty_stream(compact_files_every=2) over a 4-tranche drain
-    leaves the ledger at one file per bucket, with results and ledger
-    contents IDENTICAL to an uncompacted run."""
-    from data_integration_openfoodfacts_spark.streaming.novelty_ingest import (
-        run_novelty_stream,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    batches = [
-        [(1, "a b c d e f g h i j"), (2, "k l m n o p q r s t")],
-        [(3, "a b c d e f g h i j extra"), (4, "u v w x y z aa bb cc")],
-        [(5, "fresh words one two three four five six seven eight")],
-        [(6, "final tranche tokens alpha beta gamma delta epsilon zeta")],
-    ]
-    for i, rows in enumerate(batches):
-        stage = str(tmp_path / f"_st{i}")
-        (
-            _docs(spark, rows)
-            .select(
-                "doc_id", "text", F.lit("en").alias("lang"),
-                F.lit("s").alias("source"),
-                F.length("text").cast("long").alias("n_chars"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        os.rename(f"{stage}/{part}", f"{src}/b{i}.parquet")
-
-    l1, r1, k1 = (str(tmp_path / p) for p in ("led1", "res1", "ck1"))
-    run_novelty_stream(spark, src, l1, r1, k1, compact_files_every=2)
-    l2, r2, k2 = (str(tmp_path / p) for p in ("led2", "res2", "ck2"))
-    run_novelty_stream(spark, src, l2, r2, k2)
-
-    res1 = {
-        tuple(r)
-        for r in spark.read.parquet(r1)
-        .select("batch_id", "n_docs", "n_shingles", "n_novel")
-        .collect()
-    }
-    res2 = {
-        tuple(r)
-        for r in spark.read.parquet(r2)
-        .select("batch_id", "n_docs", "n_shingles", "n_novel")
-        .collect()
-    }
-    assert res1 == res2
-    led1 = {
-        tuple(r)
-        for r in spark.read.parquet(l1)
-        .select("shingle_md5", "first_doc")
-        .collect()
-    }
-    led2 = {
-        tuple(r)
-        for r in spark.read.parquet(l2)
-        .select("shingle_md5", "first_doc")
-        .collect()
-    }
-    assert led1 == led2
-    # compacted: one file per bucket dir (batch 3's append lands after
-    # the last compaction at trigger 4 — an availableNow drain of 4
-    # batches compacts at triggers 2 and 4, so the final state IS
-    # compacted)
-    for d in glob.glob(f"{l1}/{KB_COL}=*"):
-        assert len(glob.glob(f"{d}/*.parquet")) == 1, d

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.functions.text_normalize import (
-    normalized_text_chain,
+    ascii_fold,
 )
 from data_integration_openfoodfacts_spark.operators.cleaning import (
     clean_text_chain,
@@ -25,18 +25,23 @@ def _one(spark, value, expr):
     return df.select(expr.alias("out")).first()["out"]
 
 
+def _silver_text(col):
+    """The pipeline's Silver text chain: accent-fold, then clean."""
+    return clean_text_chain(ascii_fold(F.col(col)))
+
+
 def test_ascii_fold_reference_golden(spark):
     # quality_report.md:73-79: "Côte d'Or™ Chocolat Noir 70%" -> normalized
-    got = _one(spark, "Côte d'Or™ Chocolat Noir 70%", normalized_text_chain("v"))
+    got = _one(spark, "Côte d'Or™ Chocolat Noir 70%", _silver_text("v"))
     assert got == "cote dortm chocolat noir 70"
 
 
 def test_ascii_fold_plain_passthrough(spark):
-    assert _one(spark, "Plain Name 12", normalized_text_chain("v")) == "plain name 12"
+    assert _one(spark, "Plain Name 12", _silver_text("v")) == "plain name 12"
 
 
 def test_ascii_fold_null(spark):
-    assert _one(spark, None, normalized_text_chain("v")) is None
+    assert _one(spark, None, _silver_text("v")) is None
 
 
 def test_clean_text_chain_collapses_whitespace(spark):

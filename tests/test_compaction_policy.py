@@ -15,10 +15,13 @@ from data_integration_openfoodfacts_spark.operators.compaction_policy import (
     maybe_compact_bucketed,
     maybe_compact_counting,
 )
+from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
+    compact_bucketed,
+)
 from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
     KB_COL,
     append_ledger_delta,
-    compact_ledger_path,
+    kb_of,
     read_ledger,
 )
 from data_integration_openfoodfacts_spark.streaming.counting_store import (
@@ -34,6 +37,10 @@ NB = 4
 
 def _keys(spark, names):
     return spark.createDataFrame([(n,) for n in names], "k string")
+
+
+def _compact_ledger(spark, p):
+    compact_bucketed(spark, p, KB_COL, lambda nb: kb_of("shingle_md5", nb), NB)
 
 
 def _state(spark, p):
@@ -82,7 +89,7 @@ def test_bucketed_threshold_and_flat_migration(spark, tmp_path):
 
     def compact():
         ran["n"] += 1
-        compact_ledger_path(spark, p, n_buckets=NB)
+        _compact_ledger(spark, p)
 
     # generous bound: no-op
     assert not maybe_compact_bucketed(spark, p, KB_COL, compact, 10)
@@ -106,7 +113,7 @@ def test_bucketed_threshold_and_flat_migration(spark, tmp_path):
 
     def migrate():
         migrated["n"] += 1
-        compact_ledger_path(spark, flat, n_buckets=NB)
+        _compact_ledger(spark, flat)
 
     assert maybe_compact_bucketed(spark, flat, KB_COL, migrate, 5)
     assert migrated["n"] == 1

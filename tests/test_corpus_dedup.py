@@ -1,113 +1,6 @@
-"""End-to-end corpus near-duplicate removal."""
+"""Incremental MinHash near-duplicate removal against a band index."""
 
 from __future__ import annotations
-
-import pytest
-
-from data_integration_openfoodfacts_spark.operators.similarity_dedup import (
-    dedup_near_duplicates,
-)
-
-DOCS = [
-    (1, "the quick brown fox jumps over the lazy dog tonight"),
-    (2, "the quick brown fox jumps over the lazy dog tonight"),  # exact dup
-    (3, "the quick brown fox jumps over the lazy cat tonight"),  # near dup
-    (4, "completely different content about spark query engines here"),
-    (5, "another unrelated document discussing window functions only"),
-]
-
-
-@pytest.mark.parametrize("use_lsh", [False, True])
-def test_dedup_keeps_canonical_and_uniques(spark, use_lsh):
-    df = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    out = dedup_near_duplicates(
-        df, "doc_id", "text", threshold=0.5, use_lsh=use_lsh
-    )
-    kept = sorted(r["doc_id"] for r in out.collect())
-    # 1,2,3 form one near-dup cluster -> min id 1 survives; 4,5 untouched
-    assert kept == [1, 4, 5]
-
-
-def test_dedup_noop_on_distinct_corpus(spark):
-    df = spark.createDataFrame(DOCS[3:], ["doc_id", "text"])
-    out = dedup_near_duplicates(df, "doc_id", "text", threshold=0.5)
-    assert out.count() == 2
-
-
-def test_incremental_dedup_equals_full_rededup_without_bridges(spark):
-    """On a corpus with ids below all batch ids and no bridge docs,
-    incremental dedup keeps exactly the batch docs a full re-dedup of
-    the union would keep."""
-    from data_integration_openfoodfacts_spark.operators.similarity_dedup import (
-        dedup_incremental,
-        dedup_near_duplicates,
-    )
-
-    base = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-        (2, "one two three four five six seven eight nine ten"),
-        (3, "red orange yellow green blue indigo violet pink brown black"),
-    ]
-    batch = [
-        # near-dup of corpus doc 1 (one word changed)
-        (101, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
-        # novel
-        (102, "spark duck oracle parquet arrow batch column row group page"),
-        # near-dup of another batch doc
-        (103, "spark duck oracle parquet arrow batch column row group leaf"),
-    ]
-    corpus = spark.createDataFrame(base, ["doc_id", "text"])
-    new = spark.createDataFrame(batch, ["doc_id", "text"])
-
-    inc = {
-        r["doc_id"]
-        for r in dedup_incremental(
-            corpus, new, "doc_id", "text", threshold=0.5
-        ).collect()
-    }
-    full = {
-        r["doc_id"]
-        for r in dedup_near_duplicates(
-            corpus.unionByName(new), "doc_id", "text", threshold=0.5
-        ).collect()
-        if r["doc_id"] >= 100
-    }
-    assert inc == full
-    assert inc == {102}
-
-
-def test_incremental_dedup_bridge_semantics_pinned(spark):
-    """A batch doc similar to TWO dissimilar corpus docs is dropped;
-    the corpus docs are untouched (immutability contract) — whereas a
-    full re-dedup would merge all three through the bridge."""
-    from data_integration_openfoodfacts_spark.operators.similarity_dedup import (
-        dedup_incremental,
-        dedup_near_duplicates,
-    )
-
-    w = lambda *xs: " ".join(xs)
-    c1 = w(*[f"a{i}" for i in range(12)])
-    c2 = w(*[f"b{i}" for i in range(12)])
-    bridge = w(*[f"a{i}" for i in range(6)], *[f"b{i}" for i in range(6)])
-    corpus = spark.createDataFrame([(1, c1), (2, c2)], ["doc_id", "text"])
-    new = spark.createDataFrame([(10, bridge)], ["doc_id", "text"])
-
-    # bridge shares 4 of (10+10-4) shingles with each side -> j ~0.25,
-    # below the banding's design range: use 32 bands of 1 so a single
-    # agreeing min-hash (md5-deterministic for this fixed data) surfaces
-    # the candidate
-    inc = dedup_incremental(
-        corpus, new, "doc_id", "text", threshold=0.2,
-        num_hashes=32, band_size=1,
-    ).collect()
-    assert inc == []  # bridge dropped
-
-    merged = dedup_near_duplicates(
-        corpus.unionByName(new), "doc_id", "text", threshold=0.2,
-        use_lsh=False,
-    ).collect()
-    # full re-dedup collapses all three to doc 1 via the bridge
-    assert {r["doc_id"] for r in merged} == {1}
 
 
 def test_incremental_minhash_dedup_drops_known_dup(spark):

@@ -10,12 +10,13 @@ import glob
 from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
+    compact_bucketed,
     read_meta,
 )
 from data_integration_openfoodfacts_spark.operators.embedding_ingest import (
     EB_COL,
+    _eb_of_buckets,
     append_embedding_bands,
-    compact_embedding_bands,
     embedding_band_signatures,
     incremental_embedding_dedup,
 )
@@ -111,7 +112,10 @@ def test_ledger_layout_and_compaction(spark, tmp_path):
         .select("vec_id", "band", "sig")
         .collect()
     )
-    compact_embedding_bands(spark, path, n_buckets=8)
+    compact_bucketed(
+        spark, path, EB_COL, _eb_of_buckets, 8,
+        columns=["vec_id", "band", "sig"],
+    )
     after = sorted(
         tuple(r)
         for r in spark.read.parquet(path)

@@ -8,7 +8,6 @@ import pytest
 
 from data_integration_openfoodfacts_spark.plans.gold_analytics import (
     GOLD_ANALYTICS,
-    approx_distinct_metrics,
     nutrient_completeness_by_brand,
     top_brands_by_ab_proportion,
 )
@@ -45,10 +44,3 @@ def test_q1_counts_ab_products(gold):
 def test_q4_rates_bounded(gold):
     for r in nutrient_completeness_by_brand(gold).collect():
         assert 0.0 <= r["completeness_rate"] <= 1.0
-
-
-def test_approx_metrics_close_to_exact(gold):
-    m = approx_distinct_metrics(gold).first()
-    exact = gold["fact_nutrition_snapshot"].count()
-    assert m["nb_rows"] == exact
-    assert abs(m["approx_products"] - exact) <= max(1, 0.05 * exact)

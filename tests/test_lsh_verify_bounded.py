@@ -15,12 +15,9 @@ from data_integration_openfoodfacts_spark.operators.graph import (
     connected_components,
 )
 from data_integration_openfoodfacts_spark.operators.similarity_dedup import (
-    candidate_shingles,
-    dedup_near_duplicates,
     exact_jaccard_pairs_from_shingles,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    verify_candidate_pairs,
     word_shingles,
 )
 
@@ -33,43 +30,6 @@ CORPUS = [
     (i, f"unique{i} word{i} token{i} stuff{i} filler{i} in the end")
     for i in range(3, 40)
 ]
-
-
-def test_verify_input_bounded_by_candidates(spark):
-    df = spark.createDataFrame(CORPUS, ["doc_id", "text"])
-    sh = word_shingles(df, "doc_id", "text", n=3)
-    candidates = minhash_lsh_pairs(df, "doc_id", "text", n=3)
-    cand_ids = {
-        r[0]
-        for r in candidates.select("id_a")
-        .union(candidates.select("id_b"))
-        .distinct()
-        .collect()
-    }
-    # every doc shares "in the end", so the corpus is fully co-shingled,
-    # but only the true near-dups should be LSH candidates
-    assert cand_ids == {1, 2}
-    sh_c = candidate_shingles(sh, candidates, "doc_id")
-    fed_ids = {r[0] for r in sh_c.select("doc_id").distinct().collect()}
-    assert fed_ids == cand_ids  # verify join input: candidates only
-    assert sh_c.count() < sh.count()  # strictly smaller than the corpus
-
-
-def test_verified_pairs_match_exact_jaccard(spark):
-    df = spark.createDataFrame(CORPUS, ["doc_id", "text"])
-    sh = word_shingles(df, "doc_id", "text", n=3)
-    candidates = minhash_lsh_pairs(df, "doc_id", "text", n=3)
-    verified = {
-        (r["id_a"], r["id_b"])
-        for r in verify_candidate_pairs(sh, candidates, "doc_id", 0.5).collect()
-    }
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", n=3, threshold=0.5
-        ).collect()
-    }
-    assert verified == exact == {(1, 2)}
 
 
 def test_bucket_cap_drops_degenerate_buckets(spark):
@@ -96,15 +56,6 @@ def test_hot_shingle_cap_keeps_jaccard_exact(spark):
     assert {(r["id_a"], r["id_b"]) for r in capped} == {(1, 2)}
     assert capped[0]["jaccard"] == full[0]["jaccard"]
     assert capped[0]["common"] == full[0]["common"]
-
-
-def test_dedup_with_cap_still_correct(spark):
-    df = spark.createDataFrame(CORPUS, ["doc_id", "text"])
-    out = dedup_near_duplicates(
-        df, "doc_id", "text", threshold=0.5, use_lsh=True, max_bucket_size=10
-    )
-    kept = sorted(r["doc_id"] for r in out.collect())
-    assert kept == [1] + list(range(3, 40))
 
 
 def test_exact_jaccard_from_shingles_matches_wrapper(spark):

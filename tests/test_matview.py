@@ -1,80 +1,16 @@
-"""Materialized summary maintenance: incremental refresh must equal a
-full recompute EXACTLY (decimal state), in any batch order."""
+"""Materialized summary maintenance: merged sketch and histogram
+state must match a single pass, in any batch order."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_integration_openfoodfacts_spark.operators.matview import (
-    build_summary,
-    finalize_summary,
-    merge_summaries,
-    refresh_materialized_summary,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
-KEYS = ["o_orderpriority"]
-MEASURES = ["o_totalprice"]
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    b1 = orders.filter(F.col("o_orderkey") % 3 == 0)
-    b2 = orders.filter(F.col("o_orderkey") % 3 == 1)
-    b3 = orders.filter(F.col("o_orderkey") % 3 == 2)
-    path = str(tmp_path / "mv")
-    for b in (b1, b2, b3):
-        state = refresh_materialized_summary(spark, path, b, KEYS, MEASURES)
-    got = _rows(finalize_summary(state, MEASURES))
-    want = _rows(
-        finalize_summary(build_summary(orders, KEYS, MEASURES), MEASURES)
-    )
-    assert got == want
-
-
-def test_merge_is_order_independent(spark):
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    a = build_summary(
-        orders.filter(F.col("o_orderkey") % 2 == 0), KEYS, MEASURES
-    )
-    b = build_summary(
-        orders.filter(F.col("o_orderkey") % 2 == 1), KEYS, MEASURES
-    )
-    ab = _rows(finalize_summary(merge_summaries(a, b, KEYS, MEASURES), MEASURES))
-    ba = _rows(finalize_summary(merge_summaries(b, a, KEYS, MEASURES), MEASURES))
-    assert ab == ba
-
-
-def test_refresh_cost_reads_only_summary(spark, tmp_path):
-    """The merge plan must scan the stored summary (tiny) + the new
-    batch — never the historical batch's source data."""
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    hist_path = str(tmp_path / "hist_batch")
-    new_path = str(tmp_path / "new_batch")
-    orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(hist_path)
-    orders.filter(F.col("o_orderkey") % 2 == 1).write.parquet(new_path)
-    mv_path = str(tmp_path / "mv")
-    refresh_materialized_summary(
-        spark, mv_path, spark.read.parquet(hist_path), KEYS, MEASURES
-    )
-    stored = spark.read.parquet(mv_path)
-    assert stored.count() <= 5  # |priorities| rows, not |orders|
-    assert "__n" in stored.columns
-    # the NEXT refresh's merge plan: only the summary + the new batch
-    merged = merge_summaries(
-        stored,
-        build_summary(spark.read.parquet(new_path), KEYS, MEASURES),
-        KEYS,
-        MEASURES,
-    )
-    # exactly two parquet scans: the stored summary + the new batch
-    # (paths are truncated in toString(), so count scan nodes instead)
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 2, plan
 
 
 def test_distinct_summary_merge_handles_overlap(spark):

@@ -7,9 +7,7 @@ from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.multimodal.binary_ops import (
     attach_fake_media,
-    decode_media,
     extract_byte_features,
-    sample_frames,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -28,82 +26,11 @@ def test_media_schema_and_meta(media):
     assert len(row["meta"]["content_md5"]) == 32
 
 
-def test_decode_stub_raises_without_codecs(media):
-    with pytest.raises(Exception, match="NotImplementedError|codecs unavailable"):
-        decode_media(media, fake=False).collect()
-
-
-def test_fake_decode_is_deterministic(media):
-    a = decode_media(media, fake=True).collect()
-    b = decode_media(media, fake=True).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    r = a[0]
-    assert r["width"] >= 1 and r["height"] >= 1 and r["n_channels"] == 3
-
-
 def test_byte_features_sum_to_one(media):
     feats = extract_byte_features(media).collect()
     for r in feats:
         assert len(r["byte_histogram"]) == 8
         assert abs(sum(r["byte_histogram"]) - 1.0) < 1e-9
-
-
-def test_frame_sampling_shapes(media):
-    frames = sample_frames(media, frame_bytes=64, stride=2)
-    rows = frames.collect()
-    assert len(rows) > 0
-    assert all(r["frame_idx"] % 2 == 0 for r in rows)
-    assert all(len(r["frame_bytes"]) <= 64 for r in rows)
-    # only video media produce frames
-    types = {r["media_id"] % 3 for r in rows}
-    assert types == {2}
-
-
-def test_resize_media_nearest_neighbor_math(spark):
-    import numpy as np
-
-    from data_integration_openfoodfacts_spark.multimodal.binary_ops import (
-        attach_fake_media,
-        resize_media,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "x" * 37), (2, None)], "doc_id long, text string"
-    )
-    media = attach_fake_media(docs, "doc_id", "text")
-    rows = {
-        r.media_id: r
-        for r in resize_media(media, out_w=4, out_h=3, fake=True).collect()
-    }
-    r = rows[1]
-    assert (r.out_width, r.out_height, r.n_channels) == (4, 3, 3)
-    assert len(r.pixels) == 4 * 3 * 3
-    # reproduce the gather locally from the same stub buffer
-    payload = b"x" * 37
-    n = len(payload)
-    w, h, c = n % 640 + 1, n % 480 + 1, 3
-    buf = np.resize(
-        np.frombuffer(payload, dtype=np.uint8), w * h * c
-    ).reshape(h, w, c)
-    yi = (np.arange(3) * h) // 3
-    xi = (np.arange(4) * w) // 4
-    assert bytes(r.pixels) == buf[yi][:, xi].tobytes()
-    assert rows[2].pixels is None, "NULL payload -> NULL pixels, no crash"
-
-
-def test_resize_media_real_codec_path_raises(spark):
-    import pytest as _pytest
-
-    from data_integration_openfoodfacts_spark.multimodal.binary_ops import (
-        attach_fake_media,
-        resize_media,
-    )
-
-    docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    with _pytest.raises(Exception, match="NotImplementedError|codecs"):
-        resize_media(
-            attach_fake_media(docs, "doc_id", "text"), fake=False
-        ).collect()
 
 
 def test_binary_simhash_neardup_vs_disjoint(spark):
@@ -238,3 +165,26 @@ def test_binary_simhash_values_match_jvm_reference(spark):
         ).collect()
     }
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(None, b"abcdefgh"), (1, b"zzzzzzzzzz")],
+        [(1, b"abcdefgh"), (1, b"zzzzzzzzzz"), (2, b"qqqqqqqq")],
+    ],
+    ids=["null_id", "repeated_id"],
+)
+def test_binary_simhash_rejects_null_and_repeated_ids(spark, rows):
+    """One voting payload row per non-null id is a precondition: a null
+    id or an id on two rows would fold several payloads into one
+    fingerprint, so the query raises instead of returning it."""
+    from data_integration_openfoodfacts_spark.multimodal.binary_ops import (
+        binary_simhash,
+    )
+
+    df = spark.createDataFrame(
+        [(i, bytearray(p)) for i, p in rows], "media_id long, payload binary"
+    )
+    with pytest.raises(Exception, match="one payload row per non-null"):
+        binary_simhash(df, "media_id", "payload").collect()

@@ -1,5 +1,4 @@
-"""Hypothesis property tests for the round-4 operators: Morton
-interleave bijectivity, matview merge associativity, and tokenizer
+"""Hypothesis property tests for the round-4 operators: tokenizer
 determinism. Spark calls are batched per example (driver-side data,
 one job per property check)."""
 
@@ -7,90 +6,13 @@ from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from data_integration_openfoodfacts_spark.operators.layout import (
-    _interleave,
-)
-from data_integration_openfoodfacts_spark.operators.matview import (
-    build_summary,
-    finalize_summary,
-    merge_summaries,
-)
 
 _settings = settings(
     max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-@_settings
-@given(
-    pairs=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=255),
-            st.integers(min_value=0, max_value=255),
-        ),
-        min_size=1,
-        max_size=30,
-        unique=True,
-    )
-)
-def test_interleave_is_injective_and_monotone_per_axis(spark, pairs):
-    """Distinct (a, b) bucket pairs map to distinct z-values, and
-    growing one axis with the other fixed never decreases z."""
-    df = spark.createDataFrame(pairs, "a long, b long")
-    rows = df.select(
-        "a", "b", _interleave([F.col("a"), F.col("b")], 8).alias("z")
-    ).collect()
-    zs = {(r.a, r.b): r.z for r in rows}
-    assert len(set(zs.values())) == len(zs), "collision in Morton code"
-    by_b: dict[int, list] = {}
-    for (a, b), z in zs.items():
-        by_b.setdefault(b, []).append((a, z))
-    for _b, az in by_b.items():
-        az.sort()
-        z_seq = [z for _a, z in az]
-        assert z_seq == sorted(z_seq), "z not monotone in a for fixed b"
-
-
-@_settings
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.sampled_from(["x", "y", "z"]),
-            st.floats(
-                min_value=-1e6,
-                max_value=1e6,
-                allow_nan=False,
-                allow_infinity=False,
-            ),
-        ),
-        min_size=3,
-        max_size=24,
-    ),
-    split=st.integers(min_value=1, max_value=2),
-)
-def test_matview_merge_associative_any_split(spark, rows, split):
-    """summary(A) ⊕ summary(B) == summary(A ∪ B) for an arbitrary
-    split point — the algebraic-state contract, exactly (decimal)."""
-    df = spark.createDataFrame(rows, "k string, v double")
-    a = spark.createDataFrame(rows[:split], "k string, v double")
-    b = spark.createDataFrame(rows[split:], "k string, v double")
-    merged = finalize_summary(
-        merge_summaries(
-            build_summary(a, ["k"], ["v"]),
-            build_summary(b, ["k"], ["v"]),
-            ["k"],
-            ["v"],
-        ),
-        ["v"],
-    )
-    full = finalize_summary(build_summary(df, ["k"], ["v"]), ["v"])
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, full.collect())
-    )
 
 
 @_settings

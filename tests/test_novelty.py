@@ -1,15 +1,21 @@
 """Incremental shingle-novelty ledger (operators/novelty.py,
-plans/hygiene_queries.q159, streaming/novelty_ingest.py) — round-6
+operators/novelty_ledger.py, plans/hygiene_queries.q159) — round-6
 VERDICT #1. The reconciliation contract: tranche-incremental totals
-equal batch q157 exactly; the streaming twin equals the batch twin."""
+equal batch q157 exactly; the persisted, bucket-pruned scorer equals
+the in-memory one."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.novelty import (
+    doc_shingle_keys,
     empty_ledger,
     tranche_novelty_update,
+)
+from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
+    append_ledger_delta,
+    score_shingled_tranche_against_ledger,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -59,165 +65,11 @@ def test_q159_reconciles_with_batch_q157(spark):
     assert len(incr) > 0
 
 
-def test_streaming_ledger_equals_batch(spark, tmp_path):
-    """availableNow drain over doc_id-decile tranche files == batch
-    q157 totals per tranche; the persisted ledger has unique keys."""
-    from data_integration_openfoodfacts_spark.plans.curation_queries import (
-        q157_novelty_curve,
-    )
-    from data_integration_openfoodfacts_spark.sources.parquet_source import (
-        load_table,
-    )
-    from data_integration_openfoodfacts_spark.streaming.novelty_ingest import (
-        run_novelty_stream,
-    )
-
-    docs = load_table(spark, SF, "documents").select(
-        "doc_id", "text", "lang", "source",
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    import os
-
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    # one flat FILE per tranche (the established availableNow staging
-    # pattern from test_neardup_ingest) — lexical name order matches
-    # tranche order so batches arrive doc_id-ascending
-    for t in range(10):
-        stage = f"{src}/_stage{t}"
-        (
-            docs.filter(F.floor(F.col("doc_id") * 10 / (hi + 1)) == t)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        os.rename(f"{stage}/{part}", f"{src}/tranche_{t}.parquet")
-    ledger_path = str(tmp_path / "ledger")
-    results_path = str(tmp_path / "results")
-    run_novelty_stream(
-        spark, str(src), ledger_path, results_path,
-        str(tmp_path / "ckpt"),
-    )
-    got = {
-        (r["batch_id"], r["n_docs"], r["n_shingles"], r["n_novel"])
-        for r in spark.read.parquet(results_path).collect()
-    }
-    want = {
-        (r["tranche"], r["n_docs"], r["n_shingles"], r["n_novel"])
-        for r in q157_novelty_curve(spark, SF).collect()
-    }
-    assert got == want
-    ledger = spark.read.parquet(ledger_path)
-    assert ledger.count() == ledger.select("shingle_md5").distinct().count()
-
-
-def test_replayed_batch_is_idempotent(spark, tmp_path):
-    """Direct foreachBatch replay: same batch_id scored twice — the
-    totals row survives from the first attempt and the ledger gains no
-    duplicate keys."""
-    from data_integration_openfoodfacts_spark.streaming.novelty_ingest import (
-        novelty_score_batch,
-    )
-
-    batch = _docs(
-        spark, [(1, "a b c d e f g h i j"), (2, "k l m n o p q r s")]
-    ).select(
-        "doc_id", "text",
-        F.lit("en").alias("lang"), F.lit("s").alias("source"),
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    ledger_path = str(tmp_path / "ledger")
-    results_path = str(tmp_path / "results")
-    novelty_score_batch(batch, ledger_path, results_path, batch_id=0)
-    first_ledger = sorted(
-        tuple(r) for r in spark.read.parquet(ledger_path).collect()
-    )
-    first_results = sorted(
-        tuple(r) for r in spark.read.parquet(results_path).collect()
-    )
-    novelty_score_batch(batch, ledger_path, results_path, batch_id=0)
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(ledger_path).collect()
-    ) == first_ledger
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(results_path).collect()
-    ) == first_results
-
-
-def test_stream_restart_continues_ledger(spark, tmp_path):
-    """Two availableNow drains against the SAME checkpoint: the first
-    processes tranches 0-4, new files 5-9 arrive, the restarted stream
-    processes ONLY them against the persisted ledger — and the final
-    totals still equal the batch curve (a real stop/start, not just a
-    per-function replay)."""
-    import os
-
-    from data_integration_openfoodfacts_spark.plans.curation_queries import (
-        q157_novelty_curve,
-    )
-    from data_integration_openfoodfacts_spark.sources.parquet_source import (
-        load_table,
-    )
-    from data_integration_openfoodfacts_spark.streaming.novelty_ingest import (
-        run_novelty_stream,
-    )
-
-    docs = load_table(spark, SF, "documents").select(
-        "doc_id", "text", "lang", "source",
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-
-    def stage(t):
-        d = f"{src}/_stage{t}"
-        (
-            docs.filter(F.floor(F.col("doc_id") * 10 / (hi + 1)) == t)
-            .coalesce(1).write.mode("overwrite").parquet(d)
-        )
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        os.rename(f"{d}/{part}", f"{src}/tranche_{t}.parquet")
-
-    ledger_path = str(tmp_path / "ledger")
-    results_path = str(tmp_path / "results")
-    ckpt = str(tmp_path / "ckpt")
-    for t in range(5):
-        stage(t)
-    run_novelty_stream(spark, src, ledger_path, results_path, ckpt)
-    n_first = spark.read.parquet(results_path).count()
-    assert n_first == 5
-    for t in range(5, 10):
-        stage(t)
-    run_novelty_stream(spark, src, ledger_path, results_path, ckpt)
-    got = {
-        (r["batch_id"], r["n_docs"], r["n_shingles"], r["n_novel"])
-        for r in spark.read.parquet(results_path).collect()
-    }
-    want = {
-        (r["tranche"], r["n_docs"], r["n_shingles"], r["n_novel"])
-        for r in q157_novelty_curve(spark, SF).collect()
-    }
-    assert got == want
-
-
 def test_partitioned_ledger_equals_in_memory_scorer(spark, tmp_path):
     """The persisted bucket-partitioned scorer
     (operators/novelty_ledger.py) returns exactly the in-memory
     operator's results, tranche by tranche — including against a
     legacy UNPARTITIONED ledger (schema-detected fallback)."""
-    from data_integration_openfoodfacts_spark.operators.novelty import (
-        empty_ledger,
-        tranche_novelty_update,
-    )
-    from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
-        append_ledger_delta,
-        score_tranche_against_ledger,
-    )
     from data_integration_openfoodfacts_spark.sources.parquet_source import (
         load_table,
     )
@@ -232,8 +84,8 @@ def test_partitioned_ledger_equals_in_memory_scorer(spark, tmp_path):
         pd_mem, nf_mem = tranche_novelty_update(
             tranche, mem_ledger, checkpoint_shingles=True
         )
-        pd_part, nf_part = score_tranche_against_ledger(
-            tranche, led_path, n_buckets=64
+        pd_part, nf_part = score_shingled_tranche_against_ledger(
+            doc_shingle_keys(tranche), led_path, n_buckets=64
         )
         assert sorted(tuple(r) for r in pd_part.collect()) == sorted(
             tuple(r) for r in pd_mem.collect()
@@ -249,7 +101,9 @@ def test_partitioned_ledger_equals_in_memory_scorer(spark, tmp_path):
     # legacy unpartitioned layout: same answers, schema-detected
     legacy_path = str(tmp_path / "legacy")
     mem_ledger.select("shingle_md5", "first_doc").write.parquet(legacy_path)
-    pd_leg, nf_leg = score_tranche_against_ledger(t2, legacy_path)
+    pd_leg, nf_leg = score_shingled_tranche_against_ledger(
+        doc_shingle_keys(t2), legacy_path
+    )
     pd_mem2, nf_mem2 = tranche_novelty_update(t2, mem_ledger)
     assert sorted(tuple(r) for r in pd_leg.collect()) == sorted(
         tuple(r) for r in pd_mem2.collect()
@@ -269,13 +123,6 @@ def test_partitioned_ledger_plan_prunes_and_never_moves_ledger(
     broadcasts the bounded seen-set (LeftAnti BuildRight). The
     pre-round-8 shape (tranche left_anti ledger) broadcast the whole
     O(corpus-shingles) ledger instead."""
-    from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
-        append_ledger_delta,
-        score_tranche_against_ledger,
-    )
-    from data_integration_openfoodfacts_spark.operators.novelty import (
-        doc_shingle_keys,
-    )
     from data_integration_openfoodfacts_spark.sources.parquet_source import (
         load_table,
     )
@@ -290,8 +137,9 @@ def test_partitioned_ledger_plan_prunes_and_never_moves_ledger(
     append_ledger_delta(firsts, led_path, n_buckets=256)
 
     tranche = docs.limit(3).localCheckpoint(eager=True)
-    _, new_firsts = score_tranche_against_ledger(
-        tranche, led_path, n_buckets=256, checkpoint=False
+    _, new_firsts = score_shingled_tranche_against_ledger(
+        doc_shingle_keys(tranche), led_path, n_buckets=256,
+        checkpoint=False,
     )
     plan = new_firsts._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [kb" in plan and "INSET" in plan
@@ -315,15 +163,22 @@ def test_partitioned_ledger_plan_prunes_and_never_moves_ledger(
 
 
 def test_ledger_compaction_preserves_answers(spark, tmp_path):
-    """compact_ledger_path rewrites to one file per bucket without
-    changing any scoring result."""
+    """compact_bucketed rewrites the ledger to one file per bucket
+    without changing any scoring result."""
     import glob
 
-    from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
-        append_ledger_delta,
-        compact_ledger_path,
-        score_tranche_against_ledger,
+    from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
+        compact_bucketed,
     )
+    from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
+        KB_COL,
+        kb_of,
+    )
+
+    def score(docs):
+        return score_shingled_tranche_against_ledger(
+            doc_shingle_keys(docs), led_path, n_buckets=8
+        )
 
     led_path = str(tmp_path / "ledger")
     batches = [
@@ -331,20 +186,18 @@ def test_ledger_compaction_preserves_answers(spark, tmp_path):
         _docs(spark, [(3, "a b c d e f g h i z"), (4, "s t u v w x y z a")]),
     ]
     for b in batches:
-        _, nf = score_tranche_against_ledger(b, led_path, n_buckets=8)
+        _, nf = score(b)
         append_ledger_delta(nf, led_path, n_buckets=8)
     probe = _docs(spark, [(9, "a b c d e f g h i"), (10, "q r s t u v w x y")])
-    before_pd, before_nf = score_tranche_against_ledger(
-        probe, led_path, n_buckets=8
-    )
+    before_pd, before_nf = score(probe)
     before = (
         sorted(tuple(r) for r in before_pd.collect()),
         sorted(tuple(r) for r in before_nf.collect()),
     )
-    compact_ledger_path(spark, led_path, n_buckets=8)
-    after_pd, after_nf = score_tranche_against_ledger(
-        probe, led_path, n_buckets=8
+    compact_bucketed(
+        spark, led_path, KB_COL, lambda nb: kb_of("shingle_md5", nb), 8
     )
+    after_pd, after_nf = score(probe)
     assert before == (
         sorted(tuple(r) for r in after_pd.collect()),
         sorted(tuple(r) for r in after_nf.collect()),

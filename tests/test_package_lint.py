@@ -11,7 +11,12 @@
   ``.rename(``, ``os.replace`` or ``shutil.move``. Every other module
   publishes sidecars, swaps directories and claims partitions through
   ``storage``, whose renames are checked and whose swaps restore on
-  failure."""
+  failure;
+- no package code that only tests reach: every module, and every
+  top-level def not in ``KEEP``, must be reached from a workload — a
+  registry query, the medallion pipeline, the CLI, or the bench and
+  benchmark entry points. Re-exports in ``__init__`` files do not keep
+  a name alive."""
 
 from __future__ import annotations
 
@@ -19,8 +24,10 @@ import ast
 import pathlib
 
 import data_integration_openfoodfacts_spark as pkg
+from tools.gate_state import module_closure
 
 PKG_DIR = pathlib.Path(pkg.__file__).parent
+REPO = PKG_DIR.parent
 THREAD_MODULES = {"concurrent", "concurrent.futures", "threading"}
 THREADS_ALLOWED = {"concurrency.py"}
 COMMITS_ALLOWED = {"storage.py"}
@@ -106,3 +113,160 @@ def test_commit_call_detector():
     for src in ("df.withColumnRenamed(a, b)", "s.replace(a, b)",
                 "shutil.rmtree(a)"):
         assert not flagged(src), src
+
+
+#: package imports in these files are workload roots, like the
+#: registry queries, the pipeline and the CLI
+ENTRY_FILES = ("bench.py", "__spark_entry__.py", "tools/bench_pipeline.py")
+ENTRY_GLOBS = ("perfbench/*.py",)
+#: top-level defs no workload reaches that stay as the REFERENCE a
+#: test checks a live path against: name -> the live function
+KEEP = {
+    "empty_ledger": "score_shingled_tranche_against_ledger",
+    "tranche_novelty_update": "score_shingled_tranche_against_ledger",
+    "range_join_broadcast": "range_join_bucketed",
+}
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _module_file(dotted: str) -> pathlib.Path | None:
+    parts = dotted.split(".")
+    if parts[0] != PKG_DIR.name:
+        return None
+    base = PKG_DIR.joinpath(*parts[1:])
+    for cand in (base.with_suffix(".py"), base / "__init__.py"):
+        if cand.is_file():
+            return cand
+    return None
+
+
+def _entry_files() -> list[pathlib.Path]:
+    files = [REPO / f for f in ENTRY_FILES]
+    for pattern in ENTRY_GLOBS:
+        files += sorted(REPO.glob(pattern))
+    return files
+
+
+def _package_imports(tree) -> set[pathlib.Path]:
+    """Package modules an out-of-package file imports (absolute
+    imports only; ``from pkg.mod import name`` may name a submodule)."""
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            dotted = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            mod = node.module or ""
+            dotted = [mod] + [f"{mod}.{a.name}" for a in node.names]
+        else:
+            continue
+        found |= {f for f in map(_module_file, dotted) if f is not None}
+    return found
+
+
+def _refs(node) -> set[str]:
+    """Names a piece of code can reach a def by: bare names, attribute
+    names, and identifier-shaped string constants (``getattr``/
+    registry lookups)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier()):
+            out.add(n.value)
+    return out
+
+
+def unreached_defs(modules: dict[str, ast.Module], refs: set[str]):
+    """``(module, name)`` of every top-level def that no reached code
+    names. Module-level statements and ``refs`` are live from the
+    start; a def's body becomes live once its name is — iterated to a
+    fixpoint, so a helper of unreached code stays unreached."""
+    live = set(refs)
+    defs = {}
+    for mod, tree in modules.items():
+        for stmt in tree.body:
+            if isinstance(stmt, _DEFS):
+                defs[(mod, stmt.name)] = stmt
+            else:
+                live |= _refs(stmt)
+    reached: set = set()
+    grew = True
+    while grew:
+        grew = False
+        for key, node in defs.items():
+            if key not in reached and key[1] in live:
+                reached.add(key)
+                live |= _refs(node)
+                grew = True
+    return sorted(set(defs) - reached)
+
+
+def _reachability():
+    from data_integration_openfoodfacts_spark.plans.registry import QUERIES
+
+    roots = {_module_file(fn.__module__) for fn in QUERIES.values()}
+    roots |= {PKG_DIR / "plans" / "pipeline.py", PKG_DIR / "cli.py"}
+    refs: set[str] = set()
+    for path in _entry_files():
+        tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
+        roots |= _package_imports(tree)
+        refs |= _refs(tree)
+    reached = set()
+    for root in roots:
+        reached |= set(module_closure(root))
+    trees = {
+        str(path.relative_to(PKG_DIR)): tree
+        for path, tree in _modules()
+        if path in reached and path.name != "__init__.py"
+    }
+    unreached_mods = sorted(
+        str(path.relative_to(PKG_DIR))
+        for path, _tree in _modules()
+        if path not in reached and path.name != "__init__.py"
+    )
+    return unreached_mods, unreached_defs(trees, refs)
+
+
+def test_package_code_is_reached_outside_tests():
+    modules, defs = _reachability()
+    kept = {name for _mod, name in defs if name in KEEP}
+    dead = [f"{mod}:{name}" for mod, name in defs if name not in KEEP]
+    assert (modules, dead) == ([], []), (
+        f"only tests reach {len(modules)} package modules {modules} "
+        f"and {len(dead)} top-level defs {dead}"
+    )
+    # KEEP must not go stale: each entry is still unreached, and the
+    # live function it is the reference for still exists
+    assert kept == set(KEEP), f"KEEP names no longer unreached: {set(KEEP) - kept}"
+    live_names = {
+        node.name
+        for _path, tree in _modules()
+        for node in tree.body
+        if isinstance(node, _DEFS)
+    }
+    assert set(KEEP.values()) <= live_names
+
+
+def test_unreached_def_detector():
+    tree = ast.parse(
+        "import x\n"
+        "def live():\n    return helper()\n"
+        "def helper():\n    return x.attr_live()\n"
+        "def attr_live():\n    pass\n"
+        "def by_name():\n    pass\n"
+        "def dead():\n    return only_from_dead()\n"
+        "def only_from_dead():\n    pass\n"
+        "class Dead:\n    def live(self):\n        pass\n"
+        "VALUE = live()\n"
+        "LOOKUP = getattr(x, 'by_name')\n"
+    )
+    got = unreached_defs({"m.py": tree}, refs=set())
+    assert got == [
+        ("m.py", "Dead"), ("m.py", "dead"), ("m.py", "only_from_dead"),
+    ]
+    # a name used by an entry file outside the package is a root too
+    got = unreached_defs({"m.py": tree}, refs={"dead"})
+    assert got == [("m.py", "Dead")]

@@ -14,10 +14,13 @@ from pyspark.sql import functions as F
 from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
     read_meta,
 )
+from data_integration_openfoodfacts_spark.operators.novelty import (
+    doc_shingle_keys,
+)
 from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
     KB_COL,
     append_ledger_delta,
-    score_tranche_against_ledger,
+    score_shingled_tranche_against_ledger,
 )
 from data_integration_openfoodfacts_spark.operators.retraction import (
     retract_from_novelty_ledger,
@@ -130,10 +133,14 @@ def test_retracted_shingles_score_novel_again(spark, tmp_path):
         [(1, "a b c d e f g h"), (2, "p q r s t u v w")],
         "doc_id long, text string",
     )
-    _, nf = score_tranche_against_ledger(docs, path, n_buckets=16)
+    _, nf = score_shingled_tranche_against_ledger(
+        doc_shingle_keys(docs), path, n_buckets=16
+    )
     append_ledger_delta(nf, path, n_buckets=16)
     # replay scores zero novel while ledgered
-    per_doc, _ = score_tranche_against_ledger(docs, path, n_buckets=16)
+    per_doc, _ = score_shingled_tranche_against_ledger(
+        doc_shingle_keys(docs), path, n_buckets=16
+    )
     assert per_doc.agg(F.sum("n_novel")).first()[0] == 0
     # retract doc 1's keys (its ledgered shingle_md5 rows)
     doc1_keys = (
@@ -143,7 +150,9 @@ def test_retracted_shingles_score_novel_again(spark, tmp_path):
     ).localCheckpoint(eager=True)
     n1 = doc1_keys.count()
     assert retract_from_novelty_ledger(spark, path, doc1_keys, 16) == n1
-    per_doc2, _ = score_tranche_against_ledger(docs, path, n_buckets=16)
+    per_doc2, _ = score_shingled_tranche_against_ledger(
+        doc_shingle_keys(docs), path, n_buckets=16
+    )
     got = {r["doc_id"]: r["n_novel"] for r in per_doc2.collect()}
     assert got[1] == n1  # forgotten -> novel again
     assert got[2] == 0   # unrelated doc untouched

@@ -88,9 +88,12 @@ def test_partitioned_scorer_matches_python_reference(
 ):
     """Two tranches through the PERSISTED bucketed ledger equal a
     pure-Python first-occurrence computation (the q157 semantics)."""
+    from data_integration_openfoodfacts_spark.operators.novelty import (
+        doc_shingle_keys,
+    )
     from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
         append_ledger_delta,
-        score_tranche_against_ledger,
+        score_shingled_tranche_against_ledger,
     )
 
     tmp = str(tmp_path_factory.mktemp("ledger_prop"))
@@ -102,8 +105,8 @@ def test_partitioned_scorer_matches_python_reference(
     seen: dict[str, int] = {}  # shingle -> global first doc
     for rows in tranches:
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        per_doc, new_firsts = score_tranche_against_ledger(
-            df, ledger_path, n_buckets=8, n=3
+        per_doc, new_firsts = score_shingled_tranche_against_ledger(
+            doc_shingle_keys(df, n=3), ledger_path, n_buckets=8
         )
         # python reference for THIS tranche against accumulated `seen`
         want_per_doc = {}

@@ -1,27 +1,11 @@
-"""SCD Type 2 dimension history: batch builder semantics, the
-foreachBatch changelog merge (late/out-of-order data, idempotency), and
-batch==stream equivalence on a real availableNow stream."""
+"""SCD Type 2 dimension history: batch builder semantics."""
 
 from __future__ import annotations
 
 import datetime
-import os
-import shutil
 
-import pytest
-from pyspark.sql import functions as F
 
-from data_integration_openfoodfacts_spark.operators.dedup import (
-    dedup_keep_latest,
-)
-from data_integration_openfoodfacts_spark.operators.scd import (
-    run_scd2_dim_stream,
-    scd2_history,
-    scd2_merge_batch,
-)
-from data_integration_openfoodfacts_spark.sources.parquet_source import (
-    load_events,
-)
+from data_integration_openfoodfacts_spark.operators.scd import scd2_history
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -61,107 +45,3 @@ def test_scd2_history_versions_and_collapse(spark):
     assert got[(2, 1)] == (None, _ts(0), _ts(1), False)
     assert got[(2, 2)] == ("buy", _ts(1), None, True)
     assert len(got) == 5
-
-
-def test_scd2_merge_handles_late_data(spark, tmp_path):
-    """A late change landing INSIDE an already-collapsed run must
-    re-split it — this is exactly what replaying versions (instead of
-    the changelog) would get wrong."""
-    target = str(tmp_path / "dim")
-    b1 = _changes(spark, [(1, _ts(0), "view"), (1, _ts(4), "view")])
-    scd2_merge_batch(b1, target, ["user_id"], "ts", ["event_type"])
-    # collapsed: one open version
-    assert spark.read.parquet(target).count() == 1
-
-    b2 = _changes(spark, [(1, _ts(2), "cart")])  # late, in the middle
-    scd2_merge_batch(b2, target, ["user_id"], "ts", ["event_type"])
-    got = {
-        r["version"]: (r["event_type"], r["effective_from"], r["is_current"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got[1] == ("view", _ts(0), False)
-    assert got[2] == ("cart", _ts(2), False)
-    assert got[3] == ("view", _ts(4), True)
-
-
-def test_scd2_merge_idempotent_on_redelivery(spark, tmp_path):
-    target = str(tmp_path / "dim")
-    b = _changes(spark, [(1, _ts(0), "view"), (1, _ts(1), "cart")])
-    scd2_merge_batch(b, target, ["user_id"], "ts", ["event_type"])
-    first = sorted(map(tuple, spark.read.parquet(target).collect()))
-    scd2_merge_batch(b, target, ["user_id"], "ts", ["event_type"])  # again
-    second = sorted(map(tuple, spark.read.parquet(target).collect()))
-    assert first == second
-
-
-@pytest.fixture(scope="module")
-def scd_stream_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("scd_drops"))
-    flat = str(tmp_path_factory.mktemp("scd_flat"))
-    ev = load_events(spark, SF_DIR).drop("ts_ns")
-    for i, pred in enumerate(
-        [F.col("event_id") % 3 == k for k in range(3)]
-    ):
-        ev.filter(pred).coalesce(1).write.parquet(os.path.join(d, f"drop={i}"))
-    n = 0
-    for root, _dirs, files in os.walk(d):
-        for f in files:
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(root, f), os.path.join(flat, f"part{n}.parquet")
-                )
-                n += 1
-    return flat
-
-
-def test_scd2_stream_matches_batch_rebuild(spark, tmp_path, scd_stream_dir):
-    """Incremental SCD2 over 3+ micro-batches == one batch rebuild over
-    the full change log (the q44 shape)."""
-    target = str(tmp_path / "dim_user")
-    run_scd2_dim_stream(
-        spark,
-        scd_stream_dir,
-        target,
-        str(tmp_path / "ckpt"),
-        keys=["user_id"],
-        order_col="ts",
-        tracked_cols=["event_type"],
-        tiebreak_cols=["event_id"],  # same rule as the batch rebuild
-        max_files_per_trigger=1,
-    )
-    streamed = spark.read.parquet(target).select(
-        "user_id", "ts", "event_type", "effective_from", "effective_to",
-        "is_current", "version",
-    )
-
-    ev = load_events(spark, SF_DIR)
-    changes = dedup_keep_latest(
-        ev.select("user_id", "ts", "event_type", "event_id"),
-        keys=["user_id", "ts"],
-        order_by=[F.col("event_id").desc()],
-    )
-    batch = scd2_history(
-        changes, ["user_id"], "ts", ["event_type"]
-    ).select(streamed.columns)
-
-    assert streamed.count() == batch.count()
-    assert streamed.exceptAll(batch).count() == 0
-    assert batch.exceptAll(streamed).count() == 0
-
-
-def test_scd2_merge_tiebreak_matches_batch_rule(spark, tmp_path):
-    """Same-(key, ts) conflicting changes resolve by tiebreak_cols desc
-    — the identical rule the q44 batch rebuild uses (event_id DESC), so
-    stream and batch histories agree even on same-timestamp conflicts."""
-    target = str(tmp_path / "dim")
-    b = spark.createDataFrame(
-        [(1, _ts(0), "view", 5), (1, _ts(0), "buy", 6)],
-        ["user_id", "ts", "event_type", "event_id"],
-    )
-    scd2_merge_batch(
-        b, target, ["user_id"], "ts", ["event_type"],
-        tiebreak_cols=["event_id"],
-    )
-    rows = spark.read.parquet(target).collect()
-    assert len(rows) == 1
-    assert rows[0]["event_type"] == "buy"  # event_id 6 wins, not 'view' > 'buy'

@@ -1,5 +1,5 @@
-"""Skew-operator equivalence tests + hypothesis property tests for the
-core cleaning/dedup operators."""
+"""Plan and hypothesis property tests for the core cleaning/dedup
+operators."""
 
 from __future__ import annotations
 
@@ -11,78 +11,12 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.functions.text_normalize import (
-    normalized_text_chain,
+    ascii_fold,
+)
+from data_integration_openfoodfacts_spark.operators.cleaning import (
+    clean_text_chain,
 )
 from data_integration_openfoodfacts_spark.operators.dedup import dedup_keep_latest
-from data_integration_openfoodfacts_spark.operators.skew import (
-    attach_grouped_agg,
-    salted_broadcast_left,
-    salted_group_count,
-)
-
-
-def test_salted_group_count_equals_plain(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    plain = {
-        (r["l_returnflag"],): r["count"]
-        for r in ev.groupBy("l_returnflag").count().collect()
-    }
-    salted = {
-        (r["l_returnflag"],): r["count"]
-        for r in salted_group_count(ev, ["l_returnflag"]).collect()
-    }
-    assert plain == salted
-
-
-def test_salted_broadcast_left_equals_plain_join(spark):
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    part = spark.read.parquet("/root/testdata/sf0.001/part.parquet").select(
-        F.col("p_partkey").alias("l_partkey"), "p_brand"
-    )
-    plain = li.join(part, "l_partkey").count()
-    salted = salted_broadcast_left(li, part, "l_partkey").count()
-    assert plain == salted
-
-
-def test_attach_grouped_agg_equals_window(spark):
-    from pyspark.sql import Window
-
-    df = spark.createDataFrame(
-        [("a", 1), ("a", 5), ("b", 2), (None, 7), (None, 3), ("c", 4)],
-        "k string, v long",
-    )
-    w = Window.partitionBy("k")
-    # "" stands in for the NULL key when sorting (no "" keys in the data)
-    expect = sorted(
-        (r["k"] or "", r["v"], r["mx"], r["s"])
-        for r in df.select(
-            "k", "v",
-            F.max("v").over(w).alias("mx"),
-            F.sum("v").over(w).alias("s"),
-        ).collect()
-    )
-    got = sorted(
-        (r["k"] or "", r["v"], r["mx"], r["s"])
-        for r in attach_grouped_agg(
-            df, ["k"], [F.max("v").alias("mx"), F.sum("v").alias("s")]
-        ).collect()
-    )
-    # NULL keys form one window partition; eqNullSafe join must match.
-    assert got == expect
-
-
-def test_attach_grouped_agg_multi_key_and_plan(spark):
-    df = spark.createDataFrame(
-        [("a", 1, 10), ("a", 1, 20), ("a", 2, 5), ("b", 1, 7)],
-        "k1 string, k2 long, v long",
-    )
-    out = attach_grouped_agg(df, ["k1", "k2"], [F.min("v").alias("mn")])
-    rows = {(r["k1"], r["k2"], r["v"]): r["mn"] for r in out.collect()}
-    assert rows[("a", 1, 10)] == 10 and rows[("a", 1, 20)] == 10
-    assert rows[("a", 2, 5)] == 5 and rows[("b", 1, 7)] == 7
-    # big side must not shuffle: the join back is a broadcast join
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def test_dedup_keep_latest_plan_has_partial_window_group_limit(spark):
@@ -118,7 +52,7 @@ def test_normalized_text_is_ascii_and_idempotent(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], "v string")
     out = [
         r["o"]
-        for r in df.select(normalized_text_chain("v").alias("o")).collect()
+        for r in df.select(clean_text_chain(ascii_fold(F.col("v"))).alias("o")).collect()
     ]
     for s in out:
         assert s is None or s.isascii()
@@ -126,7 +60,7 @@ def test_normalized_text_is_ascii_and_idempotent(spark, texts):
     df2 = spark.createDataFrame([(s,) for s in out], "v string")
     out2 = [
         r["o"]
-        for r in df2.select(normalized_text_chain("v").alias("o")).collect()
+        for r in df2.select(clean_text_chain(ascii_fold(F.col("v"))).alias("o")).collect()
     ]
     # NFKC can expand (e.g. ™ -> tm) but a second pass must be stable
     assert out2 == [

@@ -1,4 +1,4 @@
-"""Structured Streaming tests: run the window/session/upsert operators
+"""Structured Streaming tests: run the window/session/join operators
 as REAL streams (file source, availableNow trigger) and check they agree
 with their batch twins."""
 
@@ -12,8 +12,6 @@ from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.sources.parquet_source import load_events
 from data_integration_openfoodfacts_spark.streaming.events_stream import (
-    read_events_stream,
-    run_events_upsert_stream,
     sessionized_events,
     windowed_event_stats,
 )
@@ -44,6 +42,15 @@ def stream_dir(spark, tmp_path_factory):
     return flat
 
 
+def _stream(spark, path):
+    """File-source stream over the event drops in ``path``."""
+    return spark.readStream.schema(_batch(spark, path).schema).parquet(path)
+
+
+def _batch(spark, path):
+    return spark.read.parquet(path)
+
+
 def _run_to_memory(spark, stream_df, name, output_mode):
     q = (
         stream_df.writeStream.format("memory")
@@ -57,83 +64,27 @@ def _run_to_memory(spark, stream_df, name, output_mode):
 
 
 def test_windowed_stats_stream_matches_batch(spark, stream_dir):
-    stream = read_events_stream(spark, stream_dir)
+    stream = _stream(spark, stream_dir)
     got = _run_to_memory(
         spark, windowed_event_stats(stream), "win_stats", "complete"
     ).collect()
     want = windowed_event_stats(
-        spark.read.schema(
-            read_events_stream(spark, stream_dir).schema
-        ).parquet(stream_dir)
+        _batch(spark, stream_dir)
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(got) > 0
 
 
 def test_sessionized_stream_matches_batch(spark, stream_dir):
-    stream = read_events_stream(spark, stream_dir)
+    stream = _stream(spark, stream_dir)
     got = _run_to_memory(
         spark, sessionized_events(stream), "sessions", "complete"
     ).collect()
     want = sessionized_events(
-        spark.read.schema(
-            read_events_stream(spark, stream_dir).schema
-        ).parquet(stream_dir)
+        _batch(spark, stream_dir)
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(got) > 0
-
-
-def test_upsert_stream_keeps_latest_per_user(spark, stream_dir, tmp_path):
-    target = str(tmp_path / "latest_events")
-    ckpt = str(tmp_path / "ckpt")
-    run_events_upsert_stream(spark, stream_dir, target, ckpt)
-    out = spark.read.parquet(target)
-    # one row per user
-    assert out.groupBy("user_id").count().filter("count > 1").count() == 0
-    # and it is the max-ts event for a sampled user
-    batch = spark.read.schema(
-        read_events_stream(spark, stream_dir).schema
-    ).parquet(stream_dir)
-    u = batch.select("user_id").first()["user_id"]
-    want_ts = batch.filter(F.col("user_id") == u).agg(F.max("ts")).first()[0]
-    got_ts = out.filter(F.col("user_id") == u).first()["ts"]
-    assert got_ts == want_ts
-
-
-def test_stream_dedup_drops_redelivered_events(spark, stream_dir, tmp_path):
-    """Re-deliver the same files (duplicate event_ids) -> dedup stream
-    must emit each event exactly once."""
-    from data_integration_openfoodfacts_spark.streaming.events_stream import (
-        dedup_events_stream,
-    )
-
-    dup_dir = str(tmp_path / "dup")
-    os.makedirs(dup_dir)
-    for i, f in enumerate(sorted(os.listdir(stream_dir))):
-        shutil.copy(os.path.join(stream_dir, f), os.path.join(dup_dir, f"a{i}.parquet"))
-        shutil.copy(os.path.join(stream_dir, f), os.path.join(dup_dir, f"b{i}.parquet"))
-    stream = read_events_stream(spark, dup_dir)
-    got = _run_to_memory(
-        spark, dedup_events_stream(stream), "dedup_stream", "append"
-    )
-    n_unique = (
-        spark.read.schema(read_events_stream(spark, stream_dir).schema)
-        .parquet(stream_dir)
-        .count()
-    )
-    assert got.count() == n_unique
-    assert got.groupBy("event_id").count().filter("count > 1").count() == 0
-
-
-def test_incremental_second_run_processes_nothing_new(spark, stream_dir, tmp_path):
-    target = str(tmp_path / "t2")
-    ckpt = str(tmp_path / "c2")
-    run_events_upsert_stream(spark, stream_dir, target, ckpt)
-    n1 = spark.read.parquet(target).count()
-    # second run with same checkpoint: no new files -> target unchanged
-    run_events_upsert_stream(spark, stream_dir, target, ckpt)
-    assert spark.read.parquet(target).count() == n1
 
 
 def test_interval_join_real_stream_matches_batch(spark, tmp_path):
@@ -212,7 +163,7 @@ def test_interval_join_real_stream_matches_batch(spark, tmp_path):
 def test_hopping_windows_stream_matches_batch(spark, stream_dir):
     """q125's operator on a REAL stream: hopping windows (1h / 15min
     slide) aggregate identically to the batch twin."""
-    stream = read_events_stream(spark, stream_dir)
+    stream = _stream(spark, stream_dir)
     got = _run_to_memory(
         spark,
         windowed_event_stats(stream, slide="15 minutes"),
@@ -220,87 +171,18 @@ def test_hopping_windows_stream_matches_batch(spark, stream_dir):
         "complete",
     ).collect()
     want = windowed_event_stats(
-        spark.read.schema(
-            read_events_stream(spark, stream_dir).schema
-        ).parquet(stream_dir),
+        _batch(spark, stream_dir),
         slide="15 minutes",
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     # each event lands in window/slide = 4 windows: the hopping total
     # is 4x the tumbling total
     tumb = windowed_event_stats(
-        spark.read.schema(
-            read_events_stream(spark, stream_dir).schema
-        ).parquet(stream_dir)
+        _batch(spark, stream_dir)
     ).collect()
     assert sum(r.nb_events for r in got) == 4 * sum(
         r.nb_events for r in tumb
     )
-
-
-def test_watermark_bounds_dedup_state(spark, tmp_path):
-    """State-eviction invariant behind SCALING_STREAM.json, at test
-    scale: with a bounded watermark the dedup state store PLATEAUS as
-    event time advances (old keys evicted); with an effectively
-    unbounded horizon it grows with every batch. Every row is a
-    distinct event_id — dedup's worst case."""
-    from data_integration_openfoodfacts_spark.streaming.events_stream import (
-        dedup_events_stream,
-    )
-
-    src = str(tmp_path / "hourly")
-    os.makedirs(src)
-    per_hour, hours = 200, 6
-    for h in range(hours):
-        spark.range(per_hour).select(
-            (F.lit(h) * per_hour + F.col("id")).alias("event_id"),
-            (
-                F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-                + F.make_interval(hours=F.lit(h))
-            ).alias("ts"),
-            F.lit(0).cast("long").alias("user_id"),
-            F.lit("view").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        ).coalesce(1).write.parquet(str(tmp_path / f"stage{h}"))
-        part = next(
-            f
-            for f in os.listdir(tmp_path / f"stage{h}")
-            if f.endswith(".parquet")
-        )
-        shutil.move(
-            str(tmp_path / f"stage{h}" / part),
-            os.path.join(src, f"h{h:02d}.parquet"),
-        )
-
-    def peak_and_final(name, watermark):
-        stream = read_events_stream(spark, src, max_files_per_trigger=1)
-        q = (
-            dedup_events_stream(stream, watermark=watermark)
-            .writeStream.format("noop")
-            .outputMode("append")
-            .option(
-                "checkpointLocation", str(tmp_path / f"ckpt_{name}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = [
-            op["numRowsTotal"]
-            for p in q.recentProgress
-            for op in p.get("stateOperators", [])
-        ]
-        return max(rows), rows[-1]
-
-    peak_b, _final_b = peak_and_final("bounded", "1 hour")
-    peak_u, final_u = peak_and_final("unbounded", "1000 hours")
-    # bounded: ~watermark-horizon worth of keys, strictly less than the
-    # full key population; unbounded: every key ever seen is retained
-    assert final_u == per_hour * hours
-    assert peak_u == per_hour * hours
-    assert peak_b < per_hour * hours
-    assert peak_b >= per_hour  # at least one hour of keys live
 
 
 def test_read_parquet_if_exists_is_silent_on_missing(spark, tmp_path, capfd):

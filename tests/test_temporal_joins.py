@@ -122,6 +122,8 @@ def test_range_join_boundary_semantics(spark):
     )
     got = {
         r["v"]
-        for r in range_join_broadcast(vals, bands, "v", "lo", "hi").collect()
+        for r in range_join_bucketed(
+            vals, bands, "v", "lo", "hi", 1000.0
+        ).collect()
     }
     assert got == {900.0, 4999.99}  # lo inclusive, hi exclusive

@@ -144,13 +144,19 @@ def build_ledger(spark, docs, path: str, n_buckets: int) -> int:
 
 
 def score_time(spark, tranche, ledger_path, n_buckets) -> tuple[float, int, int]:
+    from data_integration_openfoodfacts_spark.operators.novelty import (
+        doc_shingle_keys,
+    )
     from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
-        score_tranche_against_ledger,
+        score_shingled_tranche_against_ledger,
     )
 
     t0 = time.time()
-    per_doc, new_firsts = score_tranche_against_ledger(
-        tranche, ledger_path, "doc_id", "text", n=8, n_buckets=n_buckets
+    sh = doc_shingle_keys(tranche, "doc_id", "text", n=8).localCheckpoint(
+        eager=True
+    )
+    per_doc, new_firsts = score_shingled_tranche_against_ledger(
+        sh, ledger_path, "doc_id", n_buckets=n_buckets
     )
     n_new = new_firsts.count()
     n_docs = per_doc.count()

@@ -1,26 +1,19 @@
-"""Streaming STATE-scale probe: measure state-store rows/bytes across
-watermark horizons and a 10x key-cardinality step, instead of asserting
-the eviction story (round-5 VERDICT #5 — the streaming counterpart of
-SCALING_LLM.json).
+"""Streaming STATE-scale probe: measure state-store rows/bytes of the
+windowed event aggregation across a 10x key-cardinality step, instead
+of asserting the eviction story (round-5 VERDICT #5 — the streaming
+counterpart of SCALING_LLM.json).
 
-What it measures, on deterministic synthetic event files (one file per
-event-time hour, streamed with maxFilesPerTrigger=1 so every micro-batch
-advances the watermark):
+On deterministic synthetic event files (one file per event-time hour,
+streamed with maxFilesPerTrigger=1 so every micro-batch advances the
+watermark), ``windowed_event_stats`` (1h tumbling agg, append mode)
+must hold peak state rows at the open-window x event-type cardinality
+— independent of the number of events per hour.
 
-* ``dedup`` (``dropDuplicatesWithinWatermark`` on event_id — every row a
-  distinct key, the worst case for dedup state):
-  - a bounded horizon (2h) must hold peak state rows ~flat as the
-    STREAM LENGTH grows (12h vs 24h of files): eviction works;
-  - a 10x keys/hour step must grow peak state ~10x (state is linear in
-    active keys within the horizon — expected and honest);
-  - an effectively-unbounded horizon (1000h) over the same 12h stream
-    must grow state with every batch (what NOT bounding costs).
-* ``windowed`` (1h tumbling agg, append mode): peak state rows stay at
-  the open-window x event-type cardinality — independent of both the
-  number of events per hour and the stream length.
-
-Run: ``python tools/bench_scaling_stream.py`` (~2-4 min) — prints one
-JSON document; committed as SCALING_STREAM.json at the repo root.
+Run: ``python tools/bench_scaling_stream.py`` (~1-2 min) — prints one
+JSON document. The committed SCALING_STREAM.json also holds ``dedup_*``
+cases for a watermarked dedup stream operator; the package and this
+tool dropped that operator after commit c81fa34, where the tool that
+produced them still runs.
 """
 
 from __future__ import annotations
@@ -79,11 +72,11 @@ def write_hourly_files(spark, root: str, hours: int, keys_per_hour: int):
 def run_case(spark, src: str, work: str, name: str, transform):
     """Stream src one file per trigger; return per-batch state rows and
     bytes from the progress stateOperators."""
-    from data_integration_openfoodfacts_spark.streaming.events_stream import (
-        read_events_stream,
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
     )
-
-    stream = read_events_stream(spark, src, max_files_per_trigger=1)
     q = (
         transform(stream)
         .writeStream.format("noop")
@@ -110,7 +103,6 @@ def run_case(spark, src: str, work: str, name: str, transform):
 def main() -> None:
     from data_integration_openfoodfacts_spark.session import get_spark
     from data_integration_openfoodfacts_spark.streaming.events_stream import (
-        dedup_events_stream,
         windowed_event_stats,
     )
 
@@ -120,7 +112,6 @@ def main() -> None:
 
     corpora = {
         "12h_1k": (12, 1000),
-        "24h_1k": (24, 1000),
         "12h_10k": (12, 10000),
     }
     for cname, (hours, kph) in corpora.items():
@@ -131,14 +122,6 @@ def main() -> None:
     results = {}
     cases = [
         # (case name, corpus, transform)
-        ("dedup_w2h_12h_1k", "12h_1k",
-         lambda s: dedup_events_stream(s, watermark="2 hours")),
-        ("dedup_w2h_24h_1k", "24h_1k",
-         lambda s: dedup_events_stream(s, watermark="2 hours")),
-        ("dedup_w2h_12h_10k", "12h_10k",
-         lambda s: dedup_events_stream(s, watermark="2 hours")),
-        ("dedup_w1000h_12h_1k", "12h_1k",
-         lambda s: dedup_events_stream(s, watermark="1000 hours")),
         ("windowed_w2h_12h_1k", "12h_1k",
          lambda s: windowed_event_stats(s, watermark="2 hours")),
         ("windowed_w2h_12h_10k", "12h_10k",
@@ -155,20 +138,6 @@ def main() -> None:
         return round(pa / pb, 2) if pb else None
 
     summary = {
-        # 2x stream length at bounded horizon: peak should be ~1x
-        "dedup_peak_ratio_2x_stream_len": ratio(
-            "dedup_w2h_24h_1k", "dedup_w2h_12h_1k"
-        ),
-        # 10x keys/hour: peak should be ~10x (linear in active keys)
-        "dedup_peak_ratio_10x_keys": ratio(
-            "dedup_w2h_12h_10k", "dedup_w2h_12h_1k"
-        ),
-        # unbounded horizon: final state ~= all keys ever seen
-        "dedup_unbounded_final_over_bounded_peak": round(
-            results["dedup_w1000h_12h_1k"]["final_state_rows"]
-            / max(results["dedup_w2h_12h_1k"]["peak_state_rows"], 1),
-            2,
-        ),
         # windowed agg state is open-windows x event-types: 10x events
         # per hour must NOT move it
         "windowed_peak_ratio_10x_keys": ratio(

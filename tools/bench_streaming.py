@@ -1,6 +1,6 @@
 """Streaming throughput benchmark: events/sec through the windowed
-aggregation and the CDC upsert paths, availableNow over replicated event
-files. Prints one JSON line.
+aggregation and sessionization paths, availableNow over replicated
+event files. Prints one JSON line.
 
 Usage: python tools/bench_streaming.py [replications]
 """
@@ -26,7 +26,6 @@ def main() -> None:
         load_events,
     )
     from data_integration_openfoodfacts_spark.streaming.events_stream import (
-        read_events_stream,
         sessionized_events,
         windowed_event_stats,
     )
@@ -53,7 +52,7 @@ def main() -> None:
         ("windowed_stats", windowed_event_stats, "complete"),
         ("sessionization", sessionized_events, "complete"),
     ]:
-        stream = read_events_stream(spark, src)
+        stream = spark.readStream.schema(ev.schema).parquet(src)
         t0 = time.time()
         q = (
             transform(stream)
