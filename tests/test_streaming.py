@@ -44,11 +44,9 @@ def stream_dir(spark, tmp_path_factory):
 
 def _stream(spark, path):
     """File-source stream over the event drops in ``path``."""
-    return spark.readStream.schema(_batch(spark, path).schema).parquet(path)
-
-
-def _batch(spark, path):
-    return spark.read.parquet(path)
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(
+        path
+    )
 
 
 def _run_to_memory(spark, stream_df, name, output_mode):
@@ -69,7 +67,7 @@ def test_windowed_stats_stream_matches_batch(spark, stream_dir):
         spark, windowed_event_stats(stream), "win_stats", "complete"
     ).collect()
     want = windowed_event_stats(
-        _batch(spark, stream_dir)
+        spark.read.parquet(stream_dir)
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(got) > 0
@@ -81,7 +79,7 @@ def test_sessionized_stream_matches_batch(spark, stream_dir):
         spark, sessionized_events(stream), "sessions", "complete"
     ).collect()
     want = sessionized_events(
-        _batch(spark, stream_dir)
+        spark.read.parquet(stream_dir)
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(got) > 0
@@ -171,14 +169,14 @@ def test_hopping_windows_stream_matches_batch(spark, stream_dir):
         "complete",
     ).collect()
     want = windowed_event_stats(
-        _batch(spark, stream_dir),
+        spark.read.parquet(stream_dir),
         slide="15 minutes",
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     # each event lands in window/slide = 4 windows: the hopping total
     # is 4x the tumbling total
     tumb = windowed_event_stats(
-        _batch(spark, stream_dir)
+        spark.read.parquet(stream_dir)
     ).collect()
     assert sum(r.nb_events for r in got) == 4 * sum(
         r.nb_events for r in tumb
