@@ -122,6 +122,43 @@ def counting_build(
     return pos.groupBy("p").agg(F.count(F.lit(1)).alias("cnt"))
 
 
+def counting_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Merge two position-count tables built with the SAME (n_words,
+    k): insertion deltas carry positive counts, retraction deltas
+    negative ones (`counting_retract`). Zero rows are dropped (dead
+    weight); NEGATIVE rows are kept deliberately — they can only mean
+    the caller retracted occurrences never inserted (a contract
+    violation that silently manufactures false negatives), and a kept
+    negative row is the queryable evidence (`counts.filter("cnt < 0")`)
+    where a clamp would destroy it. Probes treat cnt > 0 as set, so a
+    negative row reads as unset either way."""
+    return (
+        a.select("p", "cnt")
+        .unionByName(b.select("p", "cnt"))
+        .groupBy("p")
+        .agg(F.sum("cnt").alias("cnt"))
+        .filter(F.col("cnt") != 0)
+    )
+
+
+def counting_retract(
+    counts: DataFrame, removed: DataFrame, key: str, n_words: int, k: int
+) -> DataFrame:
+    """Subtract the removed key OCCURRENCES from the position-count
+    table — the takedown path the plain bit filter cannot offer (a set
+    bit carries no owner count, so clearing it risks false negatives
+    for every other key sharing the position; the count does carry it).
+    Exactness contract: ``removed`` must be (a subset of) occurrences
+    previously inserted. Under that contract the result is
+    POSITION-IDENTICAL to rebuilding from the surviving occurrences —
+    membership verdicts INCLUDING false positives match a fresh build
+    bit-for-bit, which is what q176's oracle pins."""
+    neg = counting_build(removed, key, n_words, k).select(
+        "p", (-F.col("cnt")).alias("cnt")
+    )
+    return counting_merge(counts, neg)
+
+
 def counting_to_words(counts: DataFrame) -> DataFrame:
     """Collapse a position-count table to the ``(w, bits)`` word table
     (`bloom_build`'s shape): bit set iff cnt > 0. Probes then run

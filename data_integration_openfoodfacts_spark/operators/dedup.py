@@ -42,6 +42,14 @@ def dedup_keep_latest(
     return df.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
 
 
+def dedup_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Exact dedup on a key subset (reference O2,
+    pipeline_etl.ipynb:520) — hash aggregate, arbitrary survivor.
+    Use ``dedup_keep_latest`` when the survivor must be deterministic.
+    """
+    return df.dropDuplicates(list(keys))
+
+
 def dedup_exact_segments(
     df: DataFrame,
     id_col: str,

