@@ -9,7 +9,9 @@ in SURVEY.md §3.1) with the architectural fixes §4 calls for:
   Python UDF (pipeline_etl.ipynb:205-210 — its biggest perf sink);
 - Silver is cached before the Gold fan-out: the reference recomputes
   the full CSV->Silver chain for every one of ~9 downstream actions
-  (SURVEY.md §4 "Caching / reuse");
+  (SURVEY.md §4 "Caching / reuse"); AQE sizes that cache like any
+  other shuffle output (``session.get_spark`` lets it coalesce cached
+  plans), so the Gold stages over it do not inherit 32 tiny partitions;
 - surrogate keys minted in-engine (row_number over natural keys) —
   no MySQL AUTO_INCREMENT write->read-back round-trip
   (pipeline_etl.ipynb:570-571,644);
@@ -48,6 +50,7 @@ from ..operators.dedup import dedup_keep_latest
 from ..operators.keys import add_surrogate_key
 from ..operators.validation import NUTRIENT_BOUNDS, bounded_expr
 from ..schemas import NUTRIENT_COLUMNS, SILVER_INPUT_COLUMNS
+from ..sources.sinks import write_table
 
 # Imputation config — defaults (including misspellings) kept verbatim
 # from pipeline_etl.ipynb:268-302 for output parity.
@@ -347,13 +350,7 @@ def _save_table(
     keeps re-runs idempotent."""
 
     def write() -> None:
-        w = df.write.mode("overwrite").format("parquet")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        if bucket_by:
-            n, cols = bucket_by
-            w = w.bucketBy(n, *cols).sortBy(*cols)
-        w.saveAsTable(table)
+        write_table(df, table, partition_by=partition_by, bucket_by=bucket_by)
 
     try:
         write()
@@ -408,7 +405,7 @@ def run_pipeline(
     Metrics parity with pipeline_etl.ipynb:708-717, computed in ONE
     aggregation pass over the fact instead of 5 separate actions.
     """
-    t0 = time.time()
+    t0 = time.perf_counter()
     rows_in = bronze.count()
 
     silver = build_silver(bronze).cache()
@@ -486,7 +483,7 @@ def run_pipeline(
         "avg_completeness": m["avg_completeness"],
         "pct_nutriscore": m["pct_nutriscore"],
         "sugar_anomalies": m["sugar_anomalies"] or 0,
-        "duration_sec": round(time.time() - t0, 2),
+        "duration_sec": round(time.perf_counter() - t0, 2),
     }
     tables = {"silver_products": silver, **gold}
     return PipelineResult(metrics=metrics, tables=tables)

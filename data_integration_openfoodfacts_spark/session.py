@@ -6,6 +6,12 @@ The reference bootstraps ``local[1]`` with worker reuse disabled
 - UTC session timezone (date math parity across engines; SURVEY.md §7
   "Timezone-sensitive date math"),
 - AQE on (runtime coalesce / skew-join / broadcast demotion),
+- AQE may re-partition cached plans
+  (``canChangeCachedPlanOutputPartitioning``; Spark 4.1 defaults it
+  off): otherwise a cached frame keeps ``spark.sql.shuffle.partitions``
+  partitions, and the medallion pipeline's cached 20k-row Silver split
+  every Gold write, key check and metrics read into 32 tiny tasks and
+  wrote each table as 32 files,
 - Arrow on (pandas UDFs are the sanctioned Python escape hatch),
 - shuffle partitions sized for the local test harness; on a real cluster
   AQE coalesces from a higher initial number.
@@ -42,6 +48,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Smaller Arrow batches: the pair-join pandas UDFs carry two
         # 64-float arrays per row, and 10k-row default batches x 32

@@ -259,3 +259,23 @@ def test_dim_country_is_exploded_distinct(result):
         if c
     }
     assert set(names) == silver_countries
+
+
+def test_cached_silver_is_right_sized(spark, tmp_path):
+    """AQE may coalesce the cached Silver (``session.get_spark`` sets
+    ``canChangeCachedPlanOutputPartitioning``): without it the cache
+    keeps ``spark.sql.shuffle.partitions`` partitions, and every Gold
+    write, key check and metrics read over it runs that many tasks."""
+    path = os.path.join(str(tmp_path), "products.tsv")
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(HEADER + "\n" + "\n".join(ROWS) + "\n")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        res = run_pipeline(spark, read_openfoodfacts_csv(spark, path))
+        silver = res.tables["silver_products"]
+        n = silver.rdd.getNumPartitions()
+        silver.unpersist()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert n <= spark.sparkContext.defaultParallelism
