@@ -26,10 +26,8 @@ def _collect_records(repo_dir: str, sf: float) -> list[tuple[int, dict]]:
     """All committed same-sf bench records, newest round first. Each
     entry is (round_number, {qN: sec}).
 
-    Source: the committed ``plans/bench_history/rNN.json`` full records
-    (round-7 VERDICT #2 — the driver's BENCH_r*.json tail capture
-    truncates at 2,000 chars, which silently dropped r06/r07's
-    per-query maps and made r07 compare against r05).
+    Source: the committed ``plans/bench_history/rNN.json`` full records,
+    not stdout captures, which truncate the per-query map.
     """
     import glob
     import re
@@ -56,20 +54,17 @@ def _collect_records(repo_dir: str, sf: float) -> list[tuple[int, dict]]:
 
 
 def load_prev_timings(repo_dir: str, sf: float):
-    """Baseline per-query timings for the regression gate (VERDICT r03
-    item 5): each bench run self-compares so a 2x drift (like q26's
-    1.33->2.79s between r01 and r03) surfaces in-round instead of at
-    judge time. Only same-sf records compare. Returns
-    (latest_round_number, {qN: sec}) or (None, {}).
+    """Baseline per-query timings for the regression gate: each bench
+    run self-compares so a 2x drift surfaces in the run that causes it.
+    Only same-sf records compare. Returns (latest_round_number,
+    {qN: sec}) or (None, {}).
 
     The baseline per query is the MEDIAN over the newest (up to) three
-    committed records carrying that query (round 11: r12 recorded
-    q116 at 0.84s — a lucky low against its 1.1-1.5s band across
-    r07-r11 — and the next run's normal 1.74s tripped the 2x gate;
-    a single-newest baseline turns one lucky record into next round's
-    false flag, and the standalone re-run can't dismiss it because the
-    'drift' is consistent within the window. The median of three is
-    immune to one lucky/unlucky record in either direction.)
+    committed records carrying that query: a single-newest baseline
+    turns one lucky record into the next run's false flag, which the
+    standalone re-run cannot dismiss because the "drift" is consistent
+    within the run. The median of three is immune to one lucky or
+    unlucky record in either direction.
     """
     records = _collect_records(repo_dir, sf)
     if not records:
@@ -94,12 +89,11 @@ ANCHOR_WINDOW = 5
 
 def load_anchor_timings(repo_dir: str, sf: float, window: int = ANCHOR_WINDOW):
     """Per-query MIN over the newest ``window`` committed same-sf
-    records — the CREEPING-DRIFT anchor (round-11 VERDICT #1: q151
-    climbed 3.60 -> 7.76s across five records, each step < 2x, and the
-    adjacent median-of-3 baseline followed the drift; no record ever
-    flagged it). The adjacent gate compares against where the query
-    was LAST ROUND; this anchor compares against the best the query
-    has recently BEEN, which a monotone climb can't drag along.
+    records — the CREEPING-DRIFT anchor. A monotone climb whose every
+    step is < 2x drags the adjacent median-of-3 baseline along and never
+    flags. The adjacent gate compares against where the query was LAST
+    ROUND; this anchor compares against the best the query has recently
+    BEEN, which a monotone climb can't drag along.
 
     MIN (not median) is deliberate: the anchor asks "did we lose
     ground the query provably held?", and a single lucky record is
@@ -133,9 +127,8 @@ def main() -> None:
         "bench",
         extra_conf={
             "spark.sql.warehouse.dir": "/tmp/benchwh",
-            # Progress bars + long per-query keys overflowed the
-            # driver's output-tail capture in round 2 (BENCH_r02
-            # recorded parsed:null) — keep stdout to the one JSON line.
+            # progress bars would overflow a stdout tail capture:
+            # keep stdout to the one JSON line
             "spark.ui.showConsoleProgress": "false",
         },
     )
@@ -147,20 +140,12 @@ def main() -> None:
 
     # Two runs per query, min reported: standard steady-state
     # methodology — run 1 pays first-touch costs (codegen compile, file
-    # listing) that a resident service amortizes away.
-    # Short keys ("q17" not "q17_run_metrics") keep the emitted JSON
-    # line compact enough for the driver's tail capture at 74 queries.
+    # listing) that a resident service amortizes away. Short keys
+    # ("q17" not "q17_run_metrics") keep the emitted JSON line compact.
     timings: dict[str, float] = {}
     total = 0.0
     import gc
 
-    # every 5 since round 7 (the registry's checkpoint-heavy additions
-    # leave more blocks per query). Measured honestly: back-to-back
-    # 161-query runs at 10 vs 5 differed by 0.4s total — the thin ~+9%
-    # common-subset wall drift vs r05 is HOST-level (it hits untouched
-    # TPC-H queries like q33/q65 equally; zero per-query tier
-    # regressions), not block pressure. The tighter cadence is kept as
-    # cheap insurance, not as a fix for that drift.
     jvm_gc_every = 5
     errors: dict[str, str] = {}
     for qi, (name, fn) in enumerate(QUERIES.items()):
@@ -168,23 +153,21 @@ def main() -> None:
         try:
             runs = []
             for _ in range(2):
-                t0 = time.time()
+                t0 = time.perf_counter()
                 run_query(fn(spark, sf_dir))
-                runs.append(time.time() - t0)
+                runs.append(time.perf_counter() - t0)
             # Virtualized-host stalls hit random queries for seconds at
             # a time; when the two runs disagree badly, one of them ate
             # a stall — a third run breaks the tie so the recorded min
             # reflects the query, not the neighbor's noisy timeslice.
-            # Heavy queries (>=2s) additionally always get a third run
-            # and record the MEDIAN: min-of-2 let q127/q43-class numbers
-            # wobble round-to-round with host noise (round-5 VERDICT
-            # #8); the median of 3 is stable against one lucky AND one
-            # unlucky run.
+            # Heavy queries (>=2s) always get a third run and record
+            # the MEDIAN, which is stable against one lucky AND one
+            # unlucky run where min-of-2 wobbles with host noise.
             heavy = min(runs) >= 2.0
             if heavy or max(runs) > 1.5 * min(runs) + 0.2:
-                t0 = time.time()
+                t0 = time.perf_counter()
                 run_query(fn(spark, sf_dir))
-                runs.append(time.time() - t0)
+                runs.append(time.perf_counter() - t0)
             best = sorted(runs)[1] if heavy else min(runs)
         except Exception as exc:  # noqa: BLE001 — one failing query
             # (e.g. q26's cartesian guard at a larger sf) must not
@@ -196,20 +179,16 @@ def main() -> None:
         # Benchmark isolation: iterative queries leave localCheckpoint
         # blocks behind until their Py4J proxies are GC'd and the JVM
         # ContextCleaner's weak refs fire — without this, block-manager
-        # storage accumulates across the 100-query suite and later
-        # queries pay the memory pressure (measured: broad 1.5-3x
-        # drift on queries whose code never changed). Python gc drops
-        # the proxies every query; a periodic JVM System.gc() lets the
-        # cleaner actually reclaim the blocks.
+        # storage accumulates across the suite and later queries pay
+        # the memory pressure. Python gc drops the proxies every query;
+        # a periodic JVM System.gc() lets the cleaner reclaim the blocks.
         gc.collect()
         if (qi + 1) % jvm_gc_every == 0:
             spark.sparkContext._jvm.System.gc()
-        # Cache isolation (round 9): operators that .cache() a shared
-        # frame (ngram_jaccard_pairs' shingle table, deliberately left
-        # to LRU) leak that cache into LATER queries whose logical
-        # plans match it — q19 measured 0.82s when the rotation order
-        # happened to run q18 first and ~3s when it didn't, so the
-        # tiered gate flagged registry REORDERING as a regression.
+        # Cache isolation: operators that .cache() a shared frame
+        # (ngram_jaccard_pairs' shingle table, deliberately left to LRU)
+        # leak that cache into LATER queries whose logical plans match
+        # it, so registry reordering would read as a regression.
         # Clearing between queries makes each number the query's own.
         spark.catalog.clearCache()
     # qN prefixes must stay unique or a collision silently drops a
@@ -224,12 +203,10 @@ def main() -> None:
     # record carries a direct comparison.
     #
     # Same benchmark-isolation hygiene as the per-query loop, applied
-    # BEFORE the pipeline section: after 166 queries the block manager
-    # holds every not-yet-GC'd localCheckpoint block of the suite, and
-    # the pipeline's global row_number window is the most
-    # memory-pressure-sensitive stage in the repo (round-9: 14.1s
-    # in-suite vs 7.7s standalone until this was added — the suite
-    # state, not the pipeline, was being measured).
+    # BEFORE the pipeline section: the block manager still holds the
+    # suite's not-yet-GC'd localCheckpoint blocks, and the pipeline's
+    # global row_number window is the most memory-pressure-sensitive
+    # stage in the repo.
     gc.collect()
     spark.sparkContext._jvm.System.gc()
     pipeline_sec = None
@@ -246,18 +223,15 @@ def main() -> None:
 
         # Two runs, min — same steady-state methodology as the query
         # suite: run 1 pays one-off costs (Python UDF worker fork, CSV
-        # codegen) that a resident pipeline service amortizes; observed
-        # run-to-run spread on one-shot runs is 18-32s for a ~6s-warm
-        # silver stage, i.e. the one-shot number measures warmup, not
-        # the pipeline.
-        # BOTH surrogate-key modes (VERDICT r04 item 5): row_number is
-        # the small-data default; hash is the 100 TB shuffle-free mint.
-        # Their DQ metrics must agree exactly (same rows kept/rejected,
-        # same fact aggregates — SKs differ, accounting must not).
+        # codegen) that a resident pipeline service amortizes.
+        # BOTH surrogate-key modes: row_number is the small-data
+        # default; hash is the 100 TB shuffle-free mint. Their DQ
+        # metrics must agree exactly (same rows kept/rejected, same
+        # fact aggregates — SKs differ, accounting must not).
         def run_mode(strategy: str):
             best, metrics = float("inf"), None
             for _ in range(2):
-                t0 = time.time()
+                t0 = time.perf_counter()
                 bronze = read_openfoodfacts_csv(
                     spark, bp.TSV, multi_line=False
                 )
@@ -267,7 +241,7 @@ def main() -> None:
                     database=f"benchpipe_{strategy}",
                     sk_strategy=strategy,
                 )
-                best = min(best, time.time() - t0)
+                best = min(best, time.perf_counter() - t0)
                 metrics = {
                     k: v
                     for k, v in res.metrics.items()
@@ -305,9 +279,8 @@ def main() -> None:
         pipeline_hash_sec, pipeline_modes_dq_match = None, None
 
     # Tiered regression gate vs the latest committed same-sf record
-    # (VERDICT r04 item 8: at 133 queries, sub-second entries live in
-    # the noisy-neighbor jitter band, so a flat 2x rule would cry wolf
-    # while a real drift on a big query matters at far less than 2x):
+    # (sub-second entries live in the noisy-neighbor jitter band, so a
+    # flat 2x rule would cry wolf on them):
     # - heavy tier (prev >= 0.5s): flag at >2x;
     # - light tier (prev < 0.5s): flag only when the query ALSO grew by
     #   >0.5s absolute — i.e. it left the jitter band entirely.
@@ -322,12 +295,10 @@ def main() -> None:
         if q in prev_q and cur > 2 * prev_q[q] and cur - prev_q[q] > 0.5
     }
 
-    # Long-window anchor gate (round-12, VERDICT r11 #1): the adjacent
-    # gate above is blind to a monotone creep — q151 climbed 3.60 ->
-    # 7.76s across r11-r15 with every step < 2x while the median-of-3
-    # baseline chased the drift. Anchor each query to the MIN of the
-    # last ANCHOR_WINDOW committed records: a creep that never
-    # triggers the adjacent gate still crosses 2x the recent best.
+    # Long-window anchor gate: the adjacent gate above is blind to a
+    # monotone creep whose every step is < 2x. Anchor each query to the
+    # MIN of the last ANCHOR_WINDOW committed records: a creep that
+    # never triggers the adjacent gate still crosses 2x the recent best.
     # Same 0.5s absolute floor (sub-second jitter is not drift), same
     # standalone reconciliation below. Adjacent flags take precedence
     # (a query tripping both is one investigation, not two lines).
@@ -343,11 +314,8 @@ def main() -> None:
         and cur - anchor_q[q] > 0.5
     }
 
-    # Self-reconciling gate (round-11 VERDICT #1: the flag->manual
-    # quiet-host-probe->commit loop was task #1 three rounds running —
-    # automate it). An in-suite flag is often a virtualized-host stall
-    # or contended-window artifact (the round-10/11 manual drift
-    # probes: every probed flag reconciled to baseline), so before
+    # Self-reconciling gate: an in-suite flag is often a
+    # virtualized-host stall or contended-window artifact, so before
     # flagging, re-run the flagged query STANDALONE — post-suite,
     # cache-cleared, freshly GC'd — with the same min-of-2 /
     # median-of-3-if-heavy methodology.
@@ -356,14 +324,10 @@ def main() -> None:
     # so a dismissed flag is auditable, not discarded. The committed
     # per-query map takes min(suite, standalone): next round's gate
     # should compare against the query's own cost, not the noise.
-    # Dismissals are recorded PER GATE (round-12 ADVICE: one shared
-    # map mixed median-of-3-prev baselines with window-MIN anchor
-    # baselines, and readers following the documented
-    # check-the-reconciled-map protocol could misread an anchor
-    # window-min as last round's timing): `reconciled` holds
-    # adjacent-gate entries ([prev-round timing, suite, standalone]),
-    # `anchor_reconciled` holds anchor-gate entries
-    # ([long-window MIN, suite, standalone]).
+    # Dismissals are recorded PER GATE, since the two baselines mean
+    # different things: `reconciled` holds adjacent-gate entries
+    # ([prev-round timing, suite, standalone]), `anchor_reconciled`
+    # holds anchor-gate entries ([long-window MIN, suite, standalone]).
     reconciled: dict[str, list[float]] = {}
     anchor_reconciled: dict[str, list[float]] = {}
     by_prefix = {n.split("_", 1)[0]: fn for n, fn in QUERIES.items()}
@@ -381,14 +345,14 @@ def main() -> None:
                 fn = by_prefix[q]
                 runs = []
                 for _ in range(2):
-                    t0 = time.time()
+                    t0 = time.perf_counter()
                     run_query(fn(spark, sf_dir))
-                    runs.append(time.time() - t0)
+                    runs.append(time.perf_counter() - t0)
                 heavy = min(runs) >= 2.0
                 if heavy or max(runs) > 1.5 * min(runs) + 0.2:
-                    t0 = time.time()
+                    t0 = time.perf_counter()
                     run_query(fn(spark, sf_dir))
-                    runs.append(time.time() - t0)
+                    runs.append(time.perf_counter() - t0)
                 standalone = round(
                     sorted(runs)[1] if heavy else min(runs), 2
                 )
@@ -407,12 +371,10 @@ def main() -> None:
                 del gate[q]
 
     # Full record -> committed report file; stdout stays a COMPACT
-    # digest (round-7 VERDICT #2): the driver's output-tail capture is
-    # 2,000 chars, and the full 161-query map overflowed it in r06/r07
-    # (parsed:null — the r02 failure mode recurring at registry scale).
-    # The regression gate reads the committed plans/bench_history/
-    # records, which the end-of-round protocol snapshots from
-    # plans/bench_report.json (tools/record_bench.py).
+    # digest, since a stdout tail capture of 2,000 chars cannot hold
+    # the full per-query map. The regression gate reads the committed
+    # plans/bench_history/ records, which the end-of-round protocol
+    # snapshots from plans/bench_report.json (tools/record_bench.py).
     full = {
         "metric": "engine_query_suite_wall",
         "value": round(total, 2),
@@ -464,7 +426,7 @@ def main() -> None:
         },
         separators=(",", ":"),
     )
-    # hard guard: the whole point is fitting the driver's tail
+    # hard guard: the whole point is fitting a 2,000-char tail
     # capture. A pathological run (mass regressions/errors) trims the
     # variable-size maps rather than overflowing — the full detail is
     # in the report file either way.

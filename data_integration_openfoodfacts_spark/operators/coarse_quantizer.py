@@ -41,7 +41,6 @@ __all__ = [
     "block_partition",
     "blocked_assign",
     "assign_mean_partials",
-    "fit_centroids_blocked",
 ]
 
 
@@ -309,58 +308,4 @@ def assign_mean_partials(
 
     return embeddings.select(id_col, vec_col).mapInPandas(
         partials, out_schema
-    )
-
-
-def fit_centroids_blocked(
-    embeddings: DataFrame,
-    k: int,
-    n_iters: int = 2,
-    n_probe: int | None = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cold k∝n fit at scale: md5-ordered seeds (the same data-derived
-    rule as `clustering.fit_centroids_lloyd` step 2 and
-    `clustering_scale.grow_centroids`) + Lloyd sweeps whose
-    assignment is the two-level probe above — per sweep n·√k-ish work
-    instead of n·k. Means/empty-cluster handling are
-    `clustering_scale.refine_centroids`'s (distributed k×dim
-    aggregation, empty clusters keep their center). Scale-path, not
-    oracle-gated — the committed round-13 probe carries the
-    wall-vs-quality evidence. ``n_probe=None`` runs the FLAT GEMM
-    assignment through the same seeding/sweeps — the probe's
-    full-assignment twin."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from .clustering_scale import refine_centroids
-
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    seeds = (
-        embeddings.select(
-            F.col(id_col),
-            F.col(vec_col).alias("centroid_vec"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-        )
-        .orderBy(F.col("__h").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    cents = seeds.select(
-        (
-            F.row_number().over(
-                Window.orderBy(F.col("__h").asc(), F.col(id_col).asc())
-            )
-            - F.lit(1)
-        ).cast("long").alias("centroid_id"),
-        "centroid_vec",
-    )
-    return refine_centroids(
-        embeddings,
-        cents,
-        n_iters=n_iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_probe_blocks=n_probe,
     )

@@ -1,28 +1,19 @@
-"""State-based compaction triggers — compact when the store NEEDS it.
+"""State-based compaction trigger — compact when the store NEEDS it.
 
 The stream runners compact on CADENCE (``compact_every=N`` batches):
 simple, predictable, but blind — a quiet stream compacts stores that
 accumulated nothing, a bursty one lets layout debt pile up between
-ticks. The state-based trigger reads the store's ACTUAL debt and
-compacts exactly when it crosses a threshold:
+ticks. The state-based trigger reads the counting store's ACTUAL debt,
+the number of live delta partitions (every probe sums across all of
+them, so read amplification is linear in delta count), and compacts
+exactly when ``live deltas > max_deltas``.
 
-- **counting store**: the number of live delta partitions — every
-  probe sums across all of them, so read amplification is linear in
-  delta count. Trigger: ``live deltas > max_deltas``.
-- **bucketed ledgers** (novelty / band / corpus / windowed epochs all
-  share the layout): files in the WORST bucket — every pruned probe
-  opens all of a touched bucket's files, so the debt that matters is
-  per-bucket, not the store-wide average (one hot bucket with 50
-  files hurts every probe that touches it even when 63 cold buckets
-  hold one file each). Trigger: ``max files in any single bucket >
-  max_files_per_bucket``.
-
-Both probes read FILESYSTEM METADATA only (one directory listing; no
+The probe reads FILESYSTEM METADATA only (one directory listing; no
 data scan, no shuffle) — at 100 TB the check is O(partitions) driver
 work against the namenode/object listing, the same class as the
-stores' own existence checks. The compactions they dispatch are the
-stores' OWN atomic passes (`compact_counting`, `compact_bucketed`),
-so crash contracts are unchanged.
+store's own existence checks. The compaction it dispatches is the
+store's OWN atomic pass (`compact_counting`), so crash contracts are
+unchanged.
 
 VACUUM WARNING (counting store): compaction is also the time-travel
 vacuum — absorbed deltas' versions become unreadable
@@ -41,8 +32,6 @@ from ..storage import hadoop_fs
 __all__ = [
     "counting_delta_count",
     "maybe_compact_counting",
-    "bucket_file_stats",
-    "maybe_compact_bucketed",
 ]
 
 
@@ -79,72 +68,4 @@ def maybe_compact_counting(
     from ..streaming.counting_store import compact_counting
 
     compact_counting(spark, path, n_words, k)
-    return True
-
-
-def bucket_file_stats(
-    spark: SparkSession, path: str, bucket_col: str
-) -> tuple[int, int, int]:
-    """(parquet files, bucket directories, max files in one bucket) of
-    a hive-bucketed store — one recursive metadata listing, no data
-    read. (0, 0, 0) when the store doesn't exist or has no bucket
-    directories (legacy flat stores report 0 buckets; compaction is
-    also their migration)."""
-    fs, root, _jvm = hadoop_fs(spark, path)
-    if not fs.exists(root):
-        return (0, 0, 0)
-    n_files = 0
-    n_buckets = 0
-    max_in_bucket = 0
-    for st in fs.listStatus(root):
-        if not (
-            st.isDirectory()
-            and st.getPath().getName().startswith(f"{bucket_col}=")
-        ):
-            continue
-        n_buckets += 1
-        here = sum(
-            1
-            for f in fs.listStatus(st.getPath())
-            if f.getPath().getName().endswith(".parquet")
-        )
-        n_files += here
-        max_in_bucket = max(max_in_bucket, here)
-    return (n_files, n_buckets, max_in_bucket)
-
-
-def maybe_compact_bucketed(
-    spark: SparkSession,
-    path: str,
-    bucket_col: str,
-    compact: "callable",
-    max_files_per_bucket: int,
-) -> bool:
-    """Run ``compact()`` (the store's own compaction pass, e.g. a
-    ``bucketed_ledger.compact_bucketed`` call) iff any single bucket
-    holds more than ``max_files_per_bucket`` parquet files —
-    the per-bucket worst case is what a pruned probe actually pays.
-    Returns whether a compaction ran; a legacy FLAT store (no bucket
-    dirs) with any files always triggers, since compaction is also its
-    migration into the layout."""
-    if max_files_per_bucket < 1:
-        raise ValueError("max_files_per_bucket must be >= 1")
-    _n_files, n_dirs, max_in_bucket = bucket_file_stats(
-        spark, path, bucket_col
-    )
-    if n_dirs == 0:
-        # flat legacy store: any parquet file means it should migrate
-        fs, root, _jvm = hadoop_fs(spark, path)
-        if not fs.exists(root):
-            return False
-        flat_files = sum(
-            1
-            for st in fs.listStatus(root)
-            if st.getPath().getName().endswith(".parquet")
-        )
-        if flat_files == 0:
-            return False
-    elif max_in_bucket <= max_files_per_bucket:
-        return False
-    compact()
     return True

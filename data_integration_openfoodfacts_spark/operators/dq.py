@@ -2,10 +2,10 @@
 
 The reference's PK/FK/UNIQUE constraints live in MySQL DDL
 (tools/database.py:81-151) and its validation tests are ad-hoc notebook
-assertions (docs/quality_report.md:516-572: T1 uniqueness, T2 referential
-integrity, T3 count parity, T4 range survival). Spark cannot enforce
-constraints, so each becomes an executable check returning the violation
-count (0 == pass). All are single aggregations — no collects of data rows.
+assertions (docs/quality_report.md:516-572). Spark cannot enforce
+constraints, so the pipeline's uniqueness test (T1) is an executable
+check returning the violation count (0 == pass): a single aggregation,
+no collect of data rows.
 """
 
 from __future__ import annotations
@@ -24,35 +24,3 @@ def assert_unique(df: DataFrame, keys: Sequence[str]) -> int:
         .filter(F.col("count") > 1)
         .count()
     )
-
-
-def assert_no_orphans(
-    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str | None = None
-) -> int:
-    """T2: fact rows whose key has no match in the dimension — a LEFT ANTI
-    join (the reference spells it LEFT JOIN + IS NULL,
-    quality_report.md:536-544)."""
-    dim_key = dim_key or fact_key
-    dim_keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    return fact.join(dim_keys, on=fact_key, how="left_anti").count()
-
-
-def assert_count_parity(a: DataFrame, b: DataFrame) -> int:
-    """T3: absolute row-count difference (quality_report.md:549-557)."""
-    return abs(a.count() - b.count())
-
-
-def assert_within_bounds(
-    df: DataFrame, bounds: dict[str, tuple[float, float]]
-) -> int:
-    """T4: rows with any surviving out-of-bounds value
-    (quality_report.md:563-572). One pass over the data."""
-    present = [c for c in bounds if c in df.columns]
-    if not present:
-        return 0
-    cond = None
-    for c in present:
-        lo, hi = bounds[c]
-        bad = F.col(c).isNotNull() & ((F.col(c) < lo) | (F.col(c) > hi))
-        cond = bad if cond is None else (cond | bad)
-    return df.filter(cond).count()

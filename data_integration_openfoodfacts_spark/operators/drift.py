@@ -12,11 +12,10 @@ found 3 one-ulp mismatches — so a hash-gated query must not evaluate
 it. The operator therefore emits the per-band PROFILE in exact or
 IEEE-deterministic terms only: integer counts, Laplace-smoothed
 probabilities (single int/int divisions) and their gap. The PSI's
-log factor is applied READER-side (`psi_from_profile`, pure Python) —
-one log per band over a 10-row profile costs nothing and keeps the
-gate deterministic. (The engine's one gated transcendental, q134's
-sigmoid, has hash-matched across all rounds; ln measurably does not —
-the rule is probe, don't assume.)
+log factor is left to the reader — one log per band over a 10-row
+profile costs nothing and keeps the gate deterministic. (The engine's
+one gated transcendental, q134's sigmoid, has hash-matched across all
+rounds; ln measurably does not — the rule is probe, don't assume.)
 
 Plan shape: each side is one banded groupBy count (map-side combined,
 <= n_bands rows out) plus a 1-row total; missing bands are restored by
@@ -31,12 +30,10 @@ divide the same longs.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["drift_profile", "psi_from_profile"]
+__all__ = ["drift_profile"]
 
 
 def drift_profile(
@@ -82,19 +79,3 @@ def drift_profile(
     return smoothed.select(
         "*", (F.col("p_ref") - F.col("p_cur")).alias("gap")
     )
-
-
-def psi_from_profile(rows) -> float:
-    """Reader-side PSI over a collected profile (any iterable of rows
-    or dicts with p_ref/p_cur): sum((p_ref - p_cur) * ln(p_ref /
-    p_cur)). Lives driver-side on purpose — see the module docstring's
-    ln bit-parity measurement. Conventional reading: < 0.1 stable,
-    0.1-0.25 moderate shift, > 0.25 investigate before training."""
-    total = 0.0
-    for r in rows:
-        try:  # Row / dict / any mapping (Row is a tuple SUBCLASS —
-            p, q = r["p_ref"], r["p_cur"]  # never dispatch on tuple)
-        except (TypeError, KeyError, IndexError):
-            p, q = r[0], r[1]  # plain (p_ref, p_cur) pairs
-        total += (p - q) * math.log(p / q)
-    return total

@@ -1,26 +1,21 @@
-"""Batched-BLAS brute-force scoring — the exact-scan shape a 100 TB
-ANN BASELINE actually ships.
+"""Batched-BLAS centroid assignment.
 
 The engine's exact paths score candidate PAIRS with
 `functions/vectors.pair_dot_fold` (one Arrow batch of pairs, cumsum
-fold for oracle bit-parity). That is the right shape when an index
-bounds the candidates (LSH bands, IVF lists, band postings). The
-brute-force baseline — EVERY query against EVERY corpus vector — has a
-better shape: broadcast the small query matrix once as numpy, stream
-the corpus through ``mapInPandas`` in Arrow batches, and score each
-batch as ONE C-contiguous GEMM (``B x d @ d x q``) with a
-batch-local top-k, so the only shuffled rows are ``k x queries x
-n_batches`` partial winners, never the ``n x queries`` score matrix.
-Same multiply-add count as the fold, a fraction of the dispatch
-overhead (committed probe: tools/bench_scaling_gemm.py).
+fold for oracle bit-parity). Scoring EVERY vector against EVERY
+centroid has a better shape: broadcast the small centroid matrix once
+as numpy, stream the corpus through ``mapInPandas`` in Arrow batches,
+and score each batch as ONE C-contiguous GEMM (``B x d @ d x k``), so
+the ``n x k`` score matrix never exists as Spark rows. Same
+multiply-add count as the fold, a fraction of the dispatch overhead.
 
 Determinism note — why this is NOT a gate-oracle path: BLAS
 accumulates each dot in an implementation-defined order (blocking,
 SIMD, FMA), so scores can differ from the engine's left-to-right fold
 — and hence from the DuckDB twin — in final ulps, which can flip
-adjacent ranks at near-ties. Gate queries keep the fold; this
-operator is the measured-throughput exact baseline, pinned by tests
-against `similarity.cosine_topk` on margin-separated data.
+near-tie assignments. Gate queries keep the fold; this operator is
+the measured-throughput variant, pinned by tests against the fold on
+margin-separated data.
 
 Zero-norm vectors follow the engine convention: cosine is undefined →
 scored -2.0 (below any real cosine), never NaN/or a divide error.
@@ -33,10 +28,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-__all__ = ["gemm_topk", "gemm_assign"]
+__all__ = ["gemm_assign"]
 
 
 def gemm_assign(
@@ -56,7 +49,7 @@ def gemm_assign(
     scores never leave the batch, and only the n (id, centroid_id)
     winners come out. Same argmax, same conventions (ties -> lowest
     centroid id; zero-norm vectors -> -2.0 everywhere -> lowest id),
-    same BLAS ulp disclaimer as `gemm_topk` — near-tie assignments
+    same BLAS ulp disclaimer as the module — near-tie assignments
     can flip vs the fold in final ulps, so gate-oracle paths keep the
     fold and this ships the measured-throughput variant."""
     crows = centroids.select(centroid_id_col, centroid_vec_col).collect()
@@ -99,90 +92,3 @@ def gemm_assign(
     return embeddings.select(id_col, vec_col).mapInPandas(
         assign, out_schema
     )
-
-
-def gemm_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "q_id",
-    query_vec: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbours of EVERY query: (q_id, vec_id,
-    cosine), k rows per query, ranked cosine DESC with the id
-    tiebreak. ``queries`` is the small side by the brute-force premise
-    — it is collected once to a numpy matrix and broadcast with the
-    closure (bounded driver envelope, the k x d convention). A query
-    never matches itself (same id) on the corpus side."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    qrows = queries.select(query_id, query_vec).collect()
-    if not qrows:
-        raise ValueError("queries frame is empty")
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1)
-    qn_safe = np.where(qn == 0.0, 1.0, qn)
-    Qt = np.ascontiguousarray(Q.T)
-
-    out_schema = f"{query_id} long, {id_col} long, cosine double"
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            M = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            mn = np.linalg.norm(M, axis=1)
-            mn_safe = np.where(mn == 0.0, 1.0, mn)
-            S = (M @ Qt) / (mn_safe[:, None] * qn_safe[None, :])
-            # engine convention: undefined cosine scores -2.0
-            S[mn == 0.0, :] = -2.0
-            S[:, qn == 0.0] = -2.0
-            # self-match mask (same id on both sides)
-            S[ids[:, None] == q_ids[None, :]] = -np.inf
-            kk = min(k, len(pdf))
-            # batch-local top-k per query: argpartition, then widen the
-            # selection to EVERY row scoring >= the kk-th value before
-            # the exact (cosine DESC, id ASC) ordering — argpartition
-            # alone keeps an arbitrary subset of EXACT ties straddling
-            # the cut (duplicate corpus vectors), which could diverge
-            # from similarity.cosine_topk's id-ASC convention (round-11
-            # ADVICE). The widened set is kk + ties, so the lexsort
-            # stays O(kk log kk) except under mass duplication.
-            part = np.argpartition(-S, kth=kk - 1, axis=0)[:kk, :]
-            rows_q, rows_c, rows_s = [], [], []
-            for j in range(S.shape[1]):
-                thresh = S[part[:, j], j].min()
-                sel = np.nonzero(S[:, j] >= thresh)[0]
-                order = np.lexsort((ids[sel], -S[sel, j]))
-                sel = sel[order][:kk]
-                keep = S[sel, j] > -np.inf
-                sel = sel[keep]
-                rows_q.append(np.full(len(sel), q_ids[j]))
-                rows_c.append(ids[sel])
-                rows_s.append(S[sel, j])
-            yield pd.DataFrame(
-                {
-                    query_id: np.concatenate(rows_q),
-                    id_col: np.concatenate(rows_c),
-                    "cosine": np.concatenate(rows_s),
-                }
-            )
-
-    partial = embeddings.select(id_col, vec_col).mapInPandas(
-        score, out_schema
-    )
-    ranked = partial.withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy(query_id).orderBy(
-                F.desc("cosine"), F.asc(id_col)
-            )
-        ),
-    )
-    return ranked.filter(F.col("rk") <= k).drop("rk")

@@ -13,13 +13,6 @@ sample of that domain, not an artifact of scan order.
 Skew note: one giant domain makes one hot window partition. The
 operator keeps every row (audit trail, repo convention), so the
 rank-limit pushdown (WindowGroupLimit) cannot truncate map-side.
-For the 100 TB path, :func:`domain_cap_survivors` runs the classic
-two-phase group-limit instead: a partial rank per (domain,
-md5-bucket) — B-way parallel even for a monster domain, and the
-rank<=cap filter there DOES get the map-side WindowGroupLimit — then
-the exact window over at most B*cap rows per domain. The survivor
-set is provably identical (a domain-top-cap row is top-cap within
-its own bucket a fortiori).
 """
 
 from __future__ import annotations
@@ -127,63 +120,4 @@ def temperature_rates(
                 / F.sqrt(F.col("n_docs").cast("double"))
             ).alias("rate_permille"),
         )
-    )
-
-
-def domain_cap_survivors(
-    docs: DataFrame,
-    cap: int,
-    buckets: int = 32,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "dommix",
-) -> DataFrame:
-    """Skew-safe survivors-only domain cap for the 100 TB path: the
-    SAME survivor set as ``domain_cap_and_mix(...).filter(kept_cap)``
-    (identical draw, identical tiebreak), computed as a two-phase
-    group-limit so no single window partition ever holds a whole
-    monster domain:
-
-    phase 1 — rank within (domain, md5-bucket of ``buckets``); the
-    ``rank <= cap`` filter is a rank-limit window, so Spark's
-    WindowGroupLimit truncates each partition map-side and the
-    shuffle is ``buckets``-way parallel per domain;
-    phase 2 — exact rank over the <= ``buckets * cap`` survivors per
-    domain (a tiny window), keep ``rank <= cap``.
-
-    Correctness: a row in its domain's true top-``cap`` by draw has
-    fewer than ``cap`` smaller draws in the WHOLE domain, hence fewer
-    in its own bucket — it always survives phase 1. Returns
-    (id_col, domain_col, domain_rank) for survivors only.
-    """
-    if cap < 1 or buckets < 1:
-        raise ValueError("cap and buckets must be >= 1")
-    draw = md5_long(
-        F.concat(
-            F.lit(salt), F.lit(":"), F.col(domain_col),
-            F.lit(":"), F.col(id_col).cast("string"),
-        )
-    ).alias("__draw")
-    bucket = F.pmod(
-        md5_long(
-            F.concat(F.lit(salt + "/b:"), F.col(id_col).cast("string"))
-        ),
-        F.lit(buckets),
-    ).alias("__bkt")
-    tagged = docs.select(id_col, domain_col, draw, bucket)
-    partial = F.row_number().over(
-        Window.partitionBy(domain_col, "__bkt").orderBy(
-            "__draw", F.col(id_col)
-        )
-    )
-    phase1 = tagged.withColumn("__r1", partial).filter(
-        F.col("__r1") <= cap
-    )
-    exact = F.row_number().over(
-        Window.partitionBy(domain_col).orderBy("__draw", F.col(id_col))
-    )
-    return (
-        phase1.withColumn("domain_rank", exact.cast("long"))
-        .filter(F.col("domain_rank") <= cap)
-        .select(id_col, domain_col, "domain_rank")
     )

@@ -18,8 +18,6 @@ Scale design:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -286,82 +284,6 @@ def minhash_lsh_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.countDistinct("band").cast("long").alias("nb_bands"))
-    )
-
-
-#: design point for the log-scaled layout: the corpus size the gate
-#: layout (8 hashes x band_size 2) was tuned at, the near-dup Jaccard
-#: the bands must keep catching, and the analytic recall floor at that
-#: threshold. Chosen so `logscaled_minhash_layout(base) == (8, 2)` —
-#: at or below the design corpus the autoscaled path IS the q19 path.
-LOGSCALE_BASE_DOCS = 5_000
-LOGSCALE_THRESHOLD = 0.8
-LOGSCALE_RECALL = 0.95
-_LOGSCALE_BASE_BANDS = 4
-_LOGSCALE_BASE_BAND_SIZE = 2
-
-
-def logscaled_minhash_layout(
-    n_docs: int,
-    base_docs: int = LOGSCALE_BASE_DOCS,
-    threshold: float = LOGSCALE_THRESHOLD,
-    recall_target: float = LOGSCALE_RECALL,
-) -> tuple[int, int]:
-    """Corpus-size-aware (num_hashes, band_size) — round 12, VERDICT
-    r11 #3 (the fix SCALING_LLM.json demanded: fixed banding's
-    candidates grew 12x at 10x docs; the hyperplane path's log-scaled
-    bits-per-band held 0.81x wall).
-
-    Why rows-per-band must grow with log(n): a RANDOM pair collides on
-    one band with probability ~s0^r (s0 = its low expected shingle
-    overlap), so expected random candidates are ~b * n^2/2 * s0^r.
-    Keeping that ~linear in n needs s0^r ~ 1/n, i.e. r growing by one
-    row per 1/s0-factor of corpus growth — one per DECADE here
-    (s0 <= 0.1 for real near-dup corpora; a conservative rate: faster
-    growth would shrink candidates further but spend more hashes).
-    Bands then re-size to hold the ANALYTIC recall at the design
-    threshold: smallest b with 1 - (1 - t^r)^b >= the target, never
-    below the base layout's band count. The hash budget therefore
-    grows O(log n) while random candidates stay ~O(n) — the MinHash
-    twin of `similarity.py`'s log-scaled hyperplane banding.
-    """
-    if n_docs < 1:
-        raise ValueError(f"n_docs must be >= 1, got {n_docs}")
-    growth = max(1.0, n_docs / base_docs)
-    r = _LOGSCALE_BASE_BAND_SIZE + max(0, math.ceil(math.log10(growth)))
-    base_recall = (
-        1.0
-        - (1.0 - threshold**_LOGSCALE_BASE_BAND_SIZE)
-        ** _LOGSCALE_BASE_BANDS
-    )
-    target = min(recall_target, base_recall)
-    p_band = threshold**r
-    b = max(
-        _LOGSCALE_BASE_BANDS,
-        math.ceil(math.log(1.0 - target) / math.log(1.0 - p_band)),
-    )
-    return b * r, r
-
-
-def minhash_lsh_pairs_autoscaled(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    max_bucket_size: int | None = None,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """`minhash_lsh_pairs` at the corpus-size-derived log-scaled
-    layout. ``n_docs`` skips the sizing count when the caller already
-    knows it (ingest runners track corpus size in their ledgers; at
-    100 TB the count should come from metadata, not a scan)."""
-    if n_docs is None:
-        n_docs = df.count()
-    num_hashes, band_size = logscaled_minhash_layout(n_docs)
-    return minhash_lsh_pairs(
-        df, id_col, text_col, n=n,
-        num_hashes=num_hashes, band_size=band_size,
-        max_bucket_size=max_bucket_size,
     )
 
 

@@ -7,7 +7,7 @@ sodium 0-40, completeness 0-1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # The reference's nutrient bounds, data_dictionary.md:213-224.
@@ -27,16 +27,3 @@ NUTRIENT_BOUNDS: dict[str, tuple[float, float]] = {
 def bounded_expr(col: Column | str, lo: float, hi: float) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.when((c >= lo) & (c <= hi), c).otherwise(F.lit(None))
-
-
-def apply_bounds(df: DataFrame, bounds: dict[str, tuple[float, float]]) -> DataFrame:
-    """One ``select`` (not a withColumn-per-bound chain — SURVEY.md §4
-    flags deep withColumn chains as a Catalyst-analysis hot spot)."""
-    exprs = []
-    for f in df.schema.fields:
-        if f.name in bounds:
-            lo, hi = bounds[f.name]
-            exprs.append(bounded_expr(f.name, lo, hi).alias(f.name))
-        else:
-            exprs.append(F.col(f.name))
-    return df.select(*exprs)

@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localframe import local_rows_df
-
 from ..operators.bloom import bloom_build, bloom_probe_keys, bloom_union
 from ..storage import (
     overwrite_parquet_atomically,
@@ -48,14 +47,12 @@ from ..storage import (
     read_parquet_if_exists,
     write_json_sidecar,
 )
-from .corpus_ingest import read_docs_stream
 
 __all__ = [
     "BloomLayoutError",
     "seed_bloom",
     "store_params",
     "screen_keys_batch",
-    "run_bloom_novelty_stream",
 ]
 
 BLOOM_META = "_bloom_meta.json"
@@ -177,40 +174,4 @@ def screen_keys_batch(
     write_json_sidecar(
         spark, bloom_path, BLOOM_META,
         {"n_words": int(n_words), "k": int(k)},
-    )
-
-
-def run_bloom_novelty_stream(
-    spark: SparkSession,
-    source_dir: str,
-    bloom_path: str,
-    results_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = 1,
-    n_words: int = DEFAULT_WORDS,
-    k: int = DEFAULT_K,
-) -> None:
-    """availableNow backlog drain through the Bloom screen: each
-    micro-batch's key is the exact-text md5 (the keep-latest dedup
-    family's key), so the screen answers "is this text definitely
-    never seen" per trigger from O(m) bits."""
-
-    def _batch(b: DataFrame, bid: int) -> None:
-        screen_keys_batch(
-            b.select(F.md5("text").alias("text_md5")),
-            "text_md5",
-            bloom_path,
-            results_path,
-            batch_id=bid,
-            n_words=n_words,
-            k=k,
-        )
-
-    stream = read_docs_stream(spark, source_dir, max_files_per_trigger)
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )

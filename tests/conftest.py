@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout under test, wherever it lives
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from data_integration_openfoodfacts_spark.session import get_spark  # noqa: E402
 

@@ -1,18 +1,16 @@
 """Streaming Bloom novelty screen (`streaming/bloom_ingest.py`,
-round 10): seeded-store routing, replay idempotence, geometry sidecar
-refusals, and stream==batch parity through a real availableNow drain."""
+round 10): seeded-store routing, replay idempotence and geometry
+sidecar refusals."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.streaming.bloom_ingest import (
     BLOOM_META,
     BloomLayoutError,
-    run_bloom_novelty_stream,
     screen_keys_batch,
     seed_bloom,
     store_params,
@@ -78,46 +76,3 @@ def test_geometry_sidecar_refusals(spark, tmp_path):
     os.remove(f"{bp}/{BLOOM_META}")
     with pytest.raises(BloomLayoutError, match="sidecar"):
         store_params(spark, bp, NW, K)
-
-
-def test_stream_matches_batch_trajectory(spark, tmp_path):
-    """A 3-drop availableNow drain produces the same totals and the
-    same final word table as the hand-driven batch trajectory."""
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    batches = [
-        [(1, "alpha beta"), (2, "gamma delta")],
-        [(3, "alpha beta"), (4, "epsilon zeta")],  # 3 re-crawls 1's text
-        [(5, "epsilon zeta"), (6, "eta theta")],   # 5 re-crawls 4's text
-    ]
-    for i, rows in enumerate(batches):
-        stage = str(tmp_path / f"_st{i}")
-        (
-            spark.createDataFrame(rows, "doc_id long, text string")
-            .select(
-                "doc_id", "text", F.lit("en").alias("lang"),
-                F.lit("s").alias("source"),
-                F.length("text").cast("long").alias("n_chars"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        os.rename(f"{stage}/{part}", f"{src}/b{i}.parquet")
-
-    b1, r1, c1 = (str(tmp_path / p) for p in ("bl1", "re1", "ck1"))
-    run_bloom_novelty_stream(spark, src, b1, r1, c1, n_words=NW, k=K)
-    b2, r2 = (str(tmp_path / p) for p in ("bl2", "re2"))
-    for i, rows in enumerate(batches):
-        keys = spark.createDataFrame(rows, "doc_id long, text string").select(
-            F.md5("text").alias("text_md5")
-        )
-        screen_keys_batch(keys, "text_md5", b2, r2, batch_id=i,
-                          n_words=NW, k=K)
-    assert _totals(spark, r1) == _totals(spark, r2) == {
-        0: (2, 2, 0), 1: (2, 1, 1), 2: (2, 1, 1),
-    }
-    w1 = {tuple(r) for r in spark.read.parquet(b1).collect()}
-    w2 = {tuple(r) for r in spark.read.parquet(b2).collect()}
-    assert w1 == w2

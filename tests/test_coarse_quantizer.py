@@ -6,12 +6,10 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.coarse_quantizer import (
     block_partition,
     blocked_assign,
-    fit_centroids_blocked,
 )
 from data_integration_openfoodfacts_spark.operators.gemm_scan import (
     gemm_assign,
@@ -166,65 +164,6 @@ def test_blocked_assign_plan_is_arrow_only(spark):
     assert "Join" not in plan
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
-
-
-def test_fit_centroids_blocked_matches_flat_refine_from_same_seeds(
-    spark,
-):
-    """The cold blocked fit IS the flat GEMM refine when every block
-    is probed: same md5-ordered seeds, same mean updates — centers
-    match to float tolerance. And each true cluster's members agree
-    on one center (assignment consistency on separable data)."""
-    from data_integration_openfoodfacts_spark.operators.clustering_scale import (  # noqa: E501
-        refine_centroids,
-    )
-
-    rows = []
-    axes = [
-        (1.0, 0.0, 0.0, 0.0),
-        (0.0, 1.0, 0.0, 0.0),
-        (0.0, 0.0, 1.0, 0.0),
-    ]
-    i = 0
-    for ax in axes:
-        for j in range(6):
-            v = [a * (1.0 + 0.01 * j) for a in ax]
-            v[3] = 0.02 * j
-            rows.append((i, v))
-            i += 1
-    emb = _emb(spark, rows)
-    # replicate fit_centroids_blocked's seed rule for the flat twin
-    import hashlib
-
-    by_md5 = sorted(
-        rows, key=lambda r: (hashlib.md5(str(r[0]).encode()).hexdigest(), r[0])
-    )[:3]
-    seeds = _cents(spark, [(c, v) for c, (_, v) in enumerate(by_md5)])
-    flat = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in refine_centroids(emb, seeds, n_iters=2).collect()
-    }
-    blocked = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in fit_centroids_blocked(
-            emb, k=3, n_iters=2, n_probe=99
-        ).collect()
-    }
-    assert sorted(blocked) == sorted(flat)
-    for cid in flat:
-        assert np.allclose(blocked[cid], flat[cid], atol=1e-6)
-    # assignment consistency: every true cluster maps to ONE center
-    assigned = blocked_assign(
-        emb, fit_centroids_blocked(emb, k=3, n_iters=2, n_probe=2),
-        n_probe=99,
-    )
-    by_cluster = (
-        assigned.withColumn("true_c", (F.col("vec_id") / 6).cast("int"))
-        .groupBy("true_c")
-        .agg(F.countDistinct("centroid_id").alias("n"))
-        .collect()
-    )
-    assert all(r["n"] == 1 for r in by_cluster)
 
 
 def test_blocked_assign_validates(spark):

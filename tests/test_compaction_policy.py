@@ -1,6 +1,6 @@
 """State-based compaction triggers (`operators/compaction_policy.py`):
-threshold semantics, metadata-only probes, stream-runner wiring, the
-legacy-flat migration trigger, and the vacuum interaction."""
+threshold semantics, metadata-only probes, stream-runner wiring and
+the vacuum interaction."""
 
 from __future__ import annotations
 
@@ -10,19 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.compaction_policy import (
-    bucket_file_stats,
     counting_delta_count,
-    maybe_compact_bucketed,
     maybe_compact_counting,
-)
-from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
-    compact_bucketed,
-)
-from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
-    KB_COL,
-    append_ledger_delta,
-    kb_of,
-    read_ledger,
 )
 from data_integration_openfoodfacts_spark.streaming.counting_store import (
     read_counts,
@@ -32,15 +21,8 @@ from data_integration_openfoodfacts_spark.streaming.counting_store import (
 )
 
 NW, K = 64, 3
-NB = 4
-
-
 def _keys(spark, names):
     return spark.createDataFrame([(n,) for n in names], "k string")
-
-
-def _compact_ledger(spark, p):
-    compact_bucketed(spark, p, KB_COL, lambda nb: kb_of("shingle_md5", nb), NB)
 
 
 def _state(spark, p):
@@ -71,55 +53,6 @@ def test_counting_threshold_and_state_preserved(spark, tmp_path):
         read_counts_as_of(spark, p, 1)
     with pytest.raises(ValueError, match="max_deltas"):
         maybe_compact_counting(spark, p, NW, K, 0)
-
-
-def test_bucketed_threshold_and_flat_migration(spark, tmp_path):
-    p = str(tmp_path / "led")
-    md5s = lambda names: spark.createDataFrame(  # noqa: E731
-        [(n,) for n in names], "k string"
-    ).select(F.md5("k").alias("shingle_md5"),
-             F.lit(0).cast("long").alias("first_doc"))
-    # 'a' appended in two separate deltas -> its bucket holds 2 files
-    for batch in (["a", "b"], ["c"], ["a", "e"]):
-        append_ledger_delta(md5s(batch), p, n_buckets=NB)
-    n_files, n_dirs, max_in = bucket_file_stats(spark, p, KB_COL)
-    assert n_dirs >= 1 and n_files >= 3 and max_in >= 2
-    rows_before = read_ledger(spark, p).count()
-    ran = {"n": 0}
-
-    def compact():
-        ran["n"] += 1
-        _compact_ledger(spark, p)
-
-    # generous bound: no-op
-    assert not maybe_compact_bucketed(spark, p, KB_COL, compact, 10)
-    assert ran["n"] == 0
-    # tight bound: compacts to <= 1 file per bucket
-    assert maybe_compact_bucketed(spark, p, KB_COL, compact, 1)
-    assert ran["n"] == 1
-    _n2, _d2, max_in2 = bucket_file_stats(spark, p, KB_COL)
-    assert max_in2 <= 1
-    assert read_ledger(spark, p).count() == rows_before
-    # now under the bound again: no-op
-    assert not maybe_compact_bucketed(spark, p, KB_COL, compact, 1)
-    assert ran["n"] == 1
-
-    # legacy FLAT store: any parquet file triggers (compaction is the
-    # migration into the layout)
-    flat = str(tmp_path / "flat")
-    md5s(["x", "y"]).write.parquet(flat)
-    assert bucket_file_stats(spark, flat, KB_COL) == (0, 0, 0)
-    migrated = {"n": 0}
-
-    def migrate():
-        migrated["n"] += 1
-        _compact_ledger(spark, flat)
-
-    assert maybe_compact_bucketed(spark, flat, KB_COL, migrate, 5)
-    assert migrated["n"] == 1
-    _, n_dirs3, _ = bucket_file_stats(spark, flat, KB_COL)
-    assert n_dirs3 >= 1  # now bucketed
-    assert not maybe_compact_bucketed(spark, flat, KB_COL, migrate, 5)
 
 
 def test_stream_runner_state_based_trigger(spark, tmp_path):

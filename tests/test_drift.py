@@ -1,18 +1,14 @@
 """Drift profile (`operators/drift.py`): exact counts and smoothed
-shares vs a pure-Python reference, all-bands-present guarantee, the
-reader-side PSI (identical vs stable distributions = 0, shifted > 0),
-and the banded-count plan claim."""
+shares vs a pure-Python reference, all-bands-present guarantee, and
+the banded-count plan claim."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.drift import (
     drift_profile,
-    psi_from_profile,
 )
 
 B = 5
@@ -58,27 +54,6 @@ def test_profile_matches_reference_and_fills_empty_bands(spark):
     assert got == _ref_profile(ref_vals, cur_vals)
     for r in prof:
         assert r["gap"] == r["p_ref"] - r["p_cur"]
-
-
-def test_psi_zero_on_identical_positive_on_shift(spark):
-    same = [0, 1, 1, 2, 3, 4, 4]
-    prof_same = drift_profile(
-        _df(spark, same), _df(spark, same), _band(), B
-    ).collect()
-    assert psi_from_profile(prof_same) == pytest.approx(0.0, abs=1e-12)
-
-    shifted = [4, 4, 4, 4, 3, 4, 4]
-    prof_shift = drift_profile(
-        _df(spark, same), _df(spark, shifted), _band(), B
-    ).collect()
-    psi = psi_from_profile(prof_shift)
-    assert psi > 0.25  # a gross shift lands in the investigate tier
-    # reference PSI from the same smoothed shares
-    ref = _ref_profile(same, shifted)
-    want = sum(
-        (p - q) * math.log(p / q) for _, _, p, q in ref.values()
-    )
-    assert psi == pytest.approx(want, rel=1e-12)
 
 
 def test_argument_validation(spark):

@@ -1,18 +1,14 @@
-"""Batched-GEMM brute-force scan (`operators/gemm_scan.py`): agreement
-with the fold-based exact path on margin-separated data, self-match
-exclusion, zero-norm convention, multi-query batching, and the
-partial-topk plan claim."""
+"""Batched-GEMM centroid assignment (`operators/gemm_scan.py`):
+agreement with the fold-based exact path on margin-separated data,
+zero-norm and exact-tie conventions."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from data_integration_openfoodfacts_spark.operators.gemm_scan import (
-    gemm_topk,
+    gemm_assign,
 )
 from data_integration_openfoodfacts_spark.operators.similarity import (
-    cosine_topk,
+    assign_to_centroids,
 )
 
 
@@ -34,121 +30,11 @@ def _vecs(n, d, seed):
     return out
 
 
-def test_matches_fold_exact_path(spark):
-    rows = _vecs(40, 8, seed=3)
-    emb = _emb(spark, rows)
-    got = {
-        (r["q_id"], r["vec_id"])
-        for r in gemm_topk(
-            emb, emb.filter(F.col("vec_id") == 0)
-            .select(F.col("vec_id").alias("q_id"), "embedding"),
-            k=5,
-        ).collect()
-    }
-    ref = {
-        (0, r["vec_id"])
-        for r in cosine_topk(emb, query_vec_id=0, k=5).collect()
-    }
-    assert got == ref
-
-
-def test_multi_query_and_self_exclusion(spark):
-    rows = _vecs(30, 6, seed=1)
-    emb = _emb(spark, rows)
-    q = emb.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    out = gemm_topk(emb, q, k=4).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["q_id"], []).append(r["vec_id"])
-    assert set(by_q) == {0, 10, 20}
-    for qid, cids in by_q.items():
-        assert len(cids) == 4
-        assert qid not in cids  # never self
-        # per-query agreement with the fold path
-        ref = [
-            r["vec_id"]
-            for r in cosine_topk(emb, query_vec_id=qid, k=4).collect()
-        ]
-        assert sorted(cids) == sorted(ref)
-
-
-def test_zero_norm_convention(spark):
-    rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [2.0, 0.0]),
-            (3, [0.0, 1.0])]
-    emb = _emb(spark, rows)
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    got = {
-        r["vec_id"]: r["cosine"]
-        for r in gemm_topk(emb, q, k=3).collect()
-    }
-    # zero-norm corpus vector scores -2.0 and ranks last
-    assert got[1] == -2.0
-    assert got[2] == pytest.approx(1.0)
-    assert list(sorted(got, key=lambda c: -got[c]))[:2] == [2, 3]
-
-
-def test_only_partial_winners_shuffle(spark):
-    """The mapInPandas stage emits k rows per query per batch; the
-    only Exchange below the final window is the window's own — the
-    n x q score matrix never shuffles."""
-    emb = _emb(spark, _vecs(50, 8, seed=2))
-    q = emb.limit(2).select(F.col("vec_id").alias("q_id"), "embedding")
-    plan = (
-        gemm_topk(emb, q, k=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    import re
-
-    keys = re.findall(r"Exchange hashpartitioning\((\w+)", plan)
-    assert keys and set(keys) == {"q_id"}, plan
-    assert "CartesianProduct" not in plan
-
-
-def test_argument_validation(spark):
-    emb = _emb(spark, _vecs(4, 4, seed=0))
-    q = emb.limit(1).select(F.col("vec_id").alias("q_id"), "embedding")
-    with pytest.raises(ValueError, match="k must be"):
-        gemm_topk(emb, q, k=0)
-    with pytest.raises(ValueError, match="empty"):
-        gemm_topk(emb, q.filter(F.lit(False)), k=3)
-
-
-def test_exact_ties_keep_lowest_ids(spark):
-    """Round-12 fix of the round-11 ADVICE: EXACTLY tied cosines
-    (duplicate corpus vectors) straddling the batch-local top-k cut
-    must resolve by the (cosine DESC, id ASC) convention — the
-    argpartition selection alone kept an arbitrary tied subset. Eight
-    identical corpus vectors, k=3: the winners are ids 1,2,3 (0 is the
-    self-matching query), regardless of partition layout."""
-    dup = [1.0, 2.0, 3.0, 4.0]
-    emb = _emb(spark, [(i, dup) for i in range(8)]).repartition(4)
-    q = _emb(spark, [(0, dup)]).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    got = sorted(
-        (r["q_id"], r["vec_id"]) for r in gemm_topk(emb, q, k=3).collect()
-    )
-    assert got == [(0, 1), (0, 2), (0, 3)]
-
-
 def test_gemm_assign_matches_fold_assignment(spark):
     """`gemm_assign` must reproduce `assign_to_centroids` exactly on
     margin-separated data (no near-ties, so BLAS ulp order cannot
     flip an argmax), including the zero-norm -> lowest-centroid-id
     convention and exact-tie -> lowest-centroid-id."""
-    from data_integration_openfoodfacts_spark.operators.gemm_scan import (
-        gemm_assign,
-    )
-    from data_integration_openfoodfacts_spark.operators.similarity import (
-        assign_to_centroids,
-    )
-
     rows = _vecs(40, 8, seed=2) + [(100, [0.0] * 8)]  # + zero-norm row
     emb = _emb(spark, rows).repartition(4)
     cents = spark.createDataFrame(

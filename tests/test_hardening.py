@@ -1,11 +1,10 @@
-"""Edge-input hardening: empty bronze, header-only CSV, UDF registry,
-table statistics."""
+"""Edge-input hardening: empty bronze, header-only CSV, table
+statistics."""
 
 from __future__ import annotations
 
 import os
 
-from data_integration_openfoodfacts_spark.functions.registry import register_udfs
 from data_integration_openfoodfacts_spark.plans.pipeline import run_pipeline
 from data_integration_openfoodfacts_spark.sources.csv_source import (
     read_openfoodfacts_csv,
@@ -67,12 +66,6 @@ def test_main_category_imputed_like_reference(spark, tmp_path):
         r["category_name"] for r in res.tables["dim_category"].collect()
     }
     assert cats == {"non classe"}
-
-
-def test_registered_udf_usable_from_sql(spark):
-    register_udfs(spark)
-    got = spark.sql("SELECT ascii_fold('Côte d\\'Or™') AS v").first()["v"]
-    assert got == "Cote d'OrTM"
 
 
 def test_analyze_tables_records_stats(spark, tmp_path):

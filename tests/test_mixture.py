@@ -91,54 +91,6 @@ def test_plan_single_window_shuffle_broadcast_rates(spark):
     assert plan.count("Exchange hashpartitioning(source") == 1
 
 
-def test_two_phase_cap_matches_exact_survivors(spark):
-    """domain_cap_survivors (skew-safe two-phase) must produce the
-    IDENTICAL (id, rank) survivor set as the exact single-window cap,
-    for several cap/bucket shapes including cap > domain size."""
-    docs = _docs(
-        spark,
-        [(i, "huge") for i in range(500)]
-        + [(1000 + i, "tiny") for i in range(4)],
-    )
-    from data_integration_openfoodfacts_spark.operators.mixture import (
-        domain_cap_survivors,
-    )
-
-    rates = _rates(spark, [("huge", 1000), ("tiny", 1000)])
-    for cap, buckets in ((25, 8), (3, 32), (10, 1), (7, 64)):
-        exact = {
-            (r["doc_id"], r["domain_rank"])
-            for r in domain_cap_and_mix(docs, rates, cap=cap).collect()
-            if r["kept_cap"]
-        }
-        fast = {
-            (r["doc_id"], r["domain_rank"])
-            for r in domain_cap_survivors(
-                docs, cap=cap, buckets=buckets
-            ).collect()
-        }
-        assert fast == exact, (cap, buckets)
-
-
-def test_two_phase_cap_plan_has_group_limit_and_bucketed_exchange(spark):
-    """Phase 1 must shuffle on (domain, bucket) — the skew relief —
-    and its rank<=cap filter must get the map-side WindowGroupLimit."""
-    from data_integration_openfoodfacts_spark.operators.mixture import (
-        domain_cap_survivors,
-    )
-
-    docs = _docs(spark, [(i, "d") for i in range(100)])
-    plan = (
-        domain_cap_survivors(docs, cap=5, buckets=16)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "WindowGroupLimit" in plan
-    assert any(
-        "Exchange hashpartitioning(source" in ln and "__bkt" in ln
-        for ln in plan.splitlines()
-    )
-
-
 def test_null_domain_rows_kept_with_default_rate(spark):
     """A NULL source must not vanish: it ranks within the NULL
     partition and falls back to default_rate (the q145 oracle mirrors

@@ -1,52 +1,17 @@
-"""Hypothesis property tests for the round-4 operators: Morton
-interleave bijectivity and tokenizer determinism. Spark calls are
-batched per example (driver-side data, one job per property check)."""
+"""Hypothesis property tests for the round-4 tokenizer: dense vocab
+ids and in-range encodings. Spark calls are batched per example
+(driver-side data, one job per property check)."""
 
 from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
-
-from data_integration_openfoodfacts_spark.operators.layout import (
-    _interleave,
-)
 
 _settings = settings(
     max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-@_settings
-@given(
-    pairs=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=255),
-            st.integers(min_value=0, max_value=255),
-        ),
-        min_size=1,
-        max_size=30,
-        unique=True,
-    )
-)
-def test_interleave_is_injective_and_monotone_per_axis(spark, pairs):
-    """Distinct (a, b) bucket pairs map to distinct z-values, and
-    growing one axis with the other fixed never decreases z."""
-    df = spark.createDataFrame(pairs, "a long, b long")
-    rows = df.select(
-        "a", "b", _interleave([F.col("a"), F.col("b")], 8).alias("z")
-    ).collect()
-    zs = {(r.a, r.b): r.z for r in rows}
-    assert len(set(zs.values())) == len(zs), "collision in Morton code"
-    by_b: dict[int, list] = {}
-    for (a, b), z in zs.items():
-        by_b.setdefault(b, []).append((a, z))
-    for _b, az in by_b.items():
-        az.sort()
-        z_seq = [z for _a, z in az]
-        assert z_seq == sorted(z_seq), "z not monotone in a for fixed b"
 
 
 @_settings

@@ -13,10 +13,10 @@
   ``storage``, whose renames are checked and whose swaps restore on
   failure;
 - no package code that only tests reach: every module, and every
-  top-level def not in ``KEEP`` or ``DEFERRED``, must be reached from a
-  workload — a registry query, the medallion pipeline, the CLI, or the
-  bench and benchmark entry points. Re-exports in ``__init__`` files do
-  not keep a name alive."""
+  top-level def not in ``KEEP``, must be reached from a workload — a
+  registry query, the medallion pipeline, the CLI, or the bench and
+  benchmark entry points. Neither re-exports in ``__init__`` files nor
+  a module's ``__all__`` list keep a name alive."""
 
 from __future__ import annotations
 
@@ -124,31 +124,14 @@ KEEP = {
     "empty_ledger": "score_shingled_tranche_against_ledger",
     "tranche_novelty_update": "score_shingled_tranche_against_ledger",
     "range_join_broadcast": "range_join_bucketed",
-}
-#: unreached package code whose deletion is still open (ROADMAP #5):
-#: a module path or ``module:def`` -> the tests that still check it.
-#: Nothing may join this list; an entry leaves it once deleted or reached
-DEFERRED = {
-    "functions/registry.py": "test_hardening",
-    "functions/table_functions.py": "test_table_functions",
-    "operators/layout.py": "test_layout, test_new_op_properties",
-    "operators/pca.py": "test_pca",
-    "sources/binary_source.py": "test_binary_source",
-    "sources/json_source.py": "test_json_source",
-    "sources/orc_source.py": "test_orc_source",
-    "operators/bloom.py:counting_merge": "test_counting_bloom",
-    "operators/bloom.py:counting_retract": "test_counting_bloom",
-    "operators/dedup.py:dedup_exact": "test_dedup_keys_dq",
-    "operators/dq.py:assert_count_parity": "test_dedup_keys_dq",
-    "operators/dq.py:assert_no_orphans": "test_dedup_keys_dq",
-    "operators/dq.py:assert_within_bounds": "test_dedup_keys_dq",
-    "operators/validation.py:apply_bounds": "test_dedup_keys_dq",
-    "operators/mixture.py:domain_cap_survivors":
-        "test_mixture, test_round6_properties",
-    "operators/similarity_dedup.py:logscaled_minhash_layout":
-        "test_logscaled_minhash",
-    "operators/similarity_dedup.py:minhash_lsh_pairs_autoscaled":
-        "test_logscaled_minhash",
+    # shares `_build_kernel` with the live assignment; its plan pin
+    # checks that kernel's single-scan shape
+    "assign_mean_partials": "blocked_assign",
+    # the fixed codebook the encode/ADC tests build their inputs with,
+    # and the baseline the trained codebook's recall must beat
+    "head_codebook": "pq_encode",
+    # the unranked hit list the `_hits_col` tests read through
+    "phrase_hits": "phrase_topk",
 }
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
@@ -201,10 +184,17 @@ def _refs(node) -> set[str]:
     return out
 
 
+def _is_all(stmt) -> bool:
+    return isinstance(stmt, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets
+    )
+
+
 def unreached_defs(modules: dict[str, ast.Module], refs: set[str]):
     """``(module, name)`` of every top-level def that no reached code
-    names. Module-level statements and ``refs`` are live from the
-    start; a def's body becomes live once its name is — iterated to a
+    names. Module-level statements (except ``__all__``, which lists
+    names without calling them) and ``refs`` are live from the start;
+    a def's body becomes live once its name is — iterated to a
     fixpoint, so a helper of unreached code stays unreached."""
     live = set(refs)
     defs = {}
@@ -212,7 +202,7 @@ def unreached_defs(modules: dict[str, ast.Module], refs: set[str]):
         for stmt in tree.body:
             if isinstance(stmt, _DEFS):
                 defs[(mod, stmt.name)] = stmt
-            else:
+            elif not _is_all(stmt):
                 live |= _refs(stmt)
     reached: set = set()
     grew = True
@@ -249,34 +239,28 @@ def _reachability():
         for path, _tree in _modules()
         if path not in reached and path.name != "__init__.py"
     )
-    return unreached_mods, unreached_defs(trees, refs)
+    unreached = unreached_defs(trees, refs)
+    live = {
+        node.name
+        for mod, tree in trees.items()
+        for node in tree.body
+        if isinstance(node, _DEFS) and (mod, node.name) not in unreached
+    }
+    return unreached_mods, unreached, live
 
 
 def test_package_code_is_reached_outside_tests():
-    modules, defs = _reachability()
+    modules, defs, live = _reachability()
     kept = {name for _mod, name in defs if name in KEEP}
     dead = [f"{mod}:{name}" for mod, name in defs if name not in KEEP]
-    deferred = set(modules + dead) & set(DEFERRED)
-    modules = [m for m in modules if m not in deferred]
-    dead = [d for d in dead if d not in deferred]
     assert (modules, dead) == ([], []), (
         f"only tests reach {len(modules)} package modules {modules} "
         f"and {len(dead)} top-level defs {dead}"
     )
-    assert deferred == set(DEFERRED), (
-        f"DEFERRED entries deleted or now reached: "
-        f"{sorted(set(DEFERRED) - deferred)}"
-    )
     # KEEP must not go stale: each entry is still unreached, and the
-    # live function it is the reference for still exists
+    # function it is the reference for is reached by a workload
     assert kept == set(KEEP), f"KEEP entries now reached: {set(KEEP) - kept}"
-    live_names = {
-        node.name
-        for _path, tree in _modules()
-        for node in tree.body
-        if isinstance(node, _DEFS)
-    }
-    assert set(KEEP.values()) <= live_names
+    assert set(KEEP.values()) <= live, set(KEEP.values()) - live
 
 
 def test_unreached_def_detector():
@@ -291,6 +275,7 @@ def test_unreached_def_detector():
         "class Dead:\n    def live(self):\n        pass\n"
         "VALUE = live()\n"
         "LOOKUP = getattr(x, 'by_name')\n"
+        "__all__ = ['live', 'dead', 'Dead']\n"
     )
     got = unreached_defs({"m.py": tree}, refs=set())
     assert got == [

@@ -339,9 +339,6 @@ def test_dataset_card_coherent(spark):
     """tools/dataset_card.py assembles the card from the verified
     queries and the pieces agree: drop-attribution totals sum to the
     loaded count, and 'selected' equals the ledger's final stage."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.dataset_card import build_card
 
     card = build_card(spark, SF)

@@ -33,7 +33,7 @@ def test_never_verified_come_first():
     fps = _fps(ALL)
     green = ALL[:40]
     order = gate_state.compute_order(
-        fps, _verified(green, fps), _records({2: green}), set(), ALL
+        fps, _verified(green, fps), _records({2: green}), set()
     )
     unverified = [k for k in order if k not in set(green)]
     assert order[: len(unverified)] == unverified
@@ -44,7 +44,7 @@ def test_red_record_resets_to_front():
     records = _records({2: ALL})
     records[3] = {ALL[10]: {"hash_match": False}}
     order = gate_state.compute_order(
-        fps, _verified(ALL, fps), records, set(), ALL
+        fps, _verified(ALL, fps), records, set()
     )
     assert order[0] == ALL[10]
 
@@ -53,7 +53,7 @@ def test_older_rounds_rotate_before_newer():
     fps = _fps(ALL)
     old, new = ALL[: len(ALL) // 2], ALL[len(ALL) // 2 :]
     order = gate_state.compute_order(
-        fps, _verified(ALL, fps), _records({2: old, 3: new}), set(), ALL
+        fps, _verified(ALL, fps), _records({2: old, 3: new}), set()
     )
     pos = {k: i for i, k in enumerate(order)}
     assert max(pos[k] for k in old) < min(pos[k] for k in new)
@@ -68,7 +68,7 @@ def test_fingerprint_drift_forces_regate():
     drifted = ALL[-1]
     verified[drifted] = {"fingerprint": "stale-hash"}
     order = gate_state.compute_order(
-        fps, verified, _records({2: ALL[:40], 3: ALL[40:]}), set(), ALL
+        fps, verified, _records({2: ALL[:40], 3: ALL[40:]}), set()
     )
     assert order[0] == drifted
 
@@ -77,7 +77,7 @@ def test_force_gate_overrides_green_record():
     fps = _fps(ALL)
     target = ALL[-1]
     order = gate_state.compute_order(
-        fps, _verified(ALL, fps), _records({2: ALL}), {target}, ALL
+        fps, _verified(ALL, fps), _records({2: ALL}), {target}
     )
     assert order[0] == target
 
@@ -198,7 +198,7 @@ def test_local_green_new_query_queues_behind_churn_ahead_of_greens():
     for k in churned:
         verified[k] = {"fingerprint": "stale"}
     order = gate_state.compute_order(
-        fps, verified, _records({2: greens + churned}), set(), ALL
+        fps, verified, _records({2: greens + churned}), set()
     )
     pos = {k: i for i, k in enumerate(order)}
     assert max(pos[k] for k in churned) < min(pos[k] for k in burst)

@@ -1,9 +1,7 @@
 """Hypothesis property tests for the round-11 operators, each checked
 against an independent pure-Python reference on arbitrary inputs: the
-word-repetition signals (exact Counter arithmetic), the batched-GEMM
-top-k (exact numpy reference with the same tiebreaks — integer-valued
-vectors so every dot is exactly representable and batching cannot
-introduce ulp drift), and the takedown stream's content digest
+word-repetition signals (exact Counter arithmetic) and the takedown
+stream's content digest
 (order-invariance + the exact truncated-md5 sum). Spark calls are
 batched per example (driver-side data, few jobs per check)."""
 
@@ -12,7 +10,6 @@ from __future__ import annotations
 import hashlib
 from collections import Counter
 
-import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -61,51 +58,6 @@ _dim = 4
 _vec = st.lists(
     st.integers(min_value=-3, max_value=3), min_size=_dim, max_size=_dim
 )
-
-
-@given(st.lists(_vec, min_size=3, max_size=12))
-@_settings
-def test_gemm_topk_matches_numpy_reference(spark, vecs):
-    """Integer-valued vectors: every product and partial sum is
-    exactly representable, so the reference GEMM, the operator's
-    batched GEMM and any batching split agree bit-for-bit; ranks
-    compare exactly under the (cosine DESC, id ASC) tiebreak."""
-    from data_integration_openfoodfacts_spark.operators.gemm_scan import (
-        gemm_topk,
-    )
-
-    k = 3
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    ).repartition(3)  # force multiple Arrow batches
-    q_ids = [0, len(vecs) - 1]
-    q = emb.filter(F.col("vec_id").isin(q_ids)).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    got = {
-        (r["q_id"], r["vec_id"]): r["cosine"]
-        for r in gemm_topk(emb, q, k=k).collect()
-    }
-
-    M = np.array(vecs, dtype=np.float64)
-    mn = np.linalg.norm(M, axis=1)
-    ref = {}
-    for qi in set(q_ids):
-        qv, qn = M[qi], mn[qi]
-        scores = []
-        for ci in range(len(vecs)):
-            if ci == qi:
-                continue
-            if qn == 0.0 or mn[ci] == 0.0:
-                s = -2.0
-            else:
-                s = float(M[ci] @ qv / (mn[ci] * qn))
-            scores.append((ci, s))
-        scores.sort(key=lambda cs: (-cs[1], cs[0]))
-        for ci, s in scores[:k]:
-            ref[(qi, ci)] = s
-    assert got == ref
 
 
 _batch = st.lists(_word, min_size=0, max_size=10)

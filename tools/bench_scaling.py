@@ -86,9 +86,9 @@ def replicate(spark, src: str, dst: str, k: int) -> None:
 def time_query(fn, spark, sf_dir: str) -> float:
     best = float("inf")
     for _ in range(2):
-        t = time.time()
+        t = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t)
+        best = min(best, time.perf_counter() - t)
     return round(best, 2)
 
 

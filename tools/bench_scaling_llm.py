@@ -95,9 +95,9 @@ def replicate(spark, src: str, dst: str, k: int) -> None:
 def time_df(mk_df) -> float:
     best = float("inf")
     for _ in range(2):
-        t = time.time()
+        t = time.perf_counter()
         mk_df().write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t)
+        best = min(best, time.perf_counter() - t)
     return round(best, 2)
 
 

@@ -151,7 +151,7 @@ def score_time(spark, tranche, ledger_path, n_buckets) -> tuple[float, int, int]
         score_shingled_tranche_against_ledger,
     )
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     sh = doc_shingle_keys(tranche, "doc_id", "text", n=8).localCheckpoint(
         eager=True
     )
@@ -160,7 +160,7 @@ def score_time(spark, tranche, ledger_path, n_buckets) -> tuple[float, int, int]
     )
     n_new = new_firsts.count()
     n_docs = per_doc.count()
-    return time.time() - t0, n_docs, n_new
+    return time.perf_counter() - t0, n_docs, n_new
 
 
 def main() -> None:

@@ -53,7 +53,7 @@ def main() -> None:
         ("sessionization", sessionized_events, "complete"),
     ]:
         stream = spark.readStream.schema(ev.schema).parquet(src)
-        t0 = time.time()
+        t0 = time.perf_counter()
         q = (
             transform(stream)
             .writeStream.format("noop")
@@ -63,7 +63,7 @@ def main() -> None:
             .start()
         )
         q.awaitTermination()
-        dt = time.time() - t0
+        dt = time.perf_counter() - t0
         results[name] = {
             "sec": round(dt, 2),
             "events_per_sec": int(n_events / dt),

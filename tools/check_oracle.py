@@ -221,7 +221,7 @@ def main() -> int:
     timings: dict[str, float] = {}
 
     def clock(name: str, t0: float) -> float:
-        dt = time.time() - t0
+        dt = time.perf_counter() - t0
         timings[name] = dt
         if dt > budget:
             slow.append((name, round(dt, 1)))
@@ -250,7 +250,7 @@ def main() -> int:
         # later query's recorded wall — timings must survive registry
         # reordering.
         spark.catalog.clearCache()
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001

@@ -26,8 +26,8 @@ round by ``tools/update_gate_state.py``:
   but locally oracle-verified at the current fingerprint (the rotation
   CONSUMES the committed local record — round-5 VERDICT #7 — so a
   new-query burst queues behind genuine churn instead of evicting it);
-  then ascending last-green round; static ``_PRIORITY`` index as the
-  deterministic tiebreak.
+  then ascending last-green round; the query key as the deterministic
+  tiebreak.
 
 ``plans.registry`` reads ONLY the committed JSON (plus "new keys
 first"), so the order is a pure function of the committed tree.
@@ -211,13 +211,9 @@ def compute_order(
     verified: dict[str, dict],
     records: dict[int, dict],
     force_gate: set[str],
-    static_priority: list[str],
 ) -> list[str]:
-    static_index = {k: i for i, k in enumerate(static_priority)}
-    for i, k in enumerate(sorted(fingerprints)):
-        static_index.setdefault(k, len(static_priority) + i)
     tiers = compute_tiers(fingerprints, verified, records, force_gate)
-    return sorted(fingerprints, key=lambda k: (tiers[k], static_index[k]))
+    return sorted(fingerprints, key=lambda k: (tiers[k], k))
 
 
 def _oracle_keys() -> set[str]:

@@ -22,14 +22,13 @@ from tools import gate_state
 def main() -> int:
     from data_integration_openfoodfacts_spark.plans.registry import (
         _FORCE_GATE,
-        _PRIORITY,
     )
 
     fps = gate_state.current_fingerprints()
     state = gate_state.load_state()
     records = gate_state.load_driver_records()
     order = gate_state.compute_order(
-        fps, state.get("verified", {}), records, _FORCE_GATE, _PRIORITY
+        fps, state.get("verified", {}), records, _FORCE_GATE
     )
     tiers = gate_state.compute_tiers(
         fps, state.get("verified", {}), records, _FORCE_GATE
