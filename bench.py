@@ -193,9 +193,8 @@ def main() -> None:
         spark.catalog.clearCache()
     # qN prefixes must stay unique or a collision silently drops a
     # query's timing from the emitted map while total still includes it
-    assert len(timings) + len(errors) == len(QUERIES), (
-        "duplicate qN bench key prefix"
-    )
+    if len(timings) + len(errors) != len(QUERIES):
+        raise RuntimeError("duplicate qN bench key prefix")
 
     # Baseline-comparable figure: the reference's only published number
     # is its 418k-row end-to-end ETL (BASELINE.md: 393-580s). Run the

@@ -49,44 +49,3 @@ def _make_ascii_fold():
 
 
 ascii_fold = _make_ascii_fold()
-
-# Characters NFD cannot decompose (no canonical decomposition exists) —
-# the reference's ascii-ignore silently DELETES them ("smørrebrød" ->
-# "smrrebrd", Ladefoged products in the source data). The mapped variant
-# transliterates them first; kept separate so ``ascii_fold`` stays
-# byte-identical to the reference (quality_report.md:58-80 vectors).
-NFD_RESISTANT_MAP = {
-    "æ": "ae", "Æ": "AE", "ø": "o", "Ø": "O", "œ": "oe", "Œ": "OE",
-    "ß": "ss", "þ": "th", "Þ": "Th", "ð": "d", "Ð": "D",
-    "đ": "d", "Đ": "D", "ł": "l", "Ł": "L", "ħ": "h", "Ħ": "H",
-}
-
-
-def _make_ascii_fold_mapped():
-    fallback = dict(NFD_RESISTANT_MAP)
-
-    def fold_series(batch):
-        import unicodedata
-
-        table = str.maketrans(fallback)
-
-        def fold(s):
-            if s is None:
-                return None
-            if s.isascii():  # identity on ASCII — see ascii_fold
-                return s
-            return (
-                unicodedata.normalize(
-                    "NFD", unicodedata.normalize("NFKC", s)
-                )
-                .translate(table)
-                .encode("ascii", "ignore")
-                .decode("ascii")
-            )
-
-        return batch.map(fold)
-
-    return pandas_udf(fold_series, StringType())
-
-
-ascii_fold_mapped = _make_ascii_fold_mapped()

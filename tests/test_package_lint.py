@@ -1,8 +1,9 @@
 """AST lint of the package source:
 
-- no bare ``assert`` statement: ``python -O`` strips them, so a
-  violated precondition would yield a silently wrong answer instead
-  of an error (docstring examples are strings, not statements);
+- no bare ``assert`` statement in the package, the entry files or
+  ``tools/``: ``python -O`` strips them, so a violated precondition
+  would yield a silently wrong answer instead of an error (docstring
+  examples are strings, not statements);
 - driver threads start in ONE place: only ``concurrency.py`` may
   import ``concurrent.futures`` or ``threading``. Everything else fans
   out through ``concurrency.overlap``, whose threads keep the caller's
@@ -16,7 +17,9 @@
   top-level def not in ``KEEP``, must be reached from a workload — a
   registry query, the medallion pipeline, the CLI, or the bench and
   benchmark entry points. Neither re-exports in ``__init__`` files nor
-  a module's ``__all__`` list keep a name alive."""
+  a module's ``__all__`` list keep a name alive, and neither does a
+  module-level assignment that reached code never names. Reachability
+  is the oracle gate's own scanner (``tools/gate_state.py``)."""
 
 from __future__ import annotations
 
@@ -24,13 +27,17 @@ import ast
 import pathlib
 
 import data_integration_openfoodfacts_spark as pkg
-from tools.gate_state import module_closure
+from tools.gate_state import (
+    module_closure, module_file, scan, top_nodes, unreached_defs,
+)
 
 PKG_DIR = pathlib.Path(pkg.__file__).parent
 REPO = PKG_DIR.parent
 THREAD_MODULES = {"concurrent", "concurrent.futures", "threading"}
 THREADS_ALLOWED = {"concurrency.py"}
 COMMITS_ALLOWED = {"storage.py"}
+#: files outside the package that must hold no bare assert either
+ASSERT_FREE = ("bench.py", "__spark_entry__.py", "tools/*.py")
 
 
 def _modules():
@@ -55,10 +62,12 @@ def test_scan_sees_the_package():
 
 
 def test_no_bare_asserts():
+    files = [path for path, _tree in _modules()]
+    files += [f for pat in ASSERT_FREE for f in sorted(REPO.glob(pat))]
     found = [
-        _where(path, node)
-        for path, tree in _modules()
-        for node in ast.walk(tree)
+        f"{path.relative_to(REPO)}:{node.lineno}"
+        for path in files
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
         if isinstance(node, ast.Assert)
     ]
     assert found == [], f"bare asserts (stripped by python -O): {found}"
@@ -133,120 +142,28 @@ KEEP = {
     # the unranked hit list the `_hits_col` tests read through
     "phrase_hits": "phrase_topk",
 }
-_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-
-
-def _module_file(dotted: str) -> pathlib.Path | None:
-    parts = dotted.split(".")
-    if parts[0] != PKG_DIR.name:
-        return None
-    base = PKG_DIR.joinpath(*parts[1:])
-    for cand in (base.with_suffix(".py"), base / "__init__.py"):
-        if cand.is_file():
-            return cand
-    return None
-
-
-def _entry_files() -> list[pathlib.Path]:
-    files = [REPO / f for f in ENTRY_FILES]
-    return files + sorted(REPO.glob("perfbench/*.py"))
-
-
-def _package_imports(tree) -> set[pathlib.Path]:
-    """Package modules an out-of-package file imports (absolute
-    imports only; ``from pkg.mod import name`` may name a submodule)."""
-    found = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            dotted = [a.name for a in node.names]
-        elif isinstance(node, ast.ImportFrom) and node.level == 0:
-            mod = node.module or ""
-            dotted = [mod] + [f"{mod}.{a.name}" for a in node.names]
-        else:
-            continue
-        found |= {f for f in map(_module_file, dotted) if f is not None}
-    return found
-
-
-def _refs(node) -> set[str]:
-    """Names a piece of code can reach a def by: bare names, attribute
-    names, and identifier-shaped string constants (``getattr``/
-    registry lookups)."""
-    out = set()
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name):
-            out.add(n.id)
-        elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
-        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
-              and n.value.isidentifier()):
-            out.add(n.value)
-    return out
-
-
-def _is_all(stmt) -> bool:
-    return isinstance(stmt, ast.Assign) and any(
-        isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets
-    )
-
-
-def unreached_defs(modules: dict[str, ast.Module], refs: set[str]):
-    """``(module, name)`` of every top-level def that no reached code
-    names. Module-level statements (except ``__all__``, which lists
-    names without calling them) and ``refs`` are live from the start;
-    a def's body becomes live once its name is — iterated to a
-    fixpoint, so a helper of unreached code stays unreached."""
-    live = set(refs)
-    defs = {}
-    for mod, tree in modules.items():
-        for stmt in tree.body:
-            if isinstance(stmt, _DEFS):
-                defs[(mod, stmt.name)] = stmt
-            elif not _is_all(stmt):
-                live |= _refs(stmt)
-    reached: set = set()
-    grew = True
-    while grew:
-        grew = False
-        for key, node in defs.items():
-            if key not in reached and key[1] in live:
-                reached.add(key)
-                live |= _refs(node)
-                grew = True
-    return sorted(set(defs) - reached)
 
 
 def _reachability():
     from data_integration_openfoodfacts_spark.plans.registry import QUERIES
 
-    roots = {_module_file(fn.__module__) for fn in QUERIES.values()}
+    entries = [REPO / f for f in ENTRY_FILES]
+    entries += sorted(REPO.glob("perfbench/*.py"))
+    roots = {module_file(fn.__module__) for fn in QUERIES.values()}
     roots |= {PKG_DIR / "plans" / "pipeline.py", PKG_DIR / "cli.py"}
-    refs: set[str] = set()
-    for path in _entry_files():
-        tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
-        roots |= _package_imports(tree)
-        refs |= _refs(tree)
-    reached = set()
-    for root in roots:
-        reached |= set(module_closure(root))
-    trees = {
-        str(path.relative_to(PKG_DIR)): tree
-        for path, tree in _modules()
-        if path in reached and path.name != "__init__.py"
-    }
+    reached = set(module_closure(*roots, *entries))
+    files = [p for p, _tree in _modules() if p.name != "__init__.py"]
     unreached_mods = sorted(
-        str(path.relative_to(PKG_DIR))
-        for path, _tree in _modules()
-        if path not in reached and path.name != "__init__.py"
-    )
-    unreached = unreached_defs(trees, refs)
-    live = {
-        node.name
-        for mod, tree in trees.items()
-        for node in tree.body
-        if isinstance(node, _DEFS) and (mod, node.name) not in unreached
-    }
-    return unreached_mods, unreached, live
+        str(f.relative_to(PKG_DIR)) for f in files if f not in reached)
+    modules = {str(f.relative_to(PKG_DIR)): scan(f).nodes
+               for f in files if f in reached}
+    # entry files name what they reach: perfbench's computed lookups
+    # wrap traced modules or read names spelled as strings in the file
+    live = set().union(*(n.refs for f in entries for n in scan(f).nodes))
+    live.discard("*")
+    unreached = unreached_defs(modules, live)
+    defs = {(m, n.names[0]) for m in modules for n in modules[m] if n.is_def}
+    return unreached_mods, unreached, {d for _m, d in defs - set(unreached)}
 
 
 def test_package_code_is_reached_outside_tests():
@@ -264,23 +181,32 @@ def test_package_code_is_reached_outside_tests():
 
 
 def test_unreached_def_detector():
-    tree = ast.parse(
+    src = (
         "import x\n"
+        "from y import target as alias\n"
         "def live():\n    return helper()\n"
         "def helper():\n    return x.attr_live()\n"
         "def attr_live():\n    pass\n"
         "def by_name():\n    pass\n"
+        "def target():\n    pass\n"
         "def dead():\n    return only_from_dead()\n"
         "def only_from_dead():\n    pass\n"
+        "def only_from_value():\n    pass\n"
         "class Dead:\n    def live(self):\n        pass\n"
-        "VALUE = live()\n"
-        "LOOKUP = getattr(x, 'by_name')\n"
+        "VALUE = only_from_value()\n"
+        "print(live(), getattr(x, 'by_name'), alias)\n"
         "__all__ = ['live', 'dead', 'Dead']\n"
     )
-    got = unreached_defs({"m.py": tree}, refs=set())
+    nodes = top_nodes(ast.parse(src), src)
+    # the statement that binds no name is live; a def it names, an
+    # attribute or string it names, and an aliased import's target are
+    # reached; a named assignment and __all__ keep nothing alive
+    got = unreached_defs({"m.py": nodes}, live=set())
     assert got == [
         ("m.py", "Dead"), ("m.py", "dead"), ("m.py", "only_from_dead"),
+        ("m.py", "only_from_value"),
     ]
-    # a name used by an entry file outside the package is a root too
-    got = unreached_defs({"m.py": tree}, refs={"dead"})
+    # a name used by an entry file outside the package is a root too,
+    # and reaching an assignment reaches what its value names
+    got = unreached_defs({"m.py": nodes}, live={"dead", "VALUE"})
     assert got == [("m.py", "Dead")]

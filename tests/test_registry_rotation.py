@@ -86,18 +86,30 @@ def test_module_closure_catches_operator_refactor():
     """plans/llm_queries.py queries must fingerprint over
     operators/similarity_dedup.py (transitively) — the exact file whose
     refactor the r03 VERDICT flagged as invisible to age-only rotation."""
-    f = gate_state._resolve_file(["plans", "llm_queries"])
+    f = gate_state.PKG_ROOT / "plans" / "llm_queries.py"
     closure = {p.name for p in gate_state.module_closure(f)}
     assert "similarity_dedup.py" in closure
     assert "similarity.py" in closure
     assert "vectors.py" in closure  # function-local import resolved too
 
 
-def test_fingerprint_changes_with_oracle_text(tmp_path):
-    f = gate_state._resolve_file(["plans", "llm_queries"])
-    assert gate_state.query_fingerprint(f, "SELECT 1") != gate_state.query_fingerprint(
-        f, "SELECT 2"
+def test_fingerprint_changes_with_oracle_text():
+    fn = registry.QUERIES["q148_corpus_curation_pipeline"]
+    assert gate_state.query_fingerprint(fn, "SELECT 1") != (
+        gate_state.query_fingerprint(fn, "SELECT 2")
     )
+
+
+def test_fingerprint_ignores_where_the_checkout_sits(monkeypatch):
+    """The q89-q94 oracles read the fixture TSV by absolute path; a
+    second checkout of the same commit must fingerprint them alike."""
+    root = str(gate_state.REPO)
+    key = next(k for k, sql in registry.ORACLES.items() if root in sql)
+    fn, oracle = registry.QUERIES[key], registry.ORACLES[key]
+    here = gate_state.query_fingerprint(fn, oracle)
+    monkeypatch.setattr(gate_state, "REPO", gate_state.REPO.with_name("x"))
+    moved = oracle.replace(root, str(gate_state.REPO))
+    assert gate_state.query_fingerprint(fn, moved) == here
 
 
 def test_registry_reads_committed_snapshot():
@@ -210,14 +222,12 @@ def test_local_green_new_query_queues_behind_churn_ahead_of_greens():
 def test_stale_keys_are_per_scale_factor():
     """A green record at sf0.01 must NOT satisfy a stale check at
     sf0.1 (round-6 review finding: --stale silently no-opped at other
-    scale factors); legacy single-sf entries keep working."""
+    scale factors)."""
     fps = {"qA": "f1", "qB": "f2", "qC": "f3"}
     verified = {
-        "qA": {"fingerprint": "f1", "sf": "sf0.01",
-               "sfs": {"sf0.01": "f1"}},
-        "qB": {"fingerprint": "f2", "sf": "sf0.01"},  # legacy layout
-        "qC": {"fingerprint": "OLD", "sf": "sf0.1",
-               "sfs": {"sf0.1": "OLD"}},  # drifted
+        "qA": {"fingerprint": "f1", "sfs": {"sf0.01": "f1"}},
+        "qB": {"fingerprint": "f2", "sfs": {"sf0.01": "f2"}},
+        "qC": {"fingerprint": "OLD", "sfs": {"sf0.1": "OLD"}},  # drifted
     }
     assert gate_state.stale_keys(fps, verified, "sf0.01") == {"qC"}
     # at sf0.1 nothing but qC's old record exists -> all stale

@@ -333,13 +333,7 @@ def main() -> int:
             v = verified.setdefault(name, {})
             # `fingerprint` = latest green anywhere (rotation reads it);
             # `sfs` = per-scale-factor fingerprint map (--stale reads it)
-            if "sfs" not in v and "fingerprint" in v and "sf" in v:
-                # seed the per-sf map from the legacy single-sf pair so
-                # a still-valid green at another scale factor is not
-                # forgotten (round-6 review finding)
-                v["sfs"] = {v["sf"]: v["fingerprint"]}
             v["fingerprint"] = fps[name]
-            v["sf"] = sf_dir
             sfs = v.setdefault("sfs", {})
             # drop per-sf entries recorded under older fingerprints
             for sd in list(sfs):
@@ -362,16 +356,6 @@ def main() -> int:
         except Exception:  # noqa: BLE001 — first run or corrupt file
             report = {}
         by_sf = report.get("by_sf", {})
-        # migrate earlier flat layouts ({timings} or {sf: {q: t}}),
-        # carrying the budget they were judged under when recorded
-        legacy_budget = report.get("budget_sec", budget)
-        if "timings" in report:
-            by_sf = {report.get("sf", sf_dir): report["timings"]}
-        by_sf = {
-            sf: (e if isinstance(e.get("timings"), dict)
-                 else {"budget_sec": legacy_budget, "timings": e})
-            for sf, e in by_sf.items()
-        }
         entry = by_sf.setdefault(
             sf_dir, {"budget_sec": budget, "timings": {}}
         )

@@ -11,7 +11,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -236,9 +237,10 @@ def main() -> None:
         tree = txt.split("\n\n")[0]
         out += [f"## {name} — {why}", "", "```", tree.strip(), "```", ""]
 
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as f:
+    path = os.path.join(REPO, "PLANS.md")
+    with open(path, "w", encoding="utf-8") as f:
         f.write("\n".join(out))
-    print("wrote /root/repo/PLANS.md")
+    print(f"wrote {path}")
 
 
 if __name__ == "__main__":

@@ -1,139 +1,257 @@
 """Gate-state library: committed, code-churn-aware oracle-gate rotation.
 
-Round-3 VERDICT #1 + ADVICE items: the old ``_gate_order`` (a) globbed
-``CORRECTNESS_r*.json`` from the working tree at import time, so two
-checkouts of the same commit could produce different registry orders,
-and (b) rotated purely by last-green AGE, blind to code churn — a query
-whose implementing module was refactored AFTER its last green record
-kept its old rank and could sit outside the 50-entry driver window for
-rounds (the r03 stale-green finding: q18/q19/q46/q49/q73 vs commit
-d927e84).
+The registry order is a committed artifact, ``plans/gate_state.json``,
+regenerated by ``tools/update_gate_state.py``; ``plans.registry`` reads
+only that file, so the order is a pure function of the committed tree.
 
-New design — the order is a COMMITTED ARTIFACT, regenerated once per
-round by ``tools/update_gate_state.py``:
+* Each query has a **fingerprint**: sha256 over its oracle SQL (the
+  checkout root replaced by a fixed token) and the source of the
+  package code its query def can reach (``query_fingerprint``).
+* ``gate_state.json`` records, per query and scale factor, the
+  fingerprint of its last local oracle-green run
+  (``tools/check_oracle.py --record``). The driver's
+  ``CORRECTNESS_r*.json`` records give its last driver-green round;
+  the tool reads them, never the library at import time.
+* Rank: tier 0 = forced (``_FORCE_GATE``), last driver record red, or
+  fingerprint drifted / never verified — these must reach the driver's
+  50-entry window; tier 0.5 = never driver-gated but locally verified
+  at the current fingerprint; then ascending last-green round; the
+  query key breaks ties.
 
-* Each query gets a **fingerprint**: sha256 over its oracle SQL text
-  plus the content of every repo module transitively reachable from its
-  implementing module (regex import resolution — conservative: a
-  comment-only edit also trips it, which errs toward re-verification).
-* ``plans/gate_state.json`` records, per query, the fingerprint at the
-  last LOCALLY oracle-green run (``tools/check_oracle.py --record``)
-  and the last driver-green round (from CORRECTNESS_r*.json — read by
-  the TOOL in a real checkout, never at library import time).
-* Rank: tier 0 = last driver record red / fingerprint drifted or never
-  verified since the last local green / in ``_FORCE_GATE`` — these MUST
-  reach the 50-entry window this round; tier 0.5 = never driver-gated
-  but locally oracle-verified at the current fingerprint (the rotation
-  CONSUMES the committed local record — round-5 VERDICT #7 — so a
-  new-query burst queues behind genuine churn instead of evicting it);
-  then ascending last-green round; the query key as the deterministic
-  tiebreak.
-
-``plans.registry`` reads ONLY the committed JSON (plus "new keys
-first"), so the order is a pure function of the committed tree.
+**Reachability** is shared with the package lint
+(``tests/test_package_lint.py``). Each module is parsed once into its
+top-level nodes. A def, class, assignment or import alias is a named
+node: it is reached once a name it binds is referenced by reached code
+(a bare name, an attribute name, an imported name or an
+identifier-shaped string). A statement that binds no name is always
+live. Imports resolve from the AST, relative and function-local ones
+included. The result must over-approximate what a query runs, so a
+reached dynamic lookup (computed ``getattr``, ``globals()``,
+``vars()``, ``__dict__``) or a star import makes the query hash every
+node of its closure.
 """
 
 from __future__ import annotations
 
+import ast
+import functools
 import hashlib
 import json
 import re
+from collections import defaultdict
 from pathlib import Path
+from typing import NamedTuple
 
 PKG = "data_integration_openfoodfacts_spark"
 REPO = Path(__file__).resolve().parent.parent
 PKG_ROOT = REPO / PKG
 STATE_PATH = PKG_ROOT / "plans" / "gate_state.json"
-
-# ``from ..operators.x import y`` / ``from . import z`` /
-# ``from data_integration_openfoodfacts_spark.functions.v import w`` —
-# matched anywhere in the source (function-local imports included).
-# The names group is either ONE parenthesized (possibly multi-line)
-# list or the rest of the line — an unbounded [\w.,\s()*]+ here
-# swallowed every consecutive from-import through its \s newlines, so
-# the closure silently missed most dependencies (the r04 review's top
-# finding; pinned by test_gate_state_closure.py).
-_IMPORT_RE = re.compile(
-    rf"^[ \t]*from[ \t]+(\.+[\w.]*|{PKG}(?:\.[\w.]+)?)[ \t]+import"
-    rf"[ \t]+(\([^)]*\)|[^\n]+)",
-    re.M,
-)
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
-def _module_path_candidates(base_pkg: list[str], stmt: str, names: str):
-    """Yield repo-relative module paths a ``from stmt import names``
-    statement may refer to (both ``pkg/mod.py`` and ``pkg/mod/name.py``
-    — the imported name can itself be a submodule)."""
-    if stmt.startswith("."):
-        dots = len(stmt) - len(stmt.lstrip("."))
-        rel = stmt.lstrip(".")
-        # one dot = current package, two = parent, ...
-        root = base_pkg[: len(base_pkg) - (dots - 1)] if dots > 1 else base_pkg
-        parts = root + ([p for p in rel.split(".") if p] if rel else [])
-    else:
-        parts = stmt.split(".")[1:]  # strip the package name itself
-    yield parts  # the module itself (names are attributes)
-    for nm in re.split(r"[,\s()]+", names):
-        nm = nm.strip()
-        if nm and nm != "*" and nm.isidentifier():
-            yield parts + [nm]  # the name may be a submodule
+class Node(NamedTuple):
+    """A top-level statement, or one alias of a top-level import."""
+
+    names: tuple[str, ...]  # the names it binds; () = always live
+    refs: frozenset[str]  # the names its code can reach others by
+    text: str  # its source, decorator lines included
+    is_def: bool
 
 
-def _resolve_file(parts: list[str]) -> Path | None:
-    if not parts:
+class Module(NamedTuple):
+    nodes: tuple[Node, ...]
+    imports: frozenset[Path]  # package files it imports, anywhere
+
+
+def _refs(tree: ast.AST) -> set[str]:
+    """Names a piece of code can reach a node by: bare, attribute and
+    imported names, and identifier-shaped strings (``getattr``/registry
+    lookups). A lookup by computed name — ``getattr`` with a
+    non-constant name, ``globals``, ``vars``, ``__dict__`` or a star
+    import — adds ``"*"``, which reaches every node."""
+    out = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier()):
+            out.add(n.value)
+        elif (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+              and n.func.id == "getattr" and not (
+                  len(n.args) > 1 and isinstance(n.args[1], ast.Constant))):
+            out.add("*")
+    if out & {"globals", "vars", "__dict__"}:
+        out.add("*")
+    return out
+
+
+def _bound(stmt: ast.stmt) -> tuple[str, ...]:
+    if isinstance(stmt, _DEFS):
+        return (stmt.name,)
+    if not isinstance(stmt, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+        return ()
+    targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+    return tuple(
+        n.id for t in targets for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    )
+
+
+def top_nodes(tree: ast.Module, src: str) -> list[Node]:
+    """The top-level nodes of a parsed module, docstrings left out."""
+    lines = src.splitlines(keepends=True)
+    out = []
+    for stmt in tree.body:
+        if (isinstance(stmt, ast.Expr) and isinstance(stmt.value, ast.Constant)
+                and isinstance(stmt.value.value, str)):
+            continue
+        if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            # one node per alias, hashed by its own fields: adding a name
+            # to a shared import line re-stales no query
+            frm = (f"from {'.' * stmt.level}{stmt.module or ''} "
+                   if isinstance(stmt, ast.ImportFrom) else "")
+            out += [Node(
+                () if a.name == "*" else (a.asname or a.name.split(".")[0],),
+                frozenset(_refs(a)), f"{frm}import {a.name} as {a.asname}",
+                False) for a in stmt.names]
+            continue
+        start = min([stmt.lineno] + [
+            d.lineno for d in getattr(stmt, "decorator_list", ())])
+        out.append(Node(_bound(stmt), frozenset(_refs(stmt)),
+                        "".join(lines[start - 1 : stmt.end_lineno]),
+                        isinstance(stmt, _DEFS)))
+    return out
+
+
+def module_file(dotted: str) -> Path | None:
+    """The package file a dotted module name names, if any."""
+    parts = dotted.split(".")
+    if parts[0] != PKG:
         return None
-    p = PKG_ROOT.joinpath(*parts)
-    for cand in (p.with_suffix(".py"), p / "__init__.py"):
+    base = PKG_ROOT.joinpath(*parts[1:])
+    for cand in (base.with_suffix(".py"), base / "__init__.py"):
         if cand.is_file():
             return cand
     return None
 
 
-def module_closure(start: Path) -> list[Path]:
-    """Transitive repo-internal import closure of a module file."""
+@functools.lru_cache(maxsize=None)
+def scan(path: Path) -> Module:
+    """``path``'s top-level nodes and the package files it imports
+    anywhere (``from m import name`` may name a submodule, so ``m.name``
+    is tried too); parsed once per process."""
+    src = path.read_text(encoding="utf-8")
+    tree = ast.parse(src, str(path))
+    here = ([PKG, *path.relative_to(PKG_ROOT).parent.parts]
+            if path.is_relative_to(PKG_ROOT) else [])
+    dotted = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            dotted += [a.name for a in n.names]
+        elif isinstance(n, ast.ImportFrom):
+            base = here[: len(here) - n.level + 1] if n.level else []
+            mod = ".".join(base + ([n.module] if n.module else []))
+            dotted += [mod] + [f"{mod}.{a.name}" for a in n.names]
+    imports = {f for f in map(module_file, dotted) if f is not None}
+    return Module(tuple(top_nodes(tree, src)), frozenset(imports))
+
+
+def module_closure(*roots: Path) -> list[Path]:
+    """The roots and every package file they import, transitively."""
     seen: set[Path] = set()
-    todo = [start]
+    todo = list(roots)
     while todo:
         f = todo.pop()
-        if f in seen or not f.is_file():
-            continue
-        seen.add(f)
-        src = f.read_text()
-        base_pkg = list(f.relative_to(PKG_ROOT).parent.parts)
-        for m in _IMPORT_RE.finditer(src):
-            for parts in _module_path_candidates(base_pkg, m.group(1), m.group(2)):
-                dep = _resolve_file(parts)
-                if dep is not None and dep not in seen:
-                    todo.append(dep)
+        if f not in seen:
+            seen.add(f)
+            todo += scan(f).imports
     return sorted(seen)
 
 
-def query_fingerprint(mod_file: Path, oracle_text: str) -> str:
-    h = hashlib.sha256()
-    h.update(oracle_text.encode())
-    for f in module_closure(mod_file):
-        h.update(str(f.relative_to(REPO)).encode())
-        h.update(hashlib.sha256(f.read_bytes()).digest())
+def reach(modules: dict[str, list[Node]], live: set[str]) -> set:
+    """``(module, index)`` of every node reached from the names in
+    ``live``: nodes that bind no name are reached from the start, and a
+    named node once a name it binds is, iterated to a fixpoint."""
+    binders = defaultdict(list)
+    reached, todo, done = set(), list(live), set()
+    for mod, nodes in modules.items():
+        for i, node in enumerate(nodes):
+            if node.names:
+                for name in (*node.names, "*"):  # "*" binds every name
+                    binders[name].append((mod, i))
+            else:
+                reached.add((mod, i))
+                todo += node.refs
+    while todo:
+        name = todo.pop()
+        if name not in done:
+            done.add(name)
+            for key in set(binders[name]) - reached:
+                reached.add(key)
+                todo += modules[key[0]][key[1]].refs
+    return reached
+
+
+def unreached_defs(modules: dict[str, list[Node]], live: set[str]):
+    """``(module, name)`` of every top-level def or class not reached
+    from ``live``."""
+    reached = reach(modules, live)
+    return sorted(
+        (mod, node.names[0])
+        for mod, nodes in modules.items()
+        for i, node in enumerate(nodes)
+        if node.is_def and (mod, i) not in reached
+    )
+
+
+def fingerprint(modules: dict[str, list[Node]], root: str,
+                oracle_text: str) -> str:
+    """sha256 over ``oracle_text`` and the source of every node reached
+    from the name ``root``."""
+    h = hashlib.sha256(oracle_text.encode())
+    for mod, i in sorted(reach(modules, {root})):
+        h.update(f"\0{mod}\0{modules[mod][i].text}".encode())
     return h.hexdigest()
 
 
-def current_fingerprints() -> dict[str, str]:
-    """{query key: fingerprint} for the full registry (imports Spark-free
-    registry metadata only — query callables are not invoked)."""
+def query_fingerprint(fn, oracle_text: str) -> str:
+    """Fingerprint of the registry query callable ``fn`` over its
+    module's import closure; a callable that is not a top-level def of
+    its module hashes the whole closure."""
+    mod_file = module_file(fn.__module__)
+    modules = {
+        str(f.relative_to(PKG_ROOT)): scan(f).nodes
+        for f in module_closure(mod_file)
+    }
+    own = modules[str(mod_file.relative_to(PKG_ROOT))]
+    root = fn.__name__ if any(fn.__name__ in n.names for n in own) else "*"
+    # the q89-q94 oracles read the fixture TSV by absolute path
+    return fingerprint(modules, root,
+                       oracle_text.replace(str(REPO), "<checkout>"))
+
+
+def _registry():
     import sys
 
     if str(REPO) not in sys.path:
         sys.path.insert(0, str(REPO))
     from data_integration_openfoodfacts_spark.plans import registry
 
-    out: dict[str, str] = {}
-    for name, fn in registry.QUERIES.items():
-        mod = fn.__module__.replace(PKG + ".", "").split(".")
-        mod_file = _resolve_file(mod)
-        if mod_file is None:  # pragma: no cover — registry always in-pkg
-            raise RuntimeError(f"cannot locate module for {name}: {fn.__module__}")
-        out[name] = query_fingerprint(mod_file, registry.ORACLES.get(name, ""))
-    return out
+    return registry
+
+
+def current_fingerprints() -> dict[str, str]:
+    """{query key: fingerprint} for the full registry (imports Spark-free
+    registry metadata only — query callables are not invoked)."""
+    registry = _registry()
+    return {
+        name: query_fingerprint(fn, registry.ORACLES.get(name, ""))
+        for name, fn in registry.QUERIES.items()
+    }
 
 
 def load_state() -> dict:
@@ -170,17 +288,14 @@ def compute_tiers(
     records: dict[int, dict],
     force_gate: set[str],
 ) -> dict[str, float]:
-    """0 = must re-gate (forced / last-seen-red at the driver /
-    code-or-oracle drifted or never verified since the last local
-    green); 0.5 = never driver-green but locally oracle-verified at the
-    CURRENT fingerprint (round-5 VERDICT #7: the committed local record
-    relieves a new-query burst from monopolizing the window — these
-    sort behind genuine churn but ahead of every already-driver-green
-    query); otherwise the round of the query's most recent driver green
-    (older sorts first).
-    """
+    """0 = must re-gate (forced / last seen red at the driver /
+    fingerprint drifted or never verified since the last local green);
+    0.5 = never driver-gated but locally verified at the CURRENT
+    fingerprint, so a new-query burst sorts behind genuine churn but
+    ahead of every driver-green query; otherwise the round of the
+    query's most recent driver green (older sorts first)."""
     last_green: dict[str, int] = {}
-    has_oracle = _oracle_keys()
+    has_oracle = set(_registry().ORACLES)
     for rnd in sorted(records):
         for key, rec in records[rnd].items():
             if not isinstance(rec, dict):
@@ -216,33 +331,14 @@ def compute_order(
     return sorted(fingerprints, key=lambda k: (tiers[k], k))
 
 
-def _oracle_keys() -> set[str]:
-    import sys
-
-    if str(REPO) not in sys.path:
-        sys.path.insert(0, str(REPO))
-    from data_integration_openfoodfacts_spark.plans import registry
-
-    return set(registry.ORACLES)
-
-
 def stale_keys(
     fingerprints: dict[str, str], verified: dict[str, dict], sf_dir: str
 ) -> set[str]:
-    """Queries NOT verified at their current fingerprint AT ``sf_dir``.
-
-    Per-sf tracking lives in ``verified[k]["sfs"]`` ({sf_dir:
-    fingerprint}); entries recorded before the map existed fall back to
-    the legacy single-(fingerprint, sf) pair. A green record at one
-    scale factor never satisfies a stale check at another (round-6
-    review finding)."""
-
-    def seen(v: dict, k: str) -> bool:
-        if "sfs" in v:
-            return v["sfs"].get(sf_dir) == fingerprints[k]
-        return (
-            v.get("fingerprint") == fingerprints[k]
-            and v.get("sf") == sf_dir
-        )
-
-    return {k for k in fingerprints if not seen(verified.get(k, {}), k)}
+    """Queries NOT verified at their current fingerprint AT ``sf_dir``
+    (``verified[k]["sfs"]`` maps each scale factor to the fingerprint
+    last verified there): a green record at one scale factor never
+    satisfies a stale check at another."""
+    return {
+        k for k in fingerprints
+        if verified.get(k, {}).get("sfs", {}).get(sf_dir) != fingerprints[k]
+    }
