@@ -2,7 +2,7 @@
 
 A closure that misses a dependency, or a fingerprint that misses code a
 query reaches, lets a churned query keep a stale green rank outside the
-driver's 50-entry window — the exact failure the fingerprint exists to
+gate's 50-entry window — the exact failure the fingerprint exists to
 prevent. The fingerprint tests run on synthetic modules.
 """
 

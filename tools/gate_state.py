@@ -9,14 +9,15 @@ only that file, so the order is a pure function of the committed tree.
   package code its query def can reach (``query_fingerprint``).
 * ``gate_state.json`` records, per query and scale factor, the
   fingerprint of its last local oracle-green run
-  (``tools/check_oracle.py --record``). The driver's
-  ``CORRECTNESS_r*.json`` records give its last driver-green round;
-  the tool reads them, never the library at import time.
-* Rank: tier 0 = forced (``_FORCE_GATE``), last driver record red, or
-  fingerprint drifted / never verified — these must reach the driver's
-  50-entry window; tier 0.5 = never driver-gated but locally verified
-  at the current fingerprint; then ascending last-green round; the
-  query key breaks ties.
+  (``tools/check_oracle.py --record``). The committed
+  ``CORRECTNESS_r*.json`` records of the external 50-query gate give
+  its last gate-green round; the tool reads them, never the library at
+  import time.
+* Rank: tier 0 = forced (``_FORCE_GATE``), last gate record red, or
+  fingerprint drifted / never verified — these must reach the gate's
+  50-entry window; tier 0.5 = never gated but locally verified at the
+  current fingerprint; then ascending last-green round; the query key
+  breaks ties.
 
 **Reachability** is shared with the package lint
 (``tests/test_package_lint.py``). Each module is parsed once into its
@@ -288,12 +289,12 @@ def compute_tiers(
     records: dict[int, dict],
     force_gate: set[str],
 ) -> dict[str, float]:
-    """0 = must re-gate (forced / last seen red at the driver /
+    """0 = must re-gate (forced / last seen red by the gate /
     fingerprint drifted or never verified since the last local green);
-    0.5 = never driver-gated but locally verified at the CURRENT
-    fingerprint, so a new-query burst sorts behind genuine churn but
-    ahead of every driver-green query; otherwise the round of the
-    query's most recent driver green (older sorts first)."""
+    0.5 = never gated but locally verified at the CURRENT fingerprint,
+    so a new-query burst sorts behind genuine churn but ahead of every
+    gate-green query; otherwise the round of the query's most recent
+    gate green (older sorts first)."""
     last_green: dict[str, int] = {}
     has_oracle = set(_registry().ORACLES)
     for rnd in sorted(records):
