@@ -6,8 +6,8 @@ the OpenFoodFacts product dump plus six OLAP queries that run in MySQL.
 This package re-expresses every operator Spark-first:
 
 - ``session``    : tuned SparkSession factory (UTC, AQE, Arrow).
-- ``storage``    : how persisted stores commit (sidecars, directory
-                   swaps, partition claims).
+- ``storage``    : how persisted stores commit (one create-only log
+                   per store, directory swaps).
 - ``sources``    : CSV / Parquet readers and table sinks (replaces JDBC).
 - ``functions``  : text normalization (the reference's only UDF), text
                    analysis, and vector math helpers.

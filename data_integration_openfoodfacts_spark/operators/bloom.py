@@ -91,7 +91,7 @@ def bloom_union(a: DataFrame, b: DataFrame) -> DataFrame:
     """Merge two word tables built with the SAME (n_words, k) — the
     union filter answers membership for the union of key sets. The
     caller owns the layout agreement (at persistence scale the
-    parameters ride a sidecar exactly like `bucketed_ledger`'s)."""
+    parameters ride the store log exactly like `bucketed_ledger`'s)."""
     return (
         a.select("w", "bits")
         .unionByName(b.select("w", "bits"))
@@ -178,3 +178,18 @@ def bloom_probe_keys(
         .groupBy(key)
         .agg((F.min("s") == 1).alias(out_col))
     )
+
+
+def screen_totals(flags: DataFrame, batch_id: int) -> DataFrame:
+    """One ``(batch_id, n_keys, n_definitely_new, n_maybe)`` row over
+    `bloom_probe_keys` output — the per-batch totals both streaming
+    screens record."""
+    return flags.agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.coalesce(
+            F.sum((~F.col("maybe_member")).cast("long")), F.lit(0)
+        ).cast("long").alias("n_definitely_new"),
+        F.coalesce(
+            F.sum(F.col("maybe_member").cast("long")), F.lit(0)
+        ).cast("long").alias("n_maybe"),
+    ).select(F.lit(batch_id).cast("long").alias("batch_id"), "*")

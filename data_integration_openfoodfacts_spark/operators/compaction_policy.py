@@ -8,12 +8,10 @@ the number of live delta partitions (every probe sums across all of
 them, so read amplification is linear in delta count), and compacts
 exactly when ``live deltas > max_deltas``.
 
-The probe reads FILESYSTEM METADATA only (one directory listing; no
-data scan, no shuffle) — at 100 TB the check is O(partitions) driver
-work against the namenode/object listing, the same class as the
-store's own existence checks. The compaction it dispatches is the
-store's OWN atomic pass (`compact_counting`), so crash contracts are
-unchanged.
+The probe reads the store's newest log entry only (no data scan, no
+shuffle): the live deltas are the ones that entry lists. The
+compaction it dispatches is the store's OWN pass (`compact_counting`),
+so crash contracts are unchanged.
 
 VACUUM WARNING (counting store): compaction is also the time-travel
 vacuum — absorbed deltas' versions become unreadable
@@ -27,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..storage import hadoop_fs
+from ..storage import read_state
 
 __all__ = [
     "counting_delta_count",
@@ -36,18 +34,13 @@ __all__ = [
 
 
 def counting_delta_count(spark: SparkSession, path: str) -> int:
-    """Live delta partitions of a counting store (``delta_id=*``
-    directories, the compacted base included — it is one of the
-    partitions every read sums). 0 for a store that doesn't exist."""
-    fs, root, _jvm = hadoop_fs(spark, path)
-    if not fs.exists(root):
-        return 0
-    return sum(
-        1
-        for st in fs.listStatus(root)
-        if st.isDirectory()
-        and st.getPath().getName().startswith("delta_id=")
-    )
+    """Live delta partitions of a counting store (the ones its log
+    lists, the compacted base included — it is one of the partitions
+    every read sums). 0 for a store that doesn't exist."""
+    from ..streaming.counting_store import live_deltas
+
+    found = read_state(spark, path)
+    return len(live_deltas(found[1])) if found else 0
 
 
 def maybe_compact_counting(

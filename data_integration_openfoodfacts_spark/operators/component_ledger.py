@@ -20,7 +20,8 @@ here keeps BOTH cheap by never rewriting members on merge:
   merges since the last compaction, never by the corpus.
 - reads/probes resolve: ``coalesce(alias.new, stored component)``.
 - `compact_component_ledger` amortizes: rewrite the store with
-  aliases applied (atomic staged swap), then clear the alias table —
+  aliases applied (a new directory the store log then names), then
+  clear the alias table —
   a stale alias over a compacted store maps values that no longer
   occur, so a crash between the two steps is harmless.
 
@@ -115,16 +116,22 @@ def init_component_ledger(
 _STORE_SCHEMA = f"node long, component long, {NB_COL} int"
 
 
-def _read_store(spark: SparkSession, path: str) -> DataFrame:
-    """The store scan with its (fixed) schema stated explicitly —
-    parquet schema inference is a driver-visible job per read, and the
-    lifecycle queries read the store several times (round 14)."""
-    return spark.read.schema(_STORE_SCHEMA).parquet(_store(path))
+def _read_store(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, int]:
+    """The store scan and its bucket count. The scan states its (fixed)
+    schema explicitly — parquet schema inference is a driver-visible
+    job per read, and the lifecycle queries read the store several
+    times (round 14)."""
+    from .bucketed_ledger import layout
+
+    data, nb = layout(spark, _store(path))
+    return spark.read.schema(_STORE_SCHEMA).parquet(data), nb
 
 
 def read_component_labels(spark: SparkSession, path: str) -> DataFrame:
     """Every (node, component) with aliases resolved."""
-    store = _read_store(spark, path).select("node", "component")
+    store = _read_store(spark, path)[0].select("node", "component")
     return _resolve(store, _read_alias(spark, path))
 
 
@@ -136,20 +143,14 @@ def probe_components(
     broadcast-TRANCHE semi direction (the store is never shuffled or
     broadcast), aliases resolved. Unknown nodes are ABSENT from the
     result (a node the ledger never saw has no component yet)."""
-    from .bucketed_ledger import (
-        prune_to_buckets,
-        store_n_buckets,
-        touched_buckets,
-    )
+    from .bucketed_ledger import prune_to_buckets, touched_buckets
 
     keys = nodes.select(F.col(node_col).alias("node")).distinct()
-    nb = store_n_buckets(spark, _store(path), NB_COL, DEFAULT_BUCKETS)
+    store, nb = _read_store(spark, path)
     nbs = touched_buckets(
         keys, lambda n: _nb_of_col(F.col("node"), n), nb
     )
-    store = prune_to_buckets(
-        _read_store(spark, path), NB_COL, nbs
-    ).select("node", "component")
+    store = prune_to_buckets(store, NB_COL, nbs).select("node", "component")
     hit = store.join(F.broadcast(keys), "node", "left_semi")
     return _resolve(hit, _read_alias(spark, path))
 
@@ -208,11 +209,7 @@ def merge_ledger_components(
     recipe applied to the ledger's own debt metric: every merge with
     retirements rewrites AND broadcasts the whole alias table, so an
     unbounded merge streak grows both; the trigger bounds them)."""
-    from .bucketed_ledger import (
-        append_bucketed,
-        prune_to_buckets,
-        store_n_buckets,
-    )
+    from .bucketed_ledger import append_bucketed, prune_to_buckets
     from .graph_incremental import DRIVER_CC_MAX_EDGES, driver_union_find
     from ..functions.localframe import local_rows_df
 
@@ -241,14 +238,12 @@ def merge_ledger_components(
     # alias table rides the SAME collect as the probe result (a tagged
     # union), so the whole read side is ONE cluster job instead of
     # inference + probe + alias three.
-    nb = store_n_buckets(spark, _store(path), NB_COL, DEFAULT_BUCKETS)
+    store, nb = _read_store(spark, path)
     nbs = sorted({_nb_of_py(n, nb) for n in endpoints})
     ep_df = local_rows_df(
         spark, [(int(n),) for n in endpoints], "node long"
     )
-    store = prune_to_buckets(
-        _read_store(spark, path), NB_COL, nbs
-    ).select("node", "component")
+    store = prune_to_buckets(store, NB_COL, nbs).select("node", "component")
     probe = store.join(F.broadcast(ep_df), "node", "left_semi").select(
         F.lit(0).alias("__t"), F.col("node").alias("__a"),
         F.col("component").alias("__b"),
@@ -334,7 +329,7 @@ def _merge_ledger_distributed(
     `DRIVER_CC_MAX_EDGES` (where `delta_component_mapping` runs the
     distributed star contraction anyway and the driver envelope above
     would not fit)."""
-    from .bucketed_ledger import append_bucketed, store_n_buckets
+    from .bucketed_ledger import append_bucketed, layout
 
     edges = (
         new_edges.select(
@@ -387,12 +382,10 @@ def _merge_ledger_distributed(
                 F.coalesce("new", F.col("node")).alias("component"),
             )
         )
-        nb = store_n_buckets(
-            spark, _store(path), NB_COL, DEFAULT_BUCKETS
-        )
         append_bucketed(
             fresh_labels, _store(path), NB_COL,
-            lambda n: _nb_of_col(F.col("node"), n), nb,
+            lambda n: _nb_of_col(F.col("node"), n),
+            layout(spark, _store(path))[1],
             columns=["node", "component"],
         )
 
@@ -438,8 +431,9 @@ def _merge_ledger_distributed(
 def compact_component_ledger(
     spark: SparkSession, path: str, relabel_dangling: bool = False
 ) -> None:
-    """Apply the alias table into the store (atomic staged rewrite,
-    one file per bucket) and clear it. A crash between the two steps
+    """Apply the alias table into the store (a rewrite into a new
+    directory that the store log then names, one file per bucket) and
+    clear it. A crash between the two steps
     leaves aliases whose sources no longer occur in the store —
     harmless no-ops the next compaction clears.
 
@@ -454,7 +448,7 @@ def compact_component_ledger(
     such compaction (a label can only dangle if its node was
     retracted), so the relabel map broadcasts; detecting it is one
     aggregate over the rows the compaction is rewriting anyway."""
-    from .bucketed_ledger import compact_bucketed, store_n_buckets
+    from .bucketed_ledger import compact_bucketed, layout
     from ..functions.localframe import local_rows_df
 
     # ONE bounded collect decides the no-op case AND becomes the
@@ -509,10 +503,10 @@ def compact_component_ledger(
             )
         )
 
-    nb = store_n_buckets(spark, _store(path), NB_COL, DEFAULT_BUCKETS)
     compact_bucketed(
         spark, _store(path), NB_COL,
-        lambda n: _nb_of_col(F.col("node"), n), nb,
+        lambda n: _nb_of_col(F.col("node"), n),
+        layout(spark, _store(path))[1],
         columns=["node", "component"],
         transform=_transform,
     )
@@ -570,5 +564,5 @@ def retract_component_nodes(
     return retract_keys_bucketed(
         spark, _store(path), NB_COL,
         lambda n: _nb_of_col(F.col("node"), n),
-        keys, "node", DEFAULT_BUCKETS,
+        keys, "node",
     )

@@ -16,8 +16,8 @@ so ledger rows are engine-portable integers, no floats).
 Layout and join direction follow the round-9 unified rules:
 
 - the ledger persists through `operators.bucketed_ledger` (hive-
-  partitioned by ``eb = md5_long(band:sig) % B``, sidecar-recorded
-  bucket count, loud mismatch refusal, compact-by-staged-swap);
+  partitioned by ``eb = md5_long(band:sig) % B``, bucket count in the
+  store log, loud mismatch refusal, compaction into a new directory);
 - the membership probe is `similarity_dedup.collision_ids` — the
   ledger is scanned in place with the BATCH's (band, sig) keys
   broadcast, pruned to the batch's touched buckets at file-listing
@@ -46,13 +46,11 @@ from pyspark.sql import functions as F
 
 from ..functions.localframe import local_rows_df
 
-from ..storage import read_parquet_if_exists
 from .bucketed_ledger import (
     append_bucketed,
     prune_to_buckets,
-    store_n_buckets,
+    read_bucketed,
     touched_buckets,
-    validate_layout,
 )
 from .similarity_dedup import collision_ids, md5_long
 
@@ -109,7 +107,8 @@ def append_embedding_bands(
     rows: DataFrame, path: str, n_buckets: int = EMB_LEDGER_BUCKETS
 ) -> None:
     """Append (vec_id, band, sig) rows under their eb buckets —
-    validated, sidecar-stamped, one file per touched bucket."""
+    checked against the store's bucket count, one file per touched
+    bucket."""
     append_bucketed(
         rows,
         path,
@@ -148,21 +147,16 @@ def incremental_embedding_dedup(
     new_bands = embedding_band_signatures(
         batch, dim, id_col, vec_col, rows_per_band, num_bands
     ).localCheckpoint(eager=True)
-    ledger = read_parquet_if_exists(spark, ledger_path)
+    ledger, b_eff = read_bucketed(spark, ledger_path)
     if ledger is None:
         probe = local_rows_df(
             spark, [], f"{id_col} long, band long, sig string"
         )
     else:
-        probe = ledger
-        if EB_COL in ledger.columns:
-            b_eff = store_n_buckets(spark, ledger_path, EB_COL, n_buckets)
-            validate_layout(
-                spark, ledger_path, ledger, EB_COL, _eb_of_buckets, b_eff
-            )
-            ebs = touched_buckets(new_bands, _eb_of_buckets, b_eff)
-            probe = prune_to_buckets(ledger, EB_COL, ebs)
-        probe = probe.select(id_col, "band", "sig")
+        ebs = touched_buckets(new_bands, _eb_of_buckets, b_eff)
+        probe = prune_to_buckets(ledger, EB_COL, ebs).select(
+            id_col, "band", "sig"
+        )
     collided = collision_ids(new_bands, probe, id_col).localCheckpoint(
         eager=True
     )
@@ -170,9 +164,5 @@ def incremental_embedding_dedup(
     delta = new_bands.join(F.broadcast(collided), id_col, "left_anti")
     if append:
         delta = delta.localCheckpoint(eager=True)
-        append_embedding_bands(
-            delta,
-            ledger_path,
-            store_n_buckets(spark, ledger_path, EB_COL, n_buckets),
-        )
+        append_embedding_bands(delta, ledger_path, b_eff or n_buckets)
     return survivors, delta

@@ -28,12 +28,12 @@ append-ledger in this engine (see similarity_dedup's band ledger) the
 small-file count is bounded by batches x buckets and compacted by
 rewriting the partition (``bucketed_ledger.compact_bucketed``).
 
-Round 9: the layout mechanics (append/prune/compact, the
-``_bucket_meta.json`` sidecar, mismatched-bucket-count detection) live
+Round 9: the layout mechanics (append/prune/compact, the store log
+that records the bucket count, mismatched-bucket-count detection) live
 in the SHARED :mod:`operators.bucketed_ledger`; this module keeps the
 novelty semantics. Probes DERIVE the bucket count from the store's
-own sidecar (a caller's stale ``n_buckets`` can no longer mis-prune);
-appends VALIDATE it and raise ``BucketLayoutError`` on mismatch.
+own log (a caller's stale ``n_buckets`` can no longer mis-prune);
+appends check it and raise ``storage.LayoutError`` on mismatch.
 """
 
 from __future__ import annotations
@@ -43,13 +43,11 @@ from pyspark.sql import functions as F
 
 from ..functions.localframe import local_rows_df
 
-from ..storage import read_parquet_if_exists
 from .bucketed_ledger import (
     append_bucketed,
     prune_to_buckets,
-    store_n_buckets,
+    read_bucketed,
     touched_buckets,
-    validate_layout,
 )
 from .novelty import per_doc_novelty, seen_keys
 
@@ -80,9 +78,9 @@ def append_ledger_delta(
 ) -> None:
     """Append a tranche's first-occurrences under their key buckets.
 
-    Layout mechanics (bucket repartition before the write, the
-    ``_bucket_meta.json`` sidecar, loud refusal of a mismatched
-    ``n_buckets``) are the shared helper's
+    Layout mechanics (bucket repartition before the write, the store
+    log, loud refusal of a mismatched ``n_buckets``) are the shared
+    helper's
     (:func:`operators.bucketed_ledger.append_bucketed`)."""
     append_bucketed(
         new_firsts,
@@ -97,14 +95,13 @@ def append_ledger_delta(
 def read_ledger(spark: SparkSession, path: str) -> DataFrame | None:
     """The persisted ledger (with its ``kb`` partition column), or
     None before the first append."""
-    return read_parquet_if_exists(spark, path)
+    return read_bucketed(spark, path)[0]
 
 
 def score_shingled_tranche_against_ledger(
     sh: DataFrame,
     ledger_path: str,
     id_col: str = "doc_id",
-    n_buckets: int = DEFAULT_BUCKETS,
     checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Score a tranche against the PERSISTED ledger with bucket-pruned
@@ -120,35 +117,26 @@ def score_shingled_tranche_against_ledger(
     tranche's distinct BUCKET ids (<= n_buckets ints), and a ledger
     scan PRUNED to those buckets with the tranche keys broadcast
     (left-semi; the ledger side is never shuffled, sorted, or
-    broadcast). A ledger written WITHOUT the kb layout
-    (legacy/unpartitioned) is detected by schema and scanned
-    unpruned. ``checkpoint=False`` keeps plans lazy for inspection.
+    broadcast). ``checkpoint=False`` keeps plans lazy for inspection.
 
-    The probe's bucket count is DERIVED from the ledger's own sidecar
-    (``bucketed_ledger.store_n_buckets``) — the caller's ``n_buckets``
-    only sizes a legacy/first-write ledger, so a stale caller constant
-    can no longer silently mis-prune (round-8 ADVICE)."""
+    The probe's bucket count is DERIVED from the ledger's own log
+    (``bucketed_ledger.read_bucketed``), so no caller constant can
+    silently mis-prune it (round-8 ADVICE)."""
     spark = sh.sparkSession
     firsts_t = sh.groupBy("shingle_md5").agg(
         F.min(id_col).alias("first_doc")
     )
     if checkpoint:
         firsts_t = firsts_t.localCheckpoint(eager=True)
-    ledger = read_ledger(spark, ledger_path)
+    ledger, b_eff = read_bucketed(spark, ledger_path)
     if ledger is None:
         seen = local_rows_df(spark, [], "shingle_md5 string")
     else:
-        if KB_COL in ledger.columns:
-            b_eff = store_n_buckets(spark, ledger_path, KB_COL, n_buckets)
-            validate_layout(
-                spark, ledger_path, ledger, KB_COL, _kb_of_buckets, b_eff
-            )
-            # bounded driver envelope: <= n_buckets distinct ints;
-            # isin over the PARTITION column is what turns into
-            # PartitionFilters (file-listing-level pruning)
-            kbs = touched_buckets(firsts_t, _kb_of_buckets, b_eff)
-            ledger = prune_to_buckets(ledger, KB_COL, kbs)
-        seen = seen_keys(firsts_t, ledger)
+        # bounded driver envelope: <= n_buckets distinct ints; isin
+        # over the PARTITION column is what turns into PartitionFilters
+        # (file-listing-level pruning)
+        kbs = touched_buckets(firsts_t, _kb_of_buckets, b_eff)
+        seen = seen_keys(firsts_t, prune_to_buckets(ledger, KB_COL, kbs))
     new_firsts = firsts_t.join(
         F.broadcast(seen), "shingle_md5", "left_anti"
     )

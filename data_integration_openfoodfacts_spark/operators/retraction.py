@@ -15,13 +15,14 @@ downstream cache validity.
 Mechanics per touched bucket: stage the bucket's surviving rows
 (store scan PRUNED to touched buckets, broadcast-anti-joined against
 the key set) into a temp directory, then swap each bucket directory
-with `storage.swap_dir`, parking the old bucket in a trash directory
-NEXT TO the store (inside it, the parked ``kb=N`` directory would
-break every read of the store with a conflicting partition column) —
-a failed swap loses no data (old bucket restored from trash, or left
-there and named in the error) and a replayed retraction is idempotent
-(anti-join of already-deleted keys is a no-op rewrite). The sidecar is
-untouched: retraction never changes the layout.
+in with `storage.swap_partitions`, which parks the old bucket in a
+trash directory NEXT TO the store (inside it, the parked ``kb=N``
+directory would break every read of the store with a conflicting
+partition column) — a failed swap loses no data (old bucket restored
+from trash, or left there and named in the error) and a replayed
+retraction is idempotent (anti-join of already-deleted keys is a
+no-op rewrite). The log is untouched: retraction never changes the
+layout.
 
 Retraction vs the Bloom screen: the bit_or word table is monotone and
 CANNOT retract (SURVEY round-11 candidate #6); after retracting from
@@ -31,19 +32,13 @@ callers own that ordering.
 
 from __future__ import annotations
 
-import uuid
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..storage import hadoop_fs, swap_dir
-from .bucketed_ledger import (
-    prune_to_buckets,
-    store_n_buckets,
-    touched_buckets,
-    validate_layout,
-)
+from ..storage import read_parquet_if_exists, swap_partitions
+from .bucketed_ledger import layout, prune_to_buckets, touched_buckets
 
 
 def retract_keys_bucketed(
@@ -53,22 +48,22 @@ def retract_keys_bucketed(
     bucket_of: Callable[[int], Column],
     keys: DataFrame,
     key_col: str,
-    n_buckets_fallback: int,
 ) -> int:
     """Delete every row of the store at ``path`` whose ``key_col``
     appears in ``keys``. Returns the number of rows removed. The store
     must carry the shared bucketed layout; its OWN bucket count (the
-    sidecar's) wins, and a mismatched caller constant is refused
-    loudly before anything is rewritten.
+    log's) decides which buckets the keys touch.
 
     Cost class: one bounded driver collect of the keys' bucket ids,
     a store scan PRUNED to those buckets with the KEY SET broadcast
     into the anti-join (never the store side — the keys are the small
     side by the takedown premise), and a rewrite of only the touched
     bucket directories."""
-    existing = spark.read.parquet(path)
-    n_buckets = store_n_buckets(spark, path, bucket_col, n_buckets_fallback)
-    validate_layout(spark, path, existing, bucket_col, bucket_of, n_buckets)
+    found = layout(spark, path)
+    existing = found and read_parquet_if_exists(spark, found[0])
+    if existing is None:
+        return 0
+    data, n_buckets = found
     key_rows = keys.select(F.col(key_col)).distinct().localCheckpoint(
         eager=True
     )
@@ -96,8 +91,7 @@ def retract_keys_bucketed(
         F.broadcast(key_rows), key_col, "left_anti"
     )
     cols = [c for c in existing.columns if c != bucket_col]
-    base = path.rstrip("/")
-    staged = f"{base}__retract_stage"
+    staged = f"{path.rstrip('/')}__retract_stage"
     (
         survivors.select(*cols, F.col(bucket_col))
         .repartition(bucket_col)
@@ -105,45 +99,24 @@ def retract_keys_bucketed(
         .partitionBy(bucket_col)
         .parquet(staged)
     )
-    fs, _, jvm = hadoop_fs(spark, path)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    trash = HPath(f"{base}__trash_{uuid.uuid4().hex[:8]}")
-    fs.mkdirs(trash)
-    try:
-        for b in buckets:
-            # a bucket whose every row was deleted has no staged dir —
-            # swap_dir's delete IS the rewrite
-            part = f"{bucket_col}={b}"
-            swap_dir(
-                fs, HPath(f"{base}/{part}"), HPath(f"{staged}/{part}"),
-                HPath(trash, part),
-            )
-    finally:
-        fs.delete(HPath(staged), True)
-        # kept only while it holds a bucket a failed restore left there
-        if len(fs.listStatus(trash)) == 0:
-            fs.delete(trash, True)
+    # a bucket whose every row was deleted has no staged dir — the
+    # swap's delete IS the rewrite
+    swap_partitions(
+        spark, data, staged, [f"{bucket_col}={b}" for b in buckets]
+    )
     return removed
 
 
 def retract_from_novelty_ledger(
-    spark: SparkSession,
-    ledger_path: str,
-    shingle_md5s: DataFrame,
-    n_buckets_fallback: int | None = None,
+    spark: SparkSession, ledger_path: str, shingle_md5s: DataFrame
 ) -> int:
     """Takedown for the shingle-novelty ledger: retracting a revoked
     document's shingle keys makes them score NOVEL again on the next
     tranche — the ledger forgets the document ever contributed. Pass
     the doc's ``shingle_md5`` rows (one column of md5 strings)."""
-    from .novelty_ledger import DEFAULT_BUCKETS, KB_COL, _kb_of_buckets
+    from .novelty_ledger import KB_COL, _kb_of_buckets
 
     return retract_keys_bucketed(
-        spark,
-        ledger_path,
-        KB_COL,
-        _kb_of_buckets,
-        shingle_md5s,
+        spark, ledger_path, KB_COL, _kb_of_buckets, shingle_md5s,
         "shingle_md5",
-        n_buckets_fallback or DEFAULT_BUCKETS,
     )

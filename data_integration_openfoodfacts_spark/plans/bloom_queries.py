@@ -3,10 +3,6 @@ broadcast alternative to q46's exact benchmark-contamination join —
 the structure a 100 TB "seen n-gram / seen URL" screen actually ships
 to executors when the key set itself is too large to broadcast.
 
-New module on purpose (CLAUDE.md): per-module fingerprints keep this
-closure (operators/bloom -> similarity_dedup.md5_long/word_shingles)
-from re-staling the ~60 queries in llm_queries' closure.
-
 Both queries are EXACTLY replayable in SQL — the filter is md5-derived
 integer arithmetic end-to-end, so even its false positives hash-match
 the DuckDB oracle (the cross-engine word-table parity was probed
@@ -226,7 +222,7 @@ def q170_bloom_incremental_novelty(
     0 — deliberately OVERLAPPING the seed on doc_id % 6 == 0, so both
     routing legs are non-zero) screens against it via
     `screen_keys_batch`: probe the persisted table, totals row,
-    definitely-new bits merged in, geometry sidecar validated. Keys
+    definitely-new bits merged in, geometry checked against the log. Keys
     are exact-text md5 (the keep-latest dedup family's key). Returns
     the snapshot's totals row; the oracle replays the seed build and
     the probe in SQL, pinning the word arithmetic AND the routing

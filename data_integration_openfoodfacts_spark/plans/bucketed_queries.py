@@ -1,8 +1,5 @@
 """Bucketed-table queries (round 10 continuation): the write-once
 shuffle-forever-free co-located join (`sources/bucketed_tables.py`).
-
-New module on purpose (CLAUDE.md): keeps the bucketed-tables closure
-out of every other plans module's fingerprint.
 """
 
 from __future__ import annotations

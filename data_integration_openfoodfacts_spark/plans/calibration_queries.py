@@ -2,9 +2,6 @@
 calibration profile — how many near-dup pairs (and docs) each Jaccard
 band holds, i.e. exactly the marginal-cost curve a pipeline owner
 reads before picking a dedup threshold.
-
-New module on purpose (CLAUDE.md): keeps this closure out of
-llm_queries' fingerprint.
 """
 
 from __future__ import annotations

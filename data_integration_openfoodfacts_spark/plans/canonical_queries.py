@@ -2,9 +2,6 @@
 BEST member of each near-dup cluster, not the arbitrary min-id one —
 the composition of connected components (q150's clustering) with rank
 fusion (q183's scale-free quality ensemble).
-
-New module on purpose (CLAUDE.md): keeps this closure out of
-llm_queries' and fusion_queries' fingerprints.
 """
 
 from __future__ import annotations

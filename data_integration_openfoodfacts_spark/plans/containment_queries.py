@@ -3,10 +3,6 @@
 subsumption case the symmetric Jaccard family (q18/q19/q85) cannot
 see, because a short doc quoted inside a long one has low Jaccard and
 LSH band collisions track Jaccard, not containment.
-
-New module on purpose (CLAUDE.md): the closure (operators/containment
--> similarity_dedup's shingle helpers) stays out of llm_queries'
-fingerprint.
 """
 
 from __future__ import annotations

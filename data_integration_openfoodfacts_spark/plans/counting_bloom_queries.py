@@ -8,10 +8,6 @@ per-position occurrence counts, so a takedown is integer subtraction
 and the post-takedown screen is POSITION-IDENTICAL to one rebuilt from
 the surviving occurrences — false positives included, which is what
 the oracle pins.
-
-New module on purpose (CLAUDE.md): the closure (operators/bloom ->
-similarity_dedup.md5_long/word_shingles) stays out of llm_queries' and
-bloom_queries' fingerprints.
 """
 
 from __future__ import annotations
@@ -164,9 +160,9 @@ def q178_counting_store_takedown(
     (`streaming/counting_store.py`) instead of in-memory frames, with
     the store's replay/compaction contracts exercised inside the gated
     path: three ingest deltas partition the corpus (doc_id % 3), batch
-    1 is deliberately REPLAYED both before compaction (completed
-    directory → no-op) and after it (directory gone, sidecar tombstone
-    → refused), deltas compact into the base partition mid-flight, and
+    1 is deliberately REPLAYED both before compaction (id already in
+    the store log → no-op) and after it (absorbed-id tombstone →
+    refused), deltas compact into the base partition mid-flight, and
     the takedown lands as a negative delta. The final probe must
     cross-tab IDENTICALLY to q176 — the oracle is the same fixed-point
     SQL, so the gate pins that the persisted delta layout, the replay

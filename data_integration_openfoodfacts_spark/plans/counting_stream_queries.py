@@ -5,10 +5,6 @@ this module drives the persistent deletable screen's FULL lifecycle
 (availableNow drain with per-trigger deltas, mid-stream compaction,
 whole-stream replay no-op, takedown, final probe) inside a gated query
 whose DuckDB twin replays the position arithmetic bit-for-bit.
-
-New module on purpose (CLAUDE.md): the closure (streaming/
-counting_store -> operators/bloom -> similarity_dedup.md5_long) stays
-out of counting_bloom_queries' and bloom_queries' fingerprints.
 """
 
 from __future__ import annotations

@@ -2,11 +2,6 @@
 novelty — the two train/eval hygiene operators a production
 data-curation pipeline runs AFTER dedup and BEFORE shipping shards.
 
-New module on purpose: queries fingerprint by their implementing
-module's import closure (tools/gate_state.py), so landing new queries
-here — instead of growing plans/llm_queries.py — re-verifies only the
-new entries, not the sixty existing queries in that closure.
-
 Reference-parity note: the reference (Sevlac/data-integration-
 openfoodfacts) has no train/eval machinery — these extend the engine
 along the LLM-training-data axis the build brief calls for, like

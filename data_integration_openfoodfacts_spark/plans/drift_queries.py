@@ -6,8 +6,7 @@ The gated output is deliberately ln-free (measured one-ulp JVM/DuckDB
 ``ln`` divergence — see the operator docstring); the PSI's log factor
 is reader-side over the 10-row profile.
 
-New module on purpose (CLAUDE.md): composes the q134 scorer machinery
-without touching llm_queries' fingerprint.
+It composes the q134 scorer machinery.
 """
 
 from __future__ import annotations

@@ -2,11 +2,6 @@
 `operators/embedding_ingest.py` as a first-class gated query — the
 q128 crawl-ingestion pattern on the embedding modality, end-to-end
 through a PERSISTED eb-bucketed hyperplane-signature ledger.
-
-New module on purpose (CLAUDE.md): per-module fingerprints keep this
-closure (embedding_ingest -> similarity/_band_layout,
-similarity_dedup.collision_ids, bucketed_ledger) from re-staling the
-other round-9 modules and vice versa.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Weighted-fingerprint queries (round 10):
 `operators/weighted_fingerprint.py` gated against a DuckDB replay.
-New module on purpose (CLAUDE.md): keeps the closure out of
-llm_queries' fingerprint (q20's unweighted twin lives there)."""
+q20's unweighted twin lives in llm_queries."""
 
 from __future__ import annotations
 

@@ -1,8 +1,5 @@
 """Rank-fusion queries (round 10 continuation): scale-free ensembling
 of heterogeneous quality signals (`operators/rank_fusion.py`).
-
-New module on purpose (CLAUDE.md): keeps the rank-fusion closure out
-of every other plans module's fingerprint.
 """
 
 from __future__ import annotations

@@ -3,11 +3,6 @@ battery and the incremental shingle-novelty ledger — the two
 front-of-pipeline operators a production curation stack runs on every
 new crawl tranche before any model or heavy dedup cost.
 
-New module on purpose (CLAUDE.md): queries fingerprint by their
-implementing module's import closure, so landing round-7 queries here
-— instead of growing plans/llm_queries.py or curation_queries.py —
-re-verifies only these entries per edit.
-
 Reference-parity note: the reference (Sevlac/data-integration-
 openfoodfacts) has no text-quality or novelty machinery — these extend
 the engine along the LLM-training-data axis the build brief calls for.

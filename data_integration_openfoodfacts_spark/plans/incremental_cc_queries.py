@@ -10,10 +10,6 @@ new-edge cost. The gate splits the corpus into an "existing" half
 "new" half, feeds ONLY the edges touching new docs to the merge, and
 the DuckDB oracle recursively walks the FULL pair graph — the
 incremental result must equal the from-scratch clustering exactly.
-
-New module on purpose (CLAUDE.md): its closure adds graph_incremental
-to the q151-family imports without re-fingerprinting any existing
-query module.
 """
 
 from __future__ import annotations

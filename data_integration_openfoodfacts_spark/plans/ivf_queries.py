@@ -3,9 +3,6 @@ knob on the inverted-file ANN path (`operators/similarity.py::ivf_topk`
 already takes nprobe; q25 pins nprobe=1 — this pins the multi-probe
 setting, completing the probe-more-buckets story on the IVF side the
 way q186 did for hyperplane LSH).
-
-New module on purpose (CLAUDE.md): keeps this closure out of
-llm_queries' fingerprint.
 """
 
 from __future__ import annotations

@@ -1,9 +1,8 @@
 """k-core queries (round 10 continuation): dense-subgraph extraction
 on the near-dup graph (`operators/kcore.py`).
 
-New module on purpose (CLAUDE.md): keeps the k-core closure out of
-llm_queries' fingerprint (q82's triangle counts share the edge recipe
-but live there).
+q82's triangle counts share this module's edge recipe but live in
+llm_queries.
 """
 
 from __future__ import annotations

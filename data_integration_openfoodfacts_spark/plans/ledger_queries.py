@@ -2,10 +2,6 @@
 novelty ledger (`operators/novelty_ledger.py`) exercised end-to-end —
 write, prune, score, append — as a first-class gated query.
 
-New module on purpose (CLAUDE.md): queries fingerprint by their
-implementing module's import closure, so landing round-8 queries here
-keeps future edits from re-staling the hygiene/curation modules.
-
 Reference-parity note: the reference (Sevlac/data-integration-
 openfoodfacts) has no novelty machinery — this extends the engine
 along the LLM-training-data axis the build brief calls for.
@@ -82,7 +78,7 @@ def q163_partitioned_novelty_ledger(
                 "doc_id", "shingle_md5"
             )
             _, new_firsts = score_shingled_tranche_against_ledger(
-                sh, ledger_path, n_buckets=16
+                sh, ledger_path
             )
             # totals ride the checkpointed frames; collect happens
             # after the temp ledger is gone

@@ -2,8 +2,7 @@
 for embedding retrieval with zero extra index
 (`operators/multiprobe.py`).
 
-New module on purpose (CLAUDE.md): keeps the multiprobe closure out of
-llm_queries' fingerprint (the single-probe family lives there).
+The single-probe family lives in llm_queries.
 """
 
 from __future__ import annotations

@@ -17,10 +17,6 @@ same from-scratch recursive walk as q200/q201 over ALL banded pairs —
 the induction the star edges rely on ("every (band, sig) group is
 connected through its minimum because earlier tranches connected it
 when they arrived") is exactly what the full-corpus comparison pins.
-
-New module on purpose (CLAUDE.md): its closure adds collision_edges +
-corpus_ingest to the ledger-query family without re-fingerprinting
-any existing module's queries.
 """
 
 from __future__ import annotations
@@ -53,7 +49,7 @@ def q202_neardup_ingest_component_lifecycle(
     from ..concurrency import overlap
     from ..operators.bucketed_ledger import (
         prune_to_buckets,
-        store_n_buckets,
+        read_bucketed,
         touched_buckets,
     )
     from ..operators.component_ledger import (
@@ -66,7 +62,6 @@ def q202_neardup_ingest_component_lifecycle(
         _sb_of_buckets,
         append_bands,
     )
-    from ..storage import read_parquet_if_exists
     from ..functions.localframe import local_rows_df
 
     from ..operators.graph import connected_components
@@ -91,13 +86,12 @@ def q202_neardup_ingest_component_lifecycle(
     def _tranche(t: int):
         batch = docs.filter(F.col("doc_id") % 3 == t).select("doc_id")
         new_bands = all_bands.filter(F.col("doc_id") % 3 == t)
-        ledger = read_parquet_if_exists(spark, bands_path)
+        ledger, sb_eff = read_bucketed(spark, bands_path)
         if ledger is None:
             ledger = local_rows_df(
                 spark, [], "doc_id long, band long, sig string"
             )
-        elif SB_COL in ledger.columns:
-            sb_eff = store_n_buckets(spark, bands_path, SB_COL, 8)
+        else:
             sbs = touched_buckets(new_bands, _sb_of_buckets, sb_eff)
             ledger = prune_to_buckets(ledger, SB_COL, sbs)
         edges = collision_star_edges(

@@ -1,8 +1,7 @@
 """Phrase-search queries (round 10 continuation): positional exact
 phrase retrieval (`operators/phrase_search.py`).
 
-New module on purpose (CLAUDE.md): keeps the phrase-search closure out
-of llm_queries' fingerprint (BM25 keyword search q96 lives there).
+BM25 keyword search (q96) lives in llm_queries.
 """
 
 from __future__ import annotations

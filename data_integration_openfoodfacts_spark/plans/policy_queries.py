@@ -11,10 +11,6 @@ policies, value-gated.
   a request id retracts at most once even when a later queue file
   re-delivers it, and the oracle's net-count replay only passes if
   no occurrence was subtracted twice.
-
-New module on purpose (CLAUDE.md): queries fingerprint by their
-implementing module's import closure, so landing these here instead
-of growing llm_queries re-verifies only the new entries.
 """
 
 from __future__ import annotations

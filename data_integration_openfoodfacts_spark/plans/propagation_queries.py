@@ -2,10 +2,8 @@
 sparse quality labels through the near-duplicate graph
 (`operators/propagation.py`).
 
-New module on purpose (CLAUDE.md): the closure (propagation ->
-similarity_dedup.ngram_jaccard_pairs) stays out of llm_queries'
-fingerprint. The shingle/pair SQL is a local copy of the established
-3-gram recipe for the same reason.
+The shingle/pair SQL is a local copy of the established 3-gram
+recipe.
 """
 
 from __future__ import annotations

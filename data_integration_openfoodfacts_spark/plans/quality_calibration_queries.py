@@ -13,10 +13,9 @@ precisely the plan you don't ship at corpus scale. Both engines band
 the bit-identical sigmoid double with the same floor arithmetic, so
 the cross-tab replays exactly.
 
-New module on purpose (CLAUDE.md): composes two already-gated
-machineries (q134 scorer, q158 battery) without touching either
-module's fingerprint; q190 (calibration_queries.py) profiles the
-DEDUP threshold — this profiles the QUALITY threshold.
+It composes two already-gated machineries (the q134 scorer, the q158
+battery); q190 (calibration_queries.py) profiles the DEDUP threshold —
+this profiles the QUALITY threshold.
 """
 
 from __future__ import annotations

@@ -11,9 +11,6 @@ cross-tab, plus the duplicate-5-GRAM family q61 doesn't compute —
 where per-row HOF counting would blow up (5-gram distinct counts
 approach n), so the plan switches to the explode + doc-keyed
 aggregation shape that survives 100 TB.
-
-New module on purpose (CLAUDE.md): keeps the repetition closure out of
-the rule-battery and sampling modules' fingerprints.
 """
 
 from __future__ import annotations

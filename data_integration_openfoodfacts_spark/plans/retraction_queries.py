@@ -1,8 +1,6 @@
 """Retraction queries (round 10): the takedown path
 (`operators/retraction.py`) gated end-to-end through the persisted
-novelty ledger. New module on purpose (CLAUDE.md): the closure
-(retraction -> bucketed_ledger/novelty_ledger) stays out of the
-ledger/llm modules' fingerprints.
+novelty ledger.
 """
 
 from __future__ import annotations
@@ -35,6 +33,7 @@ def q175_ledger_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.novelty import doc_shingle_keys
     from ..operators.novelty_ledger import (
         append_ledger_delta,
+        read_ledger,
         score_shingled_tranche_against_ledger,
     )
     from ..operators.retraction import retract_from_novelty_ledger
@@ -48,20 +47,16 @@ def q175_ledger_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="q175_ledger_")
     path = f"{tmp}/ledger"
     try:
-        _, new_firsts = score_shingled_tranche_against_ledger(
-            sh, path, n_buckets=16
-        )
+        _, new_firsts = score_shingled_tranche_against_ledger(sh, path)
         append_ledger_delta(new_firsts, path, n_buckets=16)
         takedown_keys = (
-            spark.read.parquet(path)
+            read_ledger(spark, path)
             .filter(F.col("first_doc") % _TAKEDOWN_MOD == 0)
             .select("shingle_md5")
             .localCheckpoint(eager=True)
         )
-        retract_from_novelty_ledger(spark, path, takedown_keys, 16)
-        per_doc, _ = score_shingled_tranche_against_ledger(
-            sh, path, n_buckets=16
-        )
+        retract_from_novelty_ledger(spark, path, takedown_keys)
+        per_doc, _ = score_shingled_tranche_against_ledger(sh, path)
         out = per_doc.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -12,9 +12,6 @@ family against per-query exact top-k. All ranking uses the engine's
 deterministic tiebreaks (cosine DESC, id ASC; NULL cosines coalesced
 to -2.0) so the DuckDB twin replays signatures, bit flips, Voronoi
 assignment and both recall numerators bit-for-bit.
-
-New module on purpose (CLAUDE.md): keeps this closure out of
-multiprobe_queries' and ivf_queries' fingerprints.
 """
 
 from __future__ import annotations

@@ -1,9 +1,6 @@
 """Schema-drift queries (round 10 continuation): multi-generation
 parquet read + conformance to a target contract
 (`sources/schema_evolution.py`).
-
-New module on purpose (CLAUDE.md): keeps the schema-evolution closure
-out of every other plans module's fingerprint.
 """
 
 from __future__ import annotations

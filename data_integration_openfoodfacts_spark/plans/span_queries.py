@@ -3,10 +3,6 @@
 first-class gated query — the removal half of Lee et al. substring
 dedup at TOKEN-SPAN grain (q139 counts the duplicated spans; q140
 removes at chunk grain; q166 cuts the exact spans and reassembles).
-
-New module on purpose (CLAUDE.md): per-module fingerprints — landing
-q166 here keeps future substring_dedup edits from re-staling the
-training-query closure and vice versa.
 """
 
 from __future__ import annotations

@@ -3,9 +3,6 @@ containment join — drop documents that live (almost) entirely inside a
 bigger host, attributing each drop to its best host. q180 FINDS the
 asymmetric pairs; this is the curation decision on top of them, the
 same find->act pattern as q188 over the symmetric clusters.
-
-New module on purpose (CLAUDE.md): keeps this closure out of
-containment_queries' fingerprint.
 """
 
 from __future__ import annotations

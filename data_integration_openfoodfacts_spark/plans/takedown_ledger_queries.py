@@ -12,9 +12,6 @@ expressible in SQL: the full-corpus recursive walk, minus the
 retracted docs, relabelled per component with a window MIN — so the
 oracle pins both halves of the contract (partition preserved, label
 = min survivor).
-
-New module on purpose (CLAUDE.md): only q203's own fingerprint
-depends on it.
 """
 
 from __future__ import annotations

@@ -7,10 +7,6 @@ retracts per KEY (a requested key vanishes even when another owner
 survives). The result cross-tab carries both verdicts against ground
 truth, so the gate pins the counting screen's no-false-negative cell
 AND the exact ledger's key-level semantics in one shot.
-
-New module on purpose (CLAUDE.md): the closure (retraction_stream ->
-counting_store + retraction -> bucketed_ledger/novelty_ledger) stays
-out of every other plans module's fingerprint.
 """
 
 from __future__ import annotations

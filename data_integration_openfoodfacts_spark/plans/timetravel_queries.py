@@ -3,10 +3,6 @@ persisted counting store (`streaming/counting_store.py::read_counts_as_of`)
 — the Delta-Lake/Iceberg version-read idea over plain parquet delta
 partitions, with compaction as the VACUUM that bounds readable history.
 
-New module on purpose (CLAUDE.md): the closure (counting_store ->
-operators/bloom -> similarity_dedup.md5_long/word_shingles) stays out
-of llm_queries' and counting_bloom_queries' fingerprints.
-
 Scale posture: an as-of read is a partition-column ``delta_id IN``
 filter (the scan prunes to exactly the needed delta files) + the same
 O(m)-row groupBy(p) every current-state read pays; nothing scales with
@@ -87,8 +83,8 @@ def q179_counting_store_time_travel(
 
     from ..concurrency import overlap
     from ..operators.bloom import bloom_probe_keys, counting_to_words
+    from ..storage import LayoutError
     from ..streaming.counting_store import (
-        CountingLayoutError,
         append_counting_deltas,
         compact_counting,
         read_counts_as_of,
@@ -179,7 +175,7 @@ def q179_counting_store_time_travel(
         try:
             read_counts_as_of(spark, path, 1)
             raise AssertionError("vacuumed version 1 must be unreadable")
-        except CountingLayoutError:
+        except LayoutError:
             pass
         parts = []
         for v, _w in _VERSIONS:

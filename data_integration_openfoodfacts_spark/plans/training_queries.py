@@ -5,10 +5,6 @@ bit-for-bit against DuckDB replaying the same integer iterations;
 q165 closes the DCLM loop by feeding the trained weights into q134's
 inference join and gating the per-label keep counts.
 
-New module on purpose (CLAUDE.md): queries fingerprint by their
-implementing module's import closure, so landing round-9 queries here
-keeps future edits from re-staling the llm/curation closures.
-
 Reference-parity note: the reference (Sevlac/data-integration-
 openfoodfacts) has no ML machinery — this extends the engine along
 the LLM-training-data axis the build brief calls for (fastText-style

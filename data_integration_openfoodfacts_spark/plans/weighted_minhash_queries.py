@@ -2,9 +2,6 @@
 q174's tf-weighted SimHash — multiset-faithful near-dup pairs via
 integer-weight consistent sampling (`operators/weighted_minhash.py`;
 the ICWS float-draw rejection is argued in that module's docstring).
-
-New module on purpose (CLAUDE.md): the closure (weighted_minhash ->
-similarity_dedup primitives) stays out of llm_queries' fingerprint.
 """
 
 from __future__ import annotations

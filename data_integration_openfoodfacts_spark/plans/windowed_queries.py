@@ -1,8 +1,5 @@
 """Windowed-ledger queries (round 10 continuation): sliding-window
 dedup with O(1) epoch expiry (`operators/windowed_ledger.py`).
-
-New module on purpose (CLAUDE.md): keeps the windowed-ledger closure
-out of every other plans module's fingerprint.
 """
 
 from __future__ import annotations
@@ -50,8 +47,8 @@ def q184_windowed_novelty_expiry(
         append_window_epoch,
         expire_through,
         score_tranche_windowed,
-        window_meta,
     )
+    from ..storage import read_state
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     from ..operators.similarity_dedup import word_shingles
@@ -88,7 +85,7 @@ def q184_windowed_novelty_expiry(
             occ.filter(F.col("epoch") == 1).select("shingle_md5"),
             "shingle_md5", path, 1, _NB,
         )
-        mark = window_meta(spark, path)["expired_through"]
+        mark = read_state(spark, path)[1]["expired_through"]
         if replayed or dropped != [0, 1] or resurrected or mark != 1:
             raise AssertionError(
                 f"ledger lifecycle contract broke: replay wrote="

@@ -23,8 +23,8 @@ Mechanics (all standard Spark, no table format required):
 - Bucket counts must MATCH across join sides (Spark joins equal-count
   bucketed tables exchange-free; mismatched counts re-shuffle one
   side). Pick the count once per subject area and keep it — the same
-  discipline as `operators/bucketed_ledger.py`'s sidecar-pinned
-  layouts, enforced here by the catalog instead of a sidecar.
+  discipline as `operators/bucketed_ledger.py`'s log-pinned
+  layouts, enforced here by the catalog instead of a store log.
 
 Cite: reference has no bucketing surface (its MySQL sink re-indexes
 instead); this is the Spark-native answer to the same "avoid repaying

@@ -1,24 +1,48 @@
-"""How a store commits to disk: the one module that renames, swaps or
-claims anything on a Hadoop filesystem (lint-enforced).
+"""How a store commits to disk: the one module that renames anything
+or holds the Hadoop ``FileSystem`` handle (lint-enforced).
 
-Every persisted store is plain parquet plus small JSON sidecars, so the
-commit protocol the file format lacks lives here, in three primitives:
-the sidecar publish (`write_json_sidecar`), the directory swap
-(`swap_dir`, under `overwrite_parquet_atomically`) and the partition
-claim (`claim_partition`). Everything goes through the Hadoop
-``FileSystem`` API (`hadoop_fs`), so the same code runs on local disk
-and object stores. Hadoop's ``rename`` reports failure through its
-boolean return, not an exception; every rename here is checked. The
-windows between renames are inherent to rename-based commits; a table
-format with a transaction log (Delta Lake, VLDB 2020) removes them.
+Every persisted store is plain parquet plus one create-only log,
+``path/_log/<N>.json``. Entry ``N`` holds the store's WHOLE state: its
+geometry (bucket count, filter size) and whatever says which of its
+directories are live. Writers follow the data-then-log order of a
+table format's transaction log (Delta Lake, VLDB 2020):
+
+- a store commits its header (entry 0) when it is created, before any
+  data (`open_store`);
+- new data lands in a directory the latest entry does not list yet,
+  and becomes live when the next entry (`commit`) lists it (an append
+  to a bucketed store adds files to its listed data directory instead,
+  and its caller's anti-join deduplicates a replay);
+- directories the latest entry no longer lists are deleted after that
+  entry is committed (`vacuum`); a whole-store rewrite (`rewrite`)
+  lands in a new directory and retires the old one the same way.
+
+A crash therefore leaves at worst an unlisted directory, which no
+read sees and a replay overwrites or `vacuum` removes. An entry is
+committed by staging it and renaming it to a NEW ``N``; an existing
+entry is never overwritten, and a populated store without a log is
+refused (`LayoutError`) rather than guessed at. The log is read
+through the Hadoop ``FileSystem`` API (`hadoop_fs`), so the same code
+runs on local disk and object stores; Hadoop reports a failed rename
+through its boolean return, and every rename here is checked.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+LOG_DIR = "_log"
+_ENTRY = re.compile(r"^(\d+)\.json$")
+
+
+class LayoutError(ValueError):
+    """A caller disagrees with a store's persisted layout (geometry,
+    reserved ids, unreadable versions), or a populated store has no
+    log to describe itself — proceeding would silently mis-read it."""
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -30,88 +54,142 @@ def hadoop_fs(spark: SparkSession, path: str):
     return hpath.getFileSystem(jsc.hadoopConfiguration()), hpath, jvm
 
 
-def read_json_sidecar(
-    spark: SparkSession, path: str, filename: str
-) -> dict | None:
-    """The JSON sidecar ``path/filename``, or None when absent OR
-    corrupt."""
-    fs, _, jvm = hadoop_fs(spark, path)
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{filename}")
-    if not fs.exists(mpath):
+def _has_data(fs, hpath) -> bool:
+    """Whether ``hpath`` is, or holds, a data file: one with no ``_*``
+    or ``.*`` name on its path below ``hpath`` (markers, checksums and
+    the log are not data). The walk stops at the first one."""
+    if not fs.exists(hpath):
+        return False
+
+    def holds(status) -> bool:
+        return not status.isDirectory() or any(
+            holds(st) for st in fs.listStatus(status.getPath())
+            if not st.getPath().getName().startswith(("_", "."))
+        )
+
+    return holds(fs.getFileStatus(hpath))
+
+
+def read_state(spark: SparkSession, path: str) -> tuple[int, dict] | None:
+    """``(N, state)`` of the store's newest log entry; None for a store
+    that does not exist yet (no log, no data). A populated store without
+    a log raises `LayoutError`: nothing says which of its directories
+    are live or what geometry wrote them."""
+    fs, root, jvm = hadoop_fs(spark, path)
+    log = jvm.org.apache.hadoop.fs.Path(root, LOG_DIR)
+    versions = [
+        int(m.group(1))
+        for st in (fs.listStatus(log) if fs.exists(log) else [])
+        if (m := _ENTRY.match(st.getPath().getName()))
+    ]
+    if not versions:
+        if _has_data(fs, root):
+            raise LayoutError(
+                f"{path}: populated store has no {LOG_DIR} — its geometry "
+                "and live directories are unrecoverable; rebuild it"
+            )
         return None
-    stream = fs.open(mpath)
+    n = max(versions)
+    stream = fs.open(jvm.org.apache.hadoop.fs.Path(log, f"{n}.json"))
     try:
         # JVM-side full read: py4j passes Python bytearrays to
         # InputStream.read(byte[]) BY VALUE, so the classic read-loop
         # never fills the Python buffer. commons-io ships with Spark.
-        text = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
-    try:
-        return json.loads(text)
-    except json.JSONDecodeError:
-        # A truncated/corrupt sidecar (crash mid-write on a filesystem
-        # without atomic rename) must not brick the store: treat it as
-        # absent — each store's validation then falls back to its
-        # data-derived check (bucket layouts sample-recompute the
-        # modulus), and the next stamp rewrites a good sidecar.
-        return None
+    return n, json.loads(text)
 
 
-def write_json_sidecar(
-    spark: SparkSession, path: str, filename: str, payload: dict
-) -> None:
-    """Stage-then-rename a JSON sidecar: a crash mid-write must never
-    leave TRUNCATED JSON at the canonical name. The temp name keeps the
-    underscore prefix so Spark's file index ignores it too. The worst
-    crash window (between delete and rename, on filesystems without
-    overwriting rename) leaves NO sidecar — the absent-sidecar fallback
-    path, which is safe."""
-    fs, _, jvm = hadoop_fs(spark, path)
-    base = path.rstrip("/")
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{base}/{filename}")
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{base}/_{filename}.tmp")
-    out = fs.create(tmp, True)
+def commit(spark: SparkSession, path: str, n: int, state: dict) -> None:
+    """Commit ``state`` as log entry ``n``: stage it under a temporary
+    name, then rename it to ``_log/<n>.json``. The rename refuses an
+    existing target, so an entry is never overwritten and a second
+    writer of the same ``n`` fails instead of clobbering it."""
+    fs, root, jvm = hadoop_fs(spark, path)
+    log = jvm.org.apache.hadoop.fs.Path(root, LOG_DIR)
+    entry = jvm.org.apache.hadoop.fs.Path(log, f"{n}.json")
+    tmp = jvm.org.apache.hadoop.fs.Path(log, f"_{uuid.uuid4().hex}.tmp")
+    out = fs.create(tmp, False)
     try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
+        out.write(bytearray(json.dumps(state).encode("utf-8")))
     finally:
         out.close()
-    if fs.exists(mpath):
-        fs.delete(mpath, False)
-    if not fs.rename(tmp, mpath):
-        raise IOError(f"{path}: failed to publish {filename} sidecar")
+    if fs.exists(entry) or not fs.rename(tmp, entry):
+        fs.delete(tmp, False)
+        raise LayoutError(f"{path}: could not commit log entry {n}")
+
+
+def check_geometry(path: str, state: dict, **geometry) -> None:
+    """Raise `LayoutError` unless the store was laid out with
+    ``geometry`` — a probe or append under another bucket count or
+    filter size silently mis-routes every key."""
+    for key, want in geometry.items():
+        if state.get(key) != want:
+            raise LayoutError(
+                f"{path}: store layout has {key}={state.get(key)!r}, caller "
+                f"passed {want!r} — all writers and readers of one store "
+                "must share its geometry"
+            )
+
+
+def open_store(
+    spark: SparkSession, path: str, geometry: dict, empty: dict
+) -> tuple[int, dict]:
+    """``(N, state)`` for a writer: an existing store's newest entry,
+    checked against ``geometry``; a new store first commits its header
+    ``{**geometry, **empty}`` as entry 0."""
+    found = read_state(spark, path)
+    if found is None:
+        state = {**geometry, **empty}
+        commit(spark, path, 0, state)
+        return 0, state
+    check_geometry(path, found[1], **geometry)
+    return found
+
+
+def rewrite(
+    spark: SparkSession, path: str, n: int, state: dict, name: str, write
+) -> None:
+    """A whole-store rewrite: ``write(dir)`` lands the new data in the
+    store's new directory ``name``, entry ``n + 1`` commits ``state``
+    (which names it), then every other directory is deleted."""
+    write(f"{path.rstrip('/')}/{name}")
+    commit(spark, path, n + 1, state)
+    vacuum(spark, path, {name})
+
+
+def vacuum(spark: SparkSession, path: str, live: set[str]) -> list[str]:
+    """Delete every top-level directory of the store that ``live`` does
+    not name (the log and ``_``/``.`` names excepted): the directories
+    an entry just retired, and any a crashed writer left unlisted. Call
+    only AFTER committing the entry that retires them. Returns the
+    deleted names."""
+    fs, root, _ = hadoop_fs(spark, path)
+    dropped = []
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if not name.startswith(("_", ".")) and name not in live:
+            fs.delete(st.getPath(), True)
+            dropped.append(name)
+    return dropped
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str):
     """Read a parquet target, returning None when the path does not
     exist OR holds no data files yet (an all-empty PARTITIONED append
-    writes only a _SUCCESS marker, no footers, so the very first real
-    batch of a bucketed ledger can find the directory present but
-    schemaless). Any other failure (corrupt file, permission, FS
-    timeout) propagates from ``spark.read`` — treating it as "first
-    batch" would silently overwrite and destroy the accumulated target.
+    writes only a _SUCCESS marker, no footers). Any other failure
+    (corrupt file, permission, FS timeout) propagates from
+    ``spark.read``.
 
     Both "missing" states are probed via the Hadoop FS API BEFORE
     calling ``spark.read``: catching Spark's AnalysisException instead
     still lets Spark log the full PATH_NOT_FOUND /
     UNABLE_TO_INFER_SCHEMA stack trace to stderr on every expected
-    first-batch ledger probe. A missing ledger is an ordinary state
-    here, not an error — no exception may be raised OR logged for it.
-    The recursive listing stops at the first data file, and is work
-    ``spark.read``'s own file index would repeat anyway."""
+    first-batch ledger probe."""
     fs, hpath, _ = hadoop_fs(spark, path)
-    if not fs.exists(hpath):
+    if not _has_data(fs, hpath):
         return None
-    if fs.getFileStatus(hpath).isDirectory():
-        it = fs.listFiles(hpath, True)
-        while True:
-            if not it.hasNext():
-                return None  # markers/sidecars only — no footers yet
-            name = it.next().getPath().getName()
-            if not name.startswith(("_", ".")):
-                break
     return spark.read.parquet(path)
 
 
@@ -144,9 +222,32 @@ def swap_dir(fs, target, staged, trash) -> None:
         fs.delete(trash, True)
 
 
-def overwrite_parquet_atomically(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
+def swap_partitions(
+    spark: SparkSession, path: str, staged: str, names: list[str]
 ) -> None:
+    """`swap_dir` each partition directory ``names[i]`` of ``path``
+    with its twin under ``staged`` (a missing twin deletes it); the
+    partitions not named are left byte-identical. Old partitions park
+    in a trash directory next to ``staged``, so ``staged`` must lie
+    OUTSIDE the store. ``staged`` is removed afterwards; the trash is
+    kept only while it holds a partition a failed restore left there."""
+    fs, _, jvm = hadoop_fs(spark, path)
+    HPath = jvm.org.apache.hadoop.fs.Path
+    trash = HPath(f"{staged}__trash_{uuid.uuid4().hex[:8]}")
+    fs.mkdirs(trash)
+    try:
+        for name in names:
+            swap_dir(
+                fs, HPath(f"{path.rstrip('/')}/{name}"),
+                HPath(f"{staged}/{name}"), HPath(trash, name),
+            )
+    finally:
+        fs.delete(HPath(staged), True)
+        if len(fs.listStatus(trash)) == 0:
+            fs.delete(trash, True)
+
+
+def overwrite_parquet_atomically(df: DataFrame, path: str) -> None:
     """Write-to-temp-then-swap: a plain overwrite of a path the plan is
     lazily reading from deletes the source mid-computation if any cached
     partition is evicted and recomputed. The temp write fully
@@ -158,10 +259,7 @@ def overwrite_parquet_atomically(
     token = uuid.uuid4().hex[:8]
     base = path.rstrip("/")
     tmp = f"{base}__tmp_{token}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     fs, hpath, jvm = hadoop_fs(spark, path)
     htmp = jvm.org.apache.hadoop.fs.Path(tmp)
     try:
@@ -173,18 +271,3 @@ def overwrite_parquet_atomically(
     finally:
         if fs.exists(htmp):
             fs.delete(htmp, True)
-
-
-def claim_partition(spark: SparkSession, path: str) -> bool:
-    """Claim partition directory ``path`` for a write. False when
-    ``path/_SUCCESS`` exists — the partition already committed and a
-    replay must write nothing. Otherwise True, after deleting any torn
-    directory a crashed writer left without its marker (a
-    ``mode("ignore")`` write would keep the torn partition, and cannot
-    report whether it skipped)."""
-    fs, hdir, jvm = hadoop_fs(spark, path)
-    if fs.exists(hdir):
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(hdir, "_SUCCESS")):
-            return False
-        fs.delete(hdir, True)
-    return True

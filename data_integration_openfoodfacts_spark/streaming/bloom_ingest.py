@@ -26,10 +26,10 @@ Crash-replay semantics (foreachBatch is at-least-once):
 - The merge is idempotent: a replayed batch's keys are already set, so
   its definitely-new set is empty and the union is an identity
   rewrite.
-- The word-table swap is `storage.overwrite_parquet_atomically` (temp
-  write materializes fully before the target moves), and the filter
-  geometry ``{n_words, k}`` rides a `_bloom_meta.json` sidecar
-  (`storage.write_json_sidecar`; self-describing store, loud refusal on
+- Each merge writes the new word table to a new directory ``v<N>``,
+  which log entry ``N`` of the store log (`storage`) then names before
+  the previous table is deleted; every entry also records the filter
+  geometry ``{n_words, k}`` (self-describing store, loud refusal on
   mismatch — a probe under the wrong geometry reads garbage bits and
   silently mis-routes every key).
 """
@@ -40,57 +40,48 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localframe import local_rows_df
-from ..operators.bloom import bloom_build, bloom_probe_keys, bloom_union
+from ..operators.bloom import (
+    bloom_build,
+    bloom_probe_keys,
+    bloom_union,
+    screen_totals,
+)
 from ..storage import (
-    overwrite_parquet_atomically,
-    read_json_sidecar,
+    LayoutError,
+    open_store,
     read_parquet_if_exists,
-    write_json_sidecar,
+    read_state,
+    rewrite,
 )
 
 __all__ = [
-    "BloomLayoutError",
     "seed_bloom",
-    "store_params",
     "screen_keys_batch",
 ]
 
-BLOOM_META = "_bloom_meta.json"
 DEFAULT_WORDS = 1 << 16  # 64Ki words = ~4.1M bits (~0.5 MB broadcast)
 DEFAULT_K = 5
 
 
-class BloomLayoutError(ValueError):
-    """A reader/writer's (n_words, k) disagrees with the persisted
-    word table's geometry — probing with the wrong modulus reads
-    garbage bits and silently mis-routes every key."""
+def _open(
+    spark: SparkSession, bloom_path: str, n_words: int, k: int
+) -> tuple[int, dict]:
+    return open_store(
+        spark, bloom_path, {"n_words": int(n_words), "k": int(k)},
+        {"data": None},
+    )
 
 
-def store_params(
-    spark: SparkSession, path: str, n_words: int, k: int
-) -> tuple[int, int]:
-    """The store's OWN geometry — sidecar when present (raising on a
-    caller mismatch), the caller's values for a brand-new store. An
-    existing store WITHOUT a sidecar is refused outright: unlike the
-    bucket ledgers, a word table carries no per-row redundancy to
-    sample-validate against, so a geometry guess can never be checked."""
-    meta = read_json_sidecar(spark, path, BLOOM_META)
-    if meta is not None:
-        if int(meta["n_words"]) != n_words or int(meta["k"]) != k:
-            raise BloomLayoutError(
-                f"{path}: word table was built with n_words="
-                f"{meta['n_words']}, k={meta['k']}; caller passed "
-                f"({n_words}, {k}) — all writers and readers of one "
-                "filter must share its geometry"
-            )
-        return int(meta["n_words"]), int(meta["k"])
-    if read_parquet_if_exists(spark, path) is not None:
-        raise BloomLayoutError(
-            f"{path}: existing word table has no {BLOOM_META} sidecar — "
-            "its geometry is unrecoverable from the data; rebuild the "
-            "filter (or restore the sidecar) before ingesting"
-        )
-    return n_words, k
+def _write_words(
+    spark: SparkSession, bloom_path: str, n: int, state: dict,
+    words: DataFrame,
+) -> None:
+    """Make ``words`` the word table of entry ``n + 1``."""
+    data = f"v{n + 1}"
+    rewrite(
+        spark, bloom_path, n, {**state, "data": data}, data,
+        lambda d: words.coalesce(1).write.mode("overwrite").parquet(d),
+    )
 
 
 def seed_bloom(
@@ -102,21 +93,19 @@ def seed_bloom(
 ) -> None:
     """Bootstrap a word table from an existing key corpus (the batch
     backfill before a stream attaches — q128/q167's seeded-corpus
-    shape). Refuses to clobber an existing store: seeding is a
+    shape). Refuses to clobber an existing table: seeding is a
     create-once operation; incremental keys go through
     `screen_keys_batch`."""
     spark = keys.sparkSession
-    if read_parquet_if_exists(spark, bloom_path) is not None:
-        raise BloomLayoutError(
+    found = read_state(spark, bloom_path)
+    if found is not None and found[1]["data"] is not None:
+        raise LayoutError(
             f"{bloom_path}: refusing to seed over an existing word "
             "table — ingest incrementally via screen_keys_batch"
         )
-    bloom_build(keys, key, n_words, k).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(bloom_path)
-    write_json_sidecar(
-        spark, bloom_path, BLOOM_META,
-        {"n_words": int(n_words), "k": int(k)},
+    n, state = _open(spark, bloom_path, n_words, k)
+    _write_words(
+        spark, bloom_path, n, state, bloom_build(keys, key, n_words, k)
     )
 
 
@@ -137,8 +126,10 @@ def screen_keys_batch(
     one groupBy over k rows per distinct batch key, and an O(n_words)
     union rewrite. Nothing scales with corpus size."""
     spark = keys.sparkSession
-    n_words, k = store_params(spark, bloom_path, n_words, k)
-    existing = read_parquet_if_exists(spark, bloom_path)
+    n, state = _open(spark, bloom_path, n_words, k)
+    existing = state["data"] and read_parquet_if_exists(
+        spark, f"{bloom_path.rstrip('/')}/{state['data']}"
+    )
     bloom = (
         existing
         if existing is not None
@@ -146,22 +137,12 @@ def screen_keys_batch(
     )
     # no checkpoint: the probe is pure md5 arithmetic (recomputations
     # are bit-identical), and both consumers — the totals row and the
-    # new-words build inside the merge's TEMP write — run while the
-    # pre-batch table is still at its path (the atomic swap renames
-    # only after the temp write fully materializes)
+    # new-words build inside the merge's write — read the pre-batch
+    # table, which stays in place until the new one is committed
     flags = bloom_probe_keys(keys, key, bloom, n_words, k)
-    totals = flags.agg(
-        F.count(F.lit(1)).alias("n_keys"),
-        F.coalesce(
-            F.sum((~F.col("maybe_member")).cast("long")), F.lit(0)
-        ).cast("long").alias("n_definitely_new"),
-        F.coalesce(
-            F.sum(F.col("maybe_member").cast("long")), F.lit(0)
-        ).cast("long").alias("n_maybe"),
-    ).select(F.lit(batch_id).cast("long").alias("batch_id"), "*")
     # totals FIRST (vs the pre-batch table), then the merge — see the
     # module docstring's crash-window argument
-    totals.coalesce(1).write.mode("ignore").parquet(
+    screen_totals(flags, batch_id).coalesce(1).write.mode("ignore").parquet(
         f"{results_path}/batch_id={batch_id}"
     )
     new_words = bloom_build(
@@ -170,8 +151,4 @@ def screen_keys_batch(
     merged = (
         bloom_union(existing, new_words) if existing is not None else new_words
     )
-    overwrite_parquet_atomically(merged.coalesce(1), bloom_path)
-    write_json_sidecar(
-        spark, bloom_path, BLOOM_META,
-        {"n_words": int(n_words), "k": int(k)},
-    )
+    _write_words(spark, bloom_path, n, state, merged)

@@ -35,8 +35,7 @@ DOCS_STREAM_SCHEMA = StructType(
 #: so a batch's collision probe prunes the ledger read to the buckets
 #: its own signatures touch (PartitionFilters at file-listing level;
 #: sizing math in operators/novelty_ledger.py's module doc applies
-#: verbatim). A pre-existing ledger WITHOUT the sb column keeps its
-#: legacy flat layout on append (mixed layouts don't read back).
+#: verbatim).
 BAND_LEDGER_BUCKETS = 64
 SB_COL = "sb"
 
@@ -55,21 +54,16 @@ def band_bucket(band, sig, n_buckets: int = BAND_LEDGER_BUCKETS):
 
 
 def append_bands(
-    rows: DataFrame,
-    bands_path: str,
-    partitioned: bool = True,
-    n_buckets: int = BAND_LEDGER_BUCKETS,
+    rows: DataFrame, bands_path: str, n_buckets: int = BAND_LEDGER_BUCKETS
 ) -> None:
-    """Append (doc_id, band, sig) rows to the band ledger under its
-    layout — bucketed (default) or legacy flat. Layout mechanics are
-    the shared helper's (:mod:`operators.bucketed_ledger`)."""
-    rows = rows.select("doc_id", "band", "sig")
-    if not partitioned:
-        rows.write.mode("append").parquet(bands_path)
-        return
+    """Append (doc_id, band, sig) rows to the band ledger. Layout
+    mechanics are the shared helper's (:mod:`operators.bucketed_ledger`)."""
     from ..operators.bucketed_ledger import append_bucketed
 
-    append_bucketed(rows, bands_path, SB_COL, _sb_of_buckets, n_buckets)
+    append_bucketed(
+        rows.select("doc_id", "band", "sig"), bands_path, SB_COL,
+        _sb_of_buckets, n_buckets,
+    )
 
 
 def read_docs_stream(

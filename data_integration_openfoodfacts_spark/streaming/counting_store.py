@@ -5,53 +5,53 @@ retracts by appending a NEGATIVE delta here.
 
 Layout: ``path/delta_id=<name>/`` parquet partitions of ``(p, cnt)``
 position-count rows (`operators/bloom.py::counting_build`'s shape),
-plus a ``_counting_meta.json`` sidecar carrying the filter geometry
-``{n_words, k}`` and the delta ids already ABSORBED by compaction.
-The live table is the per-position SUM across every delta — inserts
-are positive deltas, takedowns negative ones, and summation is
+plus the store log (`storage`), whose every entry carries the filter
+geometry ``{n_words, k}``, the APPLIED ``log`` of delta ids, the ids
+compaction ``absorbed`` and the ``base`` partition that holds them.
+The live table is the per-position SUM across the live deltas —
+inserts are positive deltas, takedowns negative ones, and summation is
 commutative, so readers never care about arrival order.
 
 Crash/replay contract (foreachBatch is at-least-once), deliberately
 DIFFERENT from the bit screen's (`bloom_ingest`): a bit-OR merge is
 idempotent, a count merge is NOT — replaying an applied batch would
-double-count every key. Idempotence here comes from the LAYOUT
-instead of the algebra:
+double-count every key. Idempotence here comes from the LOG instead
+of the algebra:
 
-- each delta writes into its own ``delta_id=`` partition behind an
-  explicit completed-directory check (_SUCCESS present → replay
-  writes nothing, first-writer-wins; directory WITHOUT _SUCCESS → a
-  crashed partial write, deleted and rewritten);
-- compaction sums every delta into a single ``delta_id=base``
-  partition (staged-write-then-swap) and records the absorbed ids in
-  the sidecar — a replay of a PRE-compaction batch would otherwise
-  find its directory gone and re-append; the absorbed list is the
-  tombstone that refuses it. The list grows by one entry per absorbed
-  delta (bytes per batch — a production store on an ACID table format
-  gets this from transaction ids instead);
+- each delta writes into its own ``delta_id=`` partition and is live
+  only once a log entry lists it; a replay of a logged (or absorbed)
+  id writes nothing, and a directory a crash left unlisted is
+  invisible to every read and overwritten by the replay;
+- compaction sums the live deltas into a new ``delta_id=base-<N>``
+  partition, logs it with the absorbed ids as entry ``N``, then
+  deletes the absorbed partitions — the absorbed list is the tombstone
+  that refuses a replay of a PRE-compaction batch. It grows by one
+  entry per absorbed delta (bytes per batch — a production store on
+  an ACID table format gets this from transaction ids instead);
 - single WRITER per store (the one stream / the one takedown job) —
-  the same contract every ledger in this engine ships; concurrent
-  writers need the ACID-format swap-in documented in storage.
+  the same contract every ledger in this engine ships.
 
 Probes derive the ``(w, bits)`` word table from the summed counts and
 run the standard broadcast probe — O(sum of delta sizes) read +
 O(m) groupBy, never anything scaling with corpus size.
 
-Time travel (round 10 continuation): the sidecar also carries a
-``log`` — the delta ids in APPLIED order (the single-writer contract
-makes that order well-defined) — so ``read_counts_as_of(version)``
-reconstructs any historical state as the sum of a log PREFIX, exactly
-the Delta-Lake/Iceberg version-read idea expressed over plain parquet
-partitions. Compaction is also the VACUUM: once deltas are absorbed
-into ``delta_id=base``, every version that cuts the log strictly
-before the absorption horizon is physically unreconstructable and the
-read raises instead of silently returning the compacted state — the
-same retention trade a `VACUUM`'d Delta table makes. Versions at or
-past the horizon read as ``base`` (the absorbed prefix) plus the
-surviving per-delta partitions, selected by a partition-column filter
-so the scan prunes to exactly the needed files. This store is the one
-whose layout retains per-batch history (the bit screen overwrites a
-single word table in place; the exact ledgers rewrite touched buckets),
-which is why time travel lives here.
+Time travel (round 10 continuation): the applied ``log`` is in
+APPLIED order (the single-writer contract makes that order
+well-defined), so ``read_counts_as_of(version)`` reconstructs any
+historical state as the sum of a log PREFIX, exactly the
+Delta-Lake/Iceberg version-read idea expressed over plain parquet
+partitions; the live table is ``read_counts_as_of`` the latest
+version. Compaction is also the VACUUM: once deltas are absorbed into
+the base, every version that cuts the log strictly before the
+absorption horizon is physically unreconstructable and the read raises
+instead of silently returning the compacted state — the same
+retention trade a `VACUUM`'d Delta table makes. Versions at or past
+the horizon read as the base (the absorbed prefix) plus the surviving
+per-delta partitions, selected by a partition-column filter so the
+scan prunes to exactly the needed files. This store is the one whose
+layout retains per-batch history (the bit screen keeps a single word
+table; the exact ledgers rewrite touched buckets), which is why time
+travel lives here.
 """
 
 from __future__ import annotations
@@ -68,18 +68,20 @@ from ..operators.bloom import (
     bloom_probe_keys,
     counting_build,
     counting_to_words,
+    screen_totals,
 )
 from ..storage import (
-    claim_partition,
-    overwrite_parquet_atomically,
-    read_json_sidecar,
+    LayoutError,
+    check_geometry,
+    commit,
+    open_store,
     read_parquet_if_exists,
-    write_json_sidecar,
+    read_state,
+    rewrite,
+    vacuum,
 )
 
 __all__ = [
-    "CountingLayoutError",
-    "store_geometry",
     "write_counting_delta",
     "append_counting_deltas",
     "retract_counting",
@@ -92,68 +94,26 @@ __all__ = [
     "run_counting_screen_stream",
 ]
 
-COUNTING_META = "_counting_meta.json"
 DEFAULT_WORDS = 1 << 16
 DEFAULT_K = 5
 BASE_DELTA = "base"
 
 
-class CountingLayoutError(ValueError):
-    """Geometry disagreement with the persisted store, a sidecar-less
-    existing store (unrecoverable geometry), or a delta id colliding
-    with the reserved compaction partition."""
-
-
-def _meta(spark: SparkSession, path: str) -> dict | None:
-    return read_json_sidecar(spark, path, COUNTING_META)
-
-
-def _write_meta(
-    spark: SparkSession, path: str, n_words: int, k: int,
-    absorbed: list[str], log: list[str],
-) -> None:
-    # ``absorbed`` is an unordered tombstone SET (sorted for stable
-    # bytes); ``log`` is the applied ORDER and must never be sorted.
-    write_json_sidecar(
-        spark, path, COUNTING_META,
-        {"n_words": int(n_words), "k": int(k),
-         "absorbed": sorted(absorbed), "log": list(log)},
+def _open(
+    spark: SparkSession, path: str, n_words: int, k: int
+) -> tuple[int, dict]:
+    return open_store(
+        spark, path, {"n_words": int(n_words), "k": int(k)},
+        {"log": [], "absorbed": [], "base": None},
     )
 
 
-def _delta_dir(path: str, delta_id: str) -> str:
-    return f"{path.rstrip('/')}/delta_id={delta_id}"
-
-
-def store_geometry(
-    spark: SparkSession, path: str, n_words: int, k: int
-) -> tuple[int, int, list[str], list[str]]:
-    """(n_words, k, absorbed_ids, applied_log) — sidecar-validated like
-    the bit screen's `store_params`: an existing store without a
-    sidecar is refused outright (a word-position table carries nothing
-    to sample-validate a geometry guess against). Stores written before
-    the version log existed return ``log == []`` — current-state reads
-    work unchanged; only `read_counts_as_of` needs the log and says so."""
-    meta = _meta(spark, path)
-    if meta is not None:
-        if int(meta["n_words"]) != n_words or int(meta["k"]) != k:
-            raise CountingLayoutError(
-                f"{path}: counting store was built with n_words="
-                f"{meta['n_words']}, k={meta['k']}; caller passed "
-                f"({n_words}, {k}) — all writers and readers of one "
-                "filter must share its geometry"
-            )
-        return (
-            int(meta["n_words"]), int(meta["k"]),
-            list(meta.get("absorbed", [])), list(meta.get("log", [])),
-        )
-    if read_parquet_if_exists(spark, path) is not None:
-        raise CountingLayoutError(
-            f"{path}: existing counting store has no {COUNTING_META} "
-            "sidecar — its geometry is unrecoverable from the data; "
-            "rebuild the store (or restore the sidecar)"
-        )
-    return n_words, k, [], []
+def live_deltas(state: dict) -> list[str]:
+    """The delta partitions every live read sums: the compacted base
+    plus each logged delta compaction has not absorbed."""
+    absorbed = set(state["absorbed"])
+    base = [state["base"]] if state["base"] else []
+    return base + [d for d in state["log"] if d not in absorbed]
 
 
 def write_counting_delta(
@@ -167,9 +127,9 @@ def write_counting_delta(
 ) -> bool:
     """Append one delta partition (`append_counting_deltas` with one
     item); returns False (and writes nothing) when the delta was
-    already applied — its ``delta_id=`` directory is committed or
-    compaction absorbed it (sidecar tombstone). ``sign=-1`` is the
-    takedown path. Single-writer contract (module docstring)."""
+    already applied — the log lists it, or compaction absorbed it.
+    ``sign=-1`` is the takedown path. Single-writer contract (module
+    docstring)."""
     return append_counting_deltas(
         keys.sparkSession, [(delta_id, keys, sign)], key, path, n_words, k
     )[delta_id]
@@ -189,56 +149,29 @@ def append_counting_deltas(
     directories, so they overlap on driver threads (`overlap`, the
     guide's overlap-independent-jobs recipe — each delta-build job's
     straggler tail back-fills with the next delta's tasks instead of
-    idling the local cluster); the sidecar is then written ONCE,
-    appending the ids to the log in the CALLER's list order, so the
-    applied log — and therefore every `read_counts_as_of` version cut
-    — is exactly what the equivalent sequence of
-    `write_counting_delta` calls would have produced. The live table
-    never depends on arrival order at all (summation is commutative;
-    module docstring).
+    idling the local cluster); ONE log entry then lists the new ids in
+    the CALLER's list order, so the applied log — and therefore every
+    `read_counts_as_of` version cut — is exactly what the equivalent
+    sequence of `write_counting_delta` calls would have produced.
 
-    Contracts preserved, not weakened:
-
-    - single WRITER per store: the one caller coordinates; the
-      threads are its internal fan-out, and the sidecar
-      read-modify-write happens exactly once, after they all finish;
-    - per-delta idempotence: absorbed ids (compaction tombstone) and
-      committed directories (`storage.claim_partition`) are refused,
-      torn directories are deleted and rewritten, and a
-      committed-but-unlogged directory (crash between the parquet
-      writes and the sidecar write) heals the log on replay;
-    - all-or-nothing is NOT promised (it never was across separate
-      calls either): a crash mid-batch leaves some directories complete
-      and unlogged — a replay of the same ordered batch heals them in
-      list order and writes the rest.
+    Ids the log already lists (or compaction absorbed) are refused.
+    The batch is all-or-nothing: if any write fails, nothing is
+    logged, the deltas that did land stay invisible, and a replay of
+    the same batch overwrites them.
 
     Returns ``{delta_id: wrote_anything}`` (False = refused replay).
     """
     ids = [d for d, _df, _s in items]
     if len(set(ids)) != len(ids):
-        raise CountingLayoutError(
-            f"duplicate delta ids in one batch append: {ids}"
+        raise LayoutError(f"duplicate delta ids in one batch append: {ids}")
+    if any(d == BASE_DELTA or d.startswith(f"{BASE_DELTA}-") for d in ids):
+        raise LayoutError(
+            f"delta ids '{BASE_DELTA}' and '{BASE_DELTA}-*' are reserved "
+            "for compaction output"
         )
-    if BASE_DELTA in ids:
-        raise CountingLayoutError(
-            f"delta_id '{BASE_DELTA}' is reserved for compaction output"
-        )
-    n_words, k, absorbed, log = store_geometry(spark, path, n_words, k)
-    applied: dict[str, bool] = {}
-    loggable: list[str] = []  # ids to append, in the CALLER's order
-    pending: list[tuple[str, DataFrame, int]] = []
-    for delta_id, keys, sign in items:
-        if delta_id in absorbed:
-            applied[delta_id] = False
-            continue
-        loggable.append(delta_id)
-        if claim_partition(spark, _delta_dir(path, delta_id)):
-            pending.append((delta_id, keys, sign))
-        else:
-            # completed directory: refuse the rewrite, heal the log
-            # below at this id's LIST position — exactly where a
-            # sequential replay would have healed it
-            applied[delta_id] = False
+    n, state = _open(spark, path, n_words, k)
+    done = set(state["log"])
+    pending = [it for it in items if it[0] not in done]
 
     def _write_one(item: tuple[str, DataFrame, int]) -> None:
         delta_id, keys, sign = item
@@ -247,17 +180,16 @@ def append_counting_deltas(
             delta = delta.select("p", (-F.col("cnt")).alias("cnt"))
         # coalesce(1): one file per delta — the table is bounded by m
         # rows, never worth parallel output.
-        delta.coalesce(1).write.mode("errorifexists").parquet(
-            _delta_dir(path, delta_id)
+        delta.coalesce(1).write.mode("overwrite").parquet(
+            f"{path.rstrip('/')}/delta_id={delta_id}"
         )
 
     overlap(spark, *[partial(_write_one, it) for it in pending])
-    for delta_id, _keys, _sign in pending:
-        applied[delta_id] = True
-    new_log = log + [d for d in loggable if d not in log]
-    if new_log != log:
-        _write_meta(spark, path, n_words, k, absorbed, new_log)
-    return applied
+    if pending:
+        commit(spark, path, n + 1, {
+            **state, "log": state["log"] + [d for d, _df, _s in pending],
+        })
+    return {d: d not in done for d in ids}
 
 
 def retract_counting(
@@ -276,18 +208,46 @@ def retract_counting(
     )
 
 
-def read_counts(spark: SparkSession, path: str) -> DataFrame:
-    """Live position-count table: per-position sum across all deltas,
-    zero rows dropped (negative rows kept as over-retraction
-    evidence)."""
-    deltas = read_parquet_if_exists(spark, path)
+def _sum_deltas(
+    spark: SparkSession, path: str, wanted: list[str]
+) -> DataFrame:
+    """Per-position sum over the ``wanted`` delta partitions (a
+    partition filter, so the scan prunes to their files), zero rows
+    dropped (negative rows kept as over-retraction evidence)."""
+    deltas = read_parquet_if_exists(spark, path) if wanted else None
     if deltas is None:
         return local_rows_df(spark, [], "p long, cnt long")
     return (
-        deltas.groupBy("p")
+        deltas.filter(F.col("delta_id").isin(wanted))
+        .groupBy("p")
         .agg(F.sum("cnt").alias("cnt"))
         .filter(F.col("cnt") != 0)
     )
+
+
+def read_counts(spark: SparkSession, path: str) -> DataFrame:
+    """Live position-count table: `read_counts_as_of` the latest
+    version (empty before the first delta is logged)."""
+    found = read_state(spark, path)
+    if found is None or not found[1]["log"]:
+        return local_rows_df(spark, [], "p long, cnt long")
+    return read_counts_as_of(spark, path, len(found[1]["log"]))
+
+
+def _versions(path: str, found: tuple[int, dict] | None) -> dict:
+    if found is None:
+        raise LayoutError(f"{path}: not a counting store")
+    log, absorbed = found[1]["log"], set(found[1]["absorbed"])
+    min_readable = 1
+    for i, d in enumerate(log):
+        if d in absorbed:
+            min_readable = i + 1
+    return {
+        "log": log,
+        "absorbed": sorted(absorbed),
+        "latest": len(log),
+        "min_readable": min_readable,
+    }
 
 
 def store_versions(spark: SparkSession, path: str) -> dict:
@@ -295,33 +255,8 @@ def store_versions(spark: SparkSession, path: str) -> dict:
     ``absorbed`` (compaction tombstones), ``latest`` (= len(log)), and
     ``min_readable`` — the smallest version whose log prefix covers
     every absorbed delta (1 when nothing was compacted). Versions below
-    ``min_readable`` were vacuumed by compaction and cannot be read.
-    ``min_readable`` is ``None`` when the absorbed set is NOT covered
-    by the log (a legacy store compacted before the version log
-    existed, then appended to): no log prefix reconstructs any
-    historical state, so no version is readable — only the current
-    state via `read_counts` (round-11 ADVICE: reporting 1 here
-    advertised an 'earliest readable version' that itself raised)."""
-    meta = _meta(spark, path)
-    if meta is None:
-        raise CountingLayoutError(
-            f"{path}: no {COUNTING_META} sidecar — not a counting store"
-        )
-    log = list(meta.get("log", []))
-    absorbed = set(meta.get("absorbed", []))
-    if not absorbed <= set(log):
-        min_readable = None
-    else:
-        min_readable = 1
-        for i, d in enumerate(log):
-            if d in absorbed:
-                min_readable = i + 1
-    return {
-        "log": log,
-        "absorbed": sorted(absorbed),
-        "latest": len(log),
-        "min_readable": min_readable,
-    }
+    ``min_readable`` were vacuumed by compaction and cannot be read."""
+    return _versions(path, read_state(spark, path))
 
 
 def read_counts_as_of(
@@ -331,57 +266,30 @@ def read_counts_as_of(
     after the first ``version`` entries of the applied log (1-based;
     ``version == len(log)`` is the current state). Reconstruction is a
     partition-column filter over the store (``delta_id IN`` the prefix,
-    plus ``base`` when compaction absorbed part of it) + the same sum
-    as `read_counts`, so the scan prunes to exactly the needed delta
+    plus the base when compaction absorbed part of it) + the per-
+    position sum, so the scan prunes to exactly the needed delta
     files. Raises for versions compaction has vacuumed (the absorbed
     set is not covered by the requested prefix — the physical deltas
-    no longer exist) and for pre-version-log legacy stores."""
-    meta = _meta(spark, path)
-    if meta is None:
-        raise CountingLayoutError(
-            f"{path}: no {COUNTING_META} sidecar — not a counting store"
-        )
-    log = list(meta.get("log", []))
-    if not log:
-        raise CountingLayoutError(
-            f"{path}: store has no version log (written before time "
-            "travel existed, or the sidecar was restored without its "
-            "log) — only the current state is readable; use read_counts"
-        )
-    if not 1 <= int(version) <= len(log):
-        raise CountingLayoutError(
+    no longer exist)."""
+    found = read_state(spark, path)
+    vs = _versions(path, found)
+    if not 1 <= int(version) <= vs["latest"]:
+        raise LayoutError(
             f"{path}: version {version} out of range — the log holds "
-            f"versions 1..{len(log)}"
+            f"versions 1..{vs['latest']}"
         )
-    prefix = log[: int(version)]
-    absorbed = set(meta.get("absorbed", []))
-    if not absorbed <= set(prefix):
-        mr = store_versions(spark, path)["min_readable"]
-        hint = (
-            f"the earliest readable version is {mr}"
-            if mr is not None
-            else "NO historical version is readable — compaction "
-            "predates the version log (legacy store); only the "
-            "current state is reconstructible, via read_counts"
-        )
-        raise CountingLayoutError(
+    if int(version) < vs["min_readable"]:
+        raise LayoutError(
             f"{path}: version {version} predates the compaction "
-            f"horizon — compaction absorbed {sorted(absorbed)} into "
-            f"'{BASE_DELTA}' and vacuumed their per-delta partitions; "
-            + hint
+            f"horizon — compaction absorbed {vs['absorbed']} into the "
+            "base and vacuumed their per-delta partitions; the earliest "
+            f"readable version is {vs['min_readable']}"
         )
-    wanted = [d for d in prefix if d not in absorbed]
-    if absorbed:
-        wanted.append(BASE_DELTA)
-    deltas = read_parquet_if_exists(spark, path)
-    if deltas is None:
-        return local_rows_df(spark, [], "p long, cnt long")
-    return (
-        deltas.filter(F.col("delta_id").isin(wanted))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("cnt"))
-        .filter(F.col("cnt") != 0)
-    )
+    state = found[1]
+    wanted = [d for d in vs["log"][: int(version)] if d not in vs["absorbed"]]
+    if state["base"]:
+        wanted.append(state["base"])
+    return _sum_deltas(spark, path, wanted)
 
 
 def probe_counting(
@@ -395,7 +303,9 @@ def probe_counting(
     counts collapsed to a word table, broadcast into the standard
     probe join."""
     spark = keys.sparkSession
-    n_words, k, _, _ = store_geometry(spark, path, n_words, k)
+    found = read_state(spark, path)
+    if found is not None:
+        check_geometry(path, found[1], n_words=int(n_words), k=int(k))
     words = counting_to_words(read_counts(spark, path))
     return bloom_probe_keys(keys, key, words, n_words, k)
 
@@ -419,19 +329,8 @@ def screen_keys_batch(
     counting store's whole point is per-owner multiplicity: a later
     takedown of one owner must not unset a key another owner still
     holds."""
-    spark = keys.sparkSession
-    n_words, k, _, _ = store_geometry(spark, path, n_words, k)
     flags = probe_counting(keys, key, path, n_words, k)
-    totals = flags.agg(
-        F.count(F.lit(1)).alias("n_keys"),
-        F.coalesce(
-            F.sum((~F.col("maybe_member")).cast("long")), F.lit(0)
-        ).cast("long").alias("n_definitely_new"),
-        F.coalesce(
-            F.sum(F.col("maybe_member").cast("long")), F.lit(0)
-        ).cast("long").alias("n_maybe"),
-    ).select(F.lit(batch_id).cast("long").alias("batch_id"), "*")
-    totals.coalesce(1).write.mode("ignore").parquet(
+    screen_totals(flags, batch_id).coalesce(1).write.mode("ignore").parquet(
         f"{results_path}/batch_id={batch_id}"
     )
     write_counting_delta(
@@ -445,47 +344,35 @@ def compact_counting(
     n_words: int = DEFAULT_WORDS,
     k: int = DEFAULT_K,
 ) -> None:
-    """Sum every delta into a single ``delta_id=base`` partition
-    (staged write-then-swap) and tombstone the absorbed ids in the
-    sidecar — the small-file hygiene pass, run between stream runs.
-    Post-compaction the live table is unchanged by construction
-    (summation is associative); a replay of an absorbed batch is
-    refused by the tombstone instead of the vanished directory.
+    """Sum the live deltas into a new ``delta_id=base-<N>`` partition,
+    log it as entry ``N`` with the absorbed ids tombstoned, then delete
+    the absorbed partitions — the small-file hygiene pass, run between
+    stream runs. Post-compaction the live table is unchanged by
+    construction (summation is associative); a replay of an absorbed
+    batch is refused by the tombstone. A store with nothing to absorb
+    is left as it is.
 
     Compaction is also the VACUUM (module docstring): absorbed deltas'
     partitions are physically gone afterwards, so every version before
     the absorption horizon becomes unreadable by `read_counts_as_of` —
-    run it on the retention cadence you can afford to lose history at.
-
-    Crash window: the swap replaces the directory (sidecar included)
-    before the sidecar rewrite below — a crash in between leaves a
-    sidecar-less store that `store_geometry` LOUDLY refuses (restore
-    the sidecar with the known geometry + the absorbed list from the
-    pre-crash copy; refusing beats silently guessing a geometry that
-    mis-routes every key). The other stores share this window; ACID
-    table formats remove it."""
-    n_words, k, absorbed, log = store_geometry(spark, path, n_words, k)
-    deltas = read_parquet_if_exists(spark, path)
-    if deltas is None:
+    run it on the retention cadence you can afford to lose history at."""
+    found = read_state(spark, path)
+    if found is None:
         return
-    seen = [
-        r["delta_id"]
-        for r in deltas.select("delta_id").distinct().collect()
-    ]
-    base = (
-        deltas.groupBy("p")
-        .agg(F.sum("cnt").alias("cnt"))
-        .filter(F.col("cnt") != 0)
-        .select("p", "cnt", F.lit(BASE_DELTA).alias("delta_id"))
-        .coalesce(1)
-    )
-    overwrite_parquet_atomically(base, path, partition_by=["delta_id"])
-    # the swap replaced the whole directory, sidecar included — rewrite
-    # it with the union of previously-absorbed and just-absorbed ids
-    newly = [d for d in seen if d != BASE_DELTA]
-    _write_meta(
-        spark, path, n_words, k,
-        sorted(set(absorbed) | set(newly)), log,
+    n, state = found
+    check_geometry(path, state, n_words=int(n_words), k=int(k))
+    absorb = [d for d in state["log"] if d not in set(state["absorbed"])]
+    if not absorb:
+        vacuum(spark, path, {f"delta_id={d}" for d in live_deltas(state)})
+        return
+    base = f"{BASE_DELTA}-{n + 1}"
+    summed = _sum_deltas(spark, path, live_deltas(state)).coalesce(1)
+    rewrite(
+        spark, path, n,
+        {**state, "absorbed": sorted(set(state["absorbed"]) | set(absorb)),
+         "base": base},
+        f"delta_id={base}",
+        lambda d: summed.write.mode("overwrite").parquet(d),
     )
 
 

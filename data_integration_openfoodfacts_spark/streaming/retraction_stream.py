@@ -88,7 +88,6 @@ def fresh_requests(
     requests: DataFrame,
     applied_path: str,
     request_id_col: str = "doc_id",
-    n_buckets: int = REQUEST_BUCKETS,
 ) -> DataFrame:
     """The batch rows whose request id was NEVER applied before —
     per-REQUEST idempotence for unstable queues (duplicate deliveries,
@@ -98,19 +97,17 @@ def fresh_requests(
     the applied ledger is never shuffled or broadcast."""
     from ..operators.bucketed_ledger import (
         prune_to_buckets,
-        store_n_buckets,
+        read_bucketed,
         touched_buckets,
     )
-    from ..storage import read_parquet_if_exists
 
     spark = requests.sparkSession
     ids = requests.dropDuplicates([request_id_col]).withColumn(
         "request_md5", F.md5(F.col(request_id_col).cast("string"))
     )
-    store = read_parquet_if_exists(spark, applied_path)
+    store, nb = read_bucketed(spark, applied_path)
     if store is None:
         return ids
-    nb = store_n_buckets(spark, applied_path, RB_COL, n_buckets)
     kbs = touched_buckets(ids.select("request_md5"), _rb_of, nb)
     seen = prune_to_buckets(store, RB_COL, kbs).join(
         F.broadcast(ids.select("request_md5")), "request_md5",
@@ -201,18 +198,16 @@ def takedown_batch(
             keys.select(F.col("text_md5").alias("shingle_md5")).distinct(),
         )
     if applied_path is not None and int(stats["n_requests"]) > 0:
-        from ..operators.bucketed_ledger import (
-            append_bucketed,
-            store_n_buckets,
-        )
+        from ..operators.bucketed_ledger import append_bucketed, layout
 
         # LAST, so a crash before this line replays into refused
         # deltas / no-op rewrites and then re-appends (docstring).
         # The ledger's OWN bucket count wins over the module default.
-        nb = store_n_buckets(spark, applied_path, RB_COL, REQUEST_BUCKETS)
+        found = layout(spark, applied_path)
         append_bucketed(
             requests.select("request_md5"), applied_path, RB_COL,
-            _rb_of, nb, columns=["request_md5"],
+            _rb_of, found[1] if found else REQUEST_BUCKETS,
+            columns=["request_md5"],
         )
 
 

@@ -45,11 +45,9 @@ def test_counting_threshold_and_state_preserved(spark, tmp_path):
     assert _state(spark, p) == before
     # the vacuum interaction: pre-horizon versions are gone
     assert store_versions(spark, p)["min_readable"] == 3
-    from data_integration_openfoodfacts_spark.streaming.counting_store import (
-        CountingLayoutError,
-    )
+    from data_integration_openfoodfacts_spark.storage import LayoutError
 
-    with pytest.raises(CountingLayoutError, match="horizon"):
+    with pytest.raises(LayoutError, match="horizon"):
         read_counts_as_of(spark, p, 1)
     with pytest.raises(ValueError, match="max_deltas"):
         maybe_compact_counting(spark, p, NW, K, 0)

@@ -116,7 +116,7 @@ def test_nb_python_twin_matches_column_form(spark):
     """Round-14 pin: `_nb_of_py` (the driver-side bucket function the
     collected-merge path prunes with) must agree with `_nb_of_col`
     (the Column form every store row was laid out under) — a drift
-    would silently mis-prune probes, the exact failure BucketLayoutError
+    would silently mis-prune probes, the exact failure LayoutError
     exists to prevent."""
     from pyspark.sql import functions as F
 

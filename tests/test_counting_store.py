@@ -1,7 +1,7 @@
 """Persisted counting-Bloom store (`streaming/counting_store.py`,
 round 10): delta-layout idempotence (replay before AND after
-compaction), takedown-by-negative-delta semantics, geometry sidecar
-refusals, compaction invariance, and stream==batch parity through a
+compaction), takedown-by-negative-delta semantics, geometry and
+missing-log refusals, compaction invariance, and stream==batch parity through a
 real availableNow drain."""
 
 from __future__ import annotations
@@ -11,16 +11,15 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from data_integration_openfoodfacts_spark.storage import LayoutError
 from data_integration_openfoodfacts_spark.streaming.counting_store import (
-    COUNTING_META,
-    CountingLayoutError,
     compact_counting,
     probe_counting,
     read_counts,
     retract_counting,
     run_counting_screen_stream,
     screen_keys_batch,
-    store_geometry,
+    store_versions,
     write_counting_delta,
 )
 
@@ -78,7 +77,7 @@ def test_takedown_unsets_only_last_owner(spark, tmp_path):
 def test_compaction_invariant_and_tombstones_replays(spark, tmp_path):
     """Compaction leaves the live table bit-identical, and a replay of
     an ABSORBED batch (its directory is gone) is refused by the
-    sidecar tombstone instead of silently double-counting."""
+    absorbed-id tombstone instead of silently double-counting."""
     p = str(tmp_path / "cnt")
     write_counting_delta(_keys(spark, ["a", "b"]), "k", p, "batch-1", NW, K)
     write_counting_delta(_keys(spark, ["b", "c"]), "k", p, "batch-2", NW, K)
@@ -86,8 +85,9 @@ def test_compaction_invariant_and_tombstones_replays(spark, tmp_path):
     before = _counts(spark, p)
     compact_counting(spark, p, NW, K)
     assert _counts(spark, p) == before
-    _, _, absorbed, _ = store_geometry(spark, p, NW, K)
-    assert set(absorbed) == {"batch-1", "batch-2", "takedown-t9"}
+    assert store_versions(spark, p)["absorbed"] == [
+        "batch-1", "batch-2", "takedown-t9"
+    ]
     assert not write_counting_delta(
         _keys(spark, ["a", "b"]), "k", p, "batch-1", NW, K
     )
@@ -99,17 +99,24 @@ def test_compaction_invariant_and_tombstones_replays(spark, tmp_path):
 
 
 def test_geometry_refusals(spark, tmp_path):
-    """Wrong caller geometry raises; a sidecar-less existing store is
-    refused outright; the reserved base id is rejected."""
+    """Wrong caller geometry raises; an existing store without a log is
+    refused outright; the reserved base ids are rejected."""
+    import shutil
+
     p = str(tmp_path / "cnt")
     write_counting_delta(_keys(spark, ["a"]), "k", p, "batch-1", NW, K)
-    with pytest.raises(CountingLayoutError, match="geometry"):
-        store_geometry(spark, p, NW + 1, K)
-    with pytest.raises(CountingLayoutError, match="reserved"):
-        write_counting_delta(_keys(spark, ["a"]), "k", p, "base", NW, K)
-    os.remove(os.path.join(p, COUNTING_META))
-    with pytest.raises(CountingLayoutError, match="sidecar"):
-        store_geometry(spark, p, NW, K)
+    with pytest.raises(LayoutError, match="geometry"):
+        write_counting_delta(_keys(spark, ["b"]), "k", p, "batch-2",
+                             NW + 1, K)
+    with pytest.raises(LayoutError, match="geometry"):
+        probe_counting(_keys(spark, ["a"]), "k", p, NW, K + 1)
+    for reserved in ("base", "base-3"):
+        with pytest.raises(LayoutError, match="reserved"):
+            write_counting_delta(_keys(spark, ["a"]), "k", p, reserved,
+                                 NW, K)
+    shutil.rmtree(os.path.join(p, "_log"))
+    with pytest.raises(LayoutError, match="no _log"):
+        probe_counting(_keys(spark, ["a"]), "k", p, NW, K)
 
 
 def test_screen_totals_first_writer_wins(spark, tmp_path):
@@ -223,8 +230,7 @@ def test_batched_append_matches_sequential(spark, tmp_path):
 
 def test_batched_append_replay_and_tombstone(spark, tmp_path):
     """Batched-append idempotence contracts: a replayed batch writes
-    nothing (completed directories refused, log healed in LIST order),
-    and post-compaction replays are refused by the tombstone — the
+    nothing (logged ids refused), and post-compaction replays are refused by the tombstone — the
     same guarantees `write_counting_delta` gives one delta at a time."""
     from data_integration_openfoodfacts_spark.streaming.counting_store import (  # noqa: E501
         append_counting_deltas,
@@ -248,45 +254,46 @@ def test_batched_append_replay_and_tombstone(spark, tmp_path):
     assert post == {"d0": False, "d1": False}
     assert _counts(spark, p) == before
     # duplicate ids within one batch and the reserved id are refused
-    with pytest.raises(CountingLayoutError):
+    with pytest.raises(LayoutError):
         append_counting_deltas(
             spark, [("x", items[0][1], 1), ("x", items[1][1], 1)],
             "k", p, NW, K,
         )
-    with pytest.raises(CountingLayoutError):
+    with pytest.raises(LayoutError):
         append_counting_deltas(
             spark, [("base", items[0][1], 1)], "k", p, NW, K,
         )
 
 
-def test_batched_append_heals_unlogged_directory(spark, tmp_path):
-    """The widened crash window (data directory complete, sidecar not
-    yet rewritten): a batch replay must heal the log at the id's LIST
-    position without rewriting the data — the same heal
-    `write_counting_delta` performs for one delta."""
-    import json
-
-    from data_integration_openfoodfacts_spark.storage import (
-        read_json_sidecar,
-        write_json_sidecar,
-    )
+def test_batched_append_heals_unlogged_directory(spark, tmp_path, monkeypatch):
+    """The crash window between a batch's delta writes and its log
+    entry: the landed directories stay invisible (the store still reads
+    as before the batch), and a replay of the batch rewrites them and
+    logs them in LIST order."""
+    from data_integration_openfoodfacts_spark.streaming import counting_store
     from data_integration_openfoodfacts_spark.streaming.counting_store import (  # noqa: E501
         append_counting_deltas,
-        store_versions,
     )
 
     p = str(tmp_path / "store")
+    write_counting_delta(_keys(spark, ["a0"]), "k", p, "d0", NW, K)
+    before = _counts(spark, p)
     items = [
-        ("d0", _keys(spark, ["a1"]), 1),
+        ("d2", _keys(spark, ["c1"]), 1),
         ("d1", _keys(spark, ["b1"]), 1),
     ]
-    append_counting_deltas(spark, items, "k", p, NW, K)
-    # simulate the crash: drop d1 from the persisted log
-    meta = read_json_sidecar(spark, p, COUNTING_META)
-    meta["log"] = ["d0"]
-    write_json_sidecar(spark, p, COUNTING_META, meta)
-    before = _counts(spark, p)
-    replay = append_counting_deltas(spark, items, "k", p, NW, K)
-    assert replay == {"d0": False, "d1": False}
-    assert store_versions(spark, p)["log"] == ["d0", "d1"]
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the log entry")
+
+    monkeypatch.setattr(counting_store, "commit", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        append_counting_deltas(spark, items, "k", p, NW, K)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(p, "delta_id=d1"))
     assert _counts(spark, p) == before
+    assert store_versions(spark, p)["log"] == ["d0"]
+    replay = append_counting_deltas(spark, items, "k", p, NW, K)
+    assert replay == {"d2": True, "d1": True}
+    assert store_versions(spark, p)["log"] == ["d0", "d2", "d1"]
+    assert _members(spark, p, ["a0", "b1", "c1"]) == {"a0", "b1", "c1"}

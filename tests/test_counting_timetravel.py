@@ -1,21 +1,18 @@
-"""Counting-store time travel (round 10 continuation): the sidecar
-version log, as-of prefix reconstruction (pre- and post-compaction),
-vacuum-horizon refusals, legacy-store refusals, and log healing across
-the parquet-landed/sidecar-missed crash window."""
+"""Counting-store time travel (round 10 continuation): the applied
+log, as-of prefix reconstruction (pre- and post-compaction),
+vacuum-horizon refusals, and the refusal of a store without a log."""
 
 from __future__ import annotations
 
-import json
-import os
+import shutil
 
 import pytest
 
 from data_integration_openfoodfacts_spark.operators.bloom import (
     counting_build,
 )
+from data_integration_openfoodfacts_spark.storage import LayoutError
 from data_integration_openfoodfacts_spark.streaming.counting_store import (
-    COUNTING_META,
-    CountingLayoutError,
     compact_counting,
     read_counts,
     read_counts_as_of,
@@ -29,21 +26,6 @@ NW, K = 64, 5
 
 def _keys(spark, names):
     return spark.createDataFrame([(n,) for n in names], "k string")
-
-
-def _edit_sidecar(path, mutate):
-    """Hand-edit the sidecar the way a crash/restore would leave it.
-    Hadoop's local FS keeps a .crc checksum twin — drop it so the
-    out-of-band edit is readable (object stores have no such twin)."""
-    side = os.path.join(path, COUNTING_META)
-    with open(side) as f:
-        meta = json.load(f)
-    mutate(meta)
-    with open(side, "w") as f:
-        json.dump(meta, f)
-    crc = os.path.join(path, f".{COUNTING_META}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
 
 
 def _state(df):
@@ -117,45 +99,24 @@ def test_compaction_vacuums_history(spark, tmp_path):
     assert _state(read_counts_as_of(spark, p, 3)) == _rebuild(
         spark, BATCHES
     )
-    with pytest.raises(CountingLayoutError, match="horizon"):
+    with pytest.raises(LayoutError, match="horizon"):
         read_counts_as_of(spark, p, 1)
 
 
 def test_version_bounds_and_legacy_refusals(spark, tmp_path):
-    """Out-of-range versions raise; a store whose sidecar predates the
-    version log refuses as-of reads with guidance but still serves the
-    current state."""
+    """Out-of-range versions raise; a populated store without a log
+    (the pre-log layout) refuses every read instead of guessing which
+    of its directories are live."""
     p = str(tmp_path / "cnt")
     _seed(spark, p)
     for bad in (0, 4):
-        with pytest.raises(CountingLayoutError, match="out of range"):
+        with pytest.raises(LayoutError, match="out of range"):
             read_counts_as_of(spark, p, bad)
-    _edit_sidecar(p, lambda m: m.pop("log"))
-    with pytest.raises(CountingLayoutError, match="version log"):
+    shutil.rmtree(f"{p}/_log")
+    with pytest.raises(LayoutError, match="no _log"):
         read_counts_as_of(spark, p, 1)
-    assert _state(read_counts(spark, p)) == _rebuild(spark, BATCHES)
-
-
-def test_legacy_compaction_reports_no_readable_version(spark, tmp_path):
-    """Round-11 ADVICE: a store compacted BEFORE the version log
-    existed, then appended to — absorbed ids appear in no log prefix,
-    so NO historical version is reconstructible. min_readable must be
-    None (not 1, which itself raised), and the as-of refusal must name
-    the legacy case instead of advertising an unreadable version."""
-    p = str(tmp_path / "cnt")
-    for i, b in enumerate(BATCHES[:2]):
-        write_counting_delta(_keys(spark, b), "k", p, f"batch-{i}", NW, K)
-    compact_counting(spark, p, NW, K)
-    # simulate the pre-log store: compaction happened, log never existed
-    _edit_sidecar(p, lambda m: m.__setitem__("log", []))
-    write_counting_delta(_keys(spark, BATCHES[2]), "k", p, "batch-2",
-                         NW, K)
-    vs = store_versions(spark, p)
-    assert vs["latest"] == 1 and vs["min_readable"] is None
-    with pytest.raises(CountingLayoutError, match="legacy"):
-        read_counts_as_of(spark, p, 1)
-    # the current state is still served
-    assert _state(read_counts(spark, p)) == _rebuild(spark, BATCHES)
+    with pytest.raises(LayoutError, match="no _log"):
+        read_counts(spark, p)
 
 
 def test_as_of_scan_prunes_partitions(spark, tmp_path):
@@ -166,23 +127,3 @@ def test_as_of_scan_prunes_partitions(spark, tmp_path):
     _seed(spark, p)
     plan = read_counts_as_of(spark, p, 2)._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "delta_id" in plan, plan
-
-
-def test_log_heals_after_missed_sidecar_write(spark, tmp_path):
-    """Crash window: delta parquet landed (_SUCCESS present) but the
-    sidecar write was lost. The replay refuses the data write AND
-    appends the missing log entry exactly once."""
-    p = str(tmp_path / "cnt")
-    _seed(spark, p)
-    _edit_sidecar(p, lambda m: m["log"].remove("batch-1"))
-    assert not write_counting_delta(
-        _keys(spark, BATCHES[1]), "k", p, "batch-1", NW, K
-    )
-    assert store_versions(spark, p)["log"] == [
-        "batch-0", "batch-2", "batch-1"
-    ]
-    # idempotent: a second replay appends nothing more
-    assert not write_counting_delta(
-        _keys(spark, BATCHES[1]), "k", p, "batch-1", NW, K
-    )
-    assert store_versions(spark, p)["latest"] == 3

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
     compact_bucketed,
-    read_meta,
 )
 from data_integration_openfoodfacts_spark.operators.embedding_ingest import (
     EB_COL,
@@ -20,6 +19,7 @@ from data_integration_openfoodfacts_spark.operators.embedding_ingest import (
     embedding_band_signatures,
     incremental_embedding_dedup,
 )
+from data_integration_openfoodfacts_spark.storage import read_state
 
 DIM = 8
 
@@ -94,7 +94,7 @@ def test_replay_is_idempotent(spark, tmp_path):
 
 
 def test_ledger_layout_and_compaction(spark, tmp_path):
-    """The ledger rides the shared bucketed layout: sidecar stamped,
+    """The ledger rides the shared bucketed layout: header logged,
     appends one file per touched bucket, compaction leaves one file
     per bucket with identical contents."""
     a, b, c = _base_vecs()
@@ -105,7 +105,9 @@ def test_ledger_layout_and_compaction(spark, tmp_path):
             path,
             n_buckets=8,
         )
-    assert read_meta(spark, path) == {"bucket_col": EB_COL, "n_buckets": 8}
+    assert read_state(spark, path) == (
+        0, {"bucket_col": EB_COL, "n_buckets": 8, "data": "v0"}
+    )
     before = sorted(
         tuple(r)
         for r in spark.read.parquet(path)
@@ -123,7 +125,9 @@ def test_ledger_layout_and_compaction(spark, tmp_path):
         .collect()
     )
     assert after == before
-    for d in glob.glob(f"{path}/{EB_COL}=*"):
+    buckets = glob.glob(f"{path}/v1/{EB_COL}=*")
+    assert buckets
+    for d in buckets:
         assert len(glob.glob(f"{d}/*.parquet")) == 1, d
 
 

@@ -68,8 +68,7 @@ def test_q159_reconciles_with_batch_q157(spark):
 def test_partitioned_ledger_equals_in_memory_scorer(spark, tmp_path):
     """The persisted bucket-partitioned scorer
     (operators/novelty_ledger.py) returns exactly the in-memory
-    operator's results, tranche by tranche — including against a
-    legacy UNPARTITIONED ledger (schema-detected fallback)."""
+    operator's results, tranche by tranche."""
     from data_integration_openfoodfacts_spark.sources.parquet_source import (
         load_table,
     )
@@ -85,7 +84,7 @@ def test_partitioned_ledger_equals_in_memory_scorer(spark, tmp_path):
             tranche, mem_ledger, checkpoint_shingles=True
         )
         pd_part, nf_part = score_shingled_tranche_against_ledger(
-            doc_shingle_keys(tranche), led_path, n_buckets=64
+            doc_shingle_keys(tranche), led_path
         )
         assert sorted(tuple(r) for r in pd_part.collect()) == sorted(
             tuple(r) for r in pd_mem.collect()
@@ -97,18 +96,6 @@ def test_partitioned_ledger_equals_in_memory_scorer(spark, tmp_path):
             nf_mem.localCheckpoint(eager=True)
         )
         append_ledger_delta(nf_part, led_path, n_buckets=64)
-
-    # legacy unpartitioned layout: same answers, schema-detected
-    legacy_path = str(tmp_path / "legacy")
-    mem_ledger.select("shingle_md5", "first_doc").write.parquet(legacy_path)
-    pd_leg, nf_leg = score_shingled_tranche_against_ledger(
-        doc_shingle_keys(t2), legacy_path
-    )
-    pd_mem2, nf_mem2 = tranche_novelty_update(t2, mem_ledger)
-    assert sorted(tuple(r) for r in pd_leg.collect()) == sorted(
-        tuple(r) for r in pd_mem2.collect()
-    )
-    assert nf_leg.count() == nf_mem2.count() == 0
 
 
 def test_partitioned_ledger_plan_prunes_and_never_moves_ledger(
@@ -138,7 +125,7 @@ def test_partitioned_ledger_plan_prunes_and_never_moves_ledger(
 
     tranche = docs.limit(3).localCheckpoint(eager=True)
     _, new_firsts = score_shingled_tranche_against_ledger(
-        doc_shingle_keys(tranche), led_path, n_buckets=256,
+        doc_shingle_keys(tranche), led_path,
         checkpoint=False,
     )
     plan = new_firsts._jdf.queryExecution().executedPlan().toString()
@@ -177,7 +164,7 @@ def test_ledger_compaction_preserves_answers(spark, tmp_path):
 
     def score(docs):
         return score_shingled_tranche_against_ledger(
-            doc_shingle_keys(docs), led_path, n_buckets=8
+            doc_shingle_keys(docs), led_path
         )
 
     led_path = str(tmp_path / "ledger")
@@ -202,5 +189,7 @@ def test_ledger_compaction_preserves_answers(spark, tmp_path):
         sorted(tuple(r) for r in after_pd.collect()),
         sorted(tuple(r) for r in after_nf.collect()),
     )
-    for d in glob.glob(f"{led_path}/kb=*"):
+    buckets = glob.glob(f"{led_path}/v*/kb=*")
+    assert buckets
+    for d in buckets:
         assert len(glob.glob(f"{d}/*.parquet")) == 1, d

@@ -9,8 +9,9 @@
   out through ``concurrency.overlap``, whose threads keep the caller's
   job group and description;
 - stores commit in ONE place: only ``storage.py`` may call
-  ``.rename(``, ``os.replace`` or ``shutil.move``. Every other module
-  publishes sidecars, swaps directories and claims partitions through
+  ``.rename(``, ``os.replace`` or ``shutil.move``, or use its Hadoop
+  ``FileSystem`` handle ``hadoop_fs``. Every other module commits log
+  entries, swaps directories and deletes retired ones through
   ``storage``, whose renames are checked and whose swaps restore on
   failure;
 - no package code that only tests reach: every module, and every
@@ -110,6 +111,27 @@ def test_renames_only_in_storage_module():
         if _is_commit_call(node)
     ]
     assert found == [], f"store commits outside storage.py: {found}"
+
+
+def _uses_hadoop_fs(node) -> bool:
+    if isinstance(node, ast.ImportFrom):
+        return any(a.name == "hadoop_fs" for a in node.names)
+    return isinstance(node, ast.Attribute) and node.attr == "hadoop_fs"
+
+
+def test_filesystem_layout_only_in_storage_module():
+    found = [
+        _where(path, node)
+        for path, tree in _modules()
+        if str(path.relative_to(PKG_DIR)) not in COMMITS_ALLOWED
+        for node in ast.walk(tree)
+        if _uses_hadoop_fs(node)
+    ]
+    assert found == [], f"hadoop_fs outside storage.py: {found}"
+    for src, hit in (("from ..storage import hadoop_fs", True),
+                     ("from ..storage import read_state", False),
+                     ("storage.hadoop_fs(spark, p)", True)):
+        assert any(map(_uses_hadoop_fs, ast.walk(ast.parse(src)))) == hit
 
 
 def test_commit_call_detector():

@@ -235,3 +235,25 @@ def test_stale_keys_are_per_scale_factor():
         "qA", "qB", "qC",
     }
     assert gate_state.stale_keys(fps, {}, "sf0.01") == {"qA", "qB", "qC"}
+
+
+def test_stale_keys_ignore_how_the_sf_dir_is_spelled(tmp_path, monkeypatch):
+    """The record keys a scale factor by its directory name, so a
+    trailing slash, a relative path or another parent directory names
+    the same scale factor."""
+    fps = {"qA": "f1", "qB": "f2"}
+    verified = {
+        "qA": {"fingerprint": "f1", "sfs": {"sf0.01": "f1"}},
+        "qB": {"fingerprint": "OLD", "sfs": {"sf0.01": "OLD"}},
+    }
+    (tmp_path / "data" / "sf0.01").mkdir(parents=True)
+    monkeypatch.chdir(tmp_path)
+    spellings = (
+        str(tmp_path / "data" / "sf0.01"),
+        str(tmp_path / "data" / "sf0.01") + "/",
+        "data/sf0.01",
+        "./data/sf0.01/",
+        "/elsewhere/sf0.01",
+    )
+    for sf_dir in spellings:
+        assert gate_state.stale_keys(fps, verified, sf_dir) == {"qB"}, sf_dir

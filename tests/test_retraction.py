@@ -11,9 +11,6 @@ import os
 
 from pyspark.sql import functions as F
 
-from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
-    read_meta,
-)
 from data_integration_openfoodfacts_spark.operators.novelty import (
     doc_shingle_keys,
 )
@@ -25,6 +22,7 @@ from data_integration_openfoodfacts_spark.operators.novelty_ledger import (
 from data_integration_openfoodfacts_spark.operators.retraction import (
     retract_from_novelty_ledger,
 )
+from data_integration_openfoodfacts_spark.storage import read_state
 
 FIRSTS = [(c * 32, i) for i, c in enumerate("abcdef")]
 
@@ -39,7 +37,7 @@ def _keys(spark, md5s):
 
 def _file_state(path):
     out = {}
-    for d in glob.glob(f"{path}/{KB_COL}=*"):
+    for d in glob.glob(f"{path}/v0/{KB_COL}=*"):
         for f in glob.glob(f"{d}/*.parquet"):
             st = os.stat(f)
             out[f] = (st.st_size, st.st_mtime_ns)
@@ -50,10 +48,11 @@ def test_retract_rewrites_only_touched_buckets(spark, tmp_path):
     path = str(tmp_path / "ledger")
     append_ledger_delta(_firsts(spark, FIRSTS), path, n_buckets=16)
     before = _file_state(path)
+    assert before
     kept_keys = {r["shingle_md5"] for r in spark.read.parquet(path).collect()}
     assert kept_keys == {c * 32 for c in "abcdef"}
     removed = retract_from_novelty_ledger(
-        spark, path, _keys(spark, ["a" * 32, "b" * 32]), 16
+        spark, path, _keys(spark, ["a" * 32, "b" * 32])
     )
     assert removed == 2
     after_rows = {
@@ -81,25 +80,27 @@ def test_retract_rewrites_only_touched_buckets(spark, tmp_path):
         b = int(f.split(f"{KB_COL}=")[1].split("/")[0])
         if b not in touched:
             assert after.get(f) == st, f
-    # sidecar untouched: layout survives
-    assert read_meta(spark, path) == {"bucket_col": KB_COL, "n_buckets": 16}
+    # log untouched: layout survives
+    assert read_state(spark, path) == (
+        0, {"bucket_col": KB_COL, "n_buckets": 16, "data": "v0"}
+    )
 
 
 def test_retract_is_idempotent_and_noop_on_absent_keys(spark, tmp_path):
     path = str(tmp_path / "ledger")
     append_ledger_delta(_firsts(spark, FIRSTS), path, n_buckets=16)
     assert retract_from_novelty_ledger(
-        spark, path, _keys(spark, ["c" * 32]), 16
+        spark, path, _keys(spark, ["c" * 32])
     ) == 1
     before = _file_state(path)
     # replay: key already gone -> 0 removed, zero files rewritten
     assert retract_from_novelty_ledger(
-        spark, path, _keys(spark, ["c" * 32]), 16
+        spark, path, _keys(spark, ["c" * 32])
     ) == 0
     assert _file_state(path) == before
     # absent key -> same
     assert retract_from_novelty_ledger(
-        spark, path, _keys(spark, ["9" * 32]), 16
+        spark, path, _keys(spark, ["9" * 32])
     ) == 0
     assert _file_state(path) == before
 
@@ -110,7 +111,7 @@ def test_whole_bucket_deletion_leaves_readable_store(spark, tmp_path):
     path = str(tmp_path / "ledger")
     append_ledger_delta(_firsts(spark, FIRSTS), path, n_buckets=2)
     removed = retract_from_novelty_ledger(
-        spark, path, _keys(spark, [c * 32 for c in "abcdef"]), 2
+        spark, path, _keys(spark, [c * 32 for c in "abcdef"])
     )
     assert removed == 6
     # an all-bucket deletion can leave a marker-only directory that a
@@ -134,12 +135,12 @@ def test_retracted_shingles_score_novel_again(spark, tmp_path):
         "doc_id long, text string",
     )
     _, nf = score_shingled_tranche_against_ledger(
-        doc_shingle_keys(docs), path, n_buckets=16
+        doc_shingle_keys(docs), path
     )
     append_ledger_delta(nf, path, n_buckets=16)
     # replay scores zero novel while ledgered
     per_doc, _ = score_shingled_tranche_against_ledger(
-        doc_shingle_keys(docs), path, n_buckets=16
+        doc_shingle_keys(docs), path
     )
     assert per_doc.agg(F.sum("n_novel")).first()[0] == 0
     # retract doc 1's keys (its ledgered shingle_md5 rows)
@@ -149,9 +150,9 @@ def test_retracted_shingles_score_novel_again(spark, tmp_path):
         .select("shingle_md5")
     ).localCheckpoint(eager=True)
     n1 = doc1_keys.count()
-    assert retract_from_novelty_ledger(spark, path, doc1_keys, 16) == n1
+    assert retract_from_novelty_ledger(spark, path, doc1_keys) == n1
     per_doc2, _ = score_shingled_tranche_against_ledger(
-        doc_shingle_keys(docs), path, n_buckets=16
+        doc_shingle_keys(docs), path
     )
     got = {r["doc_id"]: r["n_novel"] for r in per_doc2.collect()}
     assert got[1] == n1  # forgotten -> novel again
@@ -170,7 +171,7 @@ def test_failed_bucket_swap_parks_outside_the_store(
 
     import pytest
 
-    from data_integration_openfoodfacts_spark.operators import retraction
+    from data_integration_openfoodfacts_spark import storage
 
     class ParkOnlyFS:
         """Delegates to the real FileSystem; every rename except the
@@ -185,7 +186,7 @@ def test_failed_bucket_swap_parks_outside_the_store(
         def __getattr__(self, name):
             return getattr(self._fs, name)
 
-    real = retraction.hadoop_fs
+    real = storage.hadoop_fs
 
     def fake_hadoop_fs(spark_, path_):
         fs, hpath, jvm = real(spark_, path_)
@@ -195,9 +196,9 @@ def test_failed_bucket_swap_parks_outside_the_store(
     # two buckets: the retracted key's bucket keeps survivors, so the
     # swap has a staged dir to publish
     append_ledger_delta(_firsts(spark, FIRSTS), path, n_buckets=2)
-    monkeypatch.setattr(retraction, "hadoop_fs", fake_hadoop_fs)
+    monkeypatch.setattr(storage, "hadoop_fs", fake_hadoop_fs)
     with pytest.raises(IOError, match="__trash_") as err:
-        retract_from_novelty_ledger(spark, path, _keys(spark, ["a" * 32]), 2)
+        retract_from_novelty_ledger(spark, path, _keys(spark, ["a" * 32]))
     trash = re.search(r"preserved at (\S+)", str(err.value)).group(1)
     live = {r["shingle_md5"] for r in spark.read.parquet(path).collect()}
     parked = {r["shingle_md5"] for r in spark.read.parquet(trash).collect()}

@@ -106,7 +106,7 @@ def test_partitioned_scorer_matches_python_reference(
     for rows in tranches:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         per_doc, new_firsts = score_shingled_tranche_against_ledger(
-            doc_shingle_keys(df, n=3), ledger_path, n_buckets=8
+            doc_shingle_keys(df, n=3), ledger_path
         )
         # python reference for THIS tranche against accumulated `seen`
         want_per_doc = {}

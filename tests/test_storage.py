@@ -1,17 +1,20 @@
 """The store commit primitives (`storage.py`): the directory swap
-under every failure a rename can report, the partition claim in each
-of its three states, and the sidecar read's corrupt-as-absent rule."""
+under every failure a rename can report, and the create-only store
+log (entries never overwritten, populated stores without a log
+refused, vacuum keeps exactly the live directories)."""
 
 from __future__ import annotations
 
 import pytest
 
 from data_integration_openfoodfacts_spark.storage import (
-    claim_partition,
+    LayoutError,
+    commit,
+    open_store,
     overwrite_parquet_atomically,
-    read_json_sidecar,
+    read_state,
     swap_dir,
-    write_json_sidecar,
+    vacuum,
 )
 
 
@@ -85,30 +88,45 @@ def test_swap_without_staged_dir_deletes_target():
     assert fs.dirs == {}
 
 
-def test_claim_partition_states(spark, tmp_path):
-    missing = tmp_path / "missing"
-    assert claim_partition(spark, str(missing))
-    assert not missing.exists()
+def test_log_is_create_only_and_reads_the_newest_entry(spark, tmp_path):
+    d = str(tmp_path / "store")
+    assert read_state(spark, d) is None
+    assert open_store(spark, d, {"n": 1}, {"live": []}) == (
+        0, {"n": 1, "live": []}
+    )
+    commit(spark, d, 1, {"n": 1, "live": ["a"]})
+    assert read_state(spark, d) == (1, {"n": 1, "live": ["a"]})
+    with pytest.raises(LayoutError, match="log entry 1"):
+        commit(spark, d, 1, {"n": 1, "live": ["b"]})
+    assert read_state(spark, d) == (1, {"n": 1, "live": ["a"]})
+    # the refused commit leaves no staged entry behind
+    assert sorted(p.name for p in (tmp_path / "store" / "_log").iterdir()
+                  if not p.name.startswith(".")) == ["0.json", "1.json"]
+    with pytest.raises(LayoutError, match="n=1, caller passed 2"):
+        open_store(spark, d, {"n": 2}, {"live": []})
 
-    torn = tmp_path / "torn"
-    torn.mkdir()
-    (torn / "part-00000.parquet").write_bytes(b"half a file")
-    assert claim_partition(spark, str(torn))
-    assert not torn.exists()
 
-    committed = str(tmp_path / "committed")
-    spark.range(3).coalesce(1).write.parquet(committed)
-    assert not claim_partition(spark, committed)
-    assert spark.read.parquet(committed).count() == 3
+def test_populated_store_without_log_is_refused(spark, tmp_path):
+    d = str(tmp_path / "store")
+    spark.range(3).coalesce(1).write.parquet(f"{d}/v0")
+    with pytest.raises(LayoutError, match="no _log"):
+        read_state(spark, d)
+    # markers alone are not data: the store is still absent
+    marker_only = tmp_path / "markers"
+    (marker_only / "v0").mkdir(parents=True)
+    (marker_only / "v0" / "_SUCCESS").touch()
+    assert read_state(spark, str(marker_only)) is None
 
 
-def test_sidecar_round_trip_and_corrupt_reads_as_none(spark, tmp_path):
-    d = str(tmp_path)
-    assert read_json_sidecar(spark, d, "_meta.json") is None
-    write_json_sidecar(spark, d, "_meta.json", {"n": 1})
-    assert read_json_sidecar(spark, d, "_meta.json") == {"n": 1}
-    (tmp_path / "_torn.json").write_text('{"n": ')
-    assert read_json_sidecar(spark, d, "_torn.json") is None
+def test_vacuum_keeps_only_live_directories(spark, tmp_path):
+    d = tmp_path / "store"
+    for name in ("epoch=1", "epoch=2", "epoch=3"):
+        (d / name).mkdir(parents=True)
+    commit(spark, str(d), 0, {"epochs": [2]})
+    assert sorted(vacuum(spark, str(d), {"epoch=2"})) == [
+        "epoch=1", "epoch=3"
+    ]
+    assert sorted(p.name for p in d.iterdir()) == ["_log", "epoch=2"]
 
 
 def test_overwrite_leaves_no_staged_or_trash_siblings(spark, tmp_path):

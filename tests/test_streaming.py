@@ -203,7 +203,8 @@ def test_read_parquet_if_exists_is_silent_on_missing(spark, tmp_path, capfd):
     marker_only = tmp_path / "markers"
     marker_only.mkdir()
     (marker_only / "_SUCCESS").touch()
-    (marker_only / "_bucket_meta.json").write_text("{}")
+    (marker_only / "_log").mkdir()
+    (marker_only / "_log" / "0.json").write_text("{}")
     assert read_parquet_if_exists(spark, str(marker_only)) is None
     err = capfd.readouterr().err
     for needle in ("AnalysisException", "PATH_NOT_FOUND",

@@ -9,15 +9,14 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from data_integration_openfoodfacts_spark.operators.bucketed_ledger import (
-    BucketLayoutError,
-)
 from data_integration_openfoodfacts_spark.operators.windowed_ledger import (
     append_window_epoch,
     expire_through,
-    read_window,
     score_tranche_windowed,
-    window_meta,
+)
+from data_integration_openfoodfacts_spark.storage import (
+    LayoutError,
+    read_state,
 )
 
 NB = 8
@@ -55,7 +54,7 @@ def test_window_semantics_and_expiry(spark, tmp_path):
     assert _seen(spark, p, ["a", "b", "c", "d"]) == {
         "a": False, "b": True, "c": True, "d": True,
     }
-    assert window_meta(spark, p)["expired_through"] == 0
+    assert read_state(spark, p)[1]["expired_through"] == 0
     # physical: the epoch directory is gone
     assert not os.path.exists(os.path.join(p, "epoch=0"))
 
@@ -73,19 +72,35 @@ def test_resurrection_and_replay_guards(spark, tmp_path):
     assert _seen(spark, p, ["a"]) == {"a": False}
 
 
-def test_torn_epoch_write_is_repaired(spark, tmp_path):
+def test_torn_epoch_write_is_repaired(spark, tmp_path, monkeypatch):
+    """A crash after an epoch's rows land but before the log lists it
+    leaves a directory no probe reads; the replay overwrites it."""
+    from data_integration_openfoodfacts_spark.operators import (
+        windowed_ledger,
+    )
+
     p = str(tmp_path / "win")
     assert append_window_epoch(_keys(spark, ["a"]), "k", p, 0, NB)
-    os.remove(os.path.join(p, "epoch=0", "_SUCCESS"))
-    # no _SUCCESS -> crashed partial write: deleted and rewritten
-    assert append_window_epoch(_keys(spark, ["a", "b"]), "k", p, 0, NB)
-    assert _seen(spark, p, ["a", "b"]) == {"a": True, "b": True}
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the log entry")
+
+    monkeypatch.setattr(windowed_ledger, "commit", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        append_window_epoch(_keys(spark, ["torn"]), "k", p, 1, NB)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(p, "epoch=1"))
+    assert _seen(spark, p, ["a", "torn"]) == {"a": True, "torn": False}
+    assert append_window_epoch(_keys(spark, ["b"]), "k", p, 1, NB)
+    assert _seen(spark, p, ["a", "b", "torn"]) == {
+        "a": True, "b": True, "torn": False,
+    }
 
 
 def test_bucket_count_mismatch_refused(spark, tmp_path):
     p = str(tmp_path / "win")
     append_window_epoch(_keys(spark, ["a"]), "k", p, 0, NB)
-    with pytest.raises(BucketLayoutError, match="n_buckets"):
+    with pytest.raises(LayoutError, match="n_buckets"):
         append_window_epoch(_keys(spark, ["b"]), "k", p, 1, NB * 2)
 
 
@@ -117,66 +132,40 @@ def test_as_of_epoch_reads(spark, tmp_path):
     assert _seen(spark, p, ["a", "b", "c"], max_epoch=1) == {
         "a": False, "b": True, "c": False,
     }
-    with pytest.raises(BucketLayoutError, match="vacuumed"):
+    with pytest.raises(LayoutError, match="vacuumed"):
         score_tranche_windowed(_keys(spark, ["a"]), "k", p, max_epoch=0)
 
 
-def test_orphaned_store_refused_then_healed_on_replay(spark, tmp_path):
-    """Crash window between the first epoch's parquet commit and the
-    sidecar stamp (round-11 ADVICE): a populated-but-sidecarless store
-    must NOT read as empty — probes and expiry refuse loudly; replaying
-    the append sample-validates the caller's bucket count against the
-    orphaned data, heals the stamp, and everything works again."""
-    p = str(tmp_path / "win")
-    assert append_window_epoch(_keys(spark, ["a", "b"]), "k", p, 0, NB)
-    os.remove(os.path.join(p, "_window_meta.json"))  # simulate crash
-    with pytest.raises(BucketLayoutError, match="heal"):
-        score_tranche_windowed(_keys(spark, ["a"]), "k", p)
-    with pytest.raises(BucketLayoutError, match="heal"):
-        expire_through(spark, p, 0)
-    # replay with the WRONG bucket count: validated against the data
-    with pytest.raises(BucketLayoutError, match="bucket count"):
-        append_window_epoch(_keys(spark, ["a", "b"]), "k", p, 0, NB * 2)
-    # replay with the right count: completed-dir no-op + sidecar heal
-    assert not append_window_epoch(_keys(spark, ["a", "b"]), "k", p, 0, NB)
-    meta = window_meta(spark, p)
-    assert meta == {"n_buckets": NB, "expired_through": -1}
-    assert _seen(spark, p, ["a", "b", "z"]) == {
-        "a": True, "b": True, "z": False,
-    }
+def test_orphan_heal_cannot_resurrect_expired_epochs(
+    spark, tmp_path, monkeypatch
+):
+    """A crash inside expiry AFTER the watermark is logged leaves the
+    expired epochs' directories behind as orphans. They are invisible
+    to probes, a replayed append of an expired epoch is still refused,
+    and the next expiry deletes them without resurrecting a key."""
+    from data_integration_openfoodfacts_spark.operators import (
+        windowed_ledger,
+    )
 
-
-def test_orphan_heal_on_next_epoch_append(spark, tmp_path):
-    """The heal also fires when the next batch appends a NEW epoch to
-    an orphaned store — the new epoch must not stamp a geometry the
-    orphaned epoch was not written with."""
-    p = str(tmp_path / "win")
-    assert append_window_epoch(_keys(spark, ["a"]), "k", p, 0, NB)
-    os.remove(os.path.join(p, "_window_meta.json"))
-    with pytest.raises(BucketLayoutError, match="bucket count"):
-        append_window_epoch(_keys(spark, ["b"]), "k", p, 1, NB * 2)
-    assert append_window_epoch(_keys(spark, ["b"]), "k", p, 1, NB)
-    assert window_meta(spark, p)["n_buckets"] == NB
-    assert _seen(spark, p, ["a", "b"]) == {"a": True, "b": True}
-
-
-def test_orphan_heal_cannot_resurrect_expired_epochs(spark, tmp_path):
-    """Round-12 fix of the round-11 ADVICE (medium): the sidecar can
-    also vanish in a post-expiry stamp's delete-then-rename gap. The
-    heal must NOT reset the watermark to -1 — a replayed append of an
-    already-expired epoch would be accepted and resurrect forgotten
-    keys. The healed watermark derives from the layout (min surviving
-    epoch - 1), which is exact for 0-based stores with no expiry and
-    conservative otherwise."""
     p = str(tmp_path / "win")
     append_window_epoch(_keys(spark, ["gone"]), "k", p, 0, NB)
     append_window_epoch(_keys(spark, ["live"]), "k", p, 1, NB)
-    expire_through(spark, p, 0)
-    os.remove(os.path.join(p, "_window_meta.json"))  # stamp swap crash
-    # replayed append of the EXPIRED epoch: heal fires, then refuses
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the directories are deleted")
+
+    monkeypatch.setattr(windowed_ledger, "vacuum", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        expire_through(spark, p, 0)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(p, "epoch=0"))
+    assert read_state(spark, p)[1]["expired_through"] == 0
+    assert _seen(spark, p, ["gone", "live"]) == {
+        "gone": False, "live": True,
+    }
     assert not append_window_epoch(_keys(spark, ["gone"]), "k", p, 0, NB)
-    meta = window_meta(spark, p)
-    assert meta == {"n_buckets": NB, "expired_through": 0}
+    assert expire_through(spark, p, 0) == []
+    assert not os.path.exists(os.path.join(p, "epoch=0"))
     assert _seen(spark, p, ["gone", "live"]) == {
         "gone": False, "live": True,
     }

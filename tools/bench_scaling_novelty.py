@@ -143,7 +143,7 @@ def build_ledger(spark, docs, path: str, n_buckets: int) -> int:
     return spark.read.parquet(path).count()
 
 
-def score_time(spark, tranche, ledger_path, n_buckets) -> tuple[float, int, int]:
+def score_time(spark, tranche, ledger_path) -> tuple[float, int, int]:
     from data_integration_openfoodfacts_spark.operators.novelty import (
         doc_shingle_keys,
     )
@@ -156,7 +156,7 @@ def score_time(spark, tranche, ledger_path, n_buckets) -> tuple[float, int, int]
         eager=True
     )
     per_doc, new_firsts = score_shingled_tranche_against_ledger(
-        sh, ledger_path, "doc_id", n_buckets=n_buckets
+        sh, ledger_path, "doc_id"
     )
     n_new = new_firsts.count()
     n_docs = per_doc.count()
@@ -189,15 +189,15 @@ def main() -> None:
                     spark, SF_DIR, n_docs
                 ).localCheckpoint(eager=True)
             # warm both paths once, then min-of-2 timed runs
-            score_time(spark, tranche, base_path, n_buckets)
+            score_time(spark, tranche, base_path)
             base_sec = min(
-                score_time(spark, tranche, base_path, n_buckets)[0]
+                score_time(spark, tranche, base_path)[0]
                 for _ in range(2)
             )
-            score_time(spark, tranche, big_path, n_buckets)
+            score_time(spark, tranche, big_path)
             best, nd, nn = None, None, None
             for _ in range(2):
-                s, nd, nn = score_time(spark, tranche, big_path, n_buckets)
+                s, nd, nn = score_time(spark, tranche, big_path)
                 best = s if best is None else min(best, s)
             entry = {
                 "base_sec": round(base_sec, 2),

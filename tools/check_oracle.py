@@ -147,7 +147,7 @@ def main() -> int:
         _warm_arrow(F.col("id").cast("double"))
     ).write.format("noop").mode("overwrite").save()
     # Store/stream warmup (round-11 VERDICT #4): the session's FIRST
-    # parquet write job, Hadoop local-FS JVM calls, sidecar IO and
+    # parquet write job, Hadoop local-FS JVM calls, store-log IO and
     # Structured-Streaming start together cost ~5-8s and landed on
     # whichever store-lifecycle query sorted first in the gate order
     # (q178/q179 in r10, q192 in r11) — the same attribution wart the
@@ -339,7 +339,7 @@ def main() -> int:
             for sd in list(sfs):
                 if sfs[sd] != fps[name]:
                     del sfs[sd]
-            sfs[sf_dir] = fps[name]
+            sfs[gate_state.sf_key(sf_dir)] = fps[name]
         gate_state.save_state(state)
         print(f"recorded {len(greens)} green fingerprints -> {gate_state.STATE_PATH}")
     if record and timings:
@@ -357,7 +357,7 @@ def main() -> int:
             report = {}
         by_sf = report.get("by_sf", {})
         entry = by_sf.setdefault(
-            sf_dir, {"budget_sec": budget, "timings": {}}
+            gate_state.sf_key(sf_dir), {"budget_sec": budget, "timings": {}}
         )
         # the sf's budget is STICKY at first record: a one-off run with
         # a looser --budget must not silently rewrite which queries

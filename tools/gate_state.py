@@ -38,6 +38,7 @@ import ast
 import functools
 import hashlib
 import json
+import os
 import re
 from collections import defaultdict
 from pathlib import Path
@@ -332,14 +333,21 @@ def compute_order(
     return sorted(fingerprints, key=lambda k: (tiers[k], k))
 
 
+def sf_key(sf_dir: str) -> str:
+    """The record key of a scale-factor directory: its name (``sf0.01``),
+    however the path was spelled and wherever the data sits."""
+    return Path(os.path.abspath(sf_dir)).name
+
+
 def stale_keys(
     fingerprints: dict[str, str], verified: dict[str, dict], sf_dir: str
 ) -> set[str]:
     """Queries NOT verified at their current fingerprint AT ``sf_dir``
-    (``verified[k]["sfs"]`` maps each scale factor to the fingerprint
-    last verified there): a green record at one scale factor never
-    satisfies a stale check at another."""
+    (``verified[k]["sfs"]`` maps each scale factor, by `sf_key`, to the
+    fingerprint last verified there): a green record at one scale
+    factor never satisfies a stale check at another."""
+    sf = sf_key(sf_dir)
     return {
         k for k in fingerprints
-        if verified.get(k, {}).get("sfs", {}).get(sf_dir) != fingerprints[k]
+        if verified.get(k, {}).get("sfs", {}).get(sf) != fingerprints[k]
     }
